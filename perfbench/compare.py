@@ -7,11 +7,14 @@
 
 Each pair runs one seed on both checkouts, alternating which side runs
 first.  Per workload and metric the report gives each side's median and
-quartiles, the share of pairs the change won (ties count for neither), and
-a verdict:
+quartiles, the share of all pairs run that the change won (ties count for
+neither; a pair where one side errored or lacks the metric is won by the
+other side), and a verdict:
 
-  better      the change won at least 9/10 of the pairs and the medians
-              differ by more than the parent's own quartile spread;
+  better      the change won at least 9/10 of the pairs, the medians
+              differ by more than the parent's own quartile spread, and
+              the change failed no larger share of its operations than
+              the parent (else the verdict is `same`, marked as such);
   worse       the change's median is worse than the parent's by more than
               the metric's bound;
   unresolved  the parent's quartile spread, as a share of its median, is
@@ -21,7 +24,8 @@ a verdict:
 
 Gated metrics use their bounds from BENCHMARK.json; the workload figures
 of the detail line use DETAIL_BOUND.  The failed shares of both sides are
-reported per workload.  Both checkouts must hold the same perfbench/.
+reported per workload; a run that errored counts as attempted and failed.
+Both checkouts must hold the same perfbench/.
 """
 import argparse
 import hashlib
@@ -82,21 +86,23 @@ def flatten(run):
     return out
 
 
-def verdict(par, chg, higher_better, bound):
-    """(verdict, share won by the change) for one metric."""
-    pairs = [(p, c) for p, c in zip(par, chg) if p is not None and c is not None]
-    if not pairs:
+def verdict(par, chg, higher_better, bound, fails_more=False):
+    """(verdict, share won by the change) for one metric over all pairs run;
+    None stands for a run that errored or lacks the metric."""
+    ps = [p for p in par if p is not None]
+    cs = [c for c in chg if c is not None]
+    if not ps or not cs:
         return "no data", 0.0
-    won = sum(1 for p, c in pairs if (c > p if higher_better else c < p))
-    share = won / len(pairs)
-    pq1, pmed, pq3 = quartiles([p for p, _ in pairs])
-    _, cmed, _ = quartiles([c for _, c in pairs])
+    won = sum(1 for p, c in zip(par, chg)
+              if c is not None and (p is None or (c > p if higher_better else c < p)))
+    share = won / len(par)
+    pq1, pmed, pq3 = quartiles(ps)
+    _, cmed, _ = quartiles(cs)
     spread = 0.0 if pq3 == pq1 else (pq3 - pq1) / abs(pmed) if pmed else float("inf")
     diff = (cmed - pmed) if higher_better else (pmed - cmed)  # > 0: change better
-    all_better = (min(c for _, c in pairs) > max(p for p, _ in pairs) if higher_better
-                  else max(c for _, c in pairs) < min(p for p, _ in pairs))
+    all_better = min(cs) > max(ps) if higher_better else max(cs) < min(ps)
     if share >= 0.9 and diff > (pq3 - pq1):
-        return "better", share
+        return ("same (change fails more)" if fails_more else "better"), share
     if pmed and -diff / abs(pmed) > bound:
         return "worse", share
     if spread > bound and not all_better:
@@ -109,12 +115,15 @@ def report(pairs, bench):
     for wl in sorted({p["workload"] for p in pairs}):
         rows = [p for p in pairs if p["workload"] == wl]
         print(f"\n== {wl}: {len(rows)} pairs (seeds {rows[0]['seed']}..{rows[-1]['seed']})")
+        failed_share = {}
         for side in ("parent", "change"):
-            att = sum(r[side]["result"]["attempted"] for r in rows if "result" in r[side])
-            fail = sum(r[side]["result"]["failed"] for r in rows if "result" in r[side])
             errs = sum(1 for r in rows if "error" in r[side])
+            att = errs + sum(r[side]["result"]["attempted"] for r in rows if "result" in r[side])
+            fail = errs + sum(r[side]["result"]["failed"] for r in rows if "result" in r[side])
+            failed_share[side] = fail / att if att else 0.0
             print(f"   {side}: failed {fail}/{att} operations"
-                  f" ({fail / att if att else 0:.3f}), {errs} runs errored")
+                  f" ({failed_share[side]:.3f}), {errs} runs errored")
+        fails_more = failed_share["change"] > failed_share["parent"]
         flat = [(flatten(r["parent"]), flatten(r["change"])) for r in rows]
         names = sorted({k for p, c in flat for k in list(p) + list(c)})
         print(f"   {'metric':34s} {'parent q1/med/q3':>30s} {'change q1/med/q3':>30s}  won  verdict")
@@ -125,7 +134,7 @@ def report(pairs, bench):
                 hb, bound = gated[n]["better"] == "higher", gated[n]["bound"]
             else:
                 hb, bound = n.endswith("_per_s") or not n.endswith(LOWER), DETAIL_BOUND
-            v, share = verdict(par, chg, hb, bound)
+            v, share = verdict(par, chg, hb, bound, fails_more)
             fmt = lambda q: "/".join(f"{x:.4g}" for x in q) if q[0] is not None else "-"
             print(f"   {n:34s} {fmt(quartiles([x for x in par if x is not None])):>30s} "
                   f"{fmt(quartiles([x for x in chg if x is not None])):>30s} "

@@ -185,7 +185,6 @@ def main():
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--gen-only", type=int, default=0)
     ap.add_argument("--out", default=None)
-    ap.add_argument("--timeout", type=int, default=RUN_TIMEOUT_S)
     a = ap.parse_args()
 
     bdir = build_dir()
@@ -204,7 +203,7 @@ def main():
         fail(f"missing floor tables in {data}")
     run_jvm(cp, out, ["--workload", a.workload, "--seed", str(a.seed),
                             "--seconds", str(a.seconds), "--trace", str(a.trace),
-                            "--out", out, "--bench", HERE, "--data", data], timeout=a.timeout)
+                            "--out", out, "--bench", HERE, "--data", data])
     with open(os.path.join(out, "result.json")) as f:
         result = json.load(f)
 

@@ -26,27 +26,32 @@ object Gen {
 
   // ---- floor ------------------------------------------------------------
 
-  /** The frozen query list, stratified by recorded wall: queries sorted by
-    * wall fall into consecutive blocks of `block`; round r visits one query
-    * of every block, blocks in a seeded order, so every prefix of the run
-    * samples the whole wall range instead of a seed-dependent slice of it.
-    * All rounds together visit every query exactly once. */
-  val FloorBlock = 12
+  /** The frozen query list in `block` rounds, stratified by recorded wall.
+    * The queries in `every` run in every round. The others, sorted by wall,
+    * fall into consecutive blocks of `block`; round r takes the r-th query
+    * of every block (in a seeded order within the block, wrapping round in
+    * a shorter last block). Each round is in a seeded order. So every round
+    * samples the whole wall range instead of a seed-dependent slice of it,
+    * and all rounds together visit every query. */
+  val FloorBlock = 40
 
-  def floorOrder(names: IndexedSeq[(String, Double)], seed: Long,
+  def floorStrata(listed: Int, every: Int, block: Int = FloorBlock): Int =
+    (listed - every + block - 1) / block
+
+  def floorOrder(names: IndexedSeq[(String, Double)], every: Set[String], seed: Long,
       block: Int = FloorBlock): IndexedSeq[String] = {
     val rnd = new SplittableRandom(seed)
-    val blocks = names.sortBy(x => (x._2, x._1)).map(_._1).grouped(block)
-      .map(b => shuffle(b.toIndexedSeq, rnd)).toIndexedSeq
-    (0 until block).flatMap { r =>
-      shuffle(blocks.indices, rnd).flatMap(b => blocks(b).lift(r))
-    }
+    val fixed = names.map(_._1).filter(every)
+    val blocks = names.filterNot(x => every(x._1)).sortBy(x => (x._2, x._1)).map(_._1)
+      .grouped(block).map(b => shuffle(b.toIndexedSeq, rnd)).toIndexedSeq
+    (0 until block).flatMap(r => shuffle(fixed ++ blocks.map(b => b(r % b.size)), rnd))
   }
 
-  def writeFloor(dir: Path, names: IndexedSeq[(String, Double)], seed: Long): Path = {
+  def writeFloor(dir: Path, names: IndexedSeq[(String, Double)], every: Set[String],
+      seed: Long): Path = {
     val p = dir.resolve("floor_order.txt")
     val w = writer(p)
-    try floorOrder(names, seed).foreach { n => w.write(n); w.write('\n') } finally w.close()
+    try floorOrder(names, every, seed).foreach { n => w.write(n); w.write('\n') } finally w.close()
     p
   }
 

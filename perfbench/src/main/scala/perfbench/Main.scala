@@ -126,7 +126,7 @@ object Workloads {
   val GenerateReps = 3
 
   def generate(workload: String, bench: Path, dir: Path, seed: Long): Unit = workload match {
-    case "floor" => Gen.writeFloor(dir, floorList(bench).map(x => (x._1, x._3)), seed)
+    case "floor" => Gen.writeFloor(dir, floorList(bench).map(x => (x._1, x._3)), Floor.Iterative, seed)
     case "knn-serve" => Gen.writeKnn(dir, KnnSizesDefault, seed)
     case "prep" => Prep.writeInputs(dir, seed)
     case other => sys.error(s"unknown workload: $other")

@@ -1,4 +1,5 @@
-"""Seeded inputs: one seed gives byte-identical inputs, two seeds differ.
+"""Seeded inputs: one seed gives byte-identical inputs, two seeds differ,
+and every `floor` round holds the iterative graph operators.
 
     python3 -m unittest discover -s perfbench/tests
 
@@ -11,6 +12,10 @@ import subprocess
 import sys
 import tempfile
 import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import metrics  # noqa: E402
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROOT = os.path.dirname(HERE)
@@ -46,6 +51,22 @@ class SeededInputsTest(unittest.TestCase):
                 c = generate(w, 8, os.path.join(tmp, f"{w}-c"))
                 self.assertEqual(a, b, f"{w}: seed 7 twice gave different inputs")
                 self.assertNotEqual(a, c, f"{w}: seeds 7 and 8 gave the same inputs")
+
+    def test_floor_rounds_hold_the_iterative_operators(self):
+        with tempfile.TemporaryDirectory(dir=ROOT, prefix=".bench_build_test") as tmp:
+            generate("floor", 7, tmp)
+            with open(os.path.join(tmp, "inputs", "floor_order.txt")) as f:
+                order = f.read().split()
+        rounds = order.count("q62_connected_dups")
+        self.assertGreater(rounds, 1)
+        self.assertEqual(len(order) % rounds, 0)
+        size = len(order) // rounds
+        for r in range(rounds):
+            got = set(order[r * size:(r + 1) * size])
+            self.assertTrue(metrics.ITERATIVE <= got, f"round {r} lacks {metrics.ITERATIVE - got}")
+        listed = {l.split("\t")[0] for l in open(os.path.join(HERE, "floor", "queries.tsv"))
+                  if l.strip() and not l.startswith("#")}
+        self.assertEqual(set(order), listed)
 
 
 if __name__ == "__main__":

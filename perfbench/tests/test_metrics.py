@@ -1,4 +1,5 @@
-"""Benchmark arithmetic: span self times and the tail-percentile rule.
+"""Benchmark arithmetic: span self times, the tail-percentile rule, the
+throughput denominator and the comparison verdict.
 
     python3 -m unittest discover -s perfbench/tests
 """
@@ -8,6 +9,7 @@ import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import compare  # noqa: E402
 import metrics  # noqa: E402
 
 
@@ -71,6 +73,41 @@ class TailTest(unittest.TestCase):
 
     def test_order_does_not_matter(self):
         self.assertEqual(metrics.tail(list(range(100, 0, -1))), (90.0, 90))
+
+
+class ThroughputTest(unittest.TestCase):
+    def test_time_between_operations_is_not_counted(self):
+        # two 1 s operations with a 3 s gap (isolation, checks) between them
+        ops = [{"ok": True, "start_ns": 0, "end_ns": 10**9},
+               {"ok": True, "start_ns": 4 * 10**9, "end_ns": 5 * 10**9}]
+        result = {"ops": ops, "boot_s": 1.0, "generate_reps_s": [0.1, 0.3, 0.2], "warm_s": 2.0}
+        e2e = metrics.end_to_end(result)
+        self.assertEqual(e2e["requests_per_s"][0], 1.0)
+        self.assertAlmostEqual(e2e["setup_s"][0], 3.2)
+
+
+class VerdictTest(unittest.TestCase):
+    par = [10.0] * 10
+
+    def test_better_over_all_pairs(self):
+        self.assertEqual(compare.verdict(self.par, [12.0] * 10, True, 0.1), ("better", 1.0))
+
+    def test_errored_pairs_are_lost(self):
+        # the change errored in 2 of 10 pairs: 8/10 won, not better
+        chg = [12.0] * 8 + [None, None]
+        v, share = compare.verdict(self.par, chg, True, 0.1)
+        self.assertEqual(share, 0.8)
+        self.assertNotEqual(v, "better")
+        # the parent errored: the change wins those pairs
+        par = [None] + [10.0] * 9
+        self.assertEqual(compare.verdict(par, [12.0] * 10, True, 0.1), ("better", 1.0))
+
+    def test_more_failures_is_not_better(self):
+        v, _ = compare.verdict(self.par, [12.0] * 10, True, 0.1, fails_more=True)
+        self.assertNotEqual(v, "better")
+
+    def test_worse(self):
+        self.assertEqual(compare.verdict(self.par, [8.0] * 10, True, 0.1)[0], "worse")
 
 
 if __name__ == "__main__":

@@ -9,8 +9,9 @@ sit above it.  Each query is mapped to the repository module whose public
 functions its body mainly calls: references to objects defined under each
 module directory are counted inside the query's definition, and the
 registry's own module wins ties.  The third argument is the result file of
-a `floor` run long enough to visit every listed query (run.py --seconds 250
---timeout 900); each query's last wall in it is recorded as its local wall,
+a `floor` run long enough to visit every listed query (`run.run_jvm` called
+with `--seconds 400` and a longer timeout, as tools/make_expected.py calls
+it); each query's last wall in it is recorded as its local wall,
 which orders the strata of the seeded run order.  The output rows are
 `name <tab> module <tab> wall_c8_s <tab> wall_local_s`.
 """

@@ -50,6 +50,7 @@ def main():
     ap.add_argument("--seconds", type=float, default=10)
     a = ap.parse_args()
     sys.path.insert(0, HERE)
+    import metrics
     import run as bench_run
     untraced_detail, untraced = run(a.workload, a.seed, a.seconds, 0)
     traced_detail, traced = run(a.workload, a.seed, a.seconds, 1)
@@ -67,8 +68,7 @@ def main():
     for k, v in traced["metrics"].items():
         print(f"  {k:40s} {v['value']:14.4f} {v['unit']}")
     u = untraced["metrics"]["requests_per_s"]["value"]
-    ops = result["ops"]
-    t = len([o for o in ops if o["ok"]]) / ((ops[-1]["end_ns"] - result["loop_start_ns"]) / 1e9)
+    t = metrics.end_to_end(result)["requests_per_s"][0]
     print(f"\ntracing overhead ({a.workload}): untraced {u:.4f} 1/s, traced {t:.4f} 1/s, "
           f"overhead {u / t - 1:+.1%} of traced throughput")
 
