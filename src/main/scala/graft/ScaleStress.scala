@@ -1550,12 +1550,12 @@ object ScaleStress {
 
   /** PageRank scaling (q155's engine): wall vs edge count at fixed
     * iterations, and wall vs iteration count at fixed edges. The scale
-    * claims under test: (1) per-iteration cost is ONE shuffle of the
-    * rank table + one of the contribs — wall grows ~linearly with
-    * edges; (2) the eager-localCheckpoint iterate keeps per-round cost
-    * CONSTANT across rounds (plan depth never grows), so wall is
-    * ~linear in iters too. A super-linear iters curve would mean the
-    * lineage is leaking into later rounds. */
+    * claims under test: (1) per-iteration cost is ONE Spark job with
+    * one shuffle of the contribs — wall grows ~linearly with edges;
+    * (2) each round reads only the persisted adjacency and the previous
+    * persisted iterate, so per-round cost is CONSTANT across rounds and
+    * wall is ~linear in iters too. A super-linear iters curve would mean
+    * earlier rounds are being recomputed. */
   def pageRankCurve(spark: SparkSession): Unit = {
     println("== pagerank: wall vs edges (3 iters) and vs iters (1M edges), damping 0.5 ==")
     def graph(n: Long): (DataFrame, DataFrame) = {

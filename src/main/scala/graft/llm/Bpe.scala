@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * same merge table out, any partitioning.
   *
   * The per-iteration state (`word reps`) is re-checkpointed each round,
-  * [[Components.connected]]-style, so the loop's lineage stays flat.
+  * so the loop's plan stays flat.
   */
 object Bpe {
 

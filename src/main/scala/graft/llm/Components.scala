@@ -2,39 +2,33 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.operators.VertexRounds
 
 /** Connected components over a near-duplicate pair set (B32's "connected
   * duplicates"): collapse A~B, B~C into one cluster so dedup keeps exactly
   * one survivor per transitive family and cluster stats (size distribution,
   * per-cluster spread) can drive threshold tuning.
   *
-  * Algorithm: iterative min-label propagation. Every vertex starts labeled
-  * with its own id; each round every vertex takes the min of its own label
-  * and its neighbors' labels; at fixpoint the label is the component's
-  * minimum id — a deterministic, content-independent cluster id.
-  *
-  * Scale shape (100 TB): the edge set is the SMALL relation here (near-dup
-  * pairs, already bucketed/reranked upstream — not the corpus). Per round:
-  * one equi-join (labels ⋈ edges on vertex id) + one min-aggregation — two
-  * key shuffles on the vertex id, both AQE-sized. Rounds needed = component
-  * diameter, and duplicate clusters are near-cliques (LSH emits most
-  * intra-cluster pairs directly), so 2–4 rounds is typical; the `maxIters`
-  * guard turns a pathological chain into a loud failure instead of a silent
-  * wrong answer. Each round's labels are cut from lineage with an eager
-  * `localCheckpoint` — without it the plan doubles per iteration and the
-  * optimizer replans the full history every round. For graphs whose
-  * diameter genuinely scales (web graphs, not dedup families), swap the
-  * propagation body for the large-star/small-star contraction — same loop
-  * skeleton, O(log n) rounds.
+  * Algorithm: min-label propagation on [[VertexRounds]], one Spark job per
+  * round. Every vertex starts labeled with its own id; in each round the
+  * vertices relabeled in the previous one send their label to their
+  * neighbors (who already hold every older label) and each vertex keeps the
+  * minimum. At fixpoint the label is the component's minimum id — a
+  * deterministic, content-independent cluster id. Rounds needed = component
+  * diameter; duplicate clusters are near-cliques, so 2–4 rounds is typical,
+  * and the `maxIters` guard turns a pathological chain into a loud failure
+  * instead of a silent wrong answer. For graphs whose diameter genuinely
+  * scales (web graphs), swap the propagation body for the large-star/
+  * small-star contraction — same loop skeleton, O(log n) rounds.
   */
 object Components {
 
   /** (vertex, component) for every vertex appearing in `pairs`, where
-    * component = min vertex id reachable through the pair edges.
+    * component = min vertex id reachable through the pair edges. Ids are
+    * integral and keep their type; a pair with a null endpoint is dropped.
     *
-    * @param pairs  undirected edge list
-    * @param idA    left endpoint column name
-    * @param idB    right endpoint column name
     * @param maxIters hard bound on propagation rounds; exceeded ⇒
     *                 IllegalStateException (a diameter this large means the
     *                 input is not a dedup pair set — see scaladoc)
@@ -44,44 +38,22 @@ object Components {
       idA: String = "id_a",
       idB: String = "id_b",
       maxIters: Int = 30): DataFrame = {
-    // symmetrize once; read every round, so cache for the loop's duration
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .cache()
-
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-      .localCheckpoint(true)
-    try {
-      var round = 0
-      var changed = 1L
-      while (changed > 0) {
-        if (round >= maxIters)
-          throw new IllegalStateException(
-            s"component propagation did not converge in $maxIters rounds — " +
-              "input is not a bounded-diameter dedup pair set")
-        // neighbor labels flow along edges; min with the current label
-        val msgs = edges.join(labels, col("src") === col("id"))
-          .select(col("dst").as("id"), col("component"))
-        // the PREVIOUS label rides through the same aggregate (each id has
-        // exactly one labels row, so min(prev) over its null-padded union
-        // with msgs is that row's label): the convergence check is then a
-        // filter-count over the just-checkpointed blocks — a scan of local
-        // materialized data, not the labels⋈next join+shuffle each round
-        // previously paid (VERDICT r3 minor #4)
-        val prevType = labels.schema("component").dataType
-        val next = labels
-          .select(col("id"), col("component"), col("component").as("prev"))
-          .unionByName(msgs.withColumn("prev", lit(null).cast(prevType)))
-          .groupBy("id").agg(min("component").as("component"), min("prev").as("prev"))
-          .localCheckpoint(true) // cut lineage: constant-depth plan per round
-        changed = next.filter(col("component") =!= col("prev")).count()
-        labels = next.select("id", "component")
-        round += 1
-      }
-      labels
-    } finally edges.unpersist()
+    val idType = VertexRounds.idType(pairs, idA)
+    val g = new VertexRounds("Components.connected",
+      pairs.select(col(idA).cast("long"), col(idB).cast("long")), undirected = true)
+    val init = g.adj.mapPartitions(_.map { case (v, _) => (v, (v, true)) },
+      preservesPartitioning = true)
+    val (labels, changed) = g.run(init, maxIters)((l: Long, _) => l,
+        (a: Long, b: Long) => math.min(a, b)) {
+      case (_, Some(l), Some(m)) if m < l => Some((m, true))
+      case (_, l, _) => l.map((_, false))
+    }
+    if (changed != 0)
+      throw new IllegalStateException(
+        s"component propagation did not converge in $maxIters rounds — " +
+          "input is not a bounded-diameter dedup pair set")
+    g.frame(labels, "id", "component", LongType)(identity)
+      .select(col("id").cast(idType), col("component").cast(idType))
   }
 
   /** Per-component stats over a pair set — size and id-span of each

@@ -2,6 +2,9 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.operators.VertexRounds
 
 /** Link-graph analytics over a crawled corpus — the page-quality side of
   * crawl curation: harvested `<a href>` edges ([[Html.links]]) feed
@@ -9,14 +12,11 @@ import org.apache.spark.sql.functions._
   * documents by, the same role the reference corpus-curation literature
   * assigns link-based quality scores next to text-level ones.
   *
-  * Scale design: the edge list is the 100 TB-class input. Per-edge
-  * weights (1/outdeg) are computed ONCE with a single groupBy+join and
-  * cached; each iteration is then one shuffle (contribs groupBy dst) +
-  * one broadcast-free left join back to the vertex set, and every
-  * iterate is eagerly `localCheckpoint`ed so the plan stays
-  * constant-depth across rounds (the [[Components.connected]] pattern —
-  * without it the lineage doubles per iteration and the optimizer
-  * re-derives the whole prefix each round).
+  * Scale design: the edge list is the 100 TB-class input. It becomes a
+  * persisted, vertex-partitioned adjacency once; each iteration is then one
+  * Spark job on [[graft.operators.VertexRounds]] — one shuffle of the
+  * contributions by destination — and the superseded iterate is
+  * unpersisted, so storage stays O(1) iterates across rounds.
   */
 object LinkGraph {
 
@@ -30,54 +30,29 @@ object LinkGraph {
     * rational, so results are bit-identical regardless of partition
     * count or summation order — what lets q155 hash-check an ITERATIVE
     * distributed computation against a SQL oracle with no rounding).
-    * Vertices with no out-links contribute nothing (dangling mass is
-    * dropped, not redistributed); vertices with no in-links settle at
-    * 1−d.
+    * Otherwise the contributions to a vertex are summed in shuffle
+    * order, which is not fixed, so the last bits of a rank may differ
+    * between runs. Vertices with no out-links contribute nothing
+    * (dangling mass is dropped, not redistributed); vertices with no
+    * in-links settle at 1−d. Edges with a null endpoint and null vertex
+    * ids are dropped.
     *
-    * @param nodes single-column `v` vertex set
+    * @param nodes single-column `v` vertex set (integral ids, type kept)
     * @param edges `src`/`dst` directed edge list (multi-edges count
     *              per-occurrence, as a SQL UNION ALL oracle does)
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
       damping: Double): DataFrame = {
     require(iters >= 0, s"iters must be >= 0: $iters")
-    val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val weighted = edges.join(outdeg, "src")
-      .select(col("src"), col("dst"),
-        (lit(1.0) / col("outdeg").cast("double")).as("wt"))
-      .cache()
-    var ranks = nodes.select(col("v"), lit(1.0).as("r")).localCheckpoint(true)
-    try {
-      var t = 0
-      while (t < iters) {
-        val contribs = weighted.join(ranks, weighted("src") === ranks("v"))
-          .groupBy(col("dst")).agg(sum(col("r") * col("wt")).as("c"))
-        val prev = ranks
-        ranks = nodes.join(contribs, nodes("v") === contribs("dst"), "left")
-          .select(col("v"),
-            (lit(1.0 - damping) + lit(damping) * coalesce(col("c"), lit(0.0))).as("r"))
-          .localCheckpoint(true) // constant-depth plan per round
-        // the new iterate is MATERIALIZED (eager checkpoint), so the
-        // superseded one's blocks can be dropped deterministically —
-        // leaving reclaim to the ContextCleaner keeps O(iters) iterates
-        // in storage on a long run (100-iteration cluster jobs)
-        unpersistCheckpoint(prev)
-        t += 1
-      }
-      ranks.select(col("v"), col("r").as("pr"))
-    } finally weighted.unpersist()
-  }
-
-  /** Drop the persisted blocks behind an eagerly-checkpointed iterate.
-    * A `localCheckpoint(true)` DataFrame's plan is a `LogicalRDD` over
-    * the persisted internal RDD — `Dataset.unpersist` does NOT reach it
-    * (checkpoint storage bypasses the CacheManager), so the RDD handle
-    * is taken from the plan. Blocking=false: reclaim may overlap the
-    * next iteration's compute. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ => () // not a checkpointed plan: nothing persisted to drop
+    val idType = VertexRounds.idType(nodes, "v")
+    val g = new VertexRounds("LinkGraph.pageRank",
+      edges.select(col("src").cast("long"), col("dst").cast("long")), undirected = false)
+    val (ranks, _) = g.run(g.keyed(nodes.select(col("v").cast("long")), 1.0), iters)(
+        (r: Double, outdeg) => r * (1.0 / outdeg), (a: Double, b: Double) => a + b) {
+      case (_, Some(_), c) => Some(((1.0 - damping) + damping * c.getOrElse(0.0), true))
+      case (_, None, _) => None // an edge into a vertex outside `nodes`
     }
+    g.frame(ranks, "v", "pr", DoubleType)(identity)
+      .select(col("v").cast(idType), col("pr"))
+  }
 }

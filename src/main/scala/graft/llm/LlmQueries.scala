@@ -3138,8 +3138,7 @@ object LlmQueries {
   // dyadic rational (denominator ≤ 4³), so partition count and summation
   // order cannot move a single bit, and three unrolled join+groupBy CTE
   // levels in DuckDB re-derive the values exactly. Per-iteration cost is
-  // one shuffle; iterates are eagerly localCheckpoint'ed (constant-depth
-  // plans — the Components pattern).
+  // one Spark job with one shuffle (graft.operators.VertexRounds).
   val q155 = Q(
     "q155_pagerank",
     """WITH nn AS (SELECT count(*) AS cnt FROM documents),

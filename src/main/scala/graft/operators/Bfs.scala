@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Bounded-hop BFS distances — min hop count from a SOURCE SET to
   * every vertex within `maxHops`, the multi-source shortest-path
@@ -12,53 +13,33 @@ import org.apache.spark.sql.functions._
   * connected, PageRank (q155) asks HOW CENTRAL, triangles (q214) ask
   * HOW CLUSTERED — this asks HOW FAR.
   *
-  * Algorithm: min-distance label propagation, the Components loop
-  * skeleton with + 1 instead of min-label: every round, frontier
-  * labels flow one hop along edges and each vertex keeps its minimum.
-  * EXACTLY `maxHops` rounds run — bounded-hop semantics are the
-  * CONTRACT (vertices farther than maxHops are absent from the
-  * output), not a convergence accident, so the loop needs no
-  * changed-count round and the plan depth is fixed at authoring time.
-  *
-  * Scale shape: per round one equi-join (edges ⋈ frontier) + one
-  * min-aggregate — two vertex-keyed shuffles, AQE-sized; labels are
-  * cut from lineage each round with an eager localCheckpoint (the
-  * Components discipline — without it the plan doubles per round).
-  * Rounds are maxHops by construction; a web-scale k of 3–6 is the
-  * typical feature depth. Edges are read every round → cached for the
-  * loop, unpersisted after. */
+  * Algorithm: frontier expansion on [[VertexRounds]], one Spark job per
+  * hop: in hop h the vertices first reached in hop h − 1 send h to their
+  * neighbors, and an unreached vertex takes the minimum. Bounded-hop
+  * semantics are the CONTRACT (vertices farther than maxHops are absent
+  * from the output), not a convergence accident; the loop stops early only
+  * once the frontier is empty. A web-scale k of 3–6 is the typical
+  * feature depth. */
 object Bfs {
 
   /** (id, dist) for every vertex within maxHops of `sources` —
     * sources themselves at dist 0. `edges` is an undirected pair set
     * (symmetrized internally); `sources` is a one-column frame of
-    * vertex ids. */
+    * vertex ids. Pairs with a null endpoint and null sources are dropped. */
   def boundedDistances(edges: DataFrame, idA: String, idB: String,
       sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops out of range: $maxHops (a fixed-round traversal past " +
         "64 hops is a diameter problem, not a feature extraction)")
-    val e = edges.select(col(idA).cast("long").as("src"),
-        col(idB).cast("long").as("dst"))
-      .union(edges.select(col(idB).cast("long").as("src"),
-        col(idA).cast("long").as("dst")))
-      .distinct()
-      .cache()
-    var dist = sources.select(sources.columns.head)
-      .toDF("id").select(col("id").cast("long"), lit(0L).as("dist"))
-      .distinct()
-      .localCheckpoint(true)
-    try {
-      var h = 0
-      while (h < maxHops) {
-        val msgs = e.join(dist, col("src") === col("id"))
-          .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-        dist = dist.unionByName(msgs)
-          .groupBy("id").agg(min("dist").as("dist"))
-          .localCheckpoint(true)
-        h += 1
-      }
-      dist
-    } finally e.unpersist()
+    val g = new VertexRounds("Bfs.boundedDistances",
+      edges.select(col(idA).cast("long"), col(idB).cast("long")), undirected = true)
+    val sourceIds = g.keyed(sources.select(col(sources.columns.head).cast("long")), 0L)
+      .reduceByKey((a, _) => a)
+    val (dist, _) = g.run(sourceIds, maxHops)((d: Long, _) => d + 1,
+        (a: Long, b: Long) => math.min(a, b)) {
+      case (_, Some(d), _) => Some((d, false))
+      case (_, None, m) => m.map((_, true))
+    }
+    g.frame(dist, "id", "dist", LongType)(identity)
   }
 }

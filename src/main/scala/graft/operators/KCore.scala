@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Bounded-round k-core peeling — iteratively remove vertices whose
   * REMAINING degree is below k: the density-tier decomposition behind
@@ -11,21 +12,17 @@ import org.apache.spark.sql.functions._
   * trio asks connected/central/clustered (q62/q155/q214), BFS asks
   * how far (q231); this asks HOW DEEP each vertex sits.
   *
-  * Exactly `rounds` peel rounds run — like Bfs.boundedDistances, the
-  * bound is the CONTRACT: the output labels each vertex with the
-  * round that removed it (1-based) or 0 for surviving every round,
-  * i.e. a truncated coreness ladder ("peeled in round 1" ≈ leafiest
-  * tier). Full coreness is the rounds → ∞ limit; a fixed small
-  * `rounds` is the feature-extraction shape (and the oracle replays
-  * it as chained aggregating CTEs — a convergence loop could not be
-  * stated in SQL).
+  * Exactly `rounds` peel rounds define the result — the bound is the
+  * CONTRACT: each vertex is labeled with the round that removed it
+  * (1-based) or 0 for surviving every round, a truncated coreness ladder
+  * (the oracle replays it as chained aggregating CTEs). A round that peels
+  * nobody leaves every later round unchanged, so the loop stops there.
   *
-  * Per round: one degree aggregate over live edges + two semi-joins
-  * restricting edges to live vertices — all vertex-keyed shuffles,
-  * AQE-sized; live sets and edges are localCheckpoint'd per round
-  * (the Components lineage discipline). Isolated-by-peeling vertices
-  * (degree 0 after their neighbors left) peel via the left-join
-  * degree of 0 — they must not linger as phantom survivors. */
+  * Per round, on [[VertexRounds]] (one Spark job): the vertices peeled in
+  * the previous round send 1 to each neighbor, a live vertex's degree
+  * drops by the sum, and a live vertex below k is peeled — including
+  * isolated-by-peeling ones at degree 0, which must not linger as phantom
+  * survivors. Self-loops and pairs with a null endpoint are dropped. */
 object KCore {
 
   /** (id, removed_round): 1-based round that peeled the vertex, 0 =
@@ -34,33 +31,17 @@ object KCore {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e0 = edges.select(col(idA).cast("long").as("u"),
-        col(idB).cast("long").as("v"))
-      .union(edges.select(col(idB).cast("long").as("u"),
-        col(idA).cast("long").as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-    var live = e0.select(col("u").as("id")).distinct().localCheckpoint(true)
-    var e = e0.localCheckpoint(true)
-    var removed = Seq.empty[(Long, Int)].toDF("id", "removed_round")
-    var r = 1
-    while (r <= rounds) {
-      val deg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("d"))
-      val degAll = live.join(deg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("d"), lit(0L)).as("d"))
-      val doomed = degAll.filter(col("d") < k).select("id")
-      removed = removed.unionByName(
-        doomed.select(col("id"), lit(r).as("removed_round")))
-        .localCheckpoint(true)
-      live = degAll.filter(col("d") >= k).select("id").localCheckpoint(true)
-      e = e.join(live.select(col("id").as("u")), Seq("u"), "semi")
-        .join(live.select(col("id").as("v")), Seq("v"), "semi")
-        .select("u", "v")
-        .localCheckpoint(true)
-      r += 1
+    val g = new VertexRounds("KCore.peelRounds",
+      edges.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+        .filter(col("u") =!= col("v")), undirected = true)
+    // (live degree, removed round); flagged = peeled in the last round
+    val degrees = g.adj.mapValues(ns => ((ns.length, 0), false))
+    val (state, _) = g.run(degrees, rounds)((_: (Int, Int), _) => 1, (a: Int, b: Int) => a + b) {
+      case (r, Some((d0, 0)), m) =>
+        val d = d0 - m.getOrElse(0)
+        Some(if (d < k) ((d, r), true) else ((d, 0), false))
+      case (_, s, _) => s.map((_, false))
     }
-    removed.unionByName(live.select(col("id"), lit(0).as("removed_round")))
+    g.frame(state, "id", "removed_round", IntegerType)(_._2)
   }
 }

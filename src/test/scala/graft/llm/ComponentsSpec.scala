@@ -54,6 +54,20 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
+  test("a pair with a null endpoint is dropped, never a null-id vertex") {
+    val pairs = Seq((Some(1L), None), (Some(2L), Some(3L)), (None, Some(2L)))
+      .toDF("id_a", "id_b")
+    val got = Components.connected(pairs).orderBy("id")
+      .as[(Long, Long)].collect().toSeq
+    assert(got == Seq((2L, 2L), (3L, 2L)))
+  }
+
+  test("ids keep their integral type") {
+    val got = Components.connected(Seq((3, 1)).toDF("id_a", "id_b"))
+    assert(got.schema.map(_.dataType.typeName) == Seq("integer", "integer"))
+    assert(got.orderBy("id").as[(Int, Int)].collect().toSeq == Seq((1, 1), (3, 1)))
+  }
+
   test("componentStats reports family sizes") {
     val pairs = Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("id_a", "id_b")
     val got = Components.componentStats(pairs).orderBy("component")

@@ -33,14 +33,25 @@ class LinkGraphSpec extends SparkSpec {
   }
 
   test("superseded iterates unpersist: storage stays O(1) across rounds") {
-    // each round eagerly checkpoints the new iterate; without the
-    // explicit unpersist of the previous one, 8 iterations leave 8
-    // persisted RDD handles for the ContextCleaner to maybe reclaim
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    run(Seq(0L, 1L, 2L), Seq(0L -> 1L, 0L -> 2L, 1L -> 2L), 8)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // at most the FINAL iterate may remain persisted (weighted is
-    // unpersisted in the finally; all superseded iterates dropped)
-    assert(leaked.size <= 1, s"leaked persisted RDDs: $leaked")
+    // each round persists the new iterate; without the explicit unpersist
+    // of the previous one, 8 rounds leave 8 persisted RDD handles for the
+    // ContextCleaner to maybe reclaim
+    import spark.implicits._
+    val chain = Seq.tabulate(8)(i => (i.toLong, i + 1L))
+    val runs = Seq[(String, () => Unit)](
+      "LinkGraph.pageRank" -> (() => run(Seq(0L, 1L, 2L), Seq(0L -> 1L, 0L -> 2L, 1L -> 2L), 8)),
+      "Components.connected" -> (() => Components.connected(chain.toDF("id_a", "id_b")).collect()),
+      "Bfs.boundedDistances" -> (() => graft.operators.Bfs.boundedDistances(
+        chain.toDF("u", "v"), "u", "v", Seq(0L).toDF("id"), 8).collect()),
+      "KCore.peelRounds" -> (() => graft.operators.KCore.peelRounds(
+        chain.toDF("u", "v"), "u", "v", 2, 8).collect()))
+    for ((op, call) <- runs) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      call()
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      // at most the FINAL iterate may remain persisted (the adjacency is
+      // unpersisted in the finally; all superseded iterates dropped)
+      assert(leaked.size <= 1, s"$op leaked persisted RDDs: $leaked")
+    }
   }
 }

@@ -35,6 +35,15 @@ class BfsSpec extends SparkSpec {
     assert(run(edges, Seq(1L), 3) == Map(1L -> 0L, 2L -> 1L, 3L -> 1L))
   }
 
+  test("pairs with a null endpoint and null sources are dropped") {
+    val edges = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)))
+      .toDF("u", "v")
+    val got = Bfs.boundedDistances(edges, "u", "v",
+        Seq(Some(1L), None).toDF("id"), 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 0L, 2L -> 1L))
+  }
+
   test("zero hops returns exactly the source set") {
     assert(run(Seq((1L, 2L)), Seq(1L), 0) == Map(1L -> 0L))
   }

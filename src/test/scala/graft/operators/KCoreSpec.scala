@@ -32,4 +32,12 @@ class KCoreSpec extends SparkSpec {
     val got = run(Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 9L)), 2, 3)
     assert(got == Map(1L -> 0, 2L -> 0, 3L -> 0, 9L -> 1))
   }
+
+  test("pairs with a null endpoint are dropped") {
+    val edges = Seq((Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+      (Some(3L), None), (None, Some(1L))).toDF("u", "v")
+    val got = KCore.peelRounds(edges, "u", "v", 2, 3)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == Map(1L -> 0, 2L -> 0, 3L -> 0))
+  }
 }
