@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+
+import graft.Timing.{consume, isolate}
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR.
   * The LAST stdout line is a compact JSON summary
@@ -63,17 +65,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * suite total with each retried query at min(wall, retry_wall).
   */
 object Bench {
-
-  /** Timed action: a noop-sink write, which materializes EVERY output
-    * column. `count()` — the previous action — let Catalyst prune unused
-    * projections and eliminate sorts, so projection-only queries (q30
-    * fingerprints, q32 simhash, q63 winnow…) timed as bare row counts
-    * without ever computing the operator under test (q32 "ran" in 0.15 s
-    * while its fingerprint scan really costs seconds). The noop sink is
-    * the standard benchmark terminal: full computation, no result
-    * serialization or disk. */
-  private def consume(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** Fixed-cost CPU probe: 2^28 xxhash64 folds across all cores. Quiet-
     * machine nominal is recorded in BASELINE.md; scale-independent. */
@@ -166,23 +157,6 @@ object Bench {
   private def storageBytes(spark: SparkSession): Long =
     spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
 
-  /** Per-query isolation (VERDICT r3 "What's wrong" #1: q60 measured 21 s
-    * mid-suite vs 7 s isolated — the operator was fine, the HARNESS let 40+
-    * preceding queries' cache/localCheckpoint blocks pile up, because
-    * eager-checkpoint blocks release only when the ContextCleaner notices
-    * the dropped Dataset, which is GC-driven and asynchronous). Between
-    * queries: drop Dataset caches, SYNCHRONOUSLY unpersist every still-
-    * persisted RDD (this is what actually frees checkpoint blocks — safe
-    * here because each bench query is consumed and dropped before the next
-    * starts), then nudge GC so the cleaner sweeps dead broadcast/shuffle
-    * state. Isolation runs OUTSIDE the timed window. */
-  private def isolate(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-  }
-
   /** Quiet-machine per-query records, written by
     * scripts/update_baseline_queries.py from quiet local bench_full.json
     * runs. Two schemas are accepted: the legacy flat `{"name": wall}` and
@@ -227,10 +201,11 @@ object Bench {
     // Configuration, detaching any appender installed earlier
     CodegenGuard.install()
 
-    val listener = new QueryMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    def flushBus(): Unit =
-      org.apache.spark.GraftListenerBus.flush(spark.sparkContext)
+    // every timed run, main loop and retry pass alike, goes through one
+    // Timing.Window; a crashed query reads ok = false
+    val window = new Timing.Window(spark)
+    def timed(q: graft.queries.Q): Timing.Timed[Boolean] =
+      window(try { consume(q.fn(spark, sfDir)); true } catch { case _: Throwable => false })
 
     // non-headline queries (composites of individually-timed operators) stay
     // in the correctness contract but out of the default timing set
@@ -271,24 +246,15 @@ object Bench {
     // segment's queries run, and the per-segment waited seconds ship.
     val SegEvery = 15
     val segments = scala.collection.mutable.ArrayBuffer[(Int, Double, Double, Double)]()
-    // timed-window protocol: flush+reset the metrics listener at the open
-    // edge (drops warmup/isolation/probe events), flush+snapshot at the
-    // close edge — the flush makes task-end attribution exact (see
-    // QueryMetricsListener)
     val results = queries.zipWithIndex.map { case (q, i) =>
-      flushBus(); listener.snapshotAndReset() // open edge: discard stale events
-      val t0 = System.nanoTime()
-      val ok = try { consume(q.fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      val wall = (System.nanoTime() - t0) / 1e9
-      flushBus()
-      val qm = listener.snapshotAndReset() // close edge: this query's tasks only
+      val t = timed(q)
       val leftover = storageBytes(spark) // what the query would have leaked
       isolate(spark)
       if ((i + 1) % SegEvery == 0 && i + 1 < queries.size) {
         val (c, s, w, _) = gatedProbe(spark)
         segments += ((i + 1, c, s, w))
       }
-      (q.name, wall, ok, leftover, qm)
+      (q.name, t.wall, t.value, leftover, t.metrics)
     }
     val calibAfter = calibrate(spark)
     val shuffleAfter = calibrateShuffle(spark)
@@ -326,14 +292,9 @@ object Bench {
       retryCandidates.flatMap { case (name, wasContended) =>
         queries.find(_.name == name).map { q =>
           val gate = gatedProbe(spark)
-          flushBus(); listener.snapshotAndReset()
-          val t0 = System.nanoTime()
-          val ok = try { consume(q.fn(spark, sfDir)); true } catch { case _: Throwable => false }
-          val wall = (System.nanoTime() - t0) / 1e9
-          flushBus()
-          val qm = listener.snapshotAndReset()
+          val t = timed(q)
           isolate(spark)
-          (name, wall, ok, qm, wasContended, gate)
+          (name, t.wall, t.value, t.metrics, wasContended, gate)
         }
       }
     val retryCalibAfter =

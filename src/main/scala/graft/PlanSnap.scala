@@ -6,7 +6,8 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** r18 optimization evidence: full `.explain("formatted")` dumps for the
   * queries an optimization round touches, one file per query —
-  * `plans/r18/<query>_<tag>.txt` (tag = args(0), e.g. "before"/"after").
+  * `plans/r19/<query>_<tag>.txt` (tag = args(0), e.g. "before"/"after";
+  * PLANSNAP_DIR overrides the directory).
   * Unlike [[PlanDump]] (condensed, all queries), this keeps the COMPLETE
   * formatted plan so the judge can check claimed plan diffs.
   * Usage: `sbt "runMain graft.PlanSnap before q273_knn_search_indexed,..."

@@ -23,6 +23,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *    signature.
   *  - `inputBytes`: scan-side volume (catches pushdown/pruning drift at
   *    bench time, complementing PlanContractSpec's static pins).
+  *  - `inputRecords`: rows the scans materialized — the pruning A/Bs'
+  *    measure (ScaleStress --layout/--zorder/--pbloom/--dpp): skipped
+  *    row groups and partitions show up as a collapse in records read.
+  *    Not part of [[json]], whose keys bench_full.json consumers pin.
   *  - `cpuSec`/`runSec`: summed executor CPU vs occupancy; their ratio is
   *    per-query scheduling density (runSec ≫ cpuSec → tasks sat blocked).
   *  - `gcSec`: summed task-attributed JVM GC time (VERDICT r9 — the three
@@ -45,6 +49,7 @@ final case class QueryMetrics(
     spillMem: Long,
     spillDisk: Long,
     inputBytes: Long,
+    inputRecords: Long,
     cpuSec: Double,
     runSec: Double,
     gcSec: Double,
@@ -64,7 +69,7 @@ final case class QueryMetrics(
 
 /** SparkListener that accumulates [[QueryMetrics]] between snapshots.
   *
-  * Usage protocol (see [[Bench]]): flush the listener bus + [[snapshotAndReset]]
+  * Usage protocol ([[Timing.Window]] implements it): flush the listener bus + [[snapshotAndReset]]
   * immediately BEFORE a query's timed window opens (discarding warmup /
   * isolation events), run the query, flush again, snapshot AFTER — the
   * flush is what makes attribution exact, because task-end events are
@@ -81,6 +86,7 @@ final class QueryMetricsListener extends SparkListener {
   private val spillMem = new LongAdder
   private val spillDisk = new LongAdder
   private val input = new LongAdder
+  private val inputRecords = new LongAdder
   private val cpuNs = new LongAdder
   private val runMs = new LongAdder
   private val gcMs = new LongAdder
@@ -96,6 +102,7 @@ final class QueryMetricsListener extends SparkListener {
       spillMem.add(tm.memoryBytesSpilled)
       spillDisk.add(tm.diskBytesSpilled)
       input.add(tm.inputMetrics.bytesRead)
+      inputRecords.add(tm.inputMetrics.recordsRead)
       cpuNs.add(tm.executorCpuTime)
       runMs.add(tm.executorRunTime)
       gcMs.add(tm.jvmGCTime)
@@ -117,6 +124,7 @@ final class QueryMetricsListener extends SparkListener {
       spillMem = spillMem.sumThenReset(),
       spillDisk = spillDisk.sumThenReset(),
       inputBytes = input.sumThenReset(),
+      inputRecords = inputRecords.sumThenReset(),
       cpuSec = cpuNs.sumThenReset() / 1e9,
       runSec = runMs.sumThenReset() / 1e3,
       gcSec = gcMs.sumThenReset() / 1e3,

@@ -434,6 +434,10 @@ object KnnGraph {
       // delete/save chain. p is the session's shuffle-partition conf
       // (the deployment knob), pinned so AQE can't starve the
       // pair-multiplying stage — the scorePairs precedent above.
+      // Skew bound: a src sits in at most nProbe cells and meets each
+      // cell's members once (its salt fixes one replica of every dst),
+      // so pairs per src ≤ nProbe × max cell size. The widest task here
+      // is set by the largest cell, not by the corpus size.
       .repartition(p, col("src"))
       .groupBy("src", "dst").agg(max("sim").as("sim"))
   }

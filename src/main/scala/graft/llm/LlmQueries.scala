@@ -489,8 +489,8 @@ object LlmQueries {
   // not the operator under measurement — so the fixture is synthesized
   // ONCE per (session, dir) into a per-run temp parquet and every planted
   // query (q60/q61/q104) times only its operator over a ~0.1 s scan. A
-  // parquet memo, not a localCheckpoint one: Bench.isolate deliberately
-  // unpersists every RDD between queries, which would kill checkpoint
+  // parquet memo, not a localCheckpoint one: Timing.isolate deliberately
+  // unpersists every RDD between Bench queries, which would kill checkpoint
   // blocks but cannot touch files. Deterministic (seeded), ~1.5 MB.
   private val plantedCache = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, String), String]

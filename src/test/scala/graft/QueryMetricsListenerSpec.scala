@@ -32,6 +32,25 @@ class QueryMetricsListenerSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a parquet scan's window counts its rows as input records; reset zeroes it") {
+    val dir = java.nio.file.Files.createTempDirectory("qml_records")
+    val path = dir.resolve("t").toString
+    spark.range(12345L).write.parquet(path)
+    val listener = new QueryMetricsListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      flush(); listener.snapshotAndReset() // open edge
+      spark.read.parquet(path).write.format("noop").mode("overwrite").save()
+      flush()
+      assert(listener.snapshotAndReset().inputRecords == 12345L)
+      flush()
+      assert(listener.snapshotAndReset().inputRecords == 0L)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Timing.rmTree(dir)
+    }
+  }
+
   test("work outside the window (before the open-edge reset) is discarded") {
     val listener = new QueryMetricsListener
     spark.sparkContext.addSparkListener(listener)
