@@ -121,13 +121,14 @@ object PlanDump {
           Seq(graft.llm.Bpe.Merge("t", "h", 2L), graft.llm.Bpe.Merge("a", "n", 2L))))
     for ((name, df) <- internals) dumpSection(name, df)
 
-    // q273's serving hops are checkpoint-severed from its registry plan
-    // above, so dump the node-record probe shape directly: a small
-    // persisted index, a 3-id probe, and the scan lines proving
-    // FILE-LEVEL bucket pruning (SelectedBucketsCount < total) with no
-    // Exchange — autoBucketedScan pinned off exactly as searchIndexed
-    // itself pins it (the planner rule otherwise drops the bucketed
-    // read for scan-only plans and reads every bucket file)
+    // q273's serving hops are not in its registry plan above (the search
+    // returns a driver-held local relation), so dump the node-record
+    // probe shape directly: a small persisted index, a 3-id probe, and
+    // the scan lines proving FILE-LEVEL bucket pruning
+    // (SelectedBucketsCount < total) with no Exchange — autoBucketedScan
+    // pinned off exactly as searchIndexed itself pins it (the planner
+    // rule otherwise drops the bucketed read for scan-only plans and
+    // reads every bucket file)
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     val knnCs = emb.filter(col("vec_id") < 12).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)

@@ -1852,9 +1852,9 @@ object ScaleStress {
     * matters at 100 TB: per-round index IO is the touched-bucket
     * fraction of an n·degree edge table, not the corpus — the beam is
     * queries·beam ids whatever n is, so the fraction FALLS as the
-    * corpus grows while the in-memory path has to materialize the
-    * whole edge table before the first query. Results are asserted
-    * identical to the in-memory search at every point.
+    * corpus grows while the in-memory path first packs the whole corpus
+    * with its edges into a persisted node frame, per search. Results
+    * are asserted identical to the in-memory search at every point.
     *
     * Local-wall caveat (the aggMaintainCurve discipline): in one JVM
     * over warm page cache the idx wall is DOMINATED by per-round

@@ -1,10 +1,13 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.operators.VertexRounds
 
 /** Graph-based ANN — the k-NN-graph family (HNSW/Vamana lineage:
   * Malkov & Yashunin 2016, Subramanya et al. NeurIPS 2019) completing
@@ -455,10 +458,10 @@ object KnnGraph {
     * nbrs: array of (rk, dst)) — bucketed AND sorted on `vec_id`, so a
     * beam hop's `vec_id IN (frontier)` probe prunes unprobed buckets at
     * the FILE level (`SelectedBucketsCount` in the plan) instead of
-    * re-materializing the full edge table per search
-    * ([[search]] localCheckpoints it — right for one-shot analytics,
-    * wrong for a serving path that answers queries all day);
-    * `<name>_entries` is the small per-cell medoid table. Nodes with no
+    * packing the whole corpus with its edges per search (as [[search]]
+    * does — right for one-shot analytics, wrong for a serving path that
+    * answers queries all day); `<name>_entries` is the small per-cell
+    * medoid table. Nodes with no
     * out-edges keep their vector row (null nbrs) — they can still be
     * scored as candidates. One shuffle at index build, amortized over
     * every later search.
@@ -514,16 +517,16 @@ object KnnGraph {
   /** Search a [[saveIndex]]-persisted graph — [[search]]'s exact
     * algorithm (same arithmetic, same tie rules; q273 hash-certifies the
     * equivalence against q265's oracle verbatim) with every per-round
-    * state read replaced by a BUCKET-PRUNED probe of the node-record
-    * table: the beam ids select their records (neighbor lists), the
-    * frontier ids select the candidate records (vectors) — per round the
-    * index IO is proportional to the buckets the ≤ queries·beam frontier
-    * touches, never the corpus.
+    * read replaced by a BUCKET-PRUNED probe of the node-record table:
+    * the frontier ids select the candidate records (vectors and neighbor
+    * lists) — per round the index IO is proportional to the buckets the
+    * ≤ queries·beam frontier touches, never the corpus.
     *
-    * Beam state is bounded (≤ queries·beam rows), so the per-round id
-    * collects are bounded driver-side by design — the [[Pq.searchIndexed]]
-    * serving contract, enforced the same way: collect through a limit
-    * ONE ROW past the cap and raise, never degrade.
+    * Declared limits (the [[Pq.searchIndexed]] bounded-collect contract,
+    * shared by all six searches): entry cells ≤ 65,536 and queries·beam
+    * ≤ 65,536. Each collect runs through a limit ONE ROW past the cap or
+    * is checked against it, and raises IllegalArgumentException — it
+    * never degrades.
     *
     * `onProbe` (optional) observes each node-record probe's id set —
     * the ScaleStress --knnidx curve derives its buckets-read counter
@@ -531,23 +534,11 @@ object KnnGraph {
     * arithmetic Spark's bucket pruning applies). */
   def searchIndexed(spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, topK: Int, beam: Int, rounds: Int,
-      onProbe: Seq[Long] => Unit = null): DataFrame = {
-    GraftFunctions.register(spark)
-    // DisableUnnecessaryBucketedScan turns the bucketed read OFF for
-    // scan-shaped plans (no "interesting partition" downstream), which
-    // silently discards bucket pruning and reads EVERY bucket file —
-    // measured: `Bucketed: false (disabled by query planner)`, no
-    // SelectedBucketsCount, for exactly the probe shape records()
-    // builds. Pruned IO is the point of the serving path, so pin the
-    // rule off for the duration (every probe plans inside this call;
-    // the returned frame reads checkpointed state, not scans).
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try searchIndexedBody(spark, name, queries, topK, beam, rounds, onProbe,
-      None)
-    finally spark.conf.set(autoKey, prevAuto)
-  }
+      onProbe: Seq[Long] => Unit = null): DataFrame =
+    serving(spark, name) { (nodes, buckets) =>
+      floatSearch("searchIndexed", nodes, buckets, onProbe, queries,
+        spark.table(s"${name}_entries"), None, topK, beam, rounds)
+    }
 
   /** [[searchFiltered]] over a [[saveIndex]]-persisted index: the same
     * predicate-aware admission (entries and frontier gated BEFORE
@@ -557,18 +548,15 @@ object KnnGraph {
     * carries everything a filter needs), so every read stays
     * bucket-pruned — a global allowed-id semi-join would full-scan the
     * index table per round, which is exactly what this path exists to
-    * avoid. */
+    * avoid. Declared limits: entry cells ≤ 65,536 and queries·beam ≤
+    * 65,536, as [[searchIndexed]]. */
   def searchIndexedFiltered(spark: org.apache.spark.sql.SparkSession,
       name: String, queries: DataFrame, pred: Column, topK: Int, beam: Int,
-      rounds: Int, onProbe: Seq[Long] => Unit = null): DataFrame = {
-    GraftFunctions.register(spark)
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try searchIndexedBody(spark, name, queries, topK, beam, rounds, onProbe,
-      Some(pred))
-    finally spark.conf.set(autoKey, prevAuto)
-  }
+      rounds: Int, onProbe: Seq[Long] => Unit = null): DataFrame =
+    serving(spark, name) { (nodes, buckets) =>
+      floatSearch("searchIndexedFiltered", nodes, buckets, onProbe, queries,
+        spark.table(s"${name}_entries"), Some(pred), topK, beam, rounds)
+    }
 
   /** [[saveIndex]] augmented with PQ codes — the DiskANN at-rest layout
     * PROPER (Subramanya et al. 2019 store exactly this per node: the
@@ -918,18 +906,14 @@ object KnnGraph {
     * plane is deterministic (grid/encode/tables integer-exact with
     * lowest-index ties, beam ties by node, rerank ties by node), so the
     * whole loop — approximate ranking INCLUDING its mistakes, then the
-    * rerank correcting them — hash-certifies against q279's oracle. */
+    * rerank correcting them — hash-certifies against q279's oracle.
+    * Declared limits: entry cells ≤ 65,536 and queries·beam ≤ 65,536,
+    * as [[searchIndexed]]. */
   def searchIndexedPq(spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, topK: Int, beam: Int, rounds: Int, rerank: Int,
-      onProbe: Seq[Long] => Unit = null): DataFrame = {
-    GraftFunctions.register(spark)
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = spark.conf.get(autoKey)
-    spark.conf.set(autoKey, "false")
-    try searchIndexedPqBody(spark, name, queries, topK, beam, rounds,
-      rerank, onProbe, None)
-    finally spark.conf.set(autoKey, prevAuto)
-  }
+      onProbe: Seq[Long] => Unit = null): DataFrame =
+    pqSearch("searchIndexedPq", spark, name, queries, None, topK, beam,
+      rounds, rerank, onProbe)
 
   /** Predicate-aware [[searchIndexedPq]] — the production serving
     * combination (Filtered-DiskANN, Gollapudi et al. WWW 2023: "top-k
@@ -944,178 +928,203 @@ object KnnGraph {
     * which this path exists to avoid. Certified by q281's oracle —
     * q279's CTE ladder with the predicate applied once on the
     * code-distance plane — and the post-filter recall A/B is
-    * spec-pinned on the PQ path too. */
+    * spec-pinned on the PQ path too. Declared limits: entry cells ≤
+    * 65,536 and queries·beam ≤ 65,536, as [[searchIndexed]]. */
   def searchIndexedPqFiltered(spark: org.apache.spark.sql.SparkSession,
       name: String, queries: DataFrame, pred: Column, topK: Int, beam: Int,
       rounds: Int, rerank: Int,
-      onProbe: Seq[Long] => Unit = null): DataFrame = {
+      onProbe: Seq[Long] => Unit = null): DataFrame =
+    pqSearch("searchIndexedPqFiltered", spark, name, queries, Some(pred),
+      topK, beam, rounds, rerank, onProbe)
+
+  /** Greedy beam search: from the entry set, `rounds` frontier
+    * expansions over `edges`, keeping the `beam` best (full-precision
+    * cosine DESC, node ASC) per query each round; finally the `topK`
+    * best. Queries score against themselves never (node ≠ q_id).
+    * Output: (q_id, rk, node, sim), a local relation.
+    *
+    * Runs [[beamSearch]] over a node frame — `emb` with each node's
+    * out-neighbors from `edges` — persisted for the call and unpersisted
+    * before it returns; a lost block is recomputed from lineage.
+    * Declared limits: entry cells ≤ 65,536 and queries·beam ≤ 65,536,
+    * as [[searchIndexed]]. */
+  def search(edges: DataFrame, emb: DataFrame, queries: DataFrame,
+      entries: DataFrame, topK: Int, beam: Int, rounds: Int): DataFrame =
+    searchInMemory("search", edges, emb, queries, entries, None, topK, beam,
+      rounds)
+
+  /** Predicate-aware beam search — filtered ANN done IN the traversal,
+    * not after it: the predicate gates every admission, so entries and
+    * frontier candidates that fail it never enter the beam and the whole
+    * budget ranks ADMISSIBLE nodes. Post-filtering an unfiltered top-k
+    * is the classic filtered-ANN recall bug (Filtered-DiskANN, Gollapudi
+    * et al. WWW 2023 measure it): at predicate selectivity s, an
+    * unfiltered top-k keeps ~s·k admissible rows — the beam spent its
+    * budget ranking nodes the query can't use. The A/B is spec-pinned in
+    * KnnGraphSpec; the sequential filtered traversal itself is
+    * hash-certified by q275's unrolled oracle (q265's CTE ladder with
+    * the predicate on the sims plane — one filter placement, the engine
+    * mirrors it exactly).
+    *
+    * The filter arrives as a Column over `emb`'s schema and evaluates on
+    * each round's probed node records, which carry every `emb` column.
+    * Declared limits: entry cells ≤ 65,536 and queries·beam ≤ 65,536,
+    * as [[searchIndexed]]. */
+  def searchFiltered(edges: DataFrame, emb: DataFrame, queries: DataFrame,
+      entries: DataFrame, pred: Column, topK: Int, beam: Int,
+      rounds: Int): DataFrame =
+    searchInMemory("searchFiltered", edges, emb, queries, entries, Some(pred),
+      topK, beam, rounds)
+
+  private def searchInMemory(op: String, edges: DataFrame, emb: DataFrame,
+      queries: DataFrame, entries: DataFrame, pred: Option[Column], topK: Int,
+      beam: Int, rounds: Int): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    val nodes = emb.join(edges.groupBy(col("src").as("vec_id"))
+        .agg(collect_list(struct(col("dst"))).as("nbrs")), Seq("vec_id"), "left")
+      .persist()
+    try floatSearch(op, nodes, -1, null, queries, entries, pred, topK, beam,
+      rounds)
+    finally nodes.unpersist()
+  }
+
+  /** Runs `body` on `name`'s serving node table and its bucket count,
+    * with autoBucketedScan pinned off. DisableUnnecessaryBucketedScan
+    * turns the bucketed read OFF for scan-shaped plans (no "interesting
+    * partition" downstream), which silently discards bucket pruning and
+    * reads EVERY bucket file — measured: `Bucketed: false (disabled by
+    * query planner)`, no SelectedBucketsCount, for exactly the probe
+    * shape [[probeRecords]] builds. Every search collects its result
+    * inside this scope, so no probe plans after the pin is lifted. */
+  private def serving[T](spark: org.apache.spark.sql.SparkSession,
+      name: String)(body: (DataFrame, Int) => T): T = {
     GraftFunctions.register(spark)
     val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAuto = spark.conf.get(autoKey)
     spark.conf.set(autoKey, "false")
-    try searchIndexedPqBody(spark, name, queries, topK, beam, rounds,
-      rerank, onProbe, Some(pred))
+    try body.tupled(servingNodes(spark, name))
     finally spark.conf.set(autoKey, prevAuto)
   }
 
-  private def searchIndexedPqBody(spark: org.apache.spark.sql.SparkSession,
-      name: String, queries: DataFrame, topK: Int, beam: Int, rounds: Int,
-      rerank: Int, onProbe: Seq[Long] => Unit,
-      pred: Option[Column]): DataFrame = {
+  /** `<name>_nodes` and its bucket count, from the catalog's bucket spec
+    * — a property of the table, never a caller argument (the
+    * [[saveIndexDelta]] contract). The count is -1 for a pre-r18
+    * plain-bucketed table without the `bkt` partition column: its probes
+    * still serve, carrying the vec_id filter alone. */
+  private def servingNodes(spark: org.apache.spark.sql.SparkSession,
+      name: String): (DataFrame, Int) = {
+    val nodes = spark.table(s"${name}_nodes")
+    (nodes, if (!nodes.columns.contains("bkt")) -1
+      else spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_nodes"))
+        .bucketSpec.map(_.numBuckets).getOrElse(
+          sys.error(s"${name}_nodes is not a bucketed serving table")))
+  }
+
+  /** `df`'s (vec_id, embedding) as (`id`, `v`, the squared norm `n`),
+    * plus `extra`. */
+  private def vectors(df: DataFrame, id: String, v: String, n: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as(id), col("embedding").as(v),
+      Similarity.dotFast(col("embedding"), col("embedding")).as(n)) ++ extra: _*)
+
+  /** The float searches over `nodes` records (vec_id, embedding, nbrs and
+    * any column `pred` reads): full-precision cosine against `queries`,
+    * ranked sim DESC, node ASC. The scorer carries each candidate's OWN
+    * neighbor ids out of the same probe (r19), so a round needs no
+    * separate beam-record probe. The admission gate evaluates `pred` ON
+    * THE PROBED RECORDS — scoring's inner join then drops inadmissible
+    * candidates, so the beam never holds them — rather than as a global
+    * allowed-id semi-join, which would full-scan the node table every
+    * round. The final `topK` replays the window's ranking on the
+    * driver-held beam. */
+  private def floatSearch(op: String, nodes: DataFrame, buckets: Int,
+      onProbe: Seq[Long] => Unit, queries: DataFrame, entries: DataFrame,
+      pred: Option[Column], topK: Int, beam: Int, rounds: Int): DataFrame = {
+    val spark = nodes.sparkSession
     import spark.implicits._
-    val nodesT = spark.table(s"${name}_nodes")
-    // partition-filtered probes need the bkt partition column (the r18
-    // layout); a pre-r18 plain-bucketed table still serves, probes just
-    // carry the vec_id filter alone
-    val nBuckets =
-      if (nodesT.columns.contains("bkt")) numBucketsOf(spark, name) else -1
-    def records(ids: Seq[Long]): DataFrame =
-      probeRecords(nodesT, ids, onProbe, nBuckets)
-    // persisted codebook → per-query SDC tables (bounded: queries are a
-    // serving batch, tables are m·K ints each — the Pq.searchIndexed
-    // shape, emitted as a broadcast FRAME of one lut row per query; the
-    // oracle replays the same integer distances through its own join)
-    val (cb, m, dimsPer) = loadCodebook(spark, name)
-    val nCodebook = cb(0).length
-    val qs: Array[(Long, Array[Long])] = Pq.grid(queries).limit(IdCap + 1)
-      .as[(Long, Seq[Long])].collect().map { case (id, v) => id -> v.toArray }
-    require(qs.length <= IdCap,
-      s"searchIndexedPq query batch exceeds the $IdCap bounded-collect " +
-        "contract - chunk the query set")
-    val qt = qs.toSeq.map { case (qid, qg) =>
-      val qCodes = Pq.encode(qg.toIndexedSeq, m, dimsPer, cb)
-      qid -> (0 until m).map(mm => (0 until nCodebook).map(j =>
-        Pq.d2(cb(mm)(qCodes(mm)).toIndexedSeq, 0, cb(mm)(j))))
-    }
-    val qtDf = broadcast(qt.toDF("q_id", "lut"))
-    // the PQ scorer: M table lookups per candidate. r18 optimization: the
-    // per-query SDC table rides as ONE lut row per query (m × K longs) and
-    // the M-lookup sum is a row-local integer fold over the candidate's own
-    // codes — the previous shape exploded codes to M rows, joined the
-    // (q_id, m, code) table and re-aggregated, paying a groupBy exchange
-    // per beam round for an 8-element sum (guide §2.4: remove shuffles
-    // outright). Integer adds are order-free, so `dist` is bit-identical
-    // and q279/q281's oracle hashes are unchanged. The fold is an
-    // interpreted HOF, but over ≤ queries·beam·degree rows × M=8 elements
-    // — bounded row-local work, far below the exchange it replaces.
-    // r19: the scorer also carries each candidate's OWN neighbor ids out
-    // of the SAME probe (parquet still never reads the embedding column),
-    // so the next round's hop needs no separate beam-record probe.
-    def scorePq(cand: DataFrame, recs: DataFrame): DataFrame =
-      scorePqFrame(cand, recs, qtDf)
-    val wB = Window.partitionBy("q_id").orderBy(col("dist"), col("node"))
-    def keep(df: DataFrame, b: Int): DataFrame =
-      df.withColumn("rk", row_number().over(wB)).filter(col("rk") <= b)
-    // admission gate (the searchIndexedFiltered semantics): the
-    // predicate evaluates on the probed records, so scorePq's inner
-    // join drops inadmissible candidates before the beam keep — every
-    // read stays bucket-pruned, no global allowed-id semi-join
-    def admitRecs(recs: DataFrame): DataFrame =
-      pred.fold(recs)(p => recs.filter(p))
-    val entries = spark.table(s"${name}_entries")
-    val entryIds = boundedIds(entries, "node", "entry")
-    // DRIVER-HELD BEAM (r19, guide §1.2/§2.4 via the serving loop's own
-    // bounded-collect contract): beam state is ≤ queries·beam rows BY
-    // DESIGN (the IdCap law this loop already enforced to build each
-    // probe's id list), so it rides between rounds as a collected local
-    // relation instead of a checkpointed distributed frame. Each round
-    // was 4 driver round-trips over 2 bucket-pruned index reads (collect
-    // beam ids → hop probe+checkpoint → collect frontier ids → score+
-    // checkpoint); now it is ONE job over ONE probe: the frontier ids
-    // and pairs derive driver-side from the beam rows' carried nbr_ids
-    // (the exact explode+distinct+anti-join set), and the scored union
-    // keep — still ranked in Spark, same window, same tie rule — is
-    // collected back. A drained frontier ends the loop: scoring an empty
-    // candidate set leaves the beam fixed, so skipped rounds are
-    // result-identical by induction.
-    def collectBeam(df: DataFrame): Seq[(Long, Long, Long, Seq[Long])] = {
-      val rows = df.select("q_id", "node", "dist", "nbr_ids")
-        .as[(Long, Long, Long, Seq[Long])].collect().toSeq
-      require(rows.length <= IdCap,
-        s"searchIndexedPq beam state exceeds the $IdCap bounded-collect " +
-          "contract - lower beam x queries or chunk the query batch")
-      rows.sortBy(t => (t._1, t._2))
-    }
-    def beamDf(bm: Seq[(Long, Long, Long, Seq[Long])]): DataFrame =
-      bm.toDF("q_id", "node", "dist", "nbr_ids")
-    // r19.2: driver-side per-round keep — see [[searchIndexedBody]]'s
-    // rationale verbatim; the PQ ordering is (dist ASC, node ASC), all
-    // integers, so the replay needs no double-comparison care at all.
-    // Entry round keeps its Spark window (queries×entries candidates are
-    // not driver-bounded pre-keep).
-    val ordB = new Ordering[(Long, Long, Long, Seq[Long])] {
-      def compare(a: (Long, Long, Long, Seq[Long]),
-          b: (Long, Long, Long, Seq[Long])): Int = {
-        val c = java.lang.Long.compare(a._3, b._3)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-    def keepLocal(rows: Seq[(Long, Long, Long, Seq[Long])],
-        b: Int): Seq[(Long, Long, Long, Seq[Long])] = {
-      val out = rows.groupBy(_._1).toSeq
-        .flatMap { case (_, rs) => rs.sorted(ordB).take(b) }
-        .sortBy(t => (t._1, t._2))
-      require(out.length <= IdCap,
-        s"searchIndexedPq beam state exceeds the $IdCap bounded-collect " +
-          "contract - lower beam x queries or chunk the query batch")
-      out
-    }
-    def collectScored(df: DataFrame): Seq[(Long, Long, Long, Seq[Long])] =
-      df.select("q_id", "node", "dist", "nbr_ids")
-        .as[(Long, Long, Long, Seq[Long])].collect().toSeq
-    var bm = collectBeam(keep(scorePq(
-        broadcast(qs.map(_._1).toSeq.toDF("q_id"))
-          .crossJoin(entries.select("node")),
-        admitRecs(records(entryIds))), beam))
-    var r = 0
-    while (r < rounds) {
-      val (pairs, fIds) = frontierOf(bm.map(t => (t._1, t._2, t._4)))
-      if (fIds.isEmpty) r = rounds
-      else {
-        bm = keepLocal(collectScored(
-          scorePq(pairs.toDF("q_id", "node"), admitRecs(records(fIds)))) ++ bm,
-          beam)
-        r += 1
-      }
-    }
-    // rerank tier: the ONLY read touching the embedding column — exact
-    // full-precision cosine over the `rerank` best code distances. The
-    // rerank cut replays keep()'s exact rule — (dist ASC, node ASC), all
-    // integers — on the driver-held beam
-    val rrPairs = bm.groupBy(_._1).toSeq.flatMap { case (q, rows) =>
-      rows.sortBy(t => (t._3, t._2)).take(rerank).map(t => (q, t._2))
-    }.sorted
-    val rr = rrPairs.toDF("q_id", "node")
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("qv"),
-      Similarity.dotFast(col("embedding"), col("embedding")).as("qn")))
-    val vecs = records(rrPairs.map(_._2).distinct)
-      .select(col("vec_id").as("node"), col("embedding").as("nv"),
-        Similarity.dotFast(col("embedding"), col("embedding")).as("nn"))
-    val rescored = rr.join(q, Seq("q_id")).join(vecs, Seq("node"))
+    val q = broadcast(vectors(queries, "q_id", "qv", "qn"))
+    def score(cand: DataFrame, recs: DataFrame): DataFrame = cand
+      .join(q, Seq("q_id"))
+      .join(vectors(recs, "node", "nv", "nn", nbrIds), Seq("node"))
+      .filter(col("node") =!= col("q_id"))
       .select(col("q_id"), col("node"),
         (Similarity.dotFast(col("qv"), col("nv")) /
-          sqrt(col("qn") * col("nn"))).as("sim"))
-    val wS = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-    // materialize INSIDE the pinned-conf scope: the rerank probe is the
-    // only read touching the embedding column, and a lazily-returned
-    // frame would plan its vecs scan after the caller's finally restored
-    // autoBucketedScan — DisableUnnecessaryBucketedScan would then drop
-    // the bucketed read and scan every bucket file for exactly the probe
-    // whose pruned IO matters most (results stay correct; the IO
-    // contract and the onProbe bucket accounting would not). The
-    // checkpoint is ≤ queries·topK rows — the non-PQ path's
-    // checkpoint-backed-return contract, applied here.
-    rescored.withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topK)
-      .select("q_id", "rk", "node", "sim")
-      .localCheckpoint(true)
+          sqrt(col("qn") * col("nn"))).as("sim"),
+        col("nbr_ids"))
+    val bm = beamSearch(op, q.select("q_id"), entries,
+      ids => admit(probeRecords(nodes, ids, onProbe, buckets), pred),
+      score, BySim, beam, rounds)
+    BySim.best(bm, topK)
+      .flatMap(_.zipWithIndex.map { case (t, i) => (t._1, i + 1, t._2, t._3) })
+      .toDF("q_id", "rk", "node", "sim")
+  }
+
+  /** The PQ searches: [[beamSearch]] ranked on the SDC code distance
+    * (dist ASC, node ASC), then the rerank tier — the ONLY read touching
+    * the embedding column — re-scores the `rerank` best per query with
+    * exact full-precision cosine and keeps the `topK` best. The query
+    * grid and its lookup tables are built lazily, so their jobs run
+    * (and are labelled) in the entry round. */
+  private def pqSearch(op: String, spark: org.apache.spark.sql.SparkSession,
+      name: String, queries: DataFrame, pred: Option[Column], topK: Int,
+      beam: Int, rounds: Int, rerank: Int,
+      onProbe: Seq[Long] => Unit): DataFrame = serving(spark, name) {
+    (nodes, buckets) =>
+      import spark.implicits._
+      def records(ids: Seq[Long]): DataFrame =
+        probeRecords(nodes, ids, onProbe, buckets)
+      lazy val qs = bounded(Pq.grid(queries).as[(Long, Seq[Long])],
+        s"$op query batch", "chunk the query set")
+      lazy val luts = lutFrame(spark, name, qs)
+      val bm = beamSearch(op, broadcast(qs.map(_._1).toDF("q_id")),
+        spark.table(s"${name}_entries"), ids => admit(records(ids), pred),
+        (cand, recs) => scorePqFrame(cand, recs, luts), ByDist, beam, rounds)
+      VertexRounds.labelled(spark.sparkContext, s"KnnGraph.$op rerank") {
+        val rr = ByDist.best(bm, rerank).flatten.map(t => (t._1, t._2)).sorted
+        val top = rr.toDF("q_id", "node")
+          .join(broadcast(vectors(queries, "q_id", "qv", "qn")), Seq("q_id"))
+          .join(vectors(records(rr.map(_._2).distinct), "node", "nv", "nn"),
+            Seq("node"))
+          .select(col("q_id"), col("node"),
+            (Similarity.dotFast(col("qv"), col("nv")) /
+              sqrt(col("qn") * col("nn"))).as("sim"))
+          .withColumn("rk", row_number().over(BySim.window))
+          .filter(col("rk") <= topK)
+          .select("q_id", "rk", "node", "sim")
+        // ≤ queries·topK rows, collected INSIDE the pinned scope: a lazy
+        // frame would plan its embedding probe after autoBucketedScan is
+        // restored and read every bucket file
+        spark.createDataFrame(top.collect().toSeq.asJava, top.schema)
+      }
   }
 
   /** Bounded driver-side id collect — the [[Pq.searchIndexed]] serving
     * contract: collect through a limit ONE ROW past the cap; raise,
     * never degrade. */
   private val IdCap = 65536
+
+  /** One driver-held beam row: (q_id, node, key, nbr_ids), the key being
+    * the float paths' `sim` or the PQ paths' `dist`. */
+  private type Beam[K] = (Long, Long, K, Seq[Long])
+
+  /** A beam's rank order — `key` (DESC if `desc`, by `cmp`), then node
+    * ASC — as the Spark window the entry round keeps with and as its
+    * driver-side replay for every later round. row_number ≤ b ≡ take b
+    * of a strict total order, since (q_id, node) is unique. */
+  private final case class Rank[K](key: String, desc: Boolean,
+      cmp: (K, K) => Int) {
+    def window: WindowSpec = Window.partitionBy("q_id")
+      .orderBy(if (desc) col(key).desc else col(key).asc, col("node"))
+    private val order: Ordering[Beam[K]] = (a, b) => {
+      val c = if (desc) cmp(b._3, a._3) else cmp(a._3, b._3)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    /** Per query (ascending q_id), its best `n` rows in rank order. */
+    def best(rows: Seq[Beam[K]], n: Int): Seq[Seq[Beam[K]]] =
+      rows.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (_, rs) => rs.sorted(order).take(n) }
+  }
 
   /** Spark SQL's double comparison, verbatim (Utils.nanSafeCompareDoubles
     * — the function codegen emits for every DoubleType SortOrder): NaN
@@ -1133,12 +1142,79 @@ object KnnGraph {
     else -1
   }
 
+  private val BySim = Rank[Double]("sim", desc = true, nanSafeCmpDouble)
+  private val ByDist =
+    Rank[Long]("dist", desc = false, (a, b) => java.lang.Long.compare(a, b))
+
+  /** THE beam search, the one every public search runs. The entry round
+    * collects the distinct entry ids once (a node listed twice seeds the
+    * beam once), scores `queryIds` × those ids against their probed
+    * `records` and keeps the best `beam` per query in a Spark window
+    * (queries × entries is not driver-bounded before the keep). Beam
+    * state is then ≤ queries·beam rows by contract, so it rides between
+    * rounds as a collected local relation (r19): each later round
+    * derives the frontier (ids and (q_id, node) pairs) driver-side from
+    * the beam rows' carried neighbor ids, runs ONE Spark job — `score`
+    * over ONE `records` probe of the frontier — and merges the scored
+    * rows into the beam by the driver-side replay of `rank`. Collected
+    * doubles and longs round-trip bit-exactly, so every ranking is the
+    * window's. A drained frontier ends the loop: scoring an empty
+    * candidate set leaves the beam fixed, so skipped rounds are
+    * result-identical by induction. Every job of round r (the entry
+    * round is 0) is labelled `KnnGraph.<op> round <r>`. */
+  private def beamSearch[K](op: String, queryIds: => DataFrame,
+      entries: DataFrame, records: Seq[Long] => DataFrame,
+      score: (DataFrame, DataFrame) => DataFrame, rank: Rank[K], beam: Int,
+      rounds: Int)(implicit enc: Encoder[Beam[K]]): Seq[Beam[K]] = {
+    val spark = entries.sparkSession
+    import spark.implicits._
+    def collect(df: DataFrame): Seq[Beam[K]] =
+      df.select("q_id", "node", rank.key, "nbr_ids").as(enc).collect().toSeq
+    def keep(rows: Seq[Beam[K]]): Seq[Beam[K]] = {
+      val out = rank.best(rows, beam).flatten
+      require(out.length <= IdCap,
+        s"KnnGraph.$op beam state exceeds the $IdCap bounded-collect " +
+          "contract - lower beam x queries or chunk the query batch")
+      out
+    }
+    def inRound[T](r: Int)(body: => T): T =
+      VertexRounds.labelled(spark.sparkContext, s"KnnGraph.$op round $r")(body)
+    var bm = inRound(0) {
+      val entryIds = bounded(entries.select("node").distinct().as[Long],
+        s"$op entry id set", "use fewer cells")
+      keep(collect(score(queryIds.crossJoin(entryIds.toDF("node")),
+          records(entryIds))
+        .withColumn("rk", row_number().over(rank.window))
+        .filter(col("rk") <= beam)))
+    }
+    var r = 0
+    while (r < rounds) {
+      val (pairs, fIds) = frontierOf(op, bm.map(t => (t._1, t._2, t._4)))
+      if (fIds.isEmpty) r = rounds
+      else {
+        r += 1
+        bm = inRound(r) {
+          keep(collect(score(pairs.toDF("q_id", "node"), records(fIds))) ++ bm)
+        }
+      }
+    }
+    bm
+  }
+
+  private def admit(recs: DataFrame, pred: Option[Column]): DataFrame =
+    pred.fold(recs)(p => recs.filter(p))
+
+  /** A node record's neighbor ids, empty for a node without out-edges. */
+  private def nbrIds: Column =
+    coalesce(expr("transform(nbrs, x -> x.dst)"),
+      expr("CAST(array() AS ARRAY<BIGINT>)")).as("nbr_ids")
+
   /** The PQ beam scorer, one round's frame: candidates join their probed
     * records for (codes, nbrs), the SDC distance is the row-local integer
     * zip_with/aggregate fold against the query's broadcast lut row (the
     * r18 LUT-fold shape — no exchange between the probe scan and the beam
     * window), and the candidate's own neighbor ids ride out of the same
-    * probe (r19 — no separate hop probe). Lifted out of the serving body
+    * probe (r19 — no separate hop probe). Lifted out of the serving path
     * so PlanDump can publish the per-round plan verbatim. */
   private[graft] def scorePqFrame(cand: DataFrame, recs: DataFrame,
       qtDf: DataFrame): DataFrame = cand
@@ -1149,8 +1225,24 @@ object KnnGraph {
     .select(col("q_id"), col("node"),
       expr("aggregate(zip_with(codes, lut, (c, row) -> element_at(row, c + 1)), 0L, (acc, x) -> acc + x)")
         .as("dist"),
-      coalesce(expr("transform(nbrs, x -> x.dst)"),
-        expr("CAST(array() AS ARRAY<BIGINT>)")).as("nbr_ids"))
+      nbrIds)
+
+  /** Per-query SDC lookup tables over `name`'s persisted codebook, as a
+    * broadcast frame of one (q_id, lut) row per query — lut is m × K
+    * longs, the distance from the query's own code to every sub-codebook
+    * entry (the [[Pq.searchIndexed]] shape; the oracle replays the same
+    * integer distances through its own join). */
+  private def lutFrame(spark: org.apache.spark.sql.SparkSession, name: String,
+      qs: Seq[(Long, Seq[Long])]): DataFrame = {
+    import spark.implicits._
+    val (cb, m, dimsPer) = loadCodebook(spark, name)
+    val nCodebook = cb(0).length
+    broadcast(qs.map { case (qid, qg) =>
+      val qCodes = Pq.encode(qg.toIndexedSeq, m, dimsPer, cb)
+      qid -> (0 until m).map(mm => (0 until nCodebook).map(j =>
+        Pq.d2(cb(mm)(qCodes(mm)).toIndexedSeq, 0, cb(mm)(j))))
+    }.toDF("q_id", "lut"))
+  }
 
   /** Measurement scaffolding (PlanDump/PlanSnap only, never the serving
     * path): ONE PQ serving round's scored frame, lazily — the exact
@@ -1162,22 +1254,12 @@ object KnnGraph {
       spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, ids: Seq[Long]): DataFrame = {
     import spark.implicits._
-    val nodesT = spark.table(s"${name}_nodes")
-    val nBuckets =
-      if (nodesT.columns.contains("bkt")) numBucketsOf(spark, name) else -1
-    val (cb, m, dimsPer) = loadCodebook(spark, name)
-    val nCodebook = cb(0).length
-    val qs = Pq.grid(queries).limit(2).as[(Long, Seq[Long])].collect()
-      .map { case (id, v) => id -> v.toArray }
-    val qt = qs.toSeq.map { case (qid, qg) =>
-      val qCodes = Pq.encode(qg.toIndexedSeq, m, dimsPer, cb)
-      qid -> (0 until m).map(mm => (0 until nCodebook).map(j =>
-        Pq.d2(cb(mm)(qCodes(mm)).toIndexedSeq, 0, cb(mm)(j))))
-    }
-    val cand = qs.map(_._1).toSeq.flatMap(q => ids.map(i => (q, i)))
+    val (nodes, buckets) = servingNodes(spark, name)
+    val qs = Pq.grid(queries).limit(2).as[(Long, Seq[Long])].collect().toSeq
+    val cand = qs.map(_._1).flatMap(q => ids.map(i => (q, i)))
       .toDF("q_id", "node")
-    scorePqFrame(cand, probeRecords(nodesT, ids, null, nBuckets),
-      broadcast(qt.toDF("q_id", "lut")))
+    scorePqFrame(cand, probeRecords(nodes, ids, null, buckets),
+      lutFrame(spark, name, qs))
   }
 
   /** Frontier of a driver-held beam (r19): for each query, the union of
@@ -1186,7 +1268,7 @@ object KnnGraph {
     * rounds computed, built from state the bounded-collect contract
     * already holds driver-side. Returns (sorted (q_id, node) pairs,
     * distinct ids), ids re-checked against the IdCap. */
-  private def frontierOf(
+  private def frontierOf(op: String,
       bm: Seq[(Long, Long, Seq[Long])]): (Seq[(Long, Long)], Seq[Long]) = {
     val inBeam: Map[Long, Set[Long]] =
       bm.groupBy(_._1).map { case (q, rows) => q -> rows.map(_._2).toSet }
@@ -1195,18 +1277,16 @@ object KnnGraph {
     }.distinct.sorted
     val ids = pairs.map(_._2).distinct
     require(ids.length <= IdCap,
-      s"searchIndexed frontier id set exceeds the $IdCap bounded-collect " +
+      s"KnnGraph.$op frontier id set exceeds the $IdCap bounded-collect " +
         "contract - lower beam x queries or chunk the query batch")
     (pairs, ids)
   }
 
-  private def boundedIds(df: DataFrame, c: String, what: String): Seq[Long] = {
-    val ids = df.select(col(c)).distinct().limit(IdCap + 1)
-      .collect().map(_.getLong(0)).toSeq
-    require(ids.length <= IdCap,
-      s"searchIndexed $what id set exceeds the $IdCap bounded-collect " +
-        "contract - lower beam x queries or chunk the query batch")
-    ids
+  private def bounded[T](ds: Dataset[T], what: String, fix: String): Seq[T] = {
+    val rows = ds.limit(IdCap + 1).collect().toSeq
+    require(rows.length <= IdCap,
+      s"KnnGraph.$what exceeds the $IdCap bounded-collect contract - $fix")
+    rows
   }
 
   /** The pruned node-record probe: IN over the bucket column reaches
@@ -1216,7 +1296,7 @@ object KnnGraph {
     * (pmod(murmur3), the bucketing arithmetic), so the probe carries an
     * explicit partition filter too: catalog partition pruning then
     * lists only the probed buckets' directories instead of every
-    * partition per probe plan. */
+    * partition per probe plan. `buckets` ≤ 0 probes on vec_id alone. */
   private def probeRecords(nodesT: DataFrame, ids: Seq[Long],
       onProbe: Seq[Long] => Unit, buckets: Int): DataFrame = {
     if (onProbe != null) onProbe(ids)
@@ -1233,206 +1313,5 @@ object KnnGraph {
   private def bucketOfId(id: Long, buckets: Int): Int = {
     val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42)
     ((h % buckets) + buckets) % buckets
-  }
-
-  /** The serving table's bucket count, from the catalog's bucket spec —
-    * a property of the table, never a caller argument (the
-    * [[saveIndexDelta]] contract). */
-  private def numBucketsOf(spark: org.apache.spark.sql.SparkSession,
-      name: String): Int =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_nodes"))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        sys.error(s"${name}_nodes is not a bucketed serving table"))
-
-  private def searchIndexedBody(spark: org.apache.spark.sql.SparkSession,
-      name: String, queries: DataFrame, topK: Int, beam: Int, rounds: Int,
-      onProbe: Seq[Long] => Unit, pred: Option[Column]): DataFrame = {
-    import spark.implicits._
-    val nodesT = spark.table(s"${name}_nodes")
-    // partition-filtered probes need the bkt partition column (the r18
-    // layout); a pre-r18 plain-bucketed table still serves, probes just
-    // carry the vec_id filter alone
-    val nBuckets =
-      if (nodesT.columns.contains("bkt")) numBucketsOf(spark, name) else -1
-    def records(ids: Seq[Long]): DataFrame =
-      probeRecords(nodesT, ids, onProbe, nBuckets)
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("qv"),
-      Similarity.dotFast(col("embedding"), col("embedding")).as("qn")))
-    // r19: the scorer carries each candidate's OWN neighbor ids out of
-    // the SAME probe, so the hop needs no separate beam-record probe
-    def score(cand: DataFrame, recs: DataFrame): DataFrame = cand
-      .join(q, Seq("q_id"))
-      .join(recs.select(col("vec_id").as("node"), col("embedding").as("nv"),
-        Similarity.dotFast(col("embedding"), col("embedding")).as("nn"),
-        coalesce(expr("transform(nbrs, x -> x.dst)"),
-          expr("CAST(array() AS ARRAY<BIGINT>)")).as("nbr_ids")),
-        Seq("node"))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        (Similarity.dotFast(col("qv"), col("nv")) /
-          sqrt(col("qn") * col("nn"))).as("sim"),
-        col("nbr_ids"))
-    val wB = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-    def keep(df: DataFrame, b: Int): DataFrame =
-      df.withColumn("rk", row_number().over(wB)).filter(col("rk") <= b)
-    // admission gate: the predicate evaluates ON THE PROBED RECORDS
-    // (scoring's inner join then drops inadmissible candidates, so the
-    // beam never holds them — the searchImpl semantics) rather than as
-    // a global allowed-id semi-join, which would full-scan the index
-    // table every round and defeat the pruning this path exists for
-    def admitRecs(recs: DataFrame): DataFrame =
-      pred.fold(recs)(p => recs.filter(p))
-    val entries = spark.table(s"${name}_entries")
-    val entryIds = boundedIds(entries, "node", "entry")
-    // DRIVER-HELD BEAM (r19 — see searchIndexedPqBody for the full
-    // rationale): ≤ queries·beam rows ride between rounds as a collected
-    // local relation; each round is ONE job over ONE bucket-pruned probe
-    // instead of 4 jobs over 2 probes. Collected doubles round-trip
-    // bit-exactly (binary64 in, binary64 out), so sims and every later
-    // ranking are unchanged. A drained frontier ends the loop (scoring
-    // an empty candidate set leaves the beam fixed — result-identical).
-    def collectBeam(df: DataFrame): Seq[(Long, Long, Double, Seq[Long])] = {
-      val rows = df.select("q_id", "node", "sim", "nbr_ids")
-        .as[(Long, Long, Double, Seq[Long])].collect().toSeq
-      require(rows.length <= IdCap,
-        s"searchIndexed beam state exceeds the $IdCap bounded-collect " +
-          "contract - lower beam x queries or chunk the query batch")
-      rows.sortBy(t => (t._1, t._2))
-    }
-    def beamDf(bm: Seq[(Long, Long, Double, Seq[Long])]): DataFrame =
-      bm.toDF("q_id", "node", "sim", "nbr_ids")
-    // r19.2: the per-round keep runs DRIVER-SIDE. The round's scored rows
-    // are bounded by `pairs` — a list the driver already holds under the
-    // IdCap contract — so collecting them raw adds no new driver exposure,
-    // and the merge∪top-b replays the window's exact ordering
-    // ([[nanSafeCmpDouble]] DESC, node ASC — row_number ≤ b ≡ take b of a
-    // strict total order, (q_id, node) unique). Each round's Spark job is
-    // then the probe scan + broadcast joins ONLY — the per-round
-    // Exchange+Sort the window paid (one shuffle per round) is gone. The
-    // ENTRY round keeps its Spark window: its candidate set is
-    // queries×entries, NOT driver-bounded pre-keep.
-    val ordB = new Ordering[(Long, Long, Double, Seq[Long])] {
-      def compare(a: (Long, Long, Double, Seq[Long]),
-          b: (Long, Long, Double, Seq[Long])): Int = {
-        val c = nanSafeCmpDouble(b._3, a._3)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-    def keepLocal(rows: Seq[(Long, Long, Double, Seq[Long])],
-        b: Int): Seq[(Long, Long, Double, Seq[Long])] = {
-      val out = rows.groupBy(_._1).toSeq
-        .flatMap { case (_, rs) => rs.sorted(ordB).take(b) }
-        .sortBy(t => (t._1, t._2))
-      require(out.length <= IdCap,
-        s"searchIndexed beam state exceeds the $IdCap bounded-collect " +
-          "contract - lower beam x queries or chunk the query batch")
-      out
-    }
-    def collectScored(df: DataFrame): Seq[(Long, Long, Double, Seq[Long])] =
-      df.select("q_id", "node", "sim", "nbr_ids")
-        .as[(Long, Long, Double, Seq[Long])].collect().toSeq
-    var bm = collectBeam(keep(
-      score(q.select("q_id").crossJoin(entries.select("node")),
-        admitRecs(records(entryIds))), beam))
-    var r = 0
-    while (r < rounds) {
-      val (pairs, fIds) = frontierOf(bm.map(t => (t._1, t._2, t._4)))
-      if (fIds.isEmpty) r = rounds
-      else {
-        bm = keepLocal(collectScored(
-          score(pairs.toDF("q_id", "node"), admitRecs(records(fIds)))) ++ bm,
-          beam)
-        r += 1
-      }
-    }
-    keep(beamDf(bm), topK).select("q_id", "rk", "node", "sim")
-  }
-
-  /** Greedy beam search: from the entry set, `rounds` frontier
-    * expansions over `edges`, keeping the `beam` best (full-precision
-    * cosine DESC, node ASC) per query each round; finally the `topK`
-    * best. Queries score against themselves never (node ≠ q_id).
-    * Output: (q_id, rk, node, sim).
-    *
-    * Lineage discipline: the beam state is eagerly localCheckpoint'd
-    * every round (the Ivf.fit precedent). Without the cut each round's
-    * plan embeds the previous round's THREE times (frontier join,
-    * anti-join, union) — ~3^rounds copies of the entry-scoring subtree
-    * and a fresh re-execution of the whole edge build per copy;
-    * measured 30+ s for 20 queries on a 16k corpus, vs seconds with
-    * the cut. The edges input is checkpointed once here for the same
-    * reason (each round's frontier join re-executes its plan
-    * otherwise); beam state is ≤ queries·beam rows, edges ≤ n·degree
-    * — both bounded, blocks self-release via the ContextCleaner. */
-  def search(edges: DataFrame, emb: DataFrame, queries: DataFrame,
-      entries: DataFrame, topK: Int, beam: Int, rounds: Int): DataFrame =
-    searchImpl(edges, emb, queries, entries, topK, beam, rounds, None)
-
-  /** Predicate-aware beam search — filtered ANN done IN the traversal,
-    * not after it: the predicate's extension (allowed node ids) gates
-    * every admission, so entries and frontier candidates that fail it
-    * never enter the beam and the whole budget ranks ADMISSIBLE nodes.
-    * Post-filtering an unfiltered top-k is the classic filtered-ANN
-    * recall bug (Filtered-DiskANN, Gollapudi et al. WWW 2023 measure
-    * it): at predicate selectivity s, an unfiltered top-k keeps ~s·k
-    * admissible rows — the beam spent its budget ranking nodes the
-    * query can't use. The A/B is spec-pinned in KnnGraphSpec; the
-    * sequential filtered traversal itself is hash-certified by q275's
-    * unrolled oracle (q265's CTE ladder with the predicate on the sims
-    * plane — one filter placement, the engine mirrors it exactly).
-    *
-    * The filter arrives as a Column over `emb`'s schema — at 100 TB it
-    * pushes into the embedding scan (partition/file pruning), and the
-    * per-round admission is a semi-join against ids, never vectors. */
-  def searchFiltered(edges: DataFrame, emb: DataFrame, queries: DataFrame,
-      entries: DataFrame, pred: Column, topK: Int, beam: Int,
-      rounds: Int): DataFrame =
-    searchImpl(edges, emb, queries, entries, topK, beam, rounds, Some(pred))
-
-  private def searchImpl(edges: DataFrame, emb: DataFrame,
-      queries: DataFrame, entries: DataFrame, topK: Int, beam: Int,
-      rounds: Int, pred: Option[Column]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    val eg = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("qv"),
-      Similarity.dotFast(col("embedding"), col("embedding")).as("qn")))
-    val c = emb.select(col("vec_id").as("node"), col("embedding").as("nv"),
-      Similarity.dotFast(col("embedding"), col("embedding")).as("nn"))
-    // admission gate: beam state stays inside the allowed set, so each
-    // round's semi-join input is already admissible — only NEW frontier
-    // candidates pay the check (bm is checkpointed per round, so the
-    // allowed subtree appears once per plan, no lineage growth)
-    val allowed = pred.map(p => emb.filter(p).select(col("vec_id").as("node")))
-    def admit(df: DataFrame): DataFrame =
-      allowed.fold(df)(a => df.join(a, Seq("node"), "left_semi"))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(q, Seq("q_id"))
-      .join(c, Seq("node"))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        (Similarity.dotFast(col("qv"), col("nv")) /
-          sqrt(col("qn") * col("nn"))).as("sim"))
-    val wB = Window.partitionBy("q_id").orderBy(col("sim").desc, col("node"))
-    def keep(df: DataFrame, b: Int): DataFrame =
-      df.withColumn("rk", row_number().over(wB)).filter(col("rk") <= b)
-    var bm = keep(score(admit(q.select("q_id").crossJoin(entries))), beam)
-      .select("q_id", "node", "sim").localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      // score only the NEW frontier — visited beam rows carry their
-      // sims, so per round the scored set is ≤ beam·degree rows/query
-      val frontier = admit(bm.select("q_id", "node")
-        .join(eg.select(col("src").as("node"), col("dst")), Seq("node"))
-        .select(col("q_id"), col("dst").as("node"))
-        .distinct())
-        .join(bm.select("q_id", "node"), Seq("q_id", "node"), "left_anti")
-      bm = keep(score(frontier).unionByName(bm), beam)
-        .select("q_id", "node", "sim").localCheckpoint(true)
-      r += 1
-    }
-    keep(bm, topK).select("q_id", "rk", "node", "sim")
   }
 }

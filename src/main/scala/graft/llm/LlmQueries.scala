@@ -9396,13 +9396,13 @@ object LlmQueries {
   // ---------------------------------------------------------------- q273
   // Persisted-index beam search (KnnGraph.saveIndex/searchIndexed —
   // the Pq.saveIndex treatment for the graph family, closing the r16
-  // verdict's flagged serving seam: q265's search localCheckpoints the
-  // full edge table, right for one-shot analytics, wrong for a serving
-  // path answering queries all day). At rest the index is the DiskANN
-  // record shape: one row per node — (vec_id, embedding, neighbor
-  // list) — bucketed AND sorted on vec_id, so each beam round's two
-  // probes (beam ids → neighbor lists, frontier ids → candidate
-  // vectors) reach the scan as `vec_id IN (…)` file-level bucket
+  // verdict's flagged serving seam: q265's search packs the whole
+  // corpus with its edges per call, right for one-shot analytics, wrong
+  // for a serving path answering queries all day). At rest the index is
+  // the DiskANN record shape: one row per node — (vec_id, embedding,
+  // neighbor list) — bucketed AND sorted on vec_id, so each beam round's
+  // probe (frontier ids → candidate vectors and neighbor lists) reaches
+  // the scan as `vec_id IN (…)` file-level bucket
   // pruning (SelectedBucketsCount in the plan, asserted in
   // KnnGraphSpec and measured in the --knnidx ScaleStress curve);
   // per-round index IO is proportional to the buckets the bounded

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -63,10 +63,7 @@ private[graft] final class VertexRounds(op: String, edges: DataFrame, undirected
           .reduceByKey(part, reduce)
         val next = state.fullOuterJoin(msgs, part)
           .flatMapValues { case (s, m) => merge(round, s.map(_._1), m) }.persist(MEMORY_AND_DISK)
-        val caller = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"$op round $round")
-        flagged = try next.filter(_._2._2).count()
-          finally sc.setLocalProperty("spark.job.description", caller)
+        flagged = VertexRounds.labelled(sc, s"$op round $round")(next.filter(_._2._2).count())
         state.unpersist(blocking = false)
         state = next
       }
@@ -82,6 +79,14 @@ private[graft] final class VertexRounds(op: String, edges: DataFrame, undirected
 }
 
 private[graft] object VertexRounds {
+  /** Runs `body` with every job it launches labelled `label`, then
+    * restores the caller's job description. */
+  def labelled[T](sc: SparkContext, label: String)(body: => T): T = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty("spark.job.description", caller)
+  }
+
   /** `df(c)`'s type, which must be integral: ids ride the rounds as longs. */
   def idType(df: DataFrame, c: String): DataType = df.schema(c).dataType match {
     case t @ (ByteType | ShortType | IntegerType | LongType) => t
