@@ -85,28 +85,12 @@ object PlanDump {
           sb.append(s"\n## ${q.name}\n\n(plan unavailable: ${e.getMessage})\n")
       }
     }
-    // The LSH-family operators materialize through an eager localCheckpoint,
-    // which cuts lineage — their registry entries above show only the
-    // post-checkpoint sort. Dump the lazy (materialize=false) pipelines so
-    // the candidate-join shape stays auditable.
+    // stages the registry plans above do not show: the BPE fold runs at
+    // construction, so its per-stage shapes are dumped lazily here
     import org.apache.spark.sql.functions.col
     val emb = Tables(spark, sfDir, "embeddings")
     val docs = Tables(spark, sfDir, "documents")
     val internals = Seq(
-      "rp_l2_pipeline (q35 engine)" ->
-        graft.llm.Rp.l2NearPairs(emb, 1.0, materialize = false),
-      "rp_cosine_pipeline (q47 engine)" ->
-        graft.llm.Rp.cosineNearPairs(emb, 0.3, materialize = false),
-      "minhash_pipeline (q31 engine)" ->
-        graft.llm.MinHash.pairs(docs.filter(col("doc_id") < 2000), materialize = false),
-      "jaccard_pipeline (q33 engine)" ->
-        graft.llm.Dedup.ngramJaccardPairs(docs.filter(col("doc_id") < 1000),
-          minJaccard = 0.2, materialize = false),
-      "winnow_pairs_pipeline (q86 engine)" ->
-        graft.llm.Dedup.winnowPairs(docs.filter(col("doc_id") < 1000),
-          minShared = 2, materialize = false),
-      "simhash_banded_pipeline (q64 engine)" ->
-        graft.llm.Dedup.simhashPairs(docs, maxHamming = 3, materialize = false),
       "bpe_wordcount_stage (q79 engine, corpus-sized)" ->
         graft.llm.Bpe.wordCounts(docs),
       "bpe_paircount_stage (q79 engine, vocab-sized per iteration)" ->

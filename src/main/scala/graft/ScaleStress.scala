@@ -124,43 +124,6 @@ object ScaleStress {
     }
   }
 
-  /** Candidate-shape A/B for [[Rp]] (the crossover documented in Rp's object
-    * scaladoc): inline embedding payload vs id-only candidates + join-back,
-    * under FORCED no-broadcast (`autoBroadcastJoinThreshold = -1`) so the
-    * join-backs take the exchange path they would on a cluster where the
-    * corpus does not broadcast. Planted-cluster data at a real threshold —
-    * the same regime as the cosine sweep — and both shapes are asserted to
-    * produce the identical pair count. */
-  def candidateShapes(spark: SparkSession, sfDir: String): Unit = {
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
-    println("== Rp candidate shapes: inline vs id-only, forced no-broadcast, cos>=0.9 ==")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      for (r <- Seq(8, 16)) {
-        val rep = replicateEmbeddings(emb, r, eps = 0.12)
-          .select("vec_id", "embedding").cache()
-        val n = rep.count()
-        val (nInline, inlineS) = time {
-          Rp.cosineNearPairs(rep, minCosine = 0.9, bands = 20, bitsPerBand = 12)
-            .count()
-        }
-        val (nIdOnly, idOnlyS) = time {
-          Rp.cosineNearPairs(rep, minCosine = 0.9, bands = 20, bitsPerBand = 12,
-            idOnly = true).count()
-        }
-        assert(nInline == nIdOnly,
-          s"shape results diverge: inline=$nInline idOnly=$nIdOnly")
-        println(f"R=$r%2d n=$n%6d pairs=$nInline%8d " +
-          f"inline=$inlineS%6.1f s  id-only=$idOnlyS%6.1f s")
-        rep.unpersist()
-      }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      emb.unpersist()
-    }
-  }
-
   /** Range-join A/B (q68's engine vs the planner's default): point-in-
     * interval with NO equi key, naive theta join (BroadcastNestedLoop —
     * every point row tests every interval) vs [[graft.operators.RangeJoin]]'s
@@ -453,13 +416,7 @@ object ScaleStress {
       val expected = rep.groupBy("base_id").count()
         .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
         .head().getLong(0)
-      // materialize=false keeps the pipeline lazy so time(count) measures
-      // the full winnow+join work — the default eagerly checkpoints inside
-      // the winnowPairs CALL, which would leave the timer a near-constant
-      // scan of the materialized pair table
-      val pairs = Dedup.winnowPairs(rep.select("doc_id", "text"), minShared = 1,
-          materialize = false)
-        .cache()
+      val pairs = Dedup.winnowPairs(rep.select("doc_id", "text"), minShared = 1).cache()
       val (found, secs) = time(pairs.count())
       val planted = pairs
         .filter((col("doc_a") / r).cast("long") === (col("doc_b") / r).cast("long"))
@@ -2358,7 +2315,6 @@ object ScaleStress {
     Mode("--samples", (s, _) => samplesThroughput(s)),
     Mode("--winnow", winnowStress),
     Mode("--bloom", (s, _) => bloomDedup(s)),
-    Mode("--shapes", candidateShapes),
     Mode("--planted", plantedCurve),
     Mode("--codec", (s, _) => codecThroughput(s)),
     Mode("--frontier", annFrontier),

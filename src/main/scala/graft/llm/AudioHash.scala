@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   * silent wraparound.
   *
   * [[nearDupPairs]]: four 8-bit bands over the 32 bits — pigeonhole-EXACT
-  * at hamming ≤ 3 — band-key equi-join + `bit_count(xor)` rerank, the
-  * same scale contract as the text/image candidate joins.
+  * at hamming ≤ 3 — band-key equi-join ([[Lsh.bucketPairs]]) +
+  * `bit_count(xor)` rerank, the same scale contract as the text/image
+  * candidate joins.
   */
 object AudioHash {
 
@@ -90,21 +91,29 @@ object AudioHash {
   }
 
   /** Near-duplicate audio pairs at hamming ≤ `maxHamming` over the 32
-    * bits — EXACT by pigeonhole for maxHamming ≤ 3 (four 8-bit bands).
-    * Output (id_a, id_b, hamming), id_a < id_b. */
+    * bits — EXACT by pigeonhole for maxHamming ≤ 3 (four 8-bit bands) as
+    * long as no band bucket exceeds [[Lsh.DefaultMaxBucketSize]]
+    * ([[Lsh.Split]]; the fixtures stay under it: NearDupLimitsSpec). Output (id_a, id_b,
+    * hamming), id_a < id_b. */
   def nearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x8 banding is pigeonhole-exact only for hamming <= 3, got $maxHamming")
+    Lsh.bucketPairs(rows(hashes), Seq("t", "k"), Lsh.Split(Lsh.DefaultMaxBucketSize), Seq("ahash"))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("ahash_a").bitwiseXOR(col("ahash_b"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** [[nearDupPairs]]' keyed rows: (id, ahash, t, k), k = the t-th 8-bit
+    * band. */
+  private[llm] def rows(hashes: DataFrame): DataFrame = {
     val mask = lit(0xffL)
-    Banding.nearDupPairs(
-      hashes.filter(col("valid")).select(col("doc_id"), col("ahash")),
-      hashCols = Seq("ahash"),
-      bandKeys = Seq(
-        col("ahash").bitwiseAND(mask),
-        shiftright(col("ahash"), 8).bitwiseAND(mask),
-        shiftright(col("ahash"), 16).bitwiseAND(mask),
-        shiftright(col("ahash"), 24).bitwiseAND(mask)),
-      hamming = bit_count(col("ahash_a").bitwiseXOR(col("ahash_b"))),
-      maxHamming = maxHamming)
+    hashes.filter(col("valid"))
+      .select(col("doc_id").as("id"), col("ahash"),
+        posexplode(array(
+          col("ahash").bitwiseAND(mask),
+          shiftright(col("ahash"), 8).bitwiseAND(mask),
+          shiftright(col("ahash"), 16).bitwiseAND(mask),
+          shiftright(col("ahash"), 24).bitwiseAND(mask))).as(Seq("t", "k")))
   }
 }

@@ -53,11 +53,12 @@ object CorpusPrep {
     * unseen transitive link when neither lost a direct comparison (e.g.
     * edges (1,5),(3,5) kept 1 AND 3); component collapse keeps exactly one
     * survivor per family, which is what a training-data pipeline means by
-    * dedup. The pair set arrives as an eager lineage-free localCheckpoint,
-    * so the propagation loop runs over a small materialized edge list. */
+    * dedup. The pair set is a lazy plan handed straight to the superstep:
+    * its first round evaluates it once into the adjacency it persists
+    * ([[graft.operators.VertexRounds]]), with no checkpoint between, so a
+    * lost block is recomputed from lineage. */
   def nearDedup(docs: DataFrame, cfg: Config): DataFrame = {
-    val pairs = MinHash.pairs(docs, cfg.nearDupMaxJaccardDist)
-    val losers = Components.connected(pairs)
+    val losers = Components.connected(MinHash.pairs(docs, cfg.nearDupMaxJaccardDist))
       .filter(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
     docs.join(losers, Seq("doc_id"), "left_anti")

@@ -1,6 +1,5 @@
 package graft.llm
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions._
   *  - exact: content-hash groupBy — one shuffle on the 64-hex digest; at
   *    100 TB this is the cheapest possible dedup (hash is computed scan-side,
   *    only (digest, id) pairs shuffle, never the document bodies).
-  *  - MinHash+LSH: shingle → binary HashingTF → seeded MinHash band-join —
+  *  - MinHash+LSH ([[MinHash]]): seeded per-table min-hashes band-join —
   *    near-dup candidates meet in buckets, avoiding the O(n²) pair space.
   *  - SimHash: 64-bit sign-of-weighted-bits fingerprint; near-dups differ in
   *    few bits, so banding on fingerprint prefixes scales.
@@ -175,9 +174,9 @@ object Dedup {
 
   /** Banded SimHash near-dup pairs: the scale path for [[simhash64]] (turns
     * "banding-ready fingerprint" into an actual candidate join). The 64-bit
-    * fingerprint is cut into `bands` contiguous bit-slices; pairs meet when
-    * any slice matches exactly (equi-join on (band, slice-value)), then the
-    * exact Hamming distance reranks candidates.
+    * fingerprint is cut into `bands` contiguous bit-slices, the keys of
+    * [[Lsh.bucketPairs]]; pairs meet when any slice matches exactly, then
+    * the exact Hamming distance reranks candidates.
     *
     * Unlike MinHash/Rp this is pigeonhole-EXACT, not probabilistic: a pair
     * at Hamming distance d touches at most d bands, so for
@@ -189,95 +188,44 @@ object Dedup {
     * corpus, whose simhash bits are biased by shared vocabulary, 4×16-bit
     * bands emit ~50× fewer candidates than 8×8-bit for the same exact
     * hamming ≤ 3 result). More bands only buy higher hamming budgets. The one
-    * carve-out is [[Lsh.saltHotBuckets]]: a pair whose only unchanged bands
+    * carve-out is the [[Lsh.Split]] bound: a pair whose only unchanged bands
     * all sit in salt-split hot buckets can split apart — bounded compute on
     * pathological skew traded for completeness on it, same contract as
-    * Rp/MinHash (fixture buckets are far under the cap, so fixture results
-    * are bit-identical to the unsalted join).
+    * Rp/MinHash (the fixtures stay under the cap: NearDupLimitsSpec).
     *
     * Shuffle profile at scale: fingerprints are computed scan-side (one
-    * pass over text), the join moves only (band, 8-bit slice, 8-byte fp,
-    * id) rows — no document bodies — and the rerank is a bit_count on two
+    * pass over text), the join moves only (band, slice, 8-byte fp, id)
+    * rows — no document bodies — and the rerank is a bit_count on two
     * longs. xxhash64-based ⇒ not DuckDB-replicable: q64 is rows-only with
     * the exactness property in DedupSpec standing in for the oracle. */
   def simhashPairs(
       docs: DataFrame,
       maxHamming: Int = 3,
       bands: Int = 4,
-      maxBucketSize: Int = Lsh.DefaultMaxBucketSize,
-      materialize: Boolean = true): DataFrame = {
+      maxBucketSize: Int = Lsh.DefaultMaxBucketSize): DataFrame = {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     require(maxHamming < bands,
       s"pigeonhole guarantee needs maxHamming < bands ($maxHamming >= $bands)")
-    val bits = 64 / bands
-    val mask = (1L << bits) - 1
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val fp0 = docs.select(col("doc_id"), simhash64(col("text")).as("fp"))
-    // cache: the fingerprint scan (nested 64-bit HOF fold over every token)
-    // dominates; it feeds both self-join sides via the exploded signature
-    val fp = if (materialize) fp0.cache() else fp0
-    val sig = fp.select(
-      col("doc_id"), col("fp"),
-      explode(array((0 until bands).map { t =>
-        struct(lit(t).as("t"),
-          call_function("shiftright", col("fp"), lit(t * bits))
-            .bitwiseAND(lit(mask)).as("k"))
-      }: _*)).as("tb"))
-      .select(col("doc_id"), col("fp"), col("tb.t").as("t"), col("tb.k").as("k"))
-    val salted = Lsh.saltHotBuckets(sig, "doc_id", maxBucketSize)
-    val a = salted.select(col("t"), col("k"), col("salt"),
-      col("doc_id").as("id_a"), col("fp").as("fp_a"))
-    val b = salted.select(col("t"), col("k"), col("salt"),
-      col("doc_id").as("id_b"), col("fp").as("fp_b"))
-    val pairs0 = a.join(b, Seq("t", "k", "salt"))
-      .filter(col("id_a") < col("id_b"))
+    Lsh.bucketPairs(simhashRows(docs, bands), Seq("t", "k"),
+        Lsh.Split(maxBucketSize), Seq("fp"))
       .select(col("id_a"), col("id_b"),
         hamming64(col("fp_a"), col("fp_b")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .distinct()
-    if (!materialize) return pairs0
-    val pairs = pairs0.localCheckpoint(true) // eager: see minhashPairs note
-    fp.unpersist()
-    pairs
   }
 
-  /** MinHash-LSH near-duplicate candidate pairs over `k`-word shingles.
-    * Seeded → deterministic; `distCol` is the exact Jaccard *distance* on the
-    * hashed shingle space. Output (id_a, id_b, jaccard_dist), id_a < id_b. */
-  // numHashTables = 5: OR-amplified collision probability for a true pair at
-  // jaccard s is 1-(1-s)^T — at the s=0.5 contract boundary that is 96.9%
-  // with 5 tables but only 87.5% with 3, below the 0.9 recall bound.
-  def minhashPairs(
-      docs: DataFrame,
-      maxJaccardDist: Double = 0.6,
-      numHashTables: Int = 5,
-      seed: Long = 42L): DataFrame = {
-    val shingled = docs
-      .select(col("doc_id"), TextAnalysis.shingles(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val tf = new HashingTF()
-      .setInputCol("sh").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    // cache: the self-join evaluates this subtree once per side per hash
-    // stage; without it the shingle+TF pipeline recomputes several times
-    val feats = tf.transform(shingled).cache()
-    val lsh = new MinHashLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    val model = lsh.fit(feats)
-    val pairs = model.approxSimilarityJoin(feats, feats, maxJaccardDist, "jaccard_dist")
-      .select(
-        col("datasetA.doc_id").as("id_a"),
-        col("datasetB.doc_id").as("id_b"),
-        round(col("jaccard_dist"), 4).as("jaccard_dist"))
-      .filter(col("id_a") < col("id_b"))
-      // eager localCheckpoint: materializes the (small) pair set with its
-      // lineage cut, so the big feature cache can be released immediately and
-      // the pair blocks self-release via ContextCleaner when the caller drops
-      // the DataFrame (no unpersist contract leaking to callers)
-      .localCheckpoint(true)
-    feats.unpersist()
-    pairs
+  /** [[simhashPairs]]' keyed rows: (id, fp, t, k), k = the t-th bit-slice. */
+  private[llm] def simhashRows(docs: DataFrame, bands: Int): DataFrame = {
+    val bits = 64 / bands
+    val mask = (1L << bits) - 1
+    docs.select(col("doc_id").as("id"), simhash64(col("text")).as("fp"))
+      .select(col("id"), col("fp"),
+        explode(array((0 until bands).map { t =>
+          struct(lit(t).as("t"),
+            call_function("shiftright", col("fp"), lit(t * bits))
+              .bitwiseAND(lit(mask)).as("k"))
+        }: _*)).as("tb"))
+      .select(col("id"), col("fp"), col("tb.t").as("t"), col("tb.k").as("k"))
   }
 
   /** Substring-level near-dup candidate pairs via shared WINNOWING
@@ -290,98 +238,56 @@ object Dedup {
     * prefix, so the WHOLE operator is DuckDB-replicable and oracle-checked
     * (q86), not rows-only.
     *
-    * Shape is [[ngramJaccardPairs]]'s: explode to (hash, id) — the selected
-    * set is ~2/(w+1) of the grams, so this stream is much smaller than the
-    * shingle stream — one shuffle on the hash, pair aggregation, with the
-    * same `maxDocFreq` stop-hash cap defusing the boilerplate skew bomb
-    * (a hash in thousands of docs would put a quadratic partition on one
-    * key; capped hashes drop from the join, so `n_shared` undercounts by at
-    * most their contribution — same conservative contract as the shingle
-    * cap). */
+    * Shape is [[ngramJaccardPairs]]'s: the selected hashes are the keys of
+    * [[Lsh.bucketPairs]] — ~2/(w+1) of the grams, so this stream is much
+    * smaller than the shingle stream — with the same [[Lsh.Drop]] stop-hash
+    * cap defusing the boilerplate skew bomb (capped hashes drop from the
+    * join, so `n_shared` undercounts by at most their contribution — same
+    * conservative contract as the shingle cap). */
   def winnowPairs(
       docs: DataFrame,
       minShared: Long = 2,
-      maxDocFreq: Int = 100,
-      materialize: Boolean = true): DataFrame = {
-    // cached: the winnow explode (sha256 per gram — the dominant scan cost)
-    // feeds THREE subtrees (doc-frequency cap + both self-join sides); the
-    // output is an eager localCheckpoint so the cache releases immediately
-    // and callers inherit no unpersist contract — the ngramJaccardPairs
-    // convention for exactly this multi-consumer shape
-    val wn0 = docs
-      .select(col("doc_id"), explode(TextAnalysis.winnow(col("text"))).as("h"))
-    val wn = if (materialize) wn0.cache() else wn0
-    val hot = wn.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDocFreq)
-      .select("h")
-    // no broadcast hint (round policy for data-dependent sides): the hot
-    // set is usually tiny, but on a heavily-templated corpus it is not
-    // bounded by construction — AQE sizes the post-aggregate side
-    val sel = wn.join(hot, Seq("h"), "left_anti")
-    val out0 = sel.as("a")
-      .join(sel.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+      maxDocFreq: Int = 100): DataFrame =
+    Lsh.bucketPairs(winnowRows(docs), Seq("h"), Lsh.Drop(maxDocFreq))
       .filter(col("n_shared") >= minShared)
-    if (!materialize) return out0
-    val out = out0.localCheckpoint(true)
-    wn.unpersist()
-    out
-  }
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("n_shared"))
+
+  /** [[winnowPairs]]' keyed rows: (id, h), one per selected hash. */
+  private[llm] def winnowRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"), explode(TextAnalysis.winnow(col("text"))).as("h"))
 
   /** Exact n-gram Jaccard similarity for every pair sharing ≥1 shingle.
-    * Shuffle profile at scale: explode to (shingle, id), one shuffle on
-    * shingle, then an aggregation keyed on the pair.
+    * Shuffle profile at scale: the shingles are the keys of
+    * [[Lsh.bucketPairs]] — one shuffle on shingle, then an aggregation
+    * keyed on the pair — and each row carries its document's shingle-set
+    * size `n`, so the denominators need no join.
     *
-    * `maxDocFreq` is the stop-shingle cap: a shingle appearing in more than
-    * that many documents is excluded from the self-join (the standard
-    * defense against the skew bomb — one shingle in 1% of a 100 TB corpus
-    * would otherwise put a quadratic candidate partition on one key). The
-    * true set sizes (denominators) are computed BEFORE the cap, so surviving
-    * pairs score true Jaccard minus at most the capped shingles'
-    * intersection contribution — a conservative undercount. Measured
-    * fixture max doc-frequency: 25 over the full sf0.1 corpus, 11 inside
-    * q33's doc_id<1000 slice — a 4× margin to the default cap, so oracle
-    * results stay bit-identical; re-measure if fixtures are regenerated. */
+    * `maxDocFreq` is the stop-shingle cap ([[Lsh.Drop]]): a shingle
+    * appearing in more than that many documents is excluded from the
+    * self-join (the standard defense against the skew bomb — one shingle in
+    * 1% of a 100 TB corpus would otherwise put a quadratic candidate
+    * partition on one key). The set sizes are taken BEFORE the cap, so
+    * surviving pairs score true Jaccard minus at most the capped shingles'
+    * intersection contribution — a conservative undercount. The fixtures
+    * stay under the default cap (NearDupLimitsSpec), so oracle results are
+    * those of the uncapped join. */
   def ngramJaccardPairs(
       docs: DataFrame,
       minJaccard: Double,
-      maxDocFreq: Int = 100,
-      materialize: Boolean = true): DataFrame = {
-    val shAll0 = docs
-      .select(col("doc_id"), explode(TextAnalysis.shingles(col("text"))).as("shingle"))
-    // cached: the exploded shingle relation feeds FOUR subtrees (doc-freq
-    // cap, both self-join sides, set sizes) and the shingle construction is
-    // the dominant scan cost — same lesson as MinHash.pairs. The output is
-    // an eager localCheckpoint so the cache can release immediately and the
-    // caller inherits no unpersist contract.
-    val shAll = if (materialize) shAll0.cache() else shAll0
-    val hot = shAll.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDocFreq)
-      .select("shingle")
-    // the hot set is usually tiny (few shingles can exceed the cap) but not
-    // bounded by construction — no broadcast hint, AQE sizes it (round
-    // policy for data-dependent sides)
-    val sh = shAll.join(hot, Seq("shingle"), "left_anti")
-    val sizes = shAll.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val pairs = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val j = col("inter").cast("double") /
-      (col("sa.n") + col("sb.n") - col("inter"))
-    val out0 = pairs
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
+      maxDocFreq: Int = 100): DataFrame = {
+    val j = col("n_shared").cast("double") /
+      (col("n_a") + col("n_b") - col("n_shared"))
+    Lsh.bucketPairs(ngramRows(docs), Seq("shingle"), Lsh.Drop(maxDocFreq), Seq("n"))
       .filter(j >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), round(j, 4).as("jaccard"))
-    if (!materialize) return out0
-    val out = out0.localCheckpoint(true)
-    shAll.unpersist()
-    out
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), round(j, 4).as("jaccard"))
   }
+
+  /** [[ngramJaccardPairs]]' keyed rows: (id, n, shingle), n = the
+    * document's distinct shingle count. */
+  private[llm] def ngramRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"), TextAnalysis.shingles(col("text")).as("sh"))
+      .select(col("id"), size(col("sh")).cast("long").as("n"), col("sh"))
+      .select(col("id"), col("n"), explode(col("sh")).as("shingle"))
 
   /** Corpus diff — the "what changed between crawls" report: classify
     * CONTENT (by hash) as added / removed / retained between two corpus

@@ -27,10 +27,10 @@ import org.apache.spark.sql.functions._
   *
   * [[nearDupPairs]] is the scale path: band the 64 bits into four
   * 16-bit keys — by pigeonhole, any pair within hamming distance 3 (the
-  * filter) agrees exactly on ≥ 1 band — equi-join on (band, value),
-  * then exact `bit_count(xor)` rerank. Candidate volume is governed by
-  * band-key collisions, not the pair space, the same contract
-  * spec-pinned for the text LSH family.
+  * filter) agrees exactly on ≥ 1 band — equi-join on (band, value)
+  * through [[Lsh.bucketPairs]], then exact `bit_count(xor)` rerank.
+  * Candidate volume is governed by band-key collisions, not the pair
+  * space, the same contract spec-pinned for the text LSH family.
   */
 object ImageHash {
 
@@ -101,23 +101,31 @@ object ImageHash {
 
   /** Near-duplicate image pairs at hamming ≤ `maxHamming` over the 64
     * dHash bits — EXACT by pigeonhole for maxHamming ≤ 3 (four 16-bit
-    * bands ⇒ any such pair shares a whole band). Input: [[dHash]] output
-    * (invalid rows drop); output (id_a, id_b, hamming), id_a < id_b. */
+    * bands ⇒ any such pair shares a whole band) as long as no band bucket
+    * exceeds [[Lsh.DefaultMaxBucketSize]] ([[Lsh.Split]]; the fixtures stay
+    * under it: NearDupLimitsSpec). Input: [[dHash]] output (invalid rows drop);
+    * output (id_a, id_b, hamming), id_a < id_b. */
   def nearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x16 banding is pigeonhole-exact only for hamming <= 3, got $maxHamming")
+    Lsh.bucketPairs(rows(hashes), Seq("t", "k"), Lsh.Split(Lsh.DefaultMaxBucketSize),
+        Seq("dhash_hi", "dhash_lo"))
+      .select(col("id_a"), col("id_b"),
+        (bit_count(col("dhash_hi_a").bitwiseXOR(col("dhash_hi_b"))) +
+          bit_count(col("dhash_lo_a").bitwiseXOR(col("dhash_lo_b")))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** [[nearDupPairs]]' keyed rows: (id, dhash_hi, dhash_lo, t, k), k = the
+    * t-th 16-bit band. */
+  private[llm] def rows(hashes: DataFrame): DataFrame = {
     val mask = lit(0xffffL)
-    Banding.nearDupPairs(
-      hashes.filter(col("valid"))
-        .select(col("doc_id"), col("dhash_hi"), col("dhash_lo")),
-      hashCols = Seq("dhash_hi", "dhash_lo"),
-      bandKeys = Seq(
-        col("dhash_lo").bitwiseAND(mask),
-        shiftright(col("dhash_lo"), 16).bitwiseAND(mask),
-        col("dhash_hi").bitwiseAND(mask),
-        shiftright(col("dhash_hi"), 16).bitwiseAND(mask)),
-      hamming = bit_count(col("dhash_hi_a").bitwiseXOR(col("dhash_hi_b"))) +
-        bit_count(col("dhash_lo_a").bitwiseXOR(col("dhash_lo_b"))),
-      maxHamming = maxHamming)
+    hashes.filter(col("valid"))
+      .select(col("doc_id").as("id"), col("dhash_hi"), col("dhash_lo"),
+        posexplode(array(
+          col("dhash_lo").bitwiseAND(mask),
+          shiftright(col("dhash_lo"), 16).bitwiseAND(mask),
+          col("dhash_hi").bitwiseAND(mask),
+          shiftright(col("dhash_hi"), 16).bitwiseAND(mask))).as(Seq("t", "k")))
   }
 }

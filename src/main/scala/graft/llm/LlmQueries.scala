@@ -96,8 +96,7 @@ object LlmQueries {
   // ---------------------------------------------------------------- q31
   // Seeded MinHash-LSH — model-dependent bucketing, so rows-only check here;
   // recall-vs-brute-force is property-tested (DedupSpec). Runs on the
-  // pure-Column codegen path (graft.llm.MinHash); the MLlib twin stays as
-  // Dedup.minhashPairs for cross-validation.
+  // pure-Column codegen path (graft.llm.MinHash).
   val q31 = Q.noOracle("q31_minhash_neardup") { (s, dir) =>
     MinHash.pairs(
         Tables(s, dir, "documents").filter(col("doc_id") < 2000))
@@ -181,10 +180,9 @@ object LlmQueries {
   // ---------------------------------------------------------------- q35
   // Seeded random-projection LSH — rows-only; recall property in RpSpec.
   // Pure-Column codegen path (graft.llm.Rp): same floor-bucketed algorithm
-  // as MLlib's BucketedRandomProjectionLSH (kept as Similarity.annCandidates,
-  // cross-validated in SimilaritySpec) but 3.5× faster at sf0.1 because the
-  // projections and rerank stay inside whole-stage codegen (BENCH_r01's 12 s
-  // was MLlib framework floor, not candidate work).
+  // as MLlib's BucketedRandomProjectionLSH but 3.5× faster at sf0.1 because
+  // the projections and rerank stay inside whole-stage codegen (BENCH_r01's
+  // 12 s was MLlib framework floor, not candidate work).
   val q35 = Q.noOracle("q35_ann_lsh") { (s, dir) =>
     Rp.l2NearPairs(
         Tables(s, dir, "embeddings").filter(col("vec_id") < 2000),
@@ -2019,7 +2017,7 @@ object LlmQueries {
   // pattern (g ≡ g' mod lcm(252, dims-cycle)) add larger cliques; both
   // engines derive the same arithmetic, so the oracle agrees wherever
   // the construction lands.
-  private def dhashFixture(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private[llm] def dhashFixture(s: org.apache.spark.sql.SparkSession, dir: String) = {
     import s.implicits._
     // NO spread here: the A/B lost (q132 0.40 → 0.68 s, q133 flat) —
     // the per-row encode+hash is light enough that the exchange costs
@@ -2163,7 +2161,7 @@ object LlmQueries {
   // AudioHash is amplitude-invariant, so every group is a planted
   // hamming-0 clique, the structure an audio near-dup pass must find
   // (same recording, different gain).
-  private def ahashFixture(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private[llm] def ahashFixture(s: org.apache.spark.sql.SparkSession, dir: String) = {
     import s.implicits._
     Tables(s, dir, "documents").select(col("doc_id")).as[Long].map { id =>
       val g = id / 3

@@ -3,13 +3,12 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Pure-Column seeded MinHash-LSH near-dup candidates (B32) — the codegen
-  * sibling of the MLlib path ([[Dedup.minhashPairs]]), the same move
-  * [[Rp]] made for random-projection LSH: identical algorithm, no UDF or
-  * `ml.linalg.Vector` round-trips, every stage inside whole-stage codegen.
+/** Pure-Column seeded MinHash-LSH near-dup candidates (B32): every stage
+  * inside whole-stage codegen, no UDF or `ml.linalg.Vector` round-trips —
+  * the same move [[Rp]] made for random-projection LSH.
   *
-  * Algorithm (the one MLlib implements, re-derived from the standard
-  * construction): per table t, signature_t(doc) = min over the doc's
+  * Algorithm (the standard construction MLlib's `MinHashLSH` also
+  * implements): per table t, signature_t(doc) = min over the doc's
   * shingles of h_t(shingle), with h_t = xxhash64 salted by the table index
   * (a seeded splitmix-quality 64-bit mix). Two docs collide in table t iff
   * their min-hashes agree; P(collide) = jaccard(A,B) per table, OR-amplified
@@ -17,20 +16,16 @@ import org.apache.spark.sql.functions._
   * exact-reranked on their true shingle sets.
   *
   * Scale shape (100 TB): shingle arrays are computed once scan-side; the
-  * per-table min-hash is a fold over the array (codegen); the candidate join
-  * shuffles (table, minhash) pairs — 16 bytes each — NOT the documents; only
-  * candidate pairs pull the shingle arrays for the exact rerank, through the
-  * same cached-signature + eager-localCheckpoint lifecycle as [[Rp]] (see
-  * the cache-lifecycle note there).
+  * per-table min-hash is a fold over the array (codegen); the (table,
+  * minhash) keys go through [[Lsh.bucketPairs]] with the shingle array
+  * carried inline, so the rerank needs no join: it runs on each candidate
+  * in the join stage, and only pairs within `maxJaccardDist` shuffle.
+  * Lazy: nothing runs at the call, and a lost block is recomputed.
   *
-  * Output shape matches [[Dedup.minhashPairs]] — (id_a, id_b,
-  * jaccard_dist), id_a < id_b, dist rounded to 4 — but the two are NOT
-  * bit-compatible at the margin: this dist is EXACT Jaccard on the shingle
-  * sets and the cut is `<= maxJaccardDist` on the ROUNDED value, while
-  * MLlib scores the 2^18-bucket hashed space (collisions shift the 4th
-  * decimal) and cuts `<` on the raw value. Cross-validation between them is
-  * therefore recall-level, not row-level; exactness of THIS path's scores
-  * is asserted against the brute-force jaccard in DedupSpec.
+  * Output (id_a, id_b, jaccard_dist), id_a < id_b, dist rounded to 4. The
+  * dist is EXACT Jaccard on the shingle sets and the cut is
+  * `<= maxJaccardDist` on the ROUNDED value; exactness of the scores is
+  * asserted against the brute-force jaccard in DedupSpec.
   */
 object MinHash {
 
@@ -40,29 +35,29 @@ object MinHash {
     (0 until numTables).map(t => seed + 0x9E3779B97F4A7C15L * (t + 1))
 
   /** Candidate pairs within `maxJaccardDist`, OR-amplified over
-    * `numTables` min-hash tables. */
-  /** `materialize = false` skips the cache/checkpoint lifecycle and returns
-    * the fully lazy pipeline (plan audits, composition). */
+    * `numTables` min-hash tables. Hot buckets (a min-hash shared by huge
+    * near-identical families) are salt-split above `maxBucketSize`
+    * ([[Lsh.Split]]); the fixtures stay under the default cap
+    * (NearDupLimitsSpec). */
   def pairs(
       docs: DataFrame,
       maxJaccardDist: Double = 0.6,
       numTables: Int = 5,
       seed: Long = 42L,
-      maxBucketSize: Int = Lsh.DefaultMaxBucketSize,
-      materialize: Boolean = true): DataFrame = {
-    // spread BEFORE the shingle projection: a single-split corpus file
-    // would otherwise build every shingle array (the dominant scan cost)
-    // on one task — see graft.operators.Parallelism
-    val shingled0 = graft.operators.Parallelism.spread(docs)
-      .select(col("doc_id"), TextAnalysis.shingles(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
-    // cached: read 3× (signatures + both rerank sides), and the shingle
-    // construction is the dominant scan cost (measured 5.6 s uncached vs
-    // 3.1 s cached at sf0.1). Filled lazily inside the single output job —
-    // unlike Rp there is no fused many-literal generator here, so an eager
-    // pre-materialization only adds a job (measured +0.5 s).
-    val shingled = if (materialize) shingled0.cache() else shingled0
+      maxBucketSize: Int = Lsh.DefaultMaxBucketSize): DataFrame = {
+    // exact Jaccard rerank on the true shingle sets (arrays are distinct by
+    // construction in TextAnalysis.shingles)
+    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
+    val dist = lit(1.0) -
+      inter / (size(col("sh_a")) + size(col("sh_b")) - inter)
+    Lsh.bucketPairs(rows(docs, numTables, seed), Seq("t", "k"),
+        Lsh.Split(maxBucketSize), Seq("sh"))
+      .select(col("id_a"), col("id_b"), round(dist, 4).as("jaccard_dist"))
+      .filter(col("jaccard_dist") <= maxJaccardDist)
+  }
 
+  /** [[pairs]]' keyed rows: (id, sh, t, k), k = the table-t min-hash. */
+  private[llm] def rows(docs: DataFrame, numTables: Int, seed: Long): DataFrame = {
     // one (table, minhash) struct per table: min over the shingle array of
     // the salted 64-bit hash — a pure codegen fold, no model fit at all
     val keys: Seq[Column] = salts(numTables, seed).zipWithIndex.map {
@@ -71,39 +66,13 @@ object MinHash {
           lit(t).as("t"),
           array_min(transform(col("sh"), s => xxhash64(s, lit(salt)))).as("k"))
     }
-    // the candidate join moves ONLY (table, minhash, doc_id) — 24 bytes a
-    // row, never the shingle arrays; duplicates across tables collapse
-    // before the rerank pays for anything. Hot buckets (a min-hash shared by
-    // huge near-identical families) are salt-split so the per-key candidate
-    // partition stays bounded — see [[Lsh.saltHotBuckets]]. Fixture margin:
-    // measured max bucket occupancy at sf0.1 is 10 in the q31 slice and 20
-    // over the full 5000-doc corpus — 200× under the default cap, so fixture
-    // results are bit-identical to the unsalted join; re-measure if the
-    // fixtures are regenerated.
-    val sig = shingled
-      .select(col("doc_id"), explode(array(keys: _*)).as("tk"))
-      .select(col("doc_id"), col("tk.t").as("t"), col("tk.k").as("k"))
-    val salted = Lsh.saltHotBuckets(sig, "doc_id", maxBucketSize)
-    val candidates = salted.select(col("t"), col("k"), col("salt"), col("doc_id").as("id_a"))
-      .join(salted.select(col("t"), col("k"), col("salt"), col("doc_id").as("id_b")),
-        Seq("t", "k", "salt"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-
-    // exact Jaccard rerank on the true shingle sets (arrays are distinct by
-    // construction in TextAnalysis.shingles), joined in per candidate side
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val dist = lit(1.0) -
-      inter / (size(col("sh_a")) + size(col("sh_b")) - inter)
-    val out0 = candidates
-      .join(shingled.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"), round(dist, 4).as("jaccard_dist"))
-      .filter(col("jaccard_dist") <= maxJaccardDist)
-    if (!materialize) return out0
-    val out = out0.localCheckpoint(true)
-    shingled.unpersist()
-    out
+    // spread BEFORE the shingle projection: a single-split corpus file
+    // would otherwise build every shingle array (the dominant scan cost)
+    // on one task — see graft.operators.Parallelism
+    graft.operators.Parallelism.spread(docs)
+      .select(col("doc_id").as("id"), TextAnalysis.shingles(col("text")).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .select(col("id"), col("sh"), explode(array(keys: _*)).as("tk"))
+      .select(col("id"), col("sh"), col("tk.t").as("t"), col("tk.k").as("k"))
   }
 }

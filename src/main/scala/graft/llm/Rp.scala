@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 
-/** Pure-Column random-projection LSH (B32/B33): the codegen-native sibling of
-  * MLlib's `BucketedRandomProjectionLSH` ([[Similarity.annCandidates]]) and
-  * the bucketed scale path for embedding-cosine near-dup (the q44 brute-force
-  * pair join is the oracle twin; this is the headline formulation).
+/** Pure-Column random-projection LSH (B32/B33): the codegen-native
+  * equivalent of MLlib's `BucketedRandomProjectionLSH` and the bucketed
+  * scale path for embedding-cosine near-dup (the q44 brute-force pair join
+  * is the oracle twin; this is the headline formulation).
   *
   * Why not MLlib here: `approxSimilarityJoin` evaluates its hash and distance
   * functions outside whole-stage codegen and round-trips every row through
@@ -19,52 +19,20 @@ import graft.functions.GraftFunctions
   * Gaussian projections, floor-bucketed for L2 / sign-banded for cosine,
   * OR-amplified across tables) entirely inside codegen: hyperplanes are
   * driver-side constant arrays folded into the plan as literals, projections
-  * run through [[graft.functions.VectorDot]], and the candidate join is a
-  * plain equi-join on (table, bucket-key). Measured A/B at sf0.1 (2000×64
-  * vectors, 3.7M candidates): 3.5 s vs MLlib's 12.1 s.
+  * run through [[graft.functions.VectorDot]], and the candidate join is
+  * [[Lsh.bucketPairs]] on (table, bucket-key). Measured A/B at sf0.1
+  * (2000×64 vectors, 3.7M candidates): 3.5 s vs MLlib's 12.1 s.
   *
   * Scale shape (100 TB): one explode (`numTables`× row multiplication of ids
-  * + embeddings), one equi-join on the bucket key (AQE picks shuffle vs
-  * broadcast from runtime sizes — an explicit broadcast hint measured SLOWER
-  * here, 7.4 s vs 3.5 s, because hashing 64-float array payloads into a
-  * build map costs more than the exchange it saves), exact rerank inside the
-  * join, then a distinct on the already-threshold-filtered pair set. No
+  * + embeddings), one equi-join on the bucket key with the embedding and
+  * its norm carried inline, exact rerank inside the join stage, then the
+  * pair aggregation over the already-threshold-filtered candidates. No
   * O(n²) stage anywhere. Hot buckets (projections near the mean) are the
-  * skew risk at scale; they are salt-split above `maxBucketSize` via
-  * [[Lsh.saltHotBuckets]], bounding the worst candidate partition at
-  * ~maxBucketSize² pairs. Fixture margin: measured max bucket occupancy at
-  * sf0.1 is 224 (q35's floor-bucket config) and 211 (q47's 4-bit bands) —
-  * 18× under the default cap, so fixture results are bit-identical to the
-  * unsalted join; re-measure if the fixtures are regenerated.
-  *
-  * Embeddings ride INLINE through the bucket join by default (vs
-  * [[MinHash]]'s id-only candidates + join-back); `idOnly = true` selects
-  * the other shape (ids through the self-join, dedup, embeddings joined
-  * back for the rerank). Pre-r9 A/Bs showed inline clearly ahead (3.7–5.4 s
-  * vs 5.7–6.0 s at sf0.1; 18.9 s vs 40.6 s under forced no-broadcast on
-  * 32k planted vectors) — but those runs predate the r9 spread/band-key
-  * fixes and were dominated by the duplicated-matmul defect both shapes
-  * shared; re-measured after the fixes the shapes are within noise of each
-  * other at fixture scale (inline 1.5–2.4 s vs idOnly 1.6–2.3 s on the
-  * 6 000-row planted set; 1.7–2.5 s vs 1.8 s at the q47 config), so the
-  * default stays inline (one join beats three at equal wall). The id-only
-  * shape remains the CLUSTER recommendation where the corpus is orders of
-  * magnitude wider than its ids (≥1k-dim embeddings, full document
-  * payloads) or the bucket-join shuffle no longer fits local disk — both
-  * shapes are property-tested identical (RpSpec), so the switch is a pure
-  * physical re-plan.
-  *
-  * Cache lifecycle: the signature relation feeds both self-join sides plus
-  * the hot-bucket occupancy probe, so it is cached for the duration of the
-  * call (with the r9 single-expression band keys the recompute is merely a
-  * few×, not the pre-r9 pathology, but one materialization is still
-  * cheaper than three evaluations). The returned pair set is
-  * materialized with an eager `localCheckpoint`: lineage is cut (no
-  * dependency on the unpersisted signature cache) and the blocks are
-  * released by the ContextCleaner when the caller drops the DataFrame — no
-  * unpersist contract leaks to callers. Trade-off vs `.cache()`: checkpoint
-  * blocks cannot be recomputed after executor loss; on a real cluster
-  * swap for a reliable checkpoint or keep the (small) pair set in a table.
+  * skew risk at scale; they are salt-split above `maxBucketSize`
+  * ([[Lsh.Split]]), bounding the worst candidate partition at
+  * ~maxBucketSize² pairs. The registered configurations stay under the
+  * default cap (NearDupLimitsSpec). Lazy: nothing runs at the call but
+  * the one-row dimension probe, and a lost block is recomputed.
   */
 object Rp {
 
@@ -98,86 +66,51 @@ object Rp {
   // array form is immune to both: the planes ride as a referenced object,
   // and there is only one reference for the optimizer to inline.
 
-  /** Shared skeleton: explode per-row bucket keys, self-join on (t, k),
-    * score each candidate pair exactly, filter, dedup across tables.
-    *
-    * `idOnly` selects the candidate shape (the documented crossover in the
-    * object scaladoc): `false` carries the embedding + its norm INLINE
-    * through the bucket self-join (one join, bigger rows — wins while the
-    * corpus broadcasts); `true` pushes only (t, k, salt, vec_id) through the
-    * self-join, dedups the candidate id pairs, and joins the embeddings back
-    * for the exact rerank (three joins, ~10× smaller bucket-join shuffle —
-    * the cluster-scale shape; measured in `ScaleStress --shapes`). Both
-    * shapes produce the identical pair set (property-tested in RpSpec). */
-  /** `materialize = false` skips the cache/checkpoint lifecycle and returns
-    * the fully lazy pipeline — for plan audits (PlanDump would otherwise see
-    * only the post-checkpoint scan) and composition into larger jobs. */
-  private def nearPairs(
-      embeddings: DataFrame,
-      keysArray: Option[Column],
-      score: Column,
-      scoreName: String,
-      keep: Column,
-      maxBucketSize: Int,
-      idOnly: Boolean,
-      materialize: Boolean): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    if (keysArray.isEmpty) // empty input: no planes could be derived (dim probe)
-      return embeddings.select(
-        col("vec_id").as("id_a"), col("vec_id").as("id_b"),
-        lit(0.0).as(scoreName)).where(lit(false))
-    val payload =
-      if (idOnly) Seq.empty[Column]
-      else Seq(col("embedding"),
-        Similarity.dotFast(col("embedding"), col("embedding")).as("n"))
+  /** The keyed rows of [[Lsh.bucketPairs]]: (id, embedding, n, t, k), one
+    * per element of `keys` (an array<struct<t,k>> per embedding), n = the
+    * squared norm. */
+  private[llm] def rows(embeddings: DataFrame, keys: Column): DataFrame =
     // spread BEFORE the signature projection: a single-split input would
     // otherwise compute every signature on one task (the exchange moves raw
     // rows; the key computation runs on its parallel output side)
-    val sig0 = graft.operators.Parallelism.spread(embeddings)
-      .select(col("vec_id") +: payload :+ explode(keysArray.get).as("tb"): _*)
-      .withColumn("t", col("tb.t")).withColumn("k", col("tb.k"))
-      .drop("tb")
-    val sig = if (materialize) sig0.cache() else sig0
-    // materialize BEFORE the self-join: if the cache fills lazily inside the
-    // join stage, the first side still executes the fused many-dot generator
-    // on the slow path (measured 9 s vs 3.5 s at sf0.1 for 112 planes)
-    if (materialize) sig.count()
-    // hot-bucket skew defense: bound the per-key candidate partition (the
-    // occupancy count reads the cached signature — one cheap extra job)
-    val salted = Lsh.saltHotBuckets(sig, "vec_id", maxBucketSize)
-    val pairs0 =
-      if (idOnly) {
-        val cand = salted
-          .select(col("t"), col("k"), col("salt"), col("vec_id").as("id_a"))
-          .join(salted.select(col("t"), col("k"), col("salt"),
-            col("vec_id").as("id_b")), Seq("t", "k", "salt"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-          .distinct() // dedup BEFORE the rerank: each pair scored exactly once
-        val embN = embeddings.select(col("vec_id"), col("embedding"),
-          Similarity.dotFast(col("embedding"), col("embedding")).as("n"))
-        cand
-          .join(embN.select(col("vec_id").as("id_a"),
-            col("embedding").as("emb_a"), col("n").as("n_a")), "id_a")
-          .join(embN.select(col("vec_id").as("id_b"),
-            col("embedding").as("emb_b"), col("n").as("n_b")), "id_b")
-          .select(col("id_a"), col("id_b"), score.as(scoreName))
-          .filter(keep)
-      } else {
-        val a = salted.select(col("t"), col("k"), col("salt"), col("vec_id").as("id_a"),
-          col("embedding").as("emb_a"), col("n").as("n_a"))
-        val b = salted.select(col("t"), col("k"), col("salt"), col("vec_id").as("id_b"),
-          col("embedding").as("emb_b"), col("n").as("n_b"))
-        a.join(b, Seq("t", "k", "salt"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), score.as(scoreName))
-          .filter(keep)
-          .distinct()
-      }
-    if (!materialize) return pairs0
-    val pairs = pairs0.localCheckpoint(true) // eager: see cache-lifecycle note
-    sig.unpersist()
-    pairs
+    graft.operators.Parallelism.spread(embeddings)
+      .select(col("vec_id").as("id"), col("embedding"),
+        Similarity.dotFast(col("embedding"), col("embedding")).as("n"), explode(keys).as("tb"))
+      .select(col("id"), col("embedding"), col("n"), col("tb.t").as("t"), col("tb.k").as("k"))
+
+  /** Scores each candidate pair of `keys` as `name`, kept where `keep`
+    * holds; empty when `keys` is None (empty input: no planes). */
+  private def scored(embeddings: DataFrame, keys: Option[Column], maxBucketSize: Int,
+      score: Column, name: String, keep: Column): DataFrame = keys match {
+    case Some(k) =>
+      Lsh.bucketPairs(rows(embeddings, k), Seq("t", "k"), Lsh.Split(maxBucketSize),
+          Seq("embedding", "n"))
+        .select(col("id_a"), col("id_b"), score.as(name)).filter(keep)
+    case None => embeddings.select(col("vec_id").as("id_a"), col("vec_id").as("id_b"),
+      lit(0.0).as(name)).where(lit(false))
+  }
+
+  /** [[l2NearPairs]]' band keys: per table, `projsPerTable` floored
+    * projections. */
+  private[llm] def l2Keys(embeddings: DataFrame, numTables: Int, projsPerTable: Int,
+      bucketLength: Double, seed: Long): Option[Column] = {
+    GraftFunctions.register(embeddings.sparkSession)
+    probeDim(embeddings).map { dim =>
+      val planes = hyperplanes(dim, numTables * projsPerTable, seed)
+      call_function(GraftFunctions.FloorBandKeysName, col("embedding"),
+        typedlit(planes), lit(numTables), lit(projsPerTable), lit(bucketLength))
+    }
+  }
+
+  /** [[cosineNearPairs]]' band keys: per band, `bitsPerBand` sign bits. */
+  private[llm] def cosineKeys(embeddings: DataFrame, bands: Int, bitsPerBand: Int,
+      seed: Long): Option[Column] = {
+    GraftFunctions.register(embeddings.sparkSession)
+    probeDim(embeddings).map { dim =>
+      val planes = hyperplanes(dim, bands * bitsPerBand, seed)
+      call_function(GraftFunctions.SignBandKeysName, col("embedding"),
+        typedlit(planes), lit(bands), lit(bitsPerBand))
+    }
   }
 
   /** (table, bucket-key) candidate pairs + exact L2 rerank.
@@ -187,9 +120,8 @@ object Rp {
     * With unit-norm embeddings d² = 2(1−cos), so an L2 threshold is also a
     * cosine threshold in disguise.
     *
-    * Output: (id_a, id_b, dist) with id_a < id_b, dist rounded to 4 — the
-    * same contract as [[Similarity.annCandidates]], so the two are drop-in
-    * twins (recall parity is property-tested in SimilaritySpec).
+    * Output: (id_a, id_b, dist) with id_a < id_b, dist rounded to 4;
+    * recall vs [[Similarity.exactL2Pairs]] is property-tested in RpSpec.
     */
   def l2NearPairs(
       embeddings: DataFrame,
@@ -198,20 +130,11 @@ object Rp {
       projsPerTable: Int = 3,
       bucketLength: Double = 1.5,
       seed: Long = 42L,
-      maxBucketSize: Int = Lsh.DefaultMaxBucketSize,
-      idOnly: Boolean = false,
-      materialize: Boolean = true): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val keysArray = probeDim(embeddings).map { dim =>
-      val planes = hyperplanes(dim, numTables * projsPerTable, seed)
-      call_function(GraftFunctions.FloorBandKeysName, col("embedding"),
-        typedlit(planes), lit(numTables), lit(projsPerTable), lit(bucketLength))
-    }
+      maxBucketSize: Int = Lsh.DefaultMaxBucketSize): DataFrame = {
     val d2 = col("n_a") -
-      lit(2.0) * Similarity.dotFast(col("emb_a"), col("emb_b")) + col("n_b")
-    nearPairs(embeddings, keysArray,
-      round(sqrt(greatest(d2, lit(0.0))), 4), "dist",
-      col("dist") <= threshold, maxBucketSize, idOnly, materialize)
+      lit(2.0) * Similarity.dotFast(col("embedding_a"), col("embedding_b")) + col("n_b")
+    scored(embeddings, l2Keys(embeddings, numTables, projsPerTable, bucketLength, seed),
+      maxBucketSize, round(sqrt(greatest(d2, lit(0.0))), 4), "dist", col("dist") <= threshold)
   }
 
   /** Banded sign-random-projection (SimHash-over-embeddings) candidate pairs
@@ -237,19 +160,10 @@ object Rp {
       bands: Int = 28,
       bitsPerBand: Int = 4,
       seed: Long = 42L,
-      maxBucketSize: Int = Lsh.DefaultMaxBucketSize,
-      idOnly: Boolean = false,
-      materialize: Boolean = true): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val keysArray = probeDim(embeddings).map { dim =>
-      val planes = hyperplanes(dim, bands * bitsPerBand, seed)
-      call_function(GraftFunctions.SignBandKeysName, col("embedding"),
-        typedlit(planes), lit(bands), lit(bitsPerBand))
-    }
-    val sim = Similarity.dotFast(col("emb_a"), col("emb_b")) /
+      maxBucketSize: Int = Lsh.DefaultMaxBucketSize): DataFrame = {
+    val sim = Similarity.dotFast(col("embedding_a"), col("embedding_b")) /
       sqrt(col("n_a") * col("n_b"))
-    nearPairs(embeddings, keysArray,
-      round(sim, 4), "cos_sim",
-      col("cos_sim") >= minCosine, maxBucketSize, idOnly, materialize)
+    scored(embeddings, cosineKeys(embeddings, bands, bitsPerBand, seed), maxBucketSize,
+      round(sim, 4), "cos_sim", col("cos_sim") >= minCosine)
   }
 }

@@ -1,7 +1,5 @@
 package graft.llm
 
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +11,9 @@ import org.apache.spark.sql.functions._
   *    against the corpus, so the corpus never shuffles; the scan + score +
   *    per-query top-k is one pass. Right answer when |queries| is small, at
   *    any corpus size.
-  *  - [[annCandidates]]: seeded random-hyperplane LSH (MLlib
-  *    BucketedRandomProjectionLSH) — the scale path when both sides are
-  *    large: candidates meet in hash buckets instead of a full cross join.
+  *  - [[Rp]]: seeded random-hyperplane LSH — the scale path when both
+  *    sides are large: candidates meet in hash buckets instead of a full
+  *    cross join.
   *
   * Vector math is pure `Column` higher-order functions (zip_with/aggregate):
   * no UDF boxing, and floats are widened to double *before* multiply so the
@@ -96,40 +94,6 @@ object Similarity {
       .filter(col("cos_sim") >= minCosine)
   }
 
-  /** LSH candidate pairs within `threshold` L2 distance (seeded, hence
-    * reproducible; recall vs brute force is property-tested, not
-    * oracle-checked). Output: (id_a, id_b, dist) with id_a < id_b. */
-  def annCandidates(
-      embeddings: DataFrame,
-      threshold: Double,
-      numHashTables: Int = 4,
-      seed: Long = 42L): DataFrame = {
-    val vecs = embeddings.select(
-      col("vec_id"),
-      array_to_vector(col("embedding").cast("array<double>")).as("features"))
-      .cache()
-    // bucketLength: projections of unit vectors are ~N(0,1), so 2.0 puts
-    // everything in two buckets (all pairs collide in every table — O(n²)
-    // candidates). 0.75 gives ~5-6 populated buckets per table; the
-    // numHashTables OR-amplification keeps recall up (property-tested).
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(0.75).setNumHashTables(numHashTables).setSeed(seed)
-    val model = lsh.fit(vecs)
-    val pairs = model.approxSimilarityJoin(vecs, vecs, threshold, "dist")
-      .select(
-        col("datasetA.vec_id").as("id_a"),
-        col("datasetB.vec_id").as("id_b"),
-        round(col("dist"), 4).as("dist"))
-      .filter(col("id_a") < col("id_b"))
-      // eager localCheckpoint: lineage-free materialization of the (small)
-      // pair set — vectors release now, pair blocks release via
-      // ContextCleaner when the caller drops the DataFrame
-      .localCheckpoint(true)
-    vecs.unpersist()
-    pairs
-  }
-
   /** Int8 scalar quantization of the embedding column: per-vector scale =
     * max|xᵢ|/127, elements rounded to [-127, 127] tinyints. The 100 TB
     * story is footprint, not math: a 768-dim float index is 3 KB/vector;
@@ -179,7 +143,7 @@ object Similarity {
   def cosineTopKQuantized(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Materialize the quantized index ONCE (eager lineage-free checkpoint,
-    // same lifecycle as Rp/Ivf): without the barrier Catalyst collapses the
+    // same lifecycle as Ivf): without the barrier Catalyst collapses the
     // quantize chain into the join's projection and re-runs the three-pass
     // HOF quantization per PAIR. The stored rows stay int8 (+ one norm
     // double), and vector_dot reads the tinyints DIRECTLY — a cast to
@@ -207,7 +171,7 @@ object Similarity {
   }
 
   /** Exact L2 pairs within threshold (brute force; recall baseline for
-    * [[annCandidates]] in tests, and the O(n²) fallback when the corpus is
+    * [[Rp.l2NearPairs]] in tests, and the O(n²) fallback when the corpus is
     * small enough). d² = ⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩ through the codegen'd dot —
     * 18× faster than the per-element lambda fold at 4M pairs. */
   def exactL2Pairs(embeddings: DataFrame, threshold: Double): DataFrame = {

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one equi-join shuffle keyed by cell; the build side
   * shuffles once at 1× its size, the probe side at 9×. Skewed cells
-  * (urban hot spots) are one `Lsh.saltHotBuckets`-style salt away —
+  * (urban hot spots) are one `Lsh.Split`-style salt away —
   * the key is already synthetic. */
 object GridJoin {
 

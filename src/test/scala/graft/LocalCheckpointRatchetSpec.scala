@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-held local relation instead. Spark is not started. */
 class LocalCheckpointRatchetSpec extends AnyFunSuite {
 
-  private val Pinned = 57
+  private val Pinned = 50
 
   test(s"src/main/scala holds exactly $Pinned .localCheckpoint( calls") {
     val walk = Files.walk(Paths.get("src/main/scala"))

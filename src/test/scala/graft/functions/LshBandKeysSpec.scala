@@ -112,7 +112,7 @@ class LshBandKeysSpec extends SparkSpec {
     // stage). Pin the fixed shape: the candidate plan carries the
     // single-call band-keys expression and NO per-reference matmul.
     val e = Tables(spark, sf0001, "embeddings")
-    val p = Rp.cosineNearPairs(e, 0.3, materialize = false)
+    val p = Rp.cosineNearPairs(e, 0.3)
       .queryExecution.executedPlan.toString
     assert(p.contains("sign_band_keys"), "band keys no longer flow through the single-call expression")
     assert(!p.contains("vector_matmul"), "a per-reference matmul reappeared in the candidate plan")

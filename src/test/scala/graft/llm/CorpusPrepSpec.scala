@@ -19,9 +19,9 @@ class CorpusPrepSpec extends SparkSpec {
     val n = out.count()
     assert(out.select(sha2(col("text"), 256)).distinct().count() == n)
     // near-dup: no surviving pair within the distance bound — checked with
-    // the SAME generator nearDedup uses (MinHash.pairs); the MLlib twin
-    // bucketizes in a different hash family and scores hashed-space
-    // jaccard, so a zero-survivor invariant only holds generator-vs-itself
+    // the SAME generator nearDedup uses (MinHash.pairs): another LSH family
+    // buckets differently, so a zero-survivor invariant only holds
+    // generator-vs-itself
     assert(MinHash.pairs(out.select("doc_id", "text"),
       cfg.nearDupMaxJaccardDist).count() == 0)
     // enrichment columns present and sane

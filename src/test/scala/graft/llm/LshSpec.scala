@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
-/** Hot-bucket skew defense ([[Lsh.saltHotBuckets]]): the per-key candidate
-  * partition must stay bounded under pathological bucket skew, cold buckets
-  * must be untouched, and the registered LSH engines must keep their recall
-  * contracts with the defense active.
+/** The kernel's per-key candidate bound ([[Lsh.bucketPairs]] under
+  * [[Lsh.Split]]): the per-key join group must stay bounded under
+  * pathological bucket skew, cold buckets must be untouched, and the
+  * registered LSH engines must keep their recall contracts with the bound
+  * active.
   */
 class LshSpec extends SparkSpec {
 
@@ -17,39 +18,49 @@ class LshSpec extends SparkSpec {
     // one bucket of 500 ids + a scatter of cold singleton buckets
     val sig = ((0 until 500).map(i => (0, 7L, i.toLong)) ++
       (0 until 40).map(i => (1, 100L + i, 1000L + i)))
-      .toDF("t", "k", "vec_id")
-    val salted = Lsh.saltHotBuckets(sig, "vec_id", maxBucketSize = 20)
-    val groups = salted.groupBy("t", "k", "salt").count()
+      .toDF("t", "k", "id")
+    val (salted, joinKeys) = Lsh.bounded(sig, Seq("t", "k"), Lsh.Split(20))
+    val groups = salted.groupBy(joinKeys.map(col): _*).count()
     val maxGroup = groups.agg(max("count")).head().getLong(0)
     // 500/20 = 25 hash-salt groups; multinomial imbalance allows some slack
     // over the 20-row target, but nothing within 5x of the unsalted 500
     assert(maxGroup <= 2 * 20, s"largest salted group $maxGroup")
     // worst candidate partition: maxGroup^2 pairs, vs 500^2 unsalted
     assert(salted.filter(col("t") === 0).select("salt").distinct().count() >= 20)
+    // the pair set is exactly the within-group pairs
+    val pairs = Lsh.bucketPairs(sig, Seq("t", "k"), Lsh.Split(20)).count()
+    val within = groups.agg(sum(col("count") * (col("count") - 1) / 2)).head().getDouble(0)
+    assert(pairs == within.toLong)
   }
 
   test("cold buckets keep salt 0 and their pair sets are untouched") {
     val sig = ((0 until 500).map(i => (0, 7L, i.toLong)) ++
       (0 until 40).map(i => (1, 100L + (i % 10), 1000L + i)))
-      .toDF("t", "k", "vec_id")
-    val salted = Lsh.saltHotBuckets(sig, "vec_id", maxBucketSize = 20)
+      .toDF("t", "k", "id")
+    val (salted, _) = Lsh.bounded(sig, Seq("t", "k"), Lsh.Split(20))
     assert(salted.filter(col("t") === 1 && col("salt") =!= 0).count() == 0)
     // no cap exceeded at all -> identical relation plus the zero salt column
-    val allCold = Lsh.saltHotBuckets(sig.filter(col("t") === 1), "vec_id", 20)
+    val cold = sig.filter(col("t") === 1)
+    val (allCold, _) = Lsh.bounded(cold, Seq("t", "k"), Lsh.Split(20))
     assert(allCold.filter(col("salt") =!= 0).count() == 0)
-    assert(allCold.drop("salt").exceptAll(sig.filter(col("t") === 1)).count() == 0)
+    assert(allCold.drop("salt", "__n").exceptAll(cold).count() == 0)
+    // ... and the same pairs as the uncapped join
+    val capped = Lsh.bucketPairs(cold, Seq("t", "k"), Lsh.Split(20))
+    val uncapped = Lsh.bucketPairs(cold, Seq("t", "k"), Lsh.Split(Int.MaxValue))
+    assert(capped.count() == 10 * 6) // ten buckets of four ids, C(4,2) each
+    assert(capped.exceptAll(uncapped).count() == 0 && uncapped.exceptAll(capped).count() == 0)
   }
 
   test("salting is deterministic and per-table independent") {
     val sig = (0 until 300).flatMap(i => Seq((0, 1L, i.toLong), (1, 1L, i.toLong)))
-      .toDF("t", "k", "vec_id")
-    val s1 = Lsh.saltHotBuckets(sig, "vec_id", 50).orderBy("t", "vec_id")
-    val s2 = Lsh.saltHotBuckets(sig, "vec_id", 50).orderBy("t", "vec_id")
+      .toDF("t", "k", "id")
+    def salted = Lsh.bounded(sig, Seq("t", "k"), Lsh.Split(50))._1
+    val s1 = salted.orderBy("t", "id")
+    val s2 = salted.orderBy("t", "id")
     assert(s1.exceptAll(s2).count() == 0 && s2.exceptAll(s1).count() == 0)
     // the same id draws different salts in different tables (independent
     // splits are what preserve OR-amplified recall for hot pairs)
-    val byTable = Lsh.saltHotBuckets(sig, "vec_id", 50)
-      .groupBy("vec_id").agg(countDistinct("salt").as("ns"))
+    val byTable = salted.groupBy("id").agg(countDistinct("salt").as("ns"))
     assert(byTable.filter(col("ns") > 1).count() > 0)
   }
 

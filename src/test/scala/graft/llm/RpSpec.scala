@@ -8,8 +8,7 @@ import graft.{SparkSpec, Tables}
   *
   * The candidate sets are seeded-model-dependent (no DuckDB oracle), so the
   * contract is: recall vs the exact brute-force pair sets, score exactness
-  * on the pairs it does emit, determinism under a fixed seed, and agreement
-  * with the MLlib twin's output contract.
+  * on the pairs it does emit, and determinism under a fixed seed.
   */
 class RpSpec extends SparkSpec {
 
@@ -71,23 +70,6 @@ class RpSpec extends SparkSpec {
     val c = Rp.cosineNearPairs(emb, 0.3, seed = 8L)
     // same recall contract, but the missed ~1% differs with the planes
     assert(c.count() > 0)
-  }
-
-  test("id-only candidate shape produces the identical pair set (both metrics)") {
-    // the cluster-scale shape (ids through the bucket join, embeddings
-    // joined back for the rerank) must be a pure physical re-plan: same
-    // pairs, same rounded scores, for both the cosine and the L2 form
-    val cosInline = Rp.cosineNearPairs(emb, 0.3)
-    val cosIds = Rp.cosineNearPairs(emb, 0.3, idOnly = true)
-    assert(cosInline.count() > 0)
-    assert(cosInline.exceptAll(cosIds).count() == 0 &&
-      cosIds.exceptAll(cosInline).count() == 0)
-    val l2Inline = Rp.l2NearPairs(emb, 1.3, numTables = 16, projsPerTable = 2)
-    val l2Ids = Rp.l2NearPairs(emb, 1.3, numTables = 16, projsPerTable = 2,
-      idOnly = true)
-    assert(l2Inline.count() > 0)
-    assert(l2Inline.exceptAll(l2Ids).count() == 0 &&
-      l2Ids.exceptAll(l2Inline).count() == 0)
   }
 
   test("empty input yields an empty pair set, not a crash") {

@@ -77,14 +77,4 @@ class SimilaritySpec extends SparkSpec {
     val recall = exact.intersect(quant).size.toDouble / exact.size
     assert(recall >= 0.9, s"quantized recall $recall")
   }
-
-  test("ANN LSH recalls >= 90% of exact L2 pairs within threshold") {
-    val threshold = 1.3
-    val exact = Similarity.exactL2Pairs(emb, threshold).select("id_a", "id_b")
-    val n = exact.count()
-    assert(n > 0, "threshold should capture some pairs")
-    val ann = Similarity.annCandidates(emb, threshold, numHashTables = 6).select("id_a", "id_b")
-    val found = exact.intersect(ann).count()
-    assert(found.toDouble / n >= 0.9, s"recall ${found.toDouble / n} ($found/$n)")
-  }
 }

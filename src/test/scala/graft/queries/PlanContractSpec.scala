@@ -68,13 +68,23 @@ class PlanContractSpec extends SparkSpec {
     // the near-dup/ANN scale story rests on candidates flowing through
     // band-bucket equi-joins (q61's brute twin is the DELIBERATE all-pairs
     // denominator and is not pinned here)
+    import spark.implicits._
     val emb = graft.Tables(spark, sf0001, "embeddings")
     val docs = graft.Tables(spark, sf0001, "documents")
+    val dhash = Seq((1L, true, 9, 8, 5L, 7L), (2L, true, 9, 8, 5L, 6L))
+      .toDF("doc_id", "valid", "width", "height", "dhash_hi", "dhash_lo")
+    val ahash = Seq((1L, true, 64, 5L), (2L, true, 64, 4L))
+      .toDF("doc_id", "valid", "n_samples", "ahash")
+    // every caller of the one kernel, graft.llm.Lsh.bucketPairs
     val engines = Seq(
-      "rp_cosine (q47)" ->
-        graft.llm.Rp.cosineNearPairs(emb, 0.3, materialize = false),
-      "minhash (q31)" ->
-        graft.llm.MinHash.pairs(docs, materialize = false))
+      "rp_cosine (q47)" -> graft.llm.Rp.cosineNearPairs(emb, 0.3),
+      "rp_l2 (q35)" -> graft.llm.Rp.l2NearPairs(emb, 1.0),
+      "minhash (q31)" -> graft.llm.MinHash.pairs(docs),
+      "ngram_jaccard (q33)" -> graft.llm.Dedup.ngramJaccardPairs(docs, 0.2),
+      "winnow (q86)" -> graft.llm.Dedup.winnowPairs(docs),
+      "simhash (q64)" -> graft.llm.Dedup.simhashPairs(docs),
+      "image (q133)" -> graft.llm.ImageHash.nearDupPairs(dhash),
+      "audio (q136)" -> graft.llm.AudioHash.nearDupPairs(ahash))
     for ((name, df) <- engines) {
       val p = df.queryExecution.executedPlan.toString
       for (bad <- Seq("BroadcastNestedLoopJoin", "CartesianProduct"))
