@@ -1322,7 +1322,7 @@ object ScaleStress {
           llm.Multimodal.Blob(id, out.toArray)
         }.write.parquet(rlePath)
         val aw = measure(adPath, b => b.map { x =>
-          llm.Adpcm.decodeBlock(x.payload)
+          llm.Adpcm.decode(x.payload)
             .map(s => s.foldLeft(0L)((a, v) => a + v)).getOrElse(-1L)
         }.toDF("s")).wall
         val rw = measure(rlePath, b => b.map { x =>
@@ -1413,7 +1413,7 @@ object ScaleStress {
           .agg(sum(length(col("payload")))).head().getLong(0)
         def chain(blobs: org.apache.spark.sql.Dataset[llm.Multimodal.Blob]): DataFrame = {
           val recs = llm.Warc.ingest(blobs.map(b => llm.Multimodal.Blob(b.doc_id,
-            llm.Gzip.decode(b.payload).map(_.getBytes("UTF-8"))
+            llm.Gzip.text(b.payload).map(_.getBytes("UTF-8"))
               .getOrElse(Array.emptyByteArray))))
             .filter(col("warc_type") === "response")
           llm.Html.extractAll(recs.select(col("doc_id"), col("body"))
@@ -1469,7 +1469,7 @@ object ScaleStress {
         def chain(blobs: org.apache.spark.sql.Dataset[llm.Multimodal.Blob]): DataFrame =
           blobs.mapPartitions(_.map { b =>
             if (b.doc_id % 2 == 0) {
-              val e = llm.Pdf.parse(b.payload).getOrElse(llm.Pdf.Extracted(-1, -1, ""))
+              val e = llm.Pdf.decode(b.payload).getOrElse(llm.Pdf.Extracted(-1, -1, ""))
               (b.doc_id, "pdf", e.nPages, e.text.length)
             } else {
               val d = llm.Zip.docxText(b.payload).getOrElse(llm.Zip.Doc(-1, ""))

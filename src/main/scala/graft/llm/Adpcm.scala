@@ -27,7 +27,9 @@ import org.apache.spark.sql.Dataset
   * CLAMPED per the spec, truncated data is fine — nibbles end where the
   * bytes do) quarantine by omission like every [[Multimodal]] decoder.
   */
-object Adpcm {
+object Adpcm extends Codec {
+
+  type Out = Array[Short]
 
   private[llm] val StepTable: Array[Int] = Array(
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
@@ -55,9 +57,11 @@ object Adpcm {
   }
 
   /** Decode one IMA block: header sample + one sample per nibble.
-    * None on blobs too short for the 4-byte header. */
-  def decodeBlock(bytes: Array[Byte]): Option[Array[Short]] = {
-    if (bytes == null || bytes.length < 4) return None
+    * None on blobs too short for the 4-byte header, or whose samples
+    * (4 bytes per input byte) would pass [[Codec.MaxDecodedBytes]]. */
+  def decode(bytes: Array[Byte]): Option[Array[Short]] = {
+    if (bytes == null || bytes.length < 4 || bytes.length.toLong * 4 > Codec.MaxDecodedBytes)
+      return None
     val pred0 = ((bytes(1) << 8) | (bytes(0) & 0xff)).toShort.toInt
     val idx0 = math.max(0, math.min(88, bytes(2) & 0xff))
     val nNibbles = (bytes.length - 4) * 2
@@ -119,17 +123,8 @@ object Adpcm {
 
   /** Row-local decode over blobs — one row per decoded sample (i = 0 is
     * the header sample); undecodable blobs quarantine by omission. */
-  def decodeAll(blobs: Dataset[Multimodal.Blob]): Dataset[SampleRow] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions(_.flatMap { b =>
-      decodeBlock(b.payload) match {
-        case Some(samples) =>
-          samples.iterator.zipWithIndex.map { case (s, i) =>
-            SampleRow(b.doc_id, i, s.toInt)
-          }
-        case None => Iterator.empty
-      }
-    })
-  }
+  def decodeAll(blobs: Dataset[Multimodal.Blob]): Dataset[SampleRow] =
+    Multimodal.perBlob(blobs, decode) { (id, r) =>
+      r.iterator.flatMap(_.iterator.zipWithIndex.map { case (s, i) => SampleRow(id, i, s.toInt) })
+    }
 }

@@ -50,22 +50,12 @@ object AudioHash {
   /** Per-blob energy-profile hash over mono WAV payloads; undecodable,
     * multi-channel, shorter-than-33-sample or over-cap payloads
     * quarantine as invalid. */
-  def aHash(blobs: Dataset[Multimodal.Blob]): Dataset[AHash] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Wav.parse(b.payload)
-          .filter(p => p.channels == 1 && p.samples.length >= Frames &&
-            p.samples.length <= MaxSamples) match {
-          case Some(pcm) =>
-            AHash(b.doc_id, valid = true, pcm.samples.length,
-              aHashBits(pcm.samples))
-          case None => AHash(b.doc_id, valid = false, 0, 0L)
-        }
-      }
+  def aHash(blobs: Dataset[Multimodal.Blob]): Dataset[AHash] =
+    Multimodal.perBlob(blobs, Wav.decode) { (id, r) =>
+      Iterator.single(r.filter(p => p.channels == 1 && p.samples.length >= Frames &&
+        p.samples.length <= MaxSamples).fold(AHash(id, valid = false, 0, 0L))(pcm =>
+        AHash(id, valid = true, pcm.samples.length, aHashBits(pcm.samples))))
     }
-  }
 
   /** The exact bit construction (shared with AudioHashSpec's naive
     * recomputation). */

@@ -22,9 +22,11 @@ import java.nio.{ByteBuffer, ByteOrder}
   * with JUNK for CD-sector alignment — skipping them is where parsers
   * desync). Frame payloads are exactly the BMP pixel-array layout:
   * bottom-up rows, B,G,R channel order, rows padded to 4 bytes — decoded
-  * here with the same overflow-guard discipline as [[Bmp.parse]].
+  * here with the same overflow-guard discipline as [[Bmp.decode]].
   */
-object Avi {
+object Avi extends Codec {
+
+  type Out = Meta
 
   /** Container metadata from the header walk alone (no frame decode —
     * a 100 TB metadata scan must not touch the movi payload).
@@ -52,7 +54,7 @@ object Avi {
   private val DIB_ = 0x20424944 // "DIB " LE
   private val DB00 = 0x62643030 // "00db" LE (uncompressed video frame)
   private val JUNK = 0x4b4e554a // "JUNK" LE
-  private val MaxDim = 1 << 24 // see Bmp.parse: crafted-header guard
+  private val MaxDim = 1 << 24 // see Bmp.decode: crafted-header guard
 
   private def rowStride(width: Int): Int = (width * 3 + 3) & ~3
 
@@ -161,16 +163,17 @@ object Avi {
   /** Walk the header lists and return container metadata, validating the
     * video stream is decodable (vids + 24-bit BI_RGB strf matching the
     * avih dims) WITHOUT touching frame payloads. None for anything
-    * malformed — quarantine, don't throw (the [[Wav.parse]] contract). */
-  def parseMeta(bytes: Array[Byte]): Option[Meta] =
+    * malformed (the [[Codec]] contract). */
+  def decode(bytes: Array[Byte]): Option[Meta] =
     open(bytes).flatMap(header)
 
-  /** Decode every `stride`-th frame ((0, stride, 2·stride, …) — the
-    * keyframe-sampling access pattern) to top-down row-major 0xRRGGBB.
-    * Skipped frames are SEEKED over (position arithmetic, no pixel walk,
-    * though their declared sizes are still validated — a desynced chunk
-    * list must quarantine, not decode garbage). None if the container or
-    * any frame chunk is malformed. */
+  /** [[decode]]'s header walk, then every `stride`-th frame ((0, stride,
+    * 2·stride, …) — the keyframe-sampling access pattern) decoded to
+    * top-down row-major 0xRRGGBB. Skipped frames are SEEKED over
+    * (position arithmetic, no pixel walk, though their declared sizes are
+    * still validated — a desynced chunk list must quarantine, not decode
+    * garbage). None if the container or any frame chunk is malformed, or
+    * the sampled frames' pixels pass [[Codec.MaxPixels]]. */
   def sampleFrames(bytes: Array[Byte], stride: Int): Option[(Meta, Seq[(Int, Bmp.Img)])] = {
     require(stride > 0)
     open(bytes).flatMap { buf =>
@@ -184,6 +187,7 @@ object Avi {
           val dbId = DB00 +
             (meta.vidsStream / 10) + ((meta.vidsStream % 10) << 8)
           var idx = 0
+          var left = Codec.MaxPixels
           var bad = false
           while (!bad && movi.remaining() >= 8) {
             val id = movi.getInt()
@@ -192,7 +196,10 @@ object Avi {
             else if (id == dbId) {
               if (size.toLong != frameBytes) bad = true // desynced/ragged frame
               else {
-                if (idx % stride == 0) out += idx -> decodeFrame(movi, meta)
+                if (idx % stride == 0) {
+                  left -= meta.width.toLong * meta.height
+                  if (left < 0) bad = true else out += idx -> decodeFrame(movi, meta)
+                }
                 movi.position(movi.position() + size) // even by construction
                 idx += 1
               }
@@ -212,7 +219,7 @@ object Avi {
     if (bytes == null || bytes.length < 12) return None
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (buf.getInt() != RIFF) return None
-    buf.getInt() // declared riff size; tolerated if it disagrees (Wav.parse note)
+    buf.getInt() // declared riff size; tolerated if it disagrees (Wav.decode note)
     if (buf.getInt() != AVI_) return None
     Some(buf)
   }
@@ -317,7 +324,7 @@ object Avi {
           isVids = buf.getInt() == VIDS
           buf.getInt() // handler fourcc; 'DIB ' conventional, not load-bearing
         case STRF if isVids =>
-          // BITMAPINFOHEADER: same fields Bmp.parse validates
+          // BITMAPINFOHEADER: same fields Bmp.decode validates
           if (sz < 40) return false
           buf.getInt() // biSize
           val w = buf.getInt()
@@ -347,7 +354,7 @@ object Avi {
   }
 
   /** Decode one '00db' payload at the buffer's position (not consumed —
-    * the caller advances) — bottom-up padded BGR, exactly [[Bmp.parse]]'s
+    * the caller advances) — bottom-up padded BGR, exactly [[Bmp.decode]]'s
     * pixel-array walk. Bounds are pre-validated (size == stride·height). */
   private def decodeFrame(movi: ByteBuffer, meta: Meta): Bmp.Img = {
     val stride = rowStride(meta.width)

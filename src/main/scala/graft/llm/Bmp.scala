@@ -5,17 +5,19 @@ import java.nio.{ByteBuffer, ByteOrder}
 /** Real BMP (Windows DIB) 24-bit codec — the image-modality twin of
   * [[Wav]]: uncompressed BI_RGB bitmaps are self-describing byte layout,
   * so a spec-complete encoder/parser needs no native imaging library.
-  * [[Multimodal.decodeBmp]] runs [[parse]] partition-batched; compressed
+  * [[Multimodal.decodeBmp]] runs [[decode]] partition-batched; compressed
   * image formats (JPEG/PNG) remain the documented stub tier.
   *
   * Format notes honored here (BITMAPINFOHEADER spec): pixel rows are
   * stored BOTTOM-UP when `height` is positive and top-down when negative;
   * each stored row is padded to a 4-byte boundary (the padding is where
   * real parser bugs live — any width ≢ 0 (mod 4) desyncs a parser that
-  * forgets it); channels are stored B,G,R. [[parse]] normalizes both row
+  * forgets it); channels are stored B,G,R. [[decode]] normalizes both row
   * orders to top-down row-major 0xRRGGBB ints.
   */
-object Bmp {
+object Bmp extends Codec {
+
+  type Out = Img
 
   /** Decoded image: row-major, top-down, packed 0xRRGGBB. */
   final case class Img(width: Int, height: Int, pixels: Array[Int])
@@ -62,8 +64,8 @@ object Bmp {
   }
 
   /** Parse 24-bit BI_RGB BMP bytes (both row orders); None for anything
-    * malformed — quarantine, don't throw (same contract as [[Wav.parse]]). */
-  def parse(bytes: Array[Byte]): Option[Img] = {
+    * malformed (the [[Codec]] contract). */
+  def decode(bytes: Array[Byte]): Option[Img] = {
     if (bytes == null || bytes.length < FileHeaderSize + InfoHeaderSize) return None
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (buf.get() != 'B'.toByte || buf.get() != 'M'.toByte) return None
@@ -83,16 +85,15 @@ object Bmp {
     // the old check false-passed into a negative-size allocation), and
     // widths ≥ ~715M overflow rowStride's int math into a tiny stride that
     // passes the bounds check and then indexes past the buffer. The pixel
-    // count is also bounded long-side so width*height cannot wrap. The cap
-    // is generous for real bitmaps (any genuine image this large could not
-    // fit the payload anyway — the byte-length check would reject it).
+    // count is also bounded long-side, at Codec.MaxPixels, so width*height
+    // cannot wrap and the decoded raster stays inside the blob bound.
     val MaxDim = 1 << 24
     if (width <= 0 || width > MaxDim || rawHeight == 0 ||
       rawHeight == Int.MinValue || planes != 1 ||
       bits != 24 || compression != BiRgb) return None
     val topDown = rawHeight < 0
     val height = math.abs(rawHeight)
-    if (height > MaxDim || width.toLong * height > Int.MaxValue) return None
+    if (height > MaxDim || width.toLong * height > Codec.MaxPixels) return None
     val stride = rowStride(width)
     if (dataOffset < 0 || dataOffset.toLong + stride.toLong * height > bytes.length)
       return None // truncated pixel data

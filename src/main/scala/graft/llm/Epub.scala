@@ -26,11 +26,16 @@ import scala.collection.mutable.ArrayBuffer
   *     path / no OPF member → None (not an EPUB); a spine idref missing
   *     from the manifest is skipped; a manifest href missing from the
   *     archive yields that chapter with empty text (accounting stays
-  *     visible, deck survives — the [[Pptx]] convention)
+  *     visible, deck survives — the [[Pptx]] convention); a [[Codec]]:
+  *     chapter XHTML extracted across the spine (which may repeat a
+  *     chapter) counts against [[Codec.MaxDecodedBytes]], and a book
+  *     past it is None
   *
   * Scale shape: row-local per book, no shuffle; streaming-safe.
   */
-object Epub {
+object Epub extends Codec {
+
+  type Out = Seq[Chapter]
 
   final case class Chapter(pos: Int, href: String, title: String, text: String)
 
@@ -99,8 +104,8 @@ object Epub {
     segs.mkString("/")
   }
 
-  def chapters(bytes: Array[Byte]): Option[Seq[Chapter]] =
-    Zip.members(bytes).flatMap { ms =>
+  def decode(bytes: Array[Byte]): Option[Seq[Chapter]] =
+    Zip.decode(bytes).flatMap { ms =>
       val byName = ms.map(m => m.name -> m).toMap
       for {
         container <- byName.get("META-INF/container.xml")
@@ -111,6 +116,8 @@ object Epub {
         }
         opf <- byName.get(opfPath)
       } yield {
+        // a spine may list one chapter many times: every extraction counts
+        var left = Codec.MaxDecodedBytes.toLong
         val opfXml = new String(opf.content, UTF_8)
         val manifest = scala.collection.mutable.HashMap.empty[String, String]
         val spine = ArrayBuffer.empty[String]
@@ -124,16 +131,18 @@ object Epub {
             Html.attrLookup(attrs, "idref").foreach(spine += _)
           case _ => ()
         }
-        spine.iterator.flatMap(manifest.get).zipWithIndex.map {
+        val chapters = spine.iterator.flatMap(manifest.get).zipWithIndex.map {
           case (href, k) =>
             val path = resolve(opfPath, href)
-            val e = byName.get(path)
-              .map(m => Html.extract(new String(m.content, UTF_8)))
-              .getOrElse(Html.Extracted("", ""))
+            val e = byName.get(path).map { m =>
+              left -= m.content.length
+              Html.extract(new String(m.content, UTF_8))
+            }.getOrElse(Html.Extracted("", ""))
             Chapter(k, href, e.title, e.text)
-        }.toSeq
+        }.takeWhile(_ => left >= 0).toSeq
+        if (left < 0) None else Some(chapters)
       }
-    }
+    }.flatten
 
   // ---------------------------------------------------------------- build
 

@@ -23,7 +23,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   *     RATIONAL is two u32s at an offset
   *   - the EXIF sub-IFD is reached through the 0x8769 pointer tag — one
   *     level, never followed recursively
-  *   - quarantine contract: any structural violation (bad magic,
+  *   - [[Codec]] quarantine: any structural violation (bad magic,
   *     truncated segment, out-of-bounds offset, absurd entry count)
   *     returns None rather than throwing; a well-formed file that simply
   *     LACKS a field yields that field's absent default ("" / -1), which
@@ -36,7 +36,9 @@ import java.nio.{ByteBuffer, ByteOrder}
   * path) exercising inline and offset ASCII, SHORT and LONG dimension
   * types, and both byte orders.
   */
-object Exif {
+object Exif extends Codec {
+
+  type Out = Data
 
   final case class Data(byteOrder: String, make: String, model: String,
       orientation: Int, dateTime: String, width: Long, height: Long,
@@ -50,7 +52,7 @@ object Exif {
 
   /** Walk JPEG segments to the first Exif APP1; None when the stream is
     * not a JPEG, is structurally broken, or carries no EXIF block. */
-  def parseJpeg(bytes: Array[Byte]): Option[Data] = {
+  def decode(bytes: Array[Byte]): Option[Data] = {
     if (bytes == null || bytes.length < 4) return None
     if ((bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8) return None
     var i = 2

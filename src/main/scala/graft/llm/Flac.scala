@@ -29,8 +29,10 @@ package graft.llm
   * block or comment, zero sample rate, unterminated block list, or
   * any cap breach (blocks ≤ [[MaxBlocks]], block length ≤
   * [[MaxBlockLen]], comments ≤ [[MaxComments]]) quarantines the WHOLE
-  * stream — None, never throw, never half-parsed metadata. */
-object Flac extends Serializable {
+  * stream — None (the [[Codec]] contract), never half-parsed metadata. */
+object Flac extends Codec {
+
+  type Out = Meta
 
   val MaxBlocks = 64
   val MaxBlockLen: Int = 1 << 20
@@ -43,7 +45,7 @@ object Flac extends Serializable {
   final case class Meta(info: StreamInfo, vendor: String,
       comments: Seq[(String, String)], nBlocks: Int)
 
-  def metadata(data: Array[Byte]): Option[Meta] = {
+  def decode(data: Array[Byte]): Option[Meta] = {
     if (data == null || data.length < 4 + 4 + 34) return None
     if (data(0) != 'f' || data(1) != 'L' || data(2) != 'a' || data(3) != 'C')
       return None

@@ -23,11 +23,18 @@ import org.apache.spark.sql.Dataset
   *          sample = if (v & 0x80) t else -t   (A-law sign bit 1 = positive)
   *
   * G.711 is HEADERLESS on the wire — a blob is just samples, one byte
-  * each — so the only quarantine case is a null/empty payload.
+  * each — so the only malformed payload is a null/empty one; a payload
+  * whose two expansions together (8 bytes per input byte) would pass
+  * [[Codec.MaxDecodedBytes]] quarantines too.
   *
   * Scale shape: row-local mapPartitions over blobs, no shuffle,
   * streaming-safe (see StreamingDocFormatsSpec parity). */
-object G711 {
+object G711 extends Codec {
+
+  /** Both expansions of every byte, in byte order. */
+  final case class Pcm(mu: Array[Int], al: Array[Int])
+
+  type Out = Pcm
 
   /** Expand one μ-law byte (0..255) to its linear PCM sample. */
   def mulaw(b: Int): Int = {
@@ -48,20 +55,17 @@ object G711 {
     if ((v & 0x80) != 0) t else -t
   }
 
+  def decode(bytes: Array[Byte]): Option[Pcm] =
+    if (bytes == null || bytes.isEmpty || bytes.length.toLong * 8 > Codec.MaxDecodedBytes) None
+    else Some(Pcm(bytes.map(b => mulaw(b & 0xff)), bytes.map(b => alaw(b & 0xff))))
+
   final case class SampleRow(doc_id: Long, i: Int, mu: Int, al: Int)
 
   /** Row-local decode over blobs — one row per byte carrying BOTH
     * expansions (certifying the two tables against one fixture);
-    * null/empty payloads quarantine by omission. */
-  def decodeAll(blobs: Dataset[Multimodal.Blob]): Dataset[SampleRow] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions(_.flatMap { b =>
-      if (b.payload == null || b.payload.isEmpty) Iterator.empty
-      else b.payload.iterator.zipWithIndex.map { case (byte, i) =>
-        val u = byte & 0xff
-        SampleRow(b.doc_id, i, mulaw(u), alaw(u))
-      }
-    })
-  }
+    * quarantined payloads contribute no rows. */
+  def decodeAll(blobs: Dataset[Multimodal.Blob]): Dataset[SampleRow] =
+    Multimodal.perBlob(blobs, decode) { (id, r) =>
+      r.iterator.flatMap(p => Iterator.range(0, p.mu.length).map(i => SampleRow(id, i, p.mu(i), p.al(i))))
+    }
 }

@@ -18,17 +18,12 @@ import java.awt.image.{BufferedImage, IndexColorModel}
   * fixture needs. Production GIFs are palette-indexed by construction, so
   * this is also the honest shape of the format.
   *
-  * Same quarantine contract as the other codecs: [[parse]] returns None
-  * for wrong magic (both GIF87a and GIF89a accepted), truncation, LZW
-  * corruption, or crafted dimensions past the pixel cap.
+  * A [[Codec]] through [[ImageIoCodec]]: both signatures (GIF87a and
+  * GIF89a) accepted, first frame only — animation is out of scope for a
+  * feature-extraction decode.
   */
-object Gif {
-
-  /** GIF signatures (GIF87a / GIF89a). */
-  private val Magic87 = "GIF87a".getBytes("US-ASCII")
-  private val Magic89 = "GIF89a".getBytes("US-ASCII")
-
-  val DefaultMaxPixels: Long = 1L << 24
+object Gif extends ImageIoCodec(
+  "GIF87a".getBytes("US-ASCII"), "GIF89a".getBytes("US-ASCII")) {
 
   /** Encode `indices(y*width + x)` into `palette` (≤ 256 0xRRGGBB entries)
     * as a GIF. Every index must be < palette.length. */
@@ -50,15 +45,5 @@ object Gif {
       BufferedImage.TYPE_BYTE_INDEXED, cm)
     img.getRaster.setDataElements(0, 0, width, height, indices)
     ImageIoCodec.encode(img, "gif")
-  }
-
-  /** Parse GIF bytes to 8-bit RGB (palette applied); None for anything
-    * malformed. First frame only — animation is out of scope for a
-    * feature-extraction decode. */
-  def parse(bytes: Array[Byte], maxPixels: Long = DefaultMaxPixels): Option[RgbImage] = {
-    if (!ImageIoCodec.hasMagic(bytes, Magic87) &&
-        !ImageIoCodec.hasMagic(bytes, Magic89)) return None
-    ImageIoCodec.decodeRgb(bytes, maxPixels)
-      .map { case (w, h, px) => RgbImage(w, h, px) }
   }
 }

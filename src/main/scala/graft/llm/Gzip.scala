@@ -5,9 +5,10 @@ import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
 /** Gzip (RFC 1952) member codec over JDK zlib — the compressed-TEXT scan
   * shape: web-crawl corpora arrive as concatenated gzip members (WARC
   * convention), so a 100 TB text pipeline's first operator is often
-  * "walk members, inflate, verify, decode". Same contract family as the
-  * binary codecs: spec-complete member walk (FLG bit handling, CRC32 +
-  * ISIZE verification, multi-member concatenation), quarantine-not-throw.
+  * "walk members, inflate, verify, decode". A [[Codec]] like the binary
+  * decoders: spec-complete member walk (FLG bit handling, CRC32 + ISIZE
+  * verification, multi-member concatenation) to the inflated bytes, with
+  * [[text]] the strict-UTF-8 form on top.
   *
   * The JDK's `GZIPInputStream` is NOT used: it silently stops at the
   * first member boundary it can't parse and hides trailing garbage —
@@ -17,11 +18,9 @@ import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
   * deflate at the default level of the pinned JDK zlib), which is what
   * lets q145's decode output hash-check against a parser-free oracle.
   */
-object Gzip {
+object Gzip extends Codec {
 
-  /** Inflated-size cap per blob — a crafted 40 KB bomb can declare GBs;
-    * a corpus scan quarantines it instead of dying on heap. */
-  val MaxOut: Int = 1 << 26
+  type Out = Array[Byte]
 
   private val Magic0 = 0x1f
   private val Magic1 = 0x8b
@@ -58,52 +57,39 @@ object Gzip {
   }
 
   /** Walk ALL members, inflate + verify each (CRC32 and ISIZE), return
-    * the concatenated UTF-8 text. None for: bad magic/CM, reserved FLG
+    * the concatenated bytes (e.g. the `.tar` inside a `.tar.gz`, which
+    * [[Tar.decode]] then walks). None for: bad magic/CM, reserved FLG
     * bits, truncated stream, deflate corruption, CRC/ISIZE mismatch,
-    * trailing garbage after the last member, output past [[MaxOut]], or
-    * invalid UTF-8. FEXTRA/FNAME/FCOMMENT/FHCRC fields are skipped
-    * per-spec (real crawls carry FNAME constantly). */
-  def decode(bytes: Array[Byte], maxOut: Int = MaxOut): Option[String] = {
-    if (bytes == null || bytes.length < 20) return None
-    val all = new java.io.ByteArrayOutputStream()
-    var off = 0
-    var total = 0L
-    while (off < bytes.length) {
-      off = member(bytes, off, all, maxOut) match {
-        case -1 => return None
-        case n  => n
-      }
-      total = all.size().toLong
-      if (total > maxOut) return None
-    }
-    val data = all.toByteArray
-    val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-      .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
-      .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
-    try Some(dec.decode(java.nio.ByteBuffer.wrap(data)).toString)
-    catch { case _: java.nio.charset.CharacterCodingException => None }
-  }
-
-  /** [[decode]] without the UTF-8 step — the binary-payload form (e.g.
-    * the `.tar` inside a `.tar.gz`, which [[Tar.members]] then walks). */
-  def decodeBytes(bytes: Array[Byte], maxOut: Int = MaxOut): Option[Array[Byte]] = {
+    * trailing garbage after the last member, or output past
+    * [[Codec.MaxDecodedBytes]]. FEXTRA/FNAME/FCOMMENT/FHCRC fields are
+    * skipped per-spec (real crawls carry FNAME constantly). */
+  def decode(bytes: Array[Byte]): Option[Array[Byte]] = {
     if (bytes == null || bytes.length < 20) return None
     val all = new java.io.ByteArrayOutputStream()
     var off = 0
     while (off < bytes.length) {
-      off = member(bytes, off, all, maxOut) match {
+      off = member(bytes, off, all) match {
         case -1 => return None
         case n  => n
       }
-      if (all.size().toLong > maxOut) return None
     }
     Some(all.toByteArray)
   }
 
+  /** [[decode]] plus strict UTF-8 — the compressed-TEXT form; None also
+    * for invalid UTF-8. */
+  def text(bytes: Array[Byte]): Option[String] =
+    decode(bytes).flatMap { data =>
+      val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+        .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
+        .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
+      try Some(dec.decode(java.nio.ByteBuffer.wrap(data)).toString)
+      catch { case _: java.nio.charset.CharacterCodingException => None }
+    }
+
   /** Parse one member at `off`; append inflated bytes; return the offset
     * past its trailer, or -1 if malformed. */
-  private def member(b: Array[Byte], off: Int, out: java.io.ByteArrayOutputStream,
-      maxOut: Int): Int = {
+  private def member(b: Array[Byte], off: Int, out: java.io.ByteArrayOutputStream): Int = {
     if (off + 10 > b.length) return -1
     if ((b(off) & 0xff) != Magic0 || (b(off + 1) & 0xff) != Magic1) return -1
     if (b(off + 2) != 8) return -1 // CM: deflate only
@@ -137,7 +123,7 @@ object Gzip {
         crc.update(tmp, 0, n)
         out.write(tmp, 0, n)
         isize += n
-        if (out.size() > maxOut) return -1
+        if (out.size() > Codec.MaxDecodedBytes) return -1
       }
       val consumed = (b.length - p) - inf.getRemaining
       val trailer = p + consumed
@@ -163,16 +149,8 @@ object Gzip {
     * their row with valid=false (audit-not-drop). */
   final case class TextRow(doc_id: Long, valid: Boolean, text: String, n_chars: Int)
 
-  def decodeAll(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[TextRow] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        decode(b.payload) match {
-          case Some(t) => TextRow(b.doc_id, valid = true, t, t.length)
-          case None    => TextRow(b.doc_id, valid = false, "", 0)
-        }
-      }
+  def decodeAll(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[TextRow] =
+    Multimodal.perBlob(blobs, text) { (id, r) =>
+      Iterator.single(r.fold(TextRow(id, valid = false, "", 0))(t => TextRow(id, valid = true, t, t.length)))
     }
-  }
 }

@@ -20,10 +20,12 @@ package graft.llm
   * 2×height), non-32 bpp, compressed DIBs, or a payload too short for
   * its planes each quarantine the ENTRY; a malformed directory
   * quarantines the whole file. Entry dims 0 mean 256 (the u8
-  * convention); the pixel cap guards before allocation. */
-object Ico extends Serializable {
+  * convention). Entries may share one DIB, so decoded pixels count
+  * against [[Codec.MaxPixels]] across ALL entries, and a file past it
+  * quarantines whole. */
+object Ico extends Codec {
 
-  val MaxPixels: Long = 64L << 20
+  type Out = Seq[Entry]
 
   /** One decoded entry: row-major TOP-DOWN packed 0xAARRGGBB pixels
     * plus the AND-mask population count. */
@@ -91,6 +93,7 @@ object Ico extends Serializable {
     val count = u16(4)
     if (count < 1 || 6 + 16 * count > data.length) return None
     val out = Seq.newBuilder[Entry]
+    var left = Codec.MaxPixels
     var j = 0
     while (j < count) {
       val e = 6 + 16 * j
@@ -98,8 +101,11 @@ object Ico extends Serializable {
       val h = { val v = data(e + 1) & 0xff; if (v == 0) 256 else v }
       val size = u32(e + 8)
       val off = u32(e + 12)
-      decodeDib(data, off, size, w, h).foreach(px => out += Entry(j, w, h,
-        px._1, px._2))
+      decodeDib(data, off, size, w, h).foreach { case (px, maskSet) =>
+        left -= px.length
+        out += Entry(j, w, h, px, maskSet)
+      }
+      if (left < 0) return None
       j += 1
     }
     Some(out.result())
@@ -109,7 +115,6 @@ object Ico extends Serializable {
   private def decodeDib(data: Array[Byte], off: Long, size: Long,
       w: Int, h: Int): Option[(Array[Int], Int)] = {
     if (off < 0 || size < 40 || off + size > data.length) return None
-    if (w.toLong * h > MaxPixels) return None
     val o = off.toInt
     def u32(p: Int): Long =
       (data(p) & 0xffL) | ((data(p + 1) & 0xffL) << 8) |

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 /** ID3v2 tag codec — the audio track's metadata sidecar ([[Srt]]'s
   * counterpart for music/podcast corpora): title/artist/album ride in
-  * front of the MP3 frame chain ([[Mp3.parse]] skips the tag; this
+  * front of the MP3 frame chain ([[Mp3.decode]] skips the tag; this
   * module reads it). Spec-complete for the text-frame subset that
   * carries virtually all crawl-relevant metadata:
   *
@@ -17,13 +17,15 @@ import java.nio.charset.StandardCharsets
   *   - unknown frames skipped by declared size; zero-byte padding ends
   *     the walk (the spec's padding rule)
   *
-  * Quarantine-not-throw (`None`): bad magic/version, any header or
+  * [[Codec]] quarantine (`None`): bad magic/version, any header or
   * frame flag set (unsynchronisation/extended-header/compression are
   * out of scope and silently misparsing them would corrupt text),
   * non-syncsafe size bytes, a frame running past the tag, a malformed
   * frame id, or an unsupported text encoding in a frame we read.
   */
-object Id3 {
+object Id3 extends Codec {
+
+  type Out = Tags
 
   final case class Tags(version: Int, title: String, artist: String, album: String)
 
@@ -53,7 +55,7 @@ object Id3 {
       ((n >> 7) & 0x7f).toByte, (n & 0x7f).toByte) ++ frames
   }
 
-  def parse(bytes: Array[Byte]): Option[Tags] = {
+  def decode(bytes: Array[Byte]): Option[Tags] = {
     if (bytes == null || bytes.length < 10) return None
     if (bytes(0) != 'I' || bytes(1) != 'D' || bytes(2) != '3') return None
     val major = bytes(3) & 0xff
@@ -105,21 +107,14 @@ object Id3 {
     Some(Tags(major, title, artist, album))
   }
 
-  /** Tag rows per blob (audit-not-drop); pairs with [[Mp3.parse]]'s
+  /** Tag rows per blob (audit-not-drop); pairs with [[Mp3.decode]]'s
     * container metadata over the same bytes. */
   final case class TagRow(doc_id: Long, valid: Boolean, version: Int,
       title: String, artist: String, album: String)
 
-  def tagRows(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[TagRow] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        parse(b.payload) match {
-          case Some(t) => TagRow(b.doc_id, valid = true, t.version, t.title, t.artist, t.album)
-          case None    => TagRow(b.doc_id, valid = false, 0, "", "", "")
-        }
-      }
+  def tagRows(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[TagRow] =
+    Multimodal.perBlob(blobs, decode) { (id, r) =>
+      Iterator.single(r.fold(TagRow(id, valid = false, 0, "", "", ""))(t =>
+        TagRow(id, valid = true, t.version, t.title, t.artist, t.album)))
     }
-  }
 }

@@ -49,20 +49,14 @@ object ImageHash {
   /** Per-blob dHash over any decodable image payload (BMP here — the
     * codec is orthogonal to the hash; images smaller than the 9×8 grid
     * quarantine as invalid). */
-  def dHash(blobs: Dataset[Multimodal.Blob]): Dataset[DHash] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Bmp.parse(b.payload).filter(i => i.width >= GridW && i.height >= GridH) match {
-          case Some(img) =>
-            val (hi, lo) = dHashBits(img.width, img.height, img.pixels)
-            DHash(b.doc_id, valid = true, img.width, img.height, hi, lo)
-          case None => DHash(b.doc_id, valid = false, 0, 0, 0L, 0L)
-        }
-      }
+  def dHash(blobs: Dataset[Multimodal.Blob]): Dataset[DHash] =
+    Multimodal.perBlob(blobs, Bmp.decode) { (id, r) =>
+      Iterator.single(r.filter(i => i.width >= GridW && i.height >= GridH)
+        .fold(DHash(id, valid = false, 0, 0, 0L, 0L)) { img =>
+          val (hi, lo) = dHashBits(img.width, img.height, img.pixels)
+          DHash(id, valid = true, img.width, img.height, hi, lo)
+        })
     }
-  }
 
   /** The exact bit construction (shared by [[dHash]] and ImageHashSpec's
     * hand recomputation). */

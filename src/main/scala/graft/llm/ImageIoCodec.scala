@@ -6,19 +6,23 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
 /** Shared ImageIO mechanics for the JDK-decodable compressed image formats
-  * ([[Png]], [[Gif]], [[Jpeg]]). Each format module owns its signature
-  * check — the ImageIO reader registry would happily decode any format it
-  * knows, and a decoder named for one format accepting another is a
-  * contract violation — and delegates the reader dance here.
+  * ([[Png]], [[Gif]], [[Jpeg]]): each of them is this [[Codec]] with its
+  * own signatures. The signature check comes first — the ImageIO reader
+  * registry would happily decode any format it knows, and a decoder
+  * named for one format accepting another is a contract violation.
   */
-private[llm] object ImageIoCodec {
+private[llm] abstract class ImageIoCodec(magics: Array[Byte]*) extends Codec {
 
-  /** Decode to top-down row-major 0xRRGGBB pixels; None for anything
-    * malformed. Declared dimensions are bounds-checked from the header
-    * BEFORE the pixel decode allocates (`maxPixels`) — a crafted header
-    * must not OOM an executor. All decode exceptions (CRC/deflate/huffman
-    * corruption, truncation) quarantine as None. */
-  def decodeRgb(bytes: Array[Byte], maxPixels: Long): Option[(Int, Int, Array[Int])] =
+  type Out = RgbImage
+
+  /** Decode to top-down row-major 0xRRGGBB pixels; None for a foreign
+    * signature or anything malformed. Declared dimensions are
+    * bounds-checked against [[Codec.MaxPixels]] from the header BEFORE
+    * the pixel decode allocates — a crafted header must not OOM an
+    * executor. All decode exceptions (CRC/deflate/huffman corruption,
+    * truncation) quarantine as None. */
+  def decode(bytes: Array[Byte]): Option[RgbImage] = {
+    if (!magics.exists(ImageIoCodec.hasMagic(bytes, _))) return None
     try {
       val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
       try {
@@ -29,18 +33,27 @@ private[llm] object ImageIoCodec {
           reader.setInput(iis, true /* seekForwardOnly */, true /* ignoreMetadata */)
           val w = reader.getWidth(0)
           val h = reader.getHeight(0)
-          if (w <= 0 || h <= 0 || w.toLong * h > maxPixels) return None
+          if (w <= 0 || h <= 0 || w.toLong * h > Codec.MaxPixels) return None
           val img = reader.read(0)
           val px = new Array[Int](w * h)
           img.getRGB(0, 0, w, h, px, 0, w)
           var j = 0
           while (j < px.length) { px(j) &= 0xffffff; j += 1 }
-          Some((w, h, px))
+          Some(RgbImage(w, h, px))
         } finally reader.dispose()
       } finally iis.close()
     } catch {
       case _: Exception => None
     }
+  }
+}
+
+private[llm] object ImageIoCodec {
+
+  // once per JVM, before any decode: keep ImageIO's stream cache in
+  // memory — the default spills every ImageInputStream to a /tmp cache
+  // file, a per-row disk write a 100 TB scan cannot afford
+  ImageIO.setUseCache(false)
 
   /** Encode a BufferedImage through the named ImageIO writer. */
   def encode(img: BufferedImage, format: String): Array[Byte] = {

@@ -11,20 +11,16 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
   * no cross-engine arithmetic derivation of the decoded values exists.
   * Correctness is therefore property-bounded instead (JpegSpec): a
   * round-trip at high quality must reproduce smooth images within a small
-  * per-pixel error, solid 8×8-aligned blocks near-exactly, and the
-  * quarantine contract matches the other codecs. The decode itself is
-  * fully real — any baseline/progressive JFIF payload decodes.
+  * per-pixel error, solid 8×8-aligned blocks near-exactly. The decode
+  * itself is fully real — any baseline/progressive JFIF payload decodes
+  * — and is a [[Codec]] through [[ImageIoCodec]] (signature FF D8 FF:
+  * SOI + first marker, shared by JFIF and EXIF streams).
   *
   * [[encodeRgb]] exists for fixtures and as the honest write path; the
   * `quality` knob maps to the IJG quantization-table scaling every JPEG
   * encoder exposes.
   */
-object Jpeg {
-
-  /** JFIF/EXIF streams all start FF D8 FF (SOI + first marker). */
-  private val Magic = Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte)
-
-  val DefaultMaxPixels: Long = 1L << 24
+object Jpeg extends ImageIoCodec(Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte)) {
 
   /** Encode top-down row-major 0xRRGGBB pixels as baseline JPEG at the
     * given quality (0..1]. */
@@ -51,14 +47,5 @@ object Jpeg {
       } finally ios.close()
       out.toByteArray
     } finally writer.dispose()
-  }
-
-  /** Parse JPEG bytes to 8-bit RGB; None for anything malformed — same
-    * quarantine contract and crafted-dimension guard as the other
-    * codecs. */
-  def parse(bytes: Array[Byte], maxPixels: Long = DefaultMaxPixels): Option[RgbImage] = {
-    if (!ImageIoCodec.hasMagic(bytes, Magic)) return None
-    ImageIoCodec.decodeRgb(bytes, maxPixels)
-      .map { case (w, h, px) => RgbImage(w, h, px) }
   }
 }

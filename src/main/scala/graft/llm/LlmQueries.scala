@@ -1803,7 +1803,7 @@ object LlmQueries {
   // REAL compressed-image decode (VERDICT r9 "What's missing" #2): the
   // deterministic modular pixels are encoded to REAL deflate-compressed
   // PNG bytes (Png.encodeRgb → the JDK ImageIO writer) and decoded back
-  // through Png.parse (ImageIO reader, signature + crafted-dimension
+  // through Png.decode (ImageIO reader, signature + crafted-dimension
   // guards). The oracle never sees PNG bytes — it re-derives width/
   // height/channel sums/luma arithmetically — so a hash match certifies
   // the full lossless encode→deflate→decode round-trip against an
@@ -2685,7 +2685,7 @@ object LlmQueries {
       }
     val unzipped = blobs.map { b =>
       Multimodal.Blob(b.doc_id,
-        Gzip.decode(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))
+        Gzip.text(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))
     }
     Warc.ingest(unzipped)
       .select(col("doc_id"), col("rec_idx"), col("warc_type"), col("target_uri"),
@@ -2855,7 +2855,7 @@ object LlmQueries {
           "UTF-8"))))
       }
     val records = Warc.ingest(blobs.map(b => Multimodal.Blob(b.doc_id,
-        Gzip.decode(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))))
+        Gzip.text(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))))
       .filter(col("warc_type") === "response")
     val urls = Url.canonicalizeAll(
         records.select(col("doc_id"), col("target_uri")).as[(Long, String)])
@@ -3502,7 +3502,7 @@ object LlmQueries {
   }
 
   // ---------------------------------------------------------------- q162
-  // EXIF metadata extraction (Exif.parseJpeg — the TIFF IFD walk inside
+  // EXIF metadata extraction (Exif.decode — the TIFF IFD walk inside
   // a JPEG APP1 segment; image metadata is the multimodal counterpart
   // of q159's HTML head harvest, and reading it must not require a
   // pixel decode). The fixture builder writes real TIFF structure and
@@ -3542,7 +3542,7 @@ object LlmQueries {
         iso = (100 * (1 + id % 32)).toInt,
         exposureNum = 1,
         exposureDen = (10 + id % 240).toInt)
-      val d = Exif.parseJpeg(bytes).getOrElse(Exif.Absent)
+      val d = Exif.decode(bytes).getOrElse(Exif.Absent)
       (id, d.byteOrder, d.make, d.model, d.orientation, d.dateTime,
         d.width, d.height, d.iso, d.exposureNum, d.exposureDen)
     }.toDF("doc_id", "byte_order", "make", "model", "orientation",
@@ -3592,7 +3592,7 @@ object LlmQueries {
   }
 
   // ---------------------------------------------------------------- q164
-  // PDF text extraction (Pdf.parse — the document-format member of the
+  // PDF text extraction (Pdf.decode — the document-format member of the
   // decode tier: a meaningful share of any crawl corpus is PDF, and its
   // text lives behind real structure no regex reaches). The doc parity
   // split forces BOTH the raw and /FlateDecode stream paths (zlib
@@ -3623,14 +3623,14 @@ object LlmQueries {
           Seq(page1, s"BT 72 720 Td (Page two \\(escaped\\) of $id) Tj ET")
         else Seq(page1)
       val bytes = Pdf.build(pages, flate = id % 2 == 1)
-      val e = Pdf.parse(bytes).getOrElse(Pdf.Extracted(-1, -1, ""))
+      val e = Pdf.decode(bytes).getOrElse(Pdf.Extracted(-1, -1, ""))
       (id, e.nPages, e.nFlate, e.text)
     }.toDF("doc_id", "n_pages", "n_flate", "text")
       .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------- q165
-  // ZIP archive member scan (Zip.members — the container walk under
+  // ZIP archive member scan (Zip.decode — the container walk under
   // every office document, epub, and jar a crawl surfaces). The parse
   // is the spec's own read path: EOCD found backward through the
   // comment zone, central directory for names/sizes/methods/offsets,
@@ -3663,7 +3663,7 @@ object LlmQueries {
         ("b/second.txt",
           s"stored member of doc $id".getBytes(java.nio.charset.StandardCharsets.UTF_8),
           id % 2 == 0)))
-      Zip.members(bytes).getOrElse(Nil).zipWithIndex.map { case (m, k) =>
+      Zip.decode(bytes).getOrElse(Nil).zipWithIndex.map { case (m, k) =>
         val methodName = if (m.method == 0) "stored" else "deflate"
         (id, k, m.name, m.size, methodName,
           new String(m.content, java.nio.charset.StandardCharsets.UTF_8))
@@ -3714,7 +3714,7 @@ object LlmQueries {
   }
 
   // ---------------------------------------------------------------- q167
-  // .tar.gz archive ingest (Gzip.decodeBytes ∘ Tar.members — the other
+  // .tar.gz archive ingest (Gzip.decode ∘ Tar.decode — the other
   // container crawl-scale data arrives in: dataset dumps, code
   // tarballs, and web-archive exports; the q146 warc chain's sibling).
   // The tar walk verifies ustar magic AND the header checksum, reads
@@ -3754,8 +3754,8 @@ object LlmQueries {
         z.write(Tar.build(entries)); z.close()
         bos.toByteArray
       }
-      val peeled = Gzip.decodeBytes(gz).getOrElse(Array.emptyByteArray)
-      Tar.members(peeled).getOrElse(Nil).zipWithIndex.map { case (m, k) =>
+      val peeled = Gzip.decode(gz).getOrElse(Array.emptyByteArray)
+      Tar.decode(peeled).getOrElse(Nil).zipWithIndex.map { case (m, k) =>
         (id, k, m.name, m.size, m.typeflag.toString, new String(m.content, utf8))
       }
     }.toDF("doc_id", "seq", "name", "size", "tf", "text")
@@ -3856,7 +3856,7 @@ object LlmQueries {
   }
 
   // ---------------------------------------------------------------- q170
-  // XLSX cell extraction (Xlsx.cells — the tabular member of the office
+  // XLSX cell extraction (Xlsx.decode — the tabular member of the office
   // tier next to q166's DOCX: spreadsheet values live behind the
   // SpreadsheetML shared-strings indirection, so string cells hold pool
   // INDEXES and a correct reader joins sharedStrings.xml with the sheet
@@ -3907,7 +3907,7 @@ object LlmQueries {
           ("D1", "inlineStr", s"<is><t>inline text $id</t></is>"),
           ("E1", "b", s"<v>${if (id % 2 == 0) 1 else 0}</v>"),
           ("F1", "str", s"<v>cached $id</v>")) ++ tail)
-      Xlsx.cells(bytes).getOrElse(Nil).zipWithIndex.map { case (c, k) =>
+      Xlsx.decode(bytes).getOrElse(Nil).zipWithIndex.map { case (c, k) =>
         (id, k, c.ref, c.kind, c.value)
       }
     }.toDF("doc_id", "seq", "ref", "kind", "value")
@@ -3915,7 +3915,7 @@ object LlmQueries {
   }
 
   // ---------------------------------------------------------------- q171
-  // PPTX text extraction (Pptx.slides — the slide-deck member of the
+  // PPTX text extraction (Pptx.decode — the slide-deck member of the
   // office tier, completing DOCX (q166) + XLSX (q170)). DrawingML uses
   // the same t/p/br local names WordprocessingML does, so each slide
   // rides the existing Zip.wordText walk; what q171 certifies on top is
@@ -3942,7 +3942,7 @@ object LlmQueries {
         Seq(Seq("Deck title ", s"$id"), Seq(s"Subtitle & intro $id")),
         Seq(Seq(s"Body point $id"))) ++
         (if (id % 2 == 0) Seq(Seq(Seq(s"Closing $id"))) else Nil)
-      Pptx.slides(Pptx.build(slides)).getOrElse(Nil)
+      Pptx.decode(Pptx.build(slides)).getOrElse(Nil)
         .map(sl => (id, sl.no, sl.nParas, sl.text))
     }.toDF("doc_id", "slide_no", "n_paras", "text")
       .orderBy("doc_id", "slide_no")
@@ -4258,7 +4258,7 @@ object LlmQueries {
           Seq(("sub/deep.xhtml", ch(s"Closing of book $id",
             s"The closing chapter text of book $id.")))
         else Nil)
-      Epub.chapters(Epub.build(chapters)).getOrElse(Nil)
+      Epub.decode(Epub.build(chapters)).getOrElse(Nil)
         .map(c => (id, c.pos, c.href, c.title, c.text))
     }.toDF("doc_id", "pos", "href", "title", "text")
       .orderBy("doc_id", "pos")
@@ -4369,7 +4369,7 @@ object LlmQueries {
         // bug that regrouped members would throw here, not OOM an
         // executor materializing an unbounded archive.
         val bytes = Tar.buildBounded(entries, maxBytes = 64L * 1024)
-        val reparsed = Tar.members(bytes).map(_.size).getOrElse(-1)
+        val reparsed = Tar.decode(bytes).map(_.size).getOrElse(-1)
         (shard, members.size.toLong, bytes.length.toLong, reparsed.toLong)
       }
       .toDF("shard_id", "n_members", "tar_len", "n_reparsed")
@@ -5411,11 +5411,11 @@ object LlmQueries {
           case _     => Tar.build(Seq((s"m$id.txt", s"member $id".getBytes("UTF-8"), '0')))
         }
       val ok = fmt match {
-        case "wav" => Wav.parse(bytes).isDefined
-        case "bmp" => Bmp.parse(bytes).isDefined
-        case "pdf" => Pdf.parse(bytes).isDefined
-        case "zip" => Zip.members(bytes).isDefined
-        case _     => Tar.members(bytes).isDefined
+        case "wav" => Wav.decode(bytes).isDefined
+        case "bmp" => Bmp.decode(bytes).isDefined
+        case "pdf" => Pdf.decode(bytes).isDefined
+        case "zip" => Zip.decode(bytes).isDefined
+        case _     => Tar.decode(bytes).isDefined
       }
       (fmt, ok)
     }.toDF("fmt", "ok")
@@ -7352,9 +7352,7 @@ object LlmQueries {
         }
         page
       }.toArray
-      val ps = Ogg.pages(bytes)
-      if (ps.isEmpty) Iterator.empty
-      else Iterator.single((id, ps.size.toLong,
+      Ogg.decode(bytes).filter(_.nonEmpty).iterator.map(ps => (id, ps.size.toLong,
         ps.map(_.packets.toLong).sum, ps.map(_.payloadBytes.toLong).sum,
         ps.map(_.granule).max))
     }.toDF("doc_id", "n_pages", "n_packets", "total_payload", "last_granule")
@@ -8184,7 +8182,7 @@ object LlmQueries {
       val bytes = Flac.build(blocks) ++
         Array.fill[Byte](19)(((id % 251) + 1).toByte) // fake audio frames
       if (id % 11 == 0) bytes(2) = 'X'.toByte // corrupt magic -> quarantine
-      Flac.metadata(bytes).iterator.map { m =>
+      Flac.decode(bytes).iterator.map { m =>
         (id, m.info.sampleRate.toLong, m.info.channels.toLong,
           m.info.bitsPerSample.toLong, m.info.totalSamples,
           m.nBlocks.toLong, m.comments.size.toLong,
@@ -8391,7 +8389,7 @@ object LlmQueries {
         case _ => Webp.buildVp8l((1 + id % 16383).toInt, (1 + id % 500).toInt)
       }
       val blob = if (id % 7 == 0) bytes.dropRight(3) else bytes
-      Webp.features(blob).iterator.map(f =>
+      Webp.decode(blob).iterator.map(f =>
         (id, f.format, f.width.toLong, f.height.toLong, f.hasAlpha,
           f.hasAnim))
     }.toDF("doc_id", "format", "width", "height", "has_alpha", "has_anim")

@@ -15,11 +15,13 @@ package graft.llm
   *
   * Scope: MPEG-1 Layer III only (the overwhelmingly common case);
   * anything else — MPEG-2/2.5, other layers, reserved indices, a
-  * mid-stream desync, a truncated final frame — quarantines as None,
-  * never throws. An ID3v2 tag prefix (syncsafe 28-bit size) is skipped,
+  * mid-stream desync, a truncated final frame — quarantines as None
+  * (the [[Codec]] contract). An ID3v2 tag prefix (syncsafe 28-bit size) is skipped,
   * as real files carry one.
   */
-object Mp3 {
+object Mp3 extends Codec {
+
+  type Out = Meta
 
   /** V1 Layer III bitrate table, kbps, index 1..14 (0 = free-format and
     * 15 = bad are rejected). */
@@ -83,7 +85,7 @@ object Mp3 {
   }
 
   /** Walk the frame chain; None for anything malformed. */
-  def parse(bytes: Array[Byte]): Option[Meta] = {
+  def decode(bytes: Array[Byte]): Option[Meta] = {
     if (bytes == null || bytes.length < 4) return None
     var pos = 0
     // ID3v2: "ID3", version(2), flags(1), syncsafe size(4), then payload

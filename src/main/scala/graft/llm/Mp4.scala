@@ -14,11 +14,12 @@ import java.nio.{ByteBuffer, ByteOrder}
   * (the brand check that makes this an MP4 parser, not a generic box
   * walker), then `moov`'s children for one `mvhd` (version 0 and 1
   * layouts both handled — v1 carries 64-bit times) and the `trak`
-  * count. Same quarantine contract as every codec here: wrong brand,
-  * truncated or crafted sizes, missing/duplicated mvhd, reserved
-  * versions → None, never a throw.
+  * count. A [[Codec]]: wrong brand, truncated or crafted sizes,
+  * missing/duplicated mvhd, reserved versions → None.
   */
-object Mp4 {
+object Mp4 extends Codec {
+
+  type Out = Meta
 
   final case class Meta(
       timescale: Long,
@@ -91,7 +92,7 @@ object Mp4 {
   }
 
   /** Walk `bytes`; None for anything malformed. */
-  def parse(bytes: Array[Byte]): Option[Meta] = {
+  def decode(bytes: Array[Byte]): Option[Meta] = {
     if (bytes == null || bytes.length < 16) return None
     // (start, end) of each box payload at one level, with crafted-size guards
     def children(from: Long, to: Long): Option[Seq[(Int, Long, Long)]] = {

@@ -1,12 +1,19 @@
 package graft.llm
 
-import javax.imageio.ImageIO
+import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (B35): opaque binary payloads + typed metadata
   * co-resident with relational columns, decoded partition-batched.
+  *
+  * Every REAL decoder below is a [[Codec]] behind the one wrapper
+  * [[perBlob]]: `None` from the codec (malformed, truncated, or over
+  * [[Codec.MaxDecodedBytes]]) becomes the wrapper's quarantine — a
+  * `valid = false` row for the per-blob feature wrappers, no rows for the
+  * 0..n fan-out wrappers ([[audioFrames]], [[resizeImage]],
+  * [[videoFrames]]).
   *
   * Decode comes in tiers. REAL decoders with EXACT oracles: [[decodeWav]]
   * (RIFF/WAVE PCM-16 — self-describing byte arithmetic, [[Wav]]),
@@ -24,11 +31,18 @@ import org.apache.spark.sql.functions._
   * environment); everything around them — the typed schema, the
   * `Dataset[Blob]` encoder, partition-wise batch iteration, and the
   * output feature schema — is the real shape a production decode (JNI
-  * codec, ONNX feature extractor) drops into. `mapPartitions` is
-  * deliberate: a real decoder amortizes model/codec init once per
-  * partition, not per row.
+  * codec, ONNX feature extractor) drops into.
   */
 object Multimodal {
+
+  /** The one Dataset wrapper over a [[Codec]]: one `mapPartitions` that
+    * decodes each payload and hands (doc_id, result) to the caller's row
+    * function, which turns `None` into its quarantine convention (an
+    * invalid row, or no rows). `mapPartitions` is deliberate: a real
+    * decoder amortizes codec/model init once per partition, not per row. */
+  def perBlob[T, R <: Product : TypeTag](blobs: Dataset[Blob], decode: Array[Byte] => Option[T])(
+      rows: (Long, Option[T]) => IterableOnce[R]): Dataset[R] =
+    blobs.mapPartitions(_.flatMap(b => rows(b.doc_id, decode(b.payload))))(Encoders.product[R])
 
   /** A document rendered as an opaque binary payload. */
   final case class Blob(doc_id: Long, payload: Array[Byte])
@@ -130,36 +144,28 @@ object Multimodal {
       peak: Int,
       rms: Double)
 
-  def decodeWav(blobs: Dataset[Blob]): Dataset[WavFeatures] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Wav.parse(b.payload) match {
-          case Some(pcm) =>
-            val n = pcm.samples.length.toLong
-            var sumSq = 0L
-            var peak = 0
-            pcm.samples.foreach { s =>
-              sumSq += s.toLong * s.toLong
-              val a = math.abs(s.toInt)
-              if (a > peak) peak = a
-            }
-            // frames = interleaved sample groups; duration counts frames
-            val frames = n / pcm.channels
-            WavFeatures(b.doc_id, valid = true, pcm.sampleRate, pcm.channels,
-              n, frames * 1000000L / pcm.sampleRate, peak,
-              if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble))
-          case None =>
-            WavFeatures(b.doc_id, valid = false, 0, 0, 0L, 0L, 0, 0.0)
+  def decodeWav(blobs: Dataset[Blob]): Dataset[WavFeatures] =
+    perBlob(blobs, Wav.decode) { (id, r) =>
+      Iterator.single(r.fold(WavFeatures(id, valid = false, 0, 0, 0L, 0L, 0, 0.0)) { pcm =>
+        val n = pcm.samples.length.toLong
+        var sumSq = 0L
+        var peak = 0
+        pcm.samples.foreach { s =>
+          sumSq += s.toLong * s.toLong
+          val a = math.abs(s.toInt)
+          if (a > peak) peak = a
         }
-      }
+        // frames = interleaved sample groups; duration counts frames
+        val frames = n / pcm.channels
+        WavFeatures(id, valid = true, pcm.sampleRate, pcm.channels,
+          n, frames * 1000000L / pcm.sampleRate, peak,
+          if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n.toDouble))
+      })
     }
-  }
 
   /** REAL image decode features, shared by the [[Bmp]] (q124) and [[Png]]
-    * (q127) decoders — same contract as [[decodeWav]]: malformed payloads
-    * quarantine as `valid = false`, channel sums are exact integers and
+    * (q127) decoders — same convention as [[decodeWav]]: quarantined
+    * payloads come back `valid = false`, channel sums are exact integers and
     * each mean is one exact-int division, so the row is value-comparable
     * across engines (the q124/q127 oracles re-derive the features
     * arithmetically, without any image parser on their side). */
@@ -192,43 +198,22 @@ object Multimodal {
     ImageFeatures(docId, valid = true, width, height, n, sr, sg, sb, luma)
   }
 
-  private def invalidImage(docId: Long): ImageFeatures =
-    ImageFeatures(docId, valid = false, 0, 0, 0L, 0L, 0L, 0L, 0.0)
+  /** One feature row per image blob; undecodable ones quarantine as
+    * `valid = false`. */
+  private def imageRow(docId: Long, img: Option[RgbImage]): Iterator[ImageFeatures] =
+    Iterator.single(img.fold(ImageFeatures(docId, valid = false, 0, 0, 0L, 0L, 0L, 0L, 0.0))(
+      i => rgbFeatures(docId, i.width, i.height, i.pixels)))
 
-  def decodeBmp(blobs: Dataset[Blob]): Dataset[ImageFeatures] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Bmp.parse(b.payload) match {
-          case Some(img) => rgbFeatures(b.doc_id, img.width, img.height, img.pixels)
-          case None => invalidImage(b.doc_id)
-        }
-      }
-    }
-  }
+  def decodeBmp(blobs: Dataset[Blob]): Dataset[ImageFeatures] =
+    perBlob(blobs, Bmp.decode(_).map(i => RgbImage(i.width, i.height, i.pixels)))(imageRow)
 
   /** REAL compressed-image decode: per-blob PNG features via the JDK
     * ImageIO-backed [[Png]] codec — PNG is lossless, so the decoded 8-bit
     * RGB pixels equal the encoded ones exactly and the q127 oracle's
     * arithmetic derivation certifies the whole deflate round-trip. Same
     * quarantine contract as [[decodeBmp]]. */
-  def decodePng(blobs: Dataset[Blob]): Dataset[ImageFeatures] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      // per-partition codec init: keep ImageIO's stream cache in memory —
-      // the default spills every ImageInputStream to a /tmp cache file,
-      // a per-row disk write a 100 TB scan cannot afford
-      ImageIO.setUseCache(false)
-      it.map { b =>
-        Png.parse(b.payload) match {
-          case Some(img) => rgbFeatures(b.doc_id, img.width, img.height, img.pixels)
-          case None => invalidImage(b.doc_id)
-        }
-      }
-    }
-  }
+  def decodePng(blobs: Dataset[Blob]): Dataset[ImageFeatures] =
+    perBlob(blobs, Png.decode)(imageRow)
 
   /** One analysis window of decoded audio — REAL audio framing over
     * [[Wav]]-decoded PCM (the production shape of every spectral/VAD
@@ -249,33 +234,29 @@ object Multimodal {
     * use [[decodeWav]]'s valid flag to audit them). */
   def audioFrames(
       blobs: Dataset[Blob], frameSamples: Int, hopSamples: Int): Dataset[AudioFrame] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
     require(frameSamples > 0 && hopSamples > 0)
-    blobs.mapPartitions { it =>
-      it.flatMap { b =>
-        Wav.parse(b.payload).filter(_.channels == 1).iterator.flatMap { pcm =>
-          val s = pcm.samples
-          val nFrames =
-            if (s.length < frameSamples) 0
-            else (s.length - frameSamples) / hopSamples + 1
-          Iterator.range(0, nFrames).map { f =>
-            val from = f * hopSamples
-            var sumSq = 0L
-            var peak = 0
-            var zc = 0
-            var j = from
-            while (j < from + frameSamples) {
-              val v = s(j).toInt
-              sumSq += v.toLong * v
-              val a = math.abs(v)
-              if (a > peak) peak = a
-              if (j > from && (s(j - 1) < 0) != (v < 0) && v != 0 && s(j - 1) != 0) zc += 1
-              j += 1
-            }
-            AudioFrame(b.doc_id, f, frameSamples, peak, zc,
-              math.sqrt(sumSq.toDouble / frameSamples))
+    perBlob(blobs, Wav.decode) { (id, r) =>
+      r.filter(_.channels == 1).iterator.flatMap { pcm =>
+        val s = pcm.samples
+        val nFrames =
+          if (s.length < frameSamples) 0
+          else (s.length - frameSamples) / hopSamples + 1
+        Iterator.range(0, nFrames).map { f =>
+          val from = f * hopSamples
+          var sumSq = 0L
+          var peak = 0
+          var zc = 0
+          var j = from
+          while (j < from + frameSamples) {
+            val v = s(j).toInt
+            sumSq += v.toLong * v
+            val a = math.abs(v)
+            if (a > peak) peak = a
+            if (j > from && (s(j - 1) < 0) != (v < 0) && v != 0 && s(j - 1) != 0) zc += 1
+            j += 1
           }
+          AudioFrame(id, f, frameSamples, peak, zc,
+            math.sqrt(sumSq.toDouble / frameSamples))
         }
       }
     }
@@ -293,35 +274,30 @@ object Multimodal {
     * contribute zero rows. Requires source dims ≥ target dims (pooling,
     * not interpolation — upscaling needs a resampling kernel). */
   def resizeImage(blobs: Dataset[Blob], outW: Int, outH: Int): Dataset[PooledCell] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
     require(outW > 0 && outH > 0)
-    blobs.mapPartitions { it =>
-      it.flatMap { b =>
-        Bmp.parse(b.payload)
-          .filter(img => img.width >= outW && img.height >= outH)
-          .iterator.flatMap { img =>
-            val sums = Array.ofDim[Long](outW * outH, 4) // r, g, b, count
-            var i = 0
-            while (i < img.pixels.length) {
-              val x = i % img.width
-              val y = i / img.width
-              val cell = (y.toLong * outH / img.height).toInt * outW +
-                (x.toLong * outW / img.width).toInt
-              val p = img.pixels(i)
-              val s = sums(cell)
-              s(0) += (p >> 16) & 0xff; s(1) += (p >> 8) & 0xff
-              s(2) += p & 0xff; s(3) += 1
-              i += 1
-            }
-            Iterator.range(0, outW * outH).map { c =>
-              val s = sums(c)
-              val n = s(3)
-              PooledCell(b.doc_id, c % outW, c / outW, n,
-                s(0).toDouble / n, s(1).toDouble / n, s(2).toDouble / n)
-            }
+    perBlob(blobs, Bmp.decode) { (id, r) =>
+      r.filter(img => img.width >= outW && img.height >= outH)
+        .iterator.flatMap { img =>
+          val sums = Array.ofDim[Long](outW * outH, 4) // r, g, b, count
+          var i = 0
+          while (i < img.pixels.length) {
+            val x = i % img.width
+            val y = i / img.width
+            val cell = (y.toLong * outH / img.height).toInt * outW +
+              (x.toLong * outW / img.width).toInt
+            val p = img.pixels(i)
+            val s = sums(cell)
+            s(0) += (p >> 16) & 0xff; s(1) += (p >> 8) & 0xff
+            s(2) += p & 0xff; s(3) += 1
+            i += 1
           }
-      }
+          Iterator.range(0, outW * outH).map { c =>
+            val s = sums(c)
+            val n = s(3)
+            PooledCell(id, c % outW, c / outW, n,
+              s(0).toDouble / n, s(1).toDouble / n, s(2).toDouble / n)
+          }
+        }
     }
   }
 
@@ -329,37 +305,15 @@ object Multimodal {
     * backed [[Gif]] codec — palette + LZW are both lossless, so the q128
     * oracle's arithmetic derivation certifies the full round-trip. Same
     * quarantine contract as the other image decoders. */
-  def decodeGif(blobs: Dataset[Blob]): Dataset[ImageFeatures] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      ImageIO.setUseCache(false) // see decodePng
-      it.map { b =>
-        Gif.parse(b.payload) match {
-          case Some(img) => rgbFeatures(b.doc_id, img.width, img.height, img.pixels)
-          case None => invalidImage(b.doc_id)
-        }
-      }
-    }
-  }
+  def decodeGif(blobs: Dataset[Blob]): Dataset[ImageFeatures] =
+    perBlob(blobs, Gif.decode)(imageRow)
 
   /** REAL lossy-image decode: per-blob JPEG features via [[Jpeg]]. The
     * features are exact functions of the DECODED pixels, but those pixels
     * are a codec-defined approximation of whatever was encoded, so q129
     * registers rows-only; JpegSpec bounds the round-trip error. */
-  def decodeJpeg(blobs: Dataset[Blob]): Dataset[ImageFeatures] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      ImageIO.setUseCache(false) // see decodePng
-      it.map { b =>
-        Jpeg.parse(b.payload) match {
-          case Some(img) => rgbFeatures(b.doc_id, img.width, img.height, img.pixels)
-          case None => invalidImage(b.doc_id)
-        }
-      }
-    }
-  }
+  def decodeJpeg(blobs: Dataset[Blob]): Dataset[ImageFeatures] =
+    perBlob(blobs, Jpeg.decode)(imageRow)
 
   /** REAL MP3 container metadata: frame-header walk ([[Mp3]] — public
     * bit arithmetic, no codec) yielding the duration/rate/size fields a
@@ -375,20 +329,11 @@ object Multimodal {
       audio_bytes: Long,
       duration_us: Long)
 
-  def decodeMp3Meta(blobs: Dataset[Blob]): Dataset[Mp3Meta] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Mp3.parse(b.payload) match {
-          case Some(m) =>
-            Mp3Meta(b.doc_id, valid = true, m.nFrames, m.sampleRate,
-              m.audioBytes, m.durationUs)
-          case None => Mp3Meta(b.doc_id, valid = false, 0, 0, 0L, 0L)
-        }
-      }
+  def decodeMp3Meta(blobs: Dataset[Blob]): Dataset[Mp3Meta] =
+    perBlob(blobs, Mp3.decode) { (id, r) =>
+      Iterator.single(r.fold(Mp3Meta(id, valid = false, 0, 0, 0L, 0L))(m =>
+        Mp3Meta(id, valid = true, m.nFrames, m.sampleRate, m.audioBytes, m.durationUs)))
     }
-  }
 
   /** REAL MP4 container metadata ([[Mp4]] box walk — the video twin of
     * [[decodeMp3Meta]]): timescale/duration/track count from the
@@ -402,20 +347,11 @@ object Multimodal {
       duration_us: Long,
       n_tracks: Int)
 
-  def decodeMp4Meta(blobs: Dataset[Blob]): Dataset[Mp4Meta] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Mp4.parse(b.payload) match {
-          case Some(m) =>
-            Mp4Meta(b.doc_id, valid = true, m.timescale, m.duration,
-              m.durationUs, m.nTracks)
-          case None => Mp4Meta(b.doc_id, valid = false, 0L, 0L, 0L, 0)
-        }
-      }
+  def decodeMp4Meta(blobs: Dataset[Blob]): Dataset[Mp4Meta] =
+    perBlob(blobs, Mp4.decode) { (id, r) =>
+      Iterator.single(r.fold(Mp4Meta(id, valid = false, 0L, 0L, 0L, 0))(m =>
+        Mp4Meta(id, valid = true, m.timescale, m.duration, m.durationUs, m.nTracks)))
     }
-  }
 
   /** REAL video-container metadata ([[Avi]] header walk): dims, frame
     * timing, frame/stream counts from avih + the validated 'vids' strl —
@@ -432,20 +368,12 @@ object Multimodal {
       n_streams: Int,
       duration_us: Long)
 
-  def decodeAviMeta(blobs: Dataset[Blob]): Dataset[AviMeta] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        Avi.parseMeta(b.payload) match {
-          case Some(m) =>
-            AviMeta(b.doc_id, valid = true, m.width, m.height, m.usPerFrame,
-              m.nFrames, m.nStreams, m.usPerFrame * m.nFrames)
-          case None => AviMeta(b.doc_id, valid = false, 0, 0, 0L, 0, 0, 0L)
-        }
-      }
+  def decodeAviMeta(blobs: Dataset[Blob]): Dataset[AviMeta] =
+    perBlob(blobs, Avi.decode) { (id, r) =>
+      Iterator.single(r.fold(AviMeta(id, valid = false, 0, 0, 0L, 0, 0, 0L))(m =>
+        AviMeta(id, valid = true, m.width, m.height, m.usPerFrame,
+          m.nFrames, m.nStreams, m.usPerFrame * m.nFrames)))
     }
-  }
 
   /** One REAL sampled video frame: [[Avi.sampleFrames]] walks the movi
     * chunk list, SEEKS over non-sampled frames (position arithmetic, no
@@ -468,25 +396,13 @@ object Multimodal {
       mean_luma: Double)
 
   def videoFrames(blobs: Dataset[Blob], stride: Int): Dataset[VideoFrame] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
     require(stride > 0)
-    blobs.mapPartitions { it =>
-      it.flatMap { b =>
-        Avi.sampleFrames(b.payload, stride).iterator.flatMap { case (meta, frames) =>
-          frames.iterator.map { case (idx, img) =>
-            var (sr, sg, sb) = (0L, 0L, 0L)
-            img.pixels.foreach { p =>
-              sr += (p >> 16) & 0xff
-              sg += (p >> 8) & 0xff
-              sb += p & 0xff
-            }
-            val n = img.pixels.length.toLong
-            val luma = if (n == 0) 0.0
-              else (299L * sr + 587L * sg + 114L * sb).toDouble / (1000.0 * n)
-            VideoFrame(b.doc_id, idx, idx.toLong * meta.usPerFrame,
-              img.width, img.height, sr, sg, sb, luma)
-          }
+    perBlob(blobs, Avi.sampleFrames(_, stride)) { (id, r) =>
+      r.iterator.flatMap { case (meta, frames) =>
+        frames.iterator.map { case (idx, img) =>
+          val f = rgbFeatures(id, img.width, img.height, img.pixels)
+          VideoFrame(id, idx, idx.toLong * meta.usPerFrame,
+            f.width, f.height, f.sum_r, f.sum_g, f.sum_b, f.mean_luma)
         }
       }
     }

@@ -12,19 +12,21 @@ package graft.llm
   * exactly the detail a generic-CRC reuse gets wrong.
   *
   * CRC is VERIFIED page-by-page (the Zip lesson: an unchecked
-  * checksum is a lie in the schema); a bad-CRC page quarantines that
-  * PAGE (stream damage is per-page by design — that is OGG's whole
-  * resync story), while a malformed capture pattern stops the walk:
-  * beyond it nothing can be framed.
-  *
-  * STRICT bounds: version ≠ 0, truncated header/lacing/payload, or
-  * CRC mismatch quarantine the page. Continuation flags are
-  * SURFACED, not resolved — packet reassembly across pages is the
-  * codec layer's job; the container walk reports completed-packet
-  * counts per the lacing table.
+  * checksum is a lie in the schema); a bad-CRC or version ≠ 0 page
+  * quarantines that PAGE (stream damage is per-page by design — that
+  * is OGG's whole resync story) and the walk goes on. A [[Codec]]: the
+  * blob is None when it does not frame as pages end to end — empty, no
+  * capture pattern where a page must start, or a truncated header,
+  * lacing table or payload — so `Some(Seq.empty)` means "pages framed,
+  * none intact", never "malformed". Continuation flags are SURFACED,
+  * not resolved — packet reassembly across pages is the codec layer's
+  * job; the container walk reports completed-packet counts per the
+  * lacing table.
   *
   * Row-local — one blob in, page rows out; no shuffle. */
-object Ogg extends Serializable {
+object Ogg extends Codec {
+
+  type Out = Seq[Page]
 
   /** One page: stream serial, sequence, granule position, flags,
     * completed packets (lacing values < 255), payload bytes. */
@@ -62,17 +64,18 @@ object Ogg extends Serializable {
     r
   }
 
-  def pages(data: Array[Byte]): Seq[Page] = {
-    if (data == null) return Seq.empty
+  def decode(data: Array[Byte]): Option[Seq[Page]] = {
+    if (data == null || data.isEmpty) return None
     val out = Seq.newBuilder[Page]
     var i = 0
     def u32(o: Int): Long =
       (data(o) & 0xffL) | ((data(o + 1) & 0xffL) << 8) |
         ((data(o + 2) & 0xffL) << 16) | ((data(o + 3) & 0xffL) << 24)
     def u64(o: Int): Long = u32(o) | (u32(o + 4) << 32)
-    while (i + 27 <= data.length) {
+    while (i < data.length) {
+      if (i + 27 > data.length) return None // truncated header
       if (data(i) != 'O' || data(i + 1) != 'g' || data(i + 2) != 'g' ||
-        data(i + 3) != 'S') return out.result() // lost sync: stop the walk
+        data(i + 3) != 'S') return None // lost sync
       val version = data(i + 4) & 0xff
       val flags = data(i + 5) & 0xff
       val granule = u64(i + 6)
@@ -80,7 +83,7 @@ object Ogg extends Serializable {
       val seq = u32(i + 18)
       val storedCrc = u32(i + 22).toInt
       val nSegs = data(i + 26) & 0xff
-      if (i + 27 + nSegs > data.length) return out.result() // truncated lacing
+      if (i + 27 + nSegs > data.length) return None // truncated lacing
       var payload = 0
       var packets = 0
       var s = 0
@@ -91,7 +94,7 @@ object Ogg extends Serializable {
         s += 1
       }
       val total = 27 + nSegs + payload
-      if (i + total > data.length) return out.result() // truncated payload
+      if (i + total > data.length) return None // truncated payload
       val ok = version == 0 && crc(data, i, total, zeroAt = 22) == storedCrc
       if (ok) out += Page(serial, seq, granule,
         bos = (flags & 2) != 0, eos = (flags & 4) != 0,
@@ -99,7 +102,7 @@ object Ogg extends Serializable {
         payloadBytes = payload)
       i += total // a bad page quarantines; the walk resumes at the next
     }
-    out.result()
+    Some(out.result())
   }
 
   /** Build one page (fixture/spec side): payload split per `lacing`. */

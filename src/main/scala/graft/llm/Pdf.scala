@@ -2,7 +2,7 @@ package graft.llm
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.util.zip.{Deflater, Inflater}
+import java.util.zip.Deflater
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,9 +22,12 @@ import scala.collection.mutable.ArrayBuffer
   *     indirect reference)
   *   - `/FlateDecode` streams inflate through `java.util.zip.Inflater`
   *     (zlib DECODE is bijective on valid input — deterministic even
-  *     though encoder output bytes are not), with an output-size cap;
-  *     other filters are skipped as non-text; corrupt deflate data
-  *     skips the stream (quarantine, not throw)
+  *     though encoder output bytes are not); other filters are skipped
+  *     as non-text; corrupt deflate data skips the stream
+  *   - a [[Codec]]: inflated bytes count against
+  *     [[Codec.MaxDecodedBytes]] across ALL streams of the file — a
+  *     per-stream cap lets a small file of many bombs through — and a
+  *     file past it quarantines whole (None)
   *   - text operators inside `BT…ET` only: `(literal)` strings with
   *     the full escape set (`\( \) \\ \n \r \t \ooo`, line
   *     continuation) and balanced NESTED parens, `<hex>` strings
@@ -36,20 +39,21 @@ import scala.collection.mutable.ArrayBuffer
   * [[build]] is the deterministic fixture writer: a structurally
   * complete single-xref PDF (catalog → pages → page → contents).
   */
-object Pdf {
+object Pdf extends Codec {
+
+  type Out = Extracted
 
   final case class Extracted(nPages: Int, nFlate: Int, text: String)
 
-  private val MaxInflated = 1 << 24
-
   // ---------------------------------------------------------------- parse
 
-  def parse(bytes: Array[Byte]): Option[Extracted] = {
+  def decode(bytes: Array[Byte]): Option[Extracted] = {
     if (bytes == null || bytes.length < 8) return None
     val s = new String(bytes, ISO_8859_1)
     if (!s.startsWith("%PDF-")) return None
     var nPages = 0
     var nFlate = 0
+    var left = Codec.MaxDecodedBytes.toLong // inflate budget for the whole file
     val text = new StringBuilder
 
     // ---- page count: /Type /Page but not /Pages
@@ -99,8 +103,12 @@ object Pdf {
           val hasFilter = dict.contains("/Filter")
           val isFlate = dict.contains("/FlateDecode")
           val payload: Option[Array[Byte]] =
-            if (isFlate) inflate(raw).map { b => nFlate += 1; b }
-            else if (hasFilter) None // unsupported filter: not our text
+            if (isFlate) {
+              val inflated = Codec.inflate(raw, nowrap = false, left)
+              left -= inflated.fold(0)(_.length)
+              if (left < 0) return None
+              inflated.map { b => nFlate += 1; b }
+            } else if (hasFilter) None // unsupported filter: not our text
             else Some(raw)
           payload.foreach { content =>
             appendContentText(new String(content, ISO_8859_1), text)
@@ -110,24 +118,6 @@ object Pdf {
       } else i = s.indexOf("stream", i + 6)
     }
     Some(Extracted(nPages, nFlate, text.toString))
-  }
-
-  private def inflate(raw: Array[Byte]): Option[Array[Byte]] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(raw)
-      val out = new ByteArrayOutputStream(math.min(raw.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished() && !inf.needsInput() && out.size() <= MaxInflated) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished() && inf.needsDictionary()) return None
-        out.write(buf, 0, n)
-      }
-      if (!inf.finished() || out.size() > MaxInflated) None
-      else Some(out.toByteArray)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
   }
 
   /** Tokenize one content stream; append shown text to `out`. */

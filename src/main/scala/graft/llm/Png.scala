@@ -10,30 +10,20 @@ import java.awt.image.BufferedImage
   * remain the documented stub in [[Multimodal.decode]] — lossy decode
   * genuinely needs a native codec to reproduce reference output.
   *
-  * Same quarantine contract as [[Wav]]/[[Bmp]]: [[parse]] returns None for
-  * anything malformed — wrong magic, truncated stream, CRC corruption,
-  * crafted dimensions — a data pipeline routes those rows to quarantine,
-  * it never throws mid-scan. Two guards beyond what ImageIO gives us:
-  * the PNG signature is checked BEFORE handing bytes to ImageIO (the
-  * reader registry would happily decode GIF/JPEG bytes too, and a decoder
-  * named `Png` accepting a GIF is a contract violation, not robustness),
-  * and declared dimensions are bounds-checked from the header BEFORE the
-  * pixel decode allocates (`maxPixels`) — a 4-byte-patched IHDR must not
-  * OOM an executor.
+  * A [[Codec]] through [[ImageIoCodec]]: the PNG signature (RFC 2083
+  * §3.1) is checked BEFORE the bytes reach ImageIO, and a 4-byte-patched
+  * IHDR past [[Codec.MaxPixels]] quarantines before the raster
+  * allocates. Alpha (if the file carries it) is dropped — the RGB
+  * channels pass through unchanged for 8-bit-depth images, which is what
+  * the feature math consumes; 16-bit-depth PNGs decode via ImageIO's own
+  * 8-bit conversion (the q127 oracle only ever meets 8-bit fixtures).
   */
-object Png {
-
-  /** The 8-byte PNG signature (RFC 2083 §3.1). */
-  private val Magic =
-    Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')
-
-  /** Default decoded-size cap: 2^24 pixels ≈ 64 MB of ARGB — far above any
-    * fixture, far below what a crafted header could demand. */
-  val DefaultMaxPixels: Long = 1L << 24
+object Png extends ImageIoCodec(
+  Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n')) {
 
   /** Encode top-down row-major 0xRRGGBB pixels as a PNG (TYPE_INT_RGB →
     * 8-bit/channel truecolor). A real encoder: output decodes under any
-    * spec-compliant reader, and — PNG being lossless — [[parse]] returns
+    * spec-compliant reader, and — PNG being lossless — [[decode]] returns
     * the exact input pixels (property-tested round-trip in PngSpec). */
   def encodeRgb(width: Int, height: Int, pixels: Array[Int]): Array[Byte] = {
     require(width > 0 && height > 0, s"bad dims: ${width}x$height")
@@ -42,19 +32,5 @@ object Png {
     val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
     img.setRGB(0, 0, width, height, pixels, 0, width)
     ImageIoCodec.encode(img, "png")
-  }
-
-  /** Parse PNG bytes to 8-bit RGB; None for anything malformed (wrong
-    * magic, truncated stream, CRC/deflate corruption, crafted dimensions
-    * past `maxPixels` — bounds-checked from the IHDR before the raster
-    * allocates). Alpha (if the file carries it) is dropped — the RGB
-    * channels pass through unchanged for 8-bit-depth images, which is
-    * what the feature math consumes. 16-bit-depth PNGs decode via
-    * ImageIO's own 8-bit conversion; the q127 oracle only ever meets
-    * 8-bit fixtures. */
-  def parse(bytes: Array[Byte], maxPixels: Long = DefaultMaxPixels): Option[RgbImage] = {
-    if (!ImageIoCodec.hasMagic(bytes, Magic)) return None
-    ImageIoCodec.decodeRgb(bytes, maxPixels)
-      .map { case (w, h, px) => RgbImage(w, h, px) }
   }
 }

@@ -15,13 +15,14 @@ package graft.llm
   * Gray decodes with the value replicated to r=g=b, so downstream
   * channel arithmetic is format-blind.
   *
-  * STRICT bounds (Rle8/Qoi discipline): dims guarded against the
-  * pixel cap BEFORE allocation, any sample > maxval, short data,
+  * STRICT bounds (Rle8/Qoi discipline): dims guarded against
+  * [[Codec.MaxPixels]] BEFORE allocation, an ASCII body too short for
+  * its sample count rejected before the sample buffer exists, any sample > maxval, short data,
   * non-numeric ASCII token, or trailing non-whitespace bytes
-  * quarantine the image (None, never throw). */
-object Pnm extends Serializable {
+  * quarantine the image (None, the [[Codec]] contract). */
+object Pnm extends Codec {
 
-  val MaxPixels: Long = 64L << 20
+  type Out = Image
 
   /** Row-major packed 0xRRGGBB. */
   final case class Image(kind: String, w: Int, h: Int, maxval: Int,
@@ -62,7 +63,7 @@ object Pnm extends Serializable {
       w <- headerInt()
       h <- headerInt()
       maxval <- headerInt()
-      if w > 0 && h > 0 && w.toLong * h <= MaxPixels
+      if w > 0 && h > 0 && w.toLong * h <= Codec.MaxPixels
       if maxval >= 1 && maxval <= 255
       px <- {
         val count = w * h * (if (rgb) 3 else 1)
@@ -105,6 +106,7 @@ object Pnm extends Serializable {
     var i = pos
     val n = data.length
     def isWs(c: Byte) = c == ' ' || c == '\t' || c == '\n' || c == '\r'
+    if (2L * count - 1 > n - i) return None // each sample: a digit + a separator
     val out = new Array[Int](count)
     var p = 0
     while (p < count) {

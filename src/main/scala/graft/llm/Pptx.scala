@@ -3,7 +3,7 @@ package graft.llm
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** PPTX text extraction — the slide-deck member of the office tier next
-  * to DOCX ([[Zip.docxText]]) and XLSX ([[Xlsx.cells]]): presentations
+  * to DOCX ([[Zip.docxText]]) and XLSX ([[Xlsx.decode]]): presentations
   * are a real share of any crawled document corpus, and their text lives
   * in `ppt/slides/slideN.xml` parts inside the ZIP container.
   *
@@ -17,20 +17,22 @@ import java.nio.charset.StandardCharsets.UTF_8
   *   - slide parts are matched by exact name `ppt/slides/slide<N>.xml`
   *     and ordered by N NUMERICALLY (slide10 comes after slide9, not
   *     after slide1 — the lexicographic trap)
-  *   - quarantine contract: not a readable archive, or an archive with
+  *   - [[Codec]] quarantine: not a readable archive, or an archive with
   *     no slide parts → None (not a PPTX); a single unreadable slide
-  *     (e.g. CRC-quarantined by [[Zip.members]]) yields that slide with
+  *     (e.g. CRC-quarantined by [[Zip.decode]]) yields that slide with
   *     empty text, not a poisoned deck
   */
-object Pptx {
+object Pptx extends Codec {
+
+  type Out = Seq[Slide]
 
   final case class Slide(no: Int, nParas: Int, text: String)
 
   private val SlideName = """ppt/slides/slide([0-9]+)\.xml""".r
 
   /** Per-slide text in numeric slide order. */
-  def slides(bytes: Array[Byte]): Option[Seq[Slide]] =
-    Zip.members(bytes).flatMap { ms =>
+  def decode(bytes: Array[Byte]): Option[Seq[Slide]] =
+    Zip.decode(bytes).flatMap { ms =>
       val found = ms.flatMap { m =>
         m.name match {
           case SlideName(n) => Some((n.toInt, m))
@@ -46,7 +48,7 @@ object Pptx {
 
   /** Whole-deck text: slides joined by '\n' in slide order. */
   def deckText(bytes: Array[Byte]): Option[String] =
-    slides(bytes).map(_.map(_.text).filter(_.nonEmpty).mkString("\n"))
+    decode(bytes).map(_.map(_.text).filter(_.nonEmpty).mkString("\n"))
 
   // ---------------------------------------------------------------- build
 

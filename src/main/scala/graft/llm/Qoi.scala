@@ -23,15 +23,14 @@ package graft.llm
   * (0,0,0,255) and a zeroed index; ends with 7×0x00 then 0x01.
   *
   * STRICT bounds (the Zip-CRC/Rle8 discipline): bad magic, zero or
-  * overflowing dims (w·h > [[MaxPixels]] — dims come from an
+  * overflowing dims (w·h > [[Codec.MaxPixels]] — dims come from an
   * untrusted header and the buffer must be guarded BEFORE it exists),
   * bad channels/colorspace, a truncated chunk, a run overshooting
   * w·h, or a missing/misplaced end marker each quarantine the whole
-  * image (None, never throw, never a half-decoded grid). */
-object Qoi extends Serializable {
+  * image (None, the [[Codec]] contract — never a half-decoded grid). */
+object Qoi extends Codec {
 
-  /** Pixel-count cap, the Rle8 precedent (64 Mpx). */
-  val MaxPixels: Long = 64L << 20
+  type Out = Image
 
   /** Decoded image: row-major packed 0xAARRGGBB ints. */
   final case class Image(w: Int, h: Int, px: Array[Int])
@@ -50,8 +49,8 @@ object Qoi extends Serializable {
     // reject each dimension BEFORE multiplying: w=h=0xFFFFFFFF makes
     // w*h overflow Long (wraps negative, then (w*h).toInt truncates to 1),
     // silently bypassing the pixel cap; per-dim bounds make the product safe
-    if (w <= 0 || h <= 0 || w > MaxPixels || h > MaxPixels ||
-      w * h > MaxPixels) return None
+    if (w <= 0 || h <= 0 || w > Codec.MaxPixels || h > Codec.MaxPixels ||
+      w * h > Codec.MaxPixels) return None
     if ((channels != 3 && channels != 4) || colorspace > 1) return None
     val n = (w * h).toInt
     val px = new Array[Int](n)

@@ -23,17 +23,15 @@ package graft.llm
   * hashes downstream, the [[Zip]] CRC lesson. */
 object Rle8 extends Serializable {
 
-  /** Pixel-count cap (64 Mpx): dims come from an untrusted header, so
-    * w*h must be overflow- and allocation-guarded BEFORE the buffer
-    * exists — a crafted 70000×70000 header otherwise overflows Int
-    * (NegativeArraySizeException) or allocates gigabytes, breaking the
-    * never-throw quarantine contract. */
-  val MaxPixels: Long = 64L << 20
-
-  /** Decode to top-down indexed pixels (length w*h), or None. */
+  /** Decode to top-down indexed pixels (length w*h), or None. Dims come
+    * from an untrusted header, so w*h is overflow- and allocation-guarded
+    * against [[Codec.MaxPixels]] BEFORE the buffer exists — a crafted
+    * 70000×70000 header otherwise overflows Int
+    * (NegativeArraySizeException) or allocates gigabytes. Not a [[Codec]]:
+    * the dimensions live in the BMP/AVI header, outside the stream. */
   def decode(data: Array[Byte], w: Int, h: Int): Option[Array[Int]] = {
     if (data == null || w <= 0 || h <= 0) return None
-    if (w.toLong * h > MaxPixels) return None
+    if (w.toLong * h > Codec.MaxPixels) return None
     val px = new Array[Int](w * h)
     var x = 0
     var row = 0 // counts from the BOTTOM row

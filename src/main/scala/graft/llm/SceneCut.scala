@@ -53,17 +53,10 @@ object SceneCut {
   }
 
   /** Row-local cut detection over AVI blobs; streaming-safe. */
-  def cutsAll(blobs: Dataset[Multimodal.Blob], threshold: Long): Dataset[Cut] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions(_.flatMap { b =>
-      Avi.sampleFrames(b.payload, stride = 1) match {
-        case Some((_, frames)) =>
-          cuts(frames, threshold).zipWithIndex.map {
-            case ((idx, delta), k) => Cut(b.doc_id, k, idx, delta)
-          }
-        case None => Nil // quarantine by omission
+  def cutsAll(blobs: Dataset[Multimodal.Blob], threshold: Long): Dataset[Cut] =
+    Multimodal.perBlob(blobs, Avi.sampleFrames(_, stride = 1)) { (id, r) =>
+      r.iterator.flatMap { case (_, frames) =>
+        cuts(frames, threshold).zipWithIndex.map { case ((idx, delta), k) => Cut(id, k, idx, delta) }
       }
-    })
-  }
+    }
 }

@@ -28,7 +28,9 @@ import scala.collection.mutable.ArrayBuffer
   *     directory (listed, no content); other types listed with empty
   *     content
   */
-object Tar {
+object Tar extends Codec {
+
+  type Out = Seq[Member]
 
   final case class Member(name: String, size: Long, typeflag: Char,
       content: Array[Byte])
@@ -36,7 +38,7 @@ object Tar {
   private val MaxMembers = 65536
   private val MaxMemberBytes = 1L << 30
 
-  def members(bytes: Array[Byte]): Option[Seq[Member]] = {
+  def decode(bytes: Array[Byte]): Option[Seq[Member]] = {
     if (bytes == null || bytes.length < 512) return None
     val out = ArrayBuffer.empty[Member]
     var off = 0

@@ -14,15 +14,15 @@ package graft.llm
   * decoded to packed RGB ints, rows normalized to TOP-DOWN.
   *
   * STRICT bounds (the [[Rle8]] / Zip-CRC discipline): short header,
-  * bad type/depth/colormap, dims over the pixel cap, truncated pixel
+  * bad type/depth/colormap, dims over [[Codec.MaxPixels]], truncated pixel
   * data, or an RLE packet CROSSING a scanline boundary (the original
   * spec forbids it; lenient decoders hide encoder bugs) → quarantine
   * (None), never a half-decoded frame.
   *
   * Scale shape: row-local decode, no shuffle, streaming-safe. */
-object Tga extends Serializable {
+object Tga extends Codec {
 
-  val MaxPixels: Long = 64L << 20
+  type Out = Image
 
   final case class Image(w: Int, h: Int, topDown: Boolean, px: Array[Int])
 
@@ -42,7 +42,7 @@ object Tga extends Serializable {
     val depth = data(16) & 0xff
     val descriptor = data(17) & 0xff
     if (w <= 0 || h <= 0 || depth != 24) return None
-    if (w.toLong * h > MaxPixels) return None
+    if (w.toLong * h > Codec.MaxPixels) return None
     val topDown = (descriptor & 0x20) != 0
     val px = new Array[Int](w * h)
     var p = 18 + idLen

@@ -61,17 +61,12 @@ object Vad {
 
   /** Row-local segmentation over WAV blobs; streaming-safe. */
   def segmentsAll(blobs: Dataset[Multimodal.Blob], frameLen: Int,
-      threshold: Long): Dataset[Segment] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions(_.flatMap { b =>
-      Wav.parse(b.payload) match {
-        case Some(pcm) if pcm.channels == 1 =>
-          segments(pcm.samples, frameLen, threshold).zipWithIndex.map {
-            case ((s, e, en), k) => Segment(b.doc_id, k, s, e, e - s + 1, en)
-          }
-        case _ => Nil // quarantine by omission
+      threshold: Long): Dataset[Segment] =
+    Multimodal.perBlob(blobs, Wav.decode) { (id, r) =>
+      r.filter(_.channels == 1).iterator.flatMap { pcm =>
+        segments(pcm.samples, frameLen, threshold).zipWithIndex.map {
+          case ((s, e, en), k) => Segment(id, k, s, e, e - s + 1, en)
+        }
       }
-    })
-  }
+    }
 }

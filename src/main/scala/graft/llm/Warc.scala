@@ -14,13 +14,15 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Spec behaviors honored (WarcSpec): CRLF header lines, header names
   * case-insensitive (stored lower), Content-Length counted in BYTES,
   * multiple records per buffer, the two-CRLF record separator, versions
-  * 1.0/1.1. Quarantine-not-throw for: bad version line, malformed
+  * 1.0/1.1. [[Codec]] quarantine (None) for: bad version line, malformed
   * header lines, missing/invalid Content-Length, payload running past
   * the buffer, missing separator, and (for responses) an unparseable
   * HTTP status line. Non-response records (warcinfo, request, metadata)
   * are walked and counted but carry no HTTP fields.
   */
-object Warc {
+object Warc extends Codec {
+
+  type Out = Seq[Record]
 
   /** One parsed record; HTTP fields are empty/-1 for non-response types. */
   final case class Record(
@@ -59,7 +61,7 @@ object Warc {
   }
 
   /** Walk every record in the buffer; None if any is malformed. */
-  def parse(bytes: Array[Byte]): Option[Seq[Record]] = {
+  def decode(bytes: Array[Byte]): Option[Seq[Record]] = {
     if (bytes == null || bytes.length == 0) return None
     val out = Vector.newBuilder[Record]
     var off = 0
@@ -169,15 +171,9 @@ object Warc {
       content_type: String,
       body: String)
 
-  def ingest(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[IngestRow] = {
-    val spark = blobs.sparkSession
-    import spark.implicits._
-    blobs.mapPartitions { it =>
-      it.flatMap { b =>
-        parse(b.payload).iterator.flatMap(_.iterator.map(r =>
-          IngestRow(b.doc_id, r.idx, r.warcType, r.targetUri, r.httpStatus,
-            r.contentType, r.body)))
-      }
+  def ingest(blobs: org.apache.spark.sql.Dataset[Multimodal.Blob]): org.apache.spark.sql.Dataset[IngestRow] =
+    Multimodal.perBlob(blobs, decode) { (id, recs) =>
+      recs.iterator.flatten.map(r => IngestRow(id, r.idx, r.warcType, r.targetUri,
+        r.httpStatus, r.contentType, r.body))
     }
-  }
 }

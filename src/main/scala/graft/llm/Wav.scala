@@ -6,7 +6,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * implementable without native codec libraries: WAV is a self-describing
   * container with raw little-endian PCM payload, so a spec-complete
   * encoder/parser is plain byte arithmetic. [[Multimodal.decodeWav]] runs
-  * [[parse]] partition-batched over blob columns; compressed formats
+  * [[decode]] partition-batched over blob columns; compressed formats
   * (JPEG/MP3/H.264) remain the documented stub in [[Multimodal.decode]],
   * with this module as the drop-in shape a JNI codec would replace.
   *
@@ -17,7 +17,9 @@ import java.nio.{ByteBuffer, ByteOrder}
   * chunks are skipped, not errors: real encoders emit LIST, fact, cue
   * chunks freely.
   */
-object Wav {
+object Wav extends Codec {
+
+  type Out = Pcm
 
   /** Decoded PCM-16 audio: interleaved samples when `channels` > 1. */
   final case class Pcm(
@@ -33,7 +35,7 @@ object Wav {
 
   /** Canonical 44-byte-header mono/stereo PCM-16 WAV bytes. A real
     * encoder, not scaffolding: output parses under any spec-compliant
-    * reader (and under [[parse]], property-tested round-trip). */
+    * reader (and under [[decode]], property-tested round-trip). */
   def encodePcm16(sampleRate: Int, samples: Array[Short], channels: Int = 1): Array[Byte] = {
     require(sampleRate > 0, s"bad sampleRate: $sampleRate")
     require(channels > 0, s"bad channels: $channels")
@@ -50,10 +52,10 @@ object Wav {
     buf.array()
   }
 
-  /** Parse PCM-16 WAV bytes; None for anything malformed (wrong magic,
-    * truncated chunk, non-PCM format, non-16-bit) — a data pipeline
-    * routes those to a quarantine, it does not throw mid-scan. */
-  def parse(bytes: Array[Byte]): Option[Pcm] = {
+  /** The [[Codec]] entry: PCM-16 WAV bytes to samples; None for anything
+    * malformed (wrong magic, truncated chunk, non-PCM format,
+    * non-16-bit). */
+  def decode(bytes: Array[Byte]): Option[Pcm] = {
     if (bytes == null || bytes.length < 12) return None
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     if (buf.getInt() != RIFF) return None

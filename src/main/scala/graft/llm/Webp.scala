@@ -21,14 +21,16 @@ package graft.llm
   * declared RIFF size disagreeing with the buffer, a truncated or
   * over-long chunk, a bad start code / signature / reserved bit, or a
   * missing image chunk each quarantine the WHOLE blob (None). */
-object Webp extends Serializable {
+object Webp extends Codec {
+
+  type Out = Features
 
   /** (format ∈ VP8|VP8L|VP8X, width, height, hasAlpha, hasAnim) —
     * alpha/anim only meaningful for VP8X (false otherwise). */
   final case class Features(format: String, width: Int, height: Int,
       hasAlpha: Boolean, hasAnim: Boolean)
 
-  def features(data: Array[Byte]): Option[Features] = {
+  def decode(data: Array[Byte]): Option[Features] = {
     if (data == null || data.length < 12 + 8) return None
     def u8(o: Int): Int = data(o) & 0xff
     def u16le(o: Int): Int = u8(o) | (u8(o + 1) << 8)

@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * that makes naive text extraction wrong: string cells don't hold
   * strings, they hold INDEXES into the shared-strings table (the
   * workbook-wide dedup pool), so a correct reader must join the two
-  * parts. On top of [[Zip.members]]:
+  * parts. On top of [[Zip.decode]]:
   *
   *   - `xl/sharedStrings.xml`: each `<si>` is one pooled string — plain
   *     `<t>` or RICH-RUN `<r><t>` fragments, concatenated in order
@@ -26,20 +26,25 @@ import scala.collection.mutable.ArrayBuffer
   *   - cells without `r` refs or without values are skipped; absent
   *     parts → None (not an XLSX), missing sharedStrings with no `s`
   *     cells is fine (the part is optional)
+  *   - a [[Codec]]: many cells may name one pooled string, so the cell
+  *     values count against [[Codec.MaxDecodedBytes]] as emitted, on top
+  *     of the archive's own bound
   */
-object Xlsx {
+object Xlsx extends Codec {
+
+  type Out = Seq[Cell]
 
   final case class Cell(ref: String, kind: String, value: String)
 
-  def cells(bytes: Array[Byte]): Option[Seq[Cell]] =
-    Zip.members(bytes).flatMap { ms =>
+  def decode(bytes: Array[Byte]): Option[Seq[Cell]] =
+    Zip.decode(bytes).flatMap { ms =>
       ms.find(_.name == "xl/worksheets/sheet1.xml").map { sheet =>
         val shared = ms.find(_.name == "xl/sharedStrings.xml")
           .map(m => sharedStrings(new String(m.content, UTF_8)))
           .getOrElse(Vector.empty)
         sheetCells(new String(sheet.content, UTF_8), shared)
       }
-    }
+    }.filter(_.iterator.map(_.value.length.toLong).sum <= Codec.MaxDecodedBytes)
 
   /** `<si>` entries in order; rich runs concatenated. */
   private[llm] def sharedStrings(xml: String): Vector[String] = {

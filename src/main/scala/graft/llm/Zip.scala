@@ -3,7 +3,6 @@ package graft.llm
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.Inflater
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -27,19 +26,23 @@ import scala.collection.mutable.ArrayBuffer
   *     in the listing but yield no content
   *   - extracted bytes are verified against the central-directory CRC32
   *     (stored AND deflated — size alone would pass a corrupted member)
-  *   - quarantine contract: no EOCD / out-of-bounds directory or data →
-  *     None; a single unreadable or CRC-mismatched member yields that
-  *     member with empty content, not a poisoned archive
+  *   - a [[Codec]]: no EOCD / out-of-bounds directory or data, or
+  *     member contents that together pass [[Codec.MaxDecodedBytes]]
+  *     (counted across ALL members — a per-member cap lets a small
+  *     archive of many bombs through) → None; a single unreadable or
+  *     CRC-mismatched member yields that member with empty content, not
+  *     a poisoned archive
   */
-object Zip {
+object Zip extends Codec {
+
+  type Out = Seq[Member]
 
   final case class Member(name: String, size: Long, method: Int,
       content: Array[Byte])
 
   private val MaxMembers = 4096
-  private val MaxMemberBytes = 1 << 26
 
-  def members(bytes: Array[Byte]): Option[Seq[Member]] = {
+  def decode(bytes: Array[Byte]): Option[Seq[Member]] = {
     if (bytes == null || bytes.length < 22) return None
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     def u16(at: Int): Int = buf.getShort(at) & 0xffff
@@ -59,6 +62,7 @@ object Zip {
     val cdOff = u32(eocd + 16)
     if (count > MaxMembers || cdOff + cdSize > eocd) return None
     val out = ArrayBuffer.empty[Member]
+    var left = Codec.MaxDecodedBytes.toLong // decoded-output budget for the whole archive
     var pos = cdOff.toInt
     var i = 0
     while (i < count) {
@@ -76,10 +80,15 @@ object Zip {
       // central-directory CRC32 is the integrity check for BOTH methods
       // (stored members have no other one): mismatch = the documented
       // per-member quarantine — listed, empty content, archive survives
-      val content = readMember(bytes, buf, lho, method, csize, usize)
-        .filter { data =>
-          val c = new java.util.zip.CRC32(); c.update(data); c.getValue == crc
-        }
+      // every inflated byte counts, kept or not: a CRC-failing bomb member
+      // must not buy unbounded inflate work either
+      val read = readMember(bytes, buf, lho, method, csize, left)
+      left -= read.fold(0)(_.length)
+      if (left < 0) return None
+      val content = read.filter { data =>
+        val c = new java.util.zip.CRC32(); c.update(data)
+        (method == 0 || data.length == usize) && c.getValue == crc
+      }
       out += Member(name, usize, method, content.getOrElse(Array.emptyByteArray))
       pos += 46 + nameLen + extraLen + commentLen
       i += 1
@@ -87,8 +96,10 @@ object Zip {
     Some(out.toSeq)
   }
 
+  /** One member's bytes (stored, or inflated up to `limit` — a result
+    * longer than `limit` means the member ran past the archive's budget). */
   private def readMember(bytes: Array[Byte], buf: ByteBuffer, lho: Long,
-      method: Int, csize: Long, usize: Long): Option[Array[Byte]] = {
+      method: Int, csize: Long, limit: Long): Option[Array[Byte]] = {
     def u16(at: Int): Int = buf.getShort(at) & 0xffff
     def u32(at: Int): Long = buf.getInt(at) & 0xffffffffL
     if (lho < 0 || lho + 30 > bytes.length) return None
@@ -97,26 +108,11 @@ object Zip {
     val nameLen = u16(p + 26)
     val extraLen = u16(p + 28)
     val dataAt = p + 30 + nameLen + extraLen
-    if (csize > MaxMemberBytes || usize > MaxMemberBytes ||
-      dataAt + csize > bytes.length) return None
+    if (dataAt + csize > bytes.length) return None
     val raw = java.util.Arrays.copyOfRange(bytes, dataAt, dataAt + csize.toInt)
     method match {
       case 0 => Some(raw)
-      case 8 =>
-        val inf = new Inflater(true) // raw deflate: zip strips the zlib wrapper
-        try {
-          inf.setInput(raw)
-          val acc = new ByteArrayOutputStream(math.min(usize.toInt + 16, 1 << 16))
-          val tmp = new Array[Byte](8192)
-          while (!inf.finished() && !inf.needsInput() && acc.size() <= MaxMemberBytes) {
-            val n = inf.inflate(tmp)
-            if (n == 0 && !inf.finished() && inf.needsDictionary()) return None
-            acc.write(tmp, 0, n)
-          }
-          if (!inf.finished() || acc.size() != usize) None else Some(acc.toByteArray)
-        } catch {
-          case _: java.util.zip.DataFormatException => None
-        } finally inf.end()
+      case 8 => Codec.inflate(raw, nowrap = true, limit) // zip strips the zlib wrapper
       case _ => None // unsupported method: listed, no content
     }
   }
@@ -217,7 +213,7 @@ object Zip {
   /** `.docx` → text: the ZIP member walk + `word/document.xml`. None
     * when the bytes are not a readable archive or lack the part. */
   def docxText(bytes: Array[Byte]): Option[Doc] =
-    members(bytes).flatMap { ms =>
+    decode(bytes).flatMap { ms =>
       ms.find(_.name == "word/document.xml")
         .map(m => wordText(new String(m.content, UTF_8)))
     }

@@ -163,7 +163,7 @@ class PropertySpec extends SparkSpec {
         }.sum + 1024L
         assert(bytes.length.toLong == expected)
         // and the walk round-trips every member
-        val ms = graft.llm.Tar.members(bytes).get
+        val ms = graft.llm.Tar.decode(bytes).get
         assert(ms.map(_.size) == specs.map(_._1.toLong))
       }
     }

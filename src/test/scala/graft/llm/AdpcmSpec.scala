@@ -11,7 +11,7 @@ class AdpcmSpec extends SparkSpec {
     //        index 0+8 = 8 (step 16)
     //   n=8: sign only, diff = 16>>3 = 2, − → pred 9, index 8−1 = 7
     val bytes = Array[Byte](0, 0, 0, 0, 0x87.toByte)
-    assert(Adpcm.decodeBlock(bytes).get.toSeq == Seq[Short](0, 11, 9))
+    assert(Adpcm.decode(bytes).get.toSeq == Seq[Short](0, 11, 9))
   }
 
   test("clamps: predictor saturates at the int16 rails, index at [0,88]") {
@@ -19,19 +19,19 @@ class AdpcmSpec extends SparkSpec {
     // index 88 (step 32767): n=7 overshoots → clamp 32767; the pad
     // nibble 0 then adds diff 4095 → clamps again
     val hi = Array[Byte](0xf8.toByte, 0x7f, 88, 0, 0x07)
-    assert(Adpcm.decodeBlock(hi).get.toSeq == Seq[Short](32760, 32767, 32767))
+    assert(Adpcm.decode(hi).get.toSeq == Seq[Short](32760, 32767, 32767))
     // pred0 = -32760, sign nibble 0xf → rail -32768; pad nibble 0 is
     // POSITIVE (sign bit clear) → climbs back by 32767>>3
     val lo = Array[Byte](0x08, 0x80.toByte, 88, 0, 0x0f)
-    assert(Adpcm.decodeBlock(lo).get.toSeq ==
+    assert(Adpcm.decode(lo).get.toSeq ==
       Seq[Short](-32760, -32768, -28673))
     // index byte out of range clamps to 88 (spec-lenient): n=0 gives
     // diff 32767>>3 = 4095, then index decays 88→87 (step 29794) → +3724
     val ix = Array[Byte](0, 0, 200.toByte, 0, 0x00)
-    assert(Adpcm.decodeBlock(ix).get.toSeq == Seq[Short](0, 4095, 7819))
+    assert(Adpcm.decode(ix).get.toSeq == Seq[Short](0, 4095, 7819))
     // too short for the header: quarantine
-    assert(Adpcm.decodeBlock(Array[Byte](1, 2, 3)).isEmpty)
-    assert(Adpcm.decodeBlock(null).isEmpty)
+    assert(Adpcm.decode(Array[Byte](1, 2, 3)).isEmpty)
+    assert(Adpcm.decode(null).isEmpty)
   }
 
   test("encode/decode round-trip: quantization-bounded and state-consistent") {
@@ -39,7 +39,7 @@ class AdpcmSpec extends SparkSpec {
     // update, so decode(encode(x)) tracks x within the current step size
     val x = Array.tabulate[Short](200)(i =>
       (3000 * math.sin(i / 7.0) + 500 * math.sin(i / 2.3)).toShort)
-    val dec = Adpcm.decodeBlock(Adpcm.encodeBlock(x)).get
+    val dec = Adpcm.decode(Adpcm.encodeBlock(x)).get
     // 199 nibbles pad to 100 bytes = 200 nibbles → one pad sample
     assert(dec.length == x.length + 1)
     assert(dec(0) == x(0)) // header sample exact

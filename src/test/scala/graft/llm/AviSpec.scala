@@ -19,7 +19,7 @@ class AviSpec extends SparkSpec {
     for (w <- 8 to 11; junk <- Seq(0, 5, 6, 15)) {
       val bytes = Avi.encode(w, 4, usPerFrame = 40000L,
         frames = video(w, 4, 3), junkBytes = junk)
-      val m = Avi.parseMeta(bytes)
+      val m = Avi.decode(bytes)
         .getOrElse(fail(s"parseMeta failed at w=$w junk=$junk"))
       assert(m == Avi.Meta(w, 4, 40000L, 3, 1, 0), s"meta diverged at w=$w junk=$junk")
     }
@@ -91,7 +91,7 @@ class AviSpec extends SparkSpec {
       "crafted strl LIST size" -> patchInt(good, 104, Int.MaxValue)
     )
     cases.foreach { case (label, bytes) =>
-      assert(Avi.parseMeta(bytes).isEmpty, s"parseMeta accepted: $label")
+      assert(Avi.decode(bytes).isEmpty, s"parseMeta accepted: $label")
       assert(Avi.sampleFrames(bytes, 1).isEmpty, s"sampleFrames accepted: $label")
     }
   }
@@ -99,7 +99,7 @@ class AviSpec extends SparkSpec {
   test("audio-first layout: video is stream 1, frames are '01db'") {
     val bytes = Avi.encode(8, 4, 40000L, video(8, 4, 3), junkBytes = 5,
       audioFirst = true)
-    val m = Avi.parseMeta(bytes).getOrElse(fail("parseMeta failed"))
+    val m = Avi.decode(bytes).getOrElse(fail("parseMeta failed"))
     assert(m == Avi.Meta(8, 4, 40000L, 3, 2, 1),
       "vids strl index / stream count wrong")
     val (_, got) = Avi.sampleFrames(bytes, 1).getOrElse(fail("sampleFrames failed"))

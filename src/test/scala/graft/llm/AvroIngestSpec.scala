@@ -38,16 +38,16 @@ class AvroIngestSpec extends SparkSpec {
     val deflated = container(docSchema, deflate = true) { (w, s) =>
       w.append(rec(s, 20L, "c", 3))
     }
-    assert(AvroIngest.parse(1L, plain).get.map(r => (r.seq, r.id, r.title, r.score)) ==
-      Seq((0, 10L, "a", 1), (1, 11L, "b", 2)))
-    assert(AvroIngest.parse(2L, deflated).get ==
-      Seq(AvroIngest.RecRow(2L, 0, 20L, "c", 3)))
+    assert(AvroIngest.decode(plain).get.map(r => (r.id, r.title, r.score)) ==
+      Seq((10L, "a", 1), (11L, "b", 2)))
+    assert(AvroIngest.decode(deflated).get ==
+      Seq(AvroIngest.Rec(20L, "c", 3)))
   }
 
   test("quarantine: garbage bytes, truncation, and schema mismatch") {
-    assert(AvroIngest.parse(1L, "not avro".getBytes("UTF-8")).isEmpty)
-    assert(AvroIngest.parse(1L, null).isEmpty)
-    assert(AvroIngest.parse(1L, Array[Byte](1, 2)).isEmpty)
+    assert(AvroIngest.decode("not avro".getBytes("UTF-8")).isEmpty)
+    assert(AvroIngest.decode(null).isEmpty)
+    assert(AvroIngest.decode(Array[Byte](1, 2)).isEmpty)
     // valid container, wrong schema: missing contract fields → whole-blob
     // quarantine (a partner-export break, not a per-record accident)
     val other = new Schema.Parser().parse(
@@ -55,14 +55,14 @@ class AvroIngestSpec extends SparkSpec {
     val bytes = container(other, deflate = false) { (w, s) =>
       val r = new GenericData.Record(s); r.put("z", 5L); w.append(r)
     }
-    assert(AvroIngest.parse(1L, bytes).isEmpty)
+    assert(AvroIngest.decode(bytes).isEmpty)
     // truncated mid-block: NO half-read records surface — the reader
     // either quarantines (None) or stops cleanly before the cut block
     // (the writer put all 50 records in one block, so "before" is zero)
     val plain = container(docSchema, deflate = false) { (w, s) =>
       (0 until 50).foreach(i => w.append(rec(s, i.toLong, "t" + i, i)))
     }
-    assert(AvroIngest.parse(1L, plain.take(plain.length / 2))
+    assert(AvroIngest.decode(plain.take(plain.length / 2))
       .forall(_.isEmpty))
   }
 
@@ -75,19 +75,35 @@ class AvroIngestSpec extends SparkSpec {
       (0 until 80).foreach(i => w.append(rec(s, i.toLong, big, i)))
     }
     assert(bomb.length < (1 << 20), "wire blob should be tiny")
-    assert(AvroIngest.parse(1L, bomb).isEmpty)
+    assert(AvroIngest.decode(bomb).isEmpty)
     // record cap: MaxRecordsPerBlob+1 empty-title records
     val many = container(docSchema, deflate = true) { (w, s) =>
       (0 to AvroIngest.MaxRecordsPerBlob).foreach(i =>
         w.append(rec(s, i.toLong, "", 0)))
     }
-    assert(AvroIngest.parse(1L, many).isEmpty)
+    assert(AvroIngest.decode(many).isEmpty)
     // at the cap exactly: still parses
     val atCap = container(docSchema, deflate = true) { (w, s) =>
       (0 until AvroIngest.MaxRecordsPerBlob).foreach(i =>
         w.append(rec(s, i.toLong, "", 0)))
     }
-    assert(AvroIngest.parse(1L, atCap).exists(_.size == AvroIngest.MaxRecordsPerBlob))
+    assert(AvroIngest.decode(atCap).exists(_.size == AvroIngest.MaxRecordsPerBlob))
+  }
+
+  test("a crafted block size quarantines before the reader allocates it") {
+    val plain = container(docSchema, deflate = false) { (w, s) => w.append(rec(s, 1L, "a", 1)) }
+    // one block: header, sync, then [count varint][size varint][data][sync]
+    val sync = plain.takeRight(16)
+    val block = plain.indexOfSlice(sync) + 16
+    val sizeAt = block + 1 // the count, zig-zag 1, is one byte
+    val intMax = Array(0xfe, 0xff, 0xff, 0xff, 0x0f).map(_.toByte) // zig-zag Int.MaxValue
+    val crafted = plain.take(sizeAt) ++ intMax ++ plain.drop(sizeAt + 1)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    assert(AvroIngest.decode(crafted).isEmpty)
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(allocated < Codec.MaxDecodedBytes, s"decode allocated $allocated B")
   }
 
   test("parseAll dataset: per-record rows, corrupt blobs drop") {

@@ -14,7 +14,7 @@ class BmpSpec extends SparkSpec {
   test("encode → parse round-trip at every row-padding class (w%4 ∈ 0..3)") {
     for (w <- 8 to 11; h <- Seq(1, 5)) {
       val px = img(w, h)
-      val parsed = Bmp.parse(Bmp.encode24(w, h, px))
+      val parsed = Bmp.decode(Bmp.encode24(w, h, px))
         .getOrElse(fail(s"parse failed at ${w}x$h"))
       assert(parsed.width == w && parsed.height == h)
       assert(parsed.pixels.sameElements(px), s"pixels diverged at ${w}x$h")
@@ -35,7 +35,7 @@ class BmpSpec extends SparkSpec {
     for (r <- 0 until h)
       System.arraycopy(bu, headerLen + (h - 1 - r) * stride,
         td, headerLen + r * stride, stride)
-    val parsed = Bmp.parse(td).getOrElse(fail("top-down parse failed"))
+    val parsed = Bmp.decode(td).getOrElse(fail("top-down parse failed"))
     assert(parsed.pixels.sameElements(px))
   }
 
@@ -70,7 +70,7 @@ class BmpSpec extends SparkSpec {
         b
       })
     for ((label, bytes) <- cases)
-      assert(Bmp.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Bmp.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("decodeBmp quarantines junk rows while decoding real ones") {

@@ -10,7 +10,7 @@ class EpubSpec extends SparkSpec {
     val bytes = Epub.build(Seq(
       ("ch1.xhtml", "<html><head><title>One</title></head><body><p>First chapter text.</p></body></html>"),
       ("ch2.xhtml", "<html><head><title>Two</title></head><body><p>Second &amp; final.</p></body></html>")))
-    val cs = Epub.chapters(bytes).get
+    val cs = Epub.decode(bytes).get
     assert(cs == Seq(
       Epub.Chapter(0, "ch1.xhtml", "One", "First chapter text."),
       Epub.Chapter(1, "ch2.xhtml", "Two", "Second & final.")))
@@ -31,7 +31,7 @@ class EpubSpec extends SparkSpec {
       ("ch2.xhtml", "<body>two</body>".getBytes(UTF_8), false),
       ("content.opf", opf.getBytes(UTF_8), false),
       ("ch1.xhtml", "<body>one</body>".getBytes(UTF_8), false)))
-    assert(Epub.chapters(bytes).get.map(c => (c.pos, c.href, c.text)) ==
+    assert(Epub.decode(bytes).get.map(c => (c.pos, c.href, c.text)) ==
       Seq((0, "ch2.xhtml", "two"), (1, "ch1.xhtml", "one")))
   }
 
@@ -44,14 +44,14 @@ class EpubSpec extends SparkSpec {
   }
 
   test("quarantine: junk, missing container/opf, dangling refs") {
-    assert(Epub.chapters("junk".getBytes(UTF_8)).isEmpty)
-    assert(Epub.chapters(null).isEmpty)
+    assert(Epub.decode("junk".getBytes(UTF_8)).isEmpty)
+    assert(Epub.decode(null).isEmpty)
     // zip without container.xml
-    assert(Epub.chapters(Zip.build(Seq(
+    assert(Epub.decode(Zip.build(Seq(
       ("mimetype", "application/epub+zip".getBytes(UTF_8), true)))).isEmpty)
     // container pointing at a missing OPF
     val badC = """<container><rootfiles><rootfile full-path="nope.opf"/></rootfiles></container>"""
-    assert(Epub.chapters(Zip.build(Seq(
+    assert(Epub.decode(Zip.build(Seq(
       ("META-INF/container.xml", badC.getBytes(UTF_8), false)))).isEmpty)
     // spine idref without a manifest item: skipped; manifest href without
     // a member: chapter with empty text
@@ -59,7 +59,7 @@ class EpubSpec extends SparkSpec {
       """<package><manifest><item id="a" href="gone.xhtml"/></manifest>
         |<spine><itemref idref="ghost"/><itemref idref="a"/></spine></package>""".stripMargin
     val c = """<container><rootfiles><rootfile full-path="content.opf"/></rootfiles></container>"""
-    val cs = Epub.chapters(Zip.build(Seq(
+    val cs = Epub.decode(Zip.build(Seq(
       ("META-INF/container.xml", c.getBytes(UTF_8), false),
       ("content.opf", opf.getBytes(UTF_8), false)))).get
     assert(cs == Seq(Epub.Chapter(0, "gone.xhtml", "", "")))

@@ -16,7 +16,7 @@ class FlacSpec extends AnyFunSuite {
     val expect = Array(0x10, 0x00, 0x10, 0x00, 0, 0, 14, 0, 0, 14,
       0x0A, 0xC4, 0x42, 0xF0, 0, 0, 0x03, 0xE8).map(_.toByte) ++ md5
     assert(si().toSeq == expect.toSeq)
-    val m = Flac.metadata(Flac.build(Seq(0 -> si()))).get
+    val m = Flac.decode(Flac.build(Seq(0 -> si()))).get
     assert((m.info.sampleRate, m.info.channels, m.info.bitsPerSample,
       m.info.totalSamples, m.info.minBlock, m.info.minFrame) ==
       ((44100, 2, 16, 1000L, 4096, 14)))
@@ -24,7 +24,7 @@ class FlacSpec extends AnyFunSuite {
   }
 
   test("36-bit total samples and 20-bit rate edges survive the packing") {
-    val m = Flac.metadata(Flac.build(Seq(
+    val m = Flac.decode(Flac.build(Seq(
       0 -> si(rate = 0xFFFFF, ch = 8, bps = 32, total = (1L << 36) - 1)))).get
     assert((m.info.sampleRate, m.info.channels, m.info.bitsPerSample,
       m.info.totalSamples) == ((0xFFFFF, 8, 32, (1L << 36) - 1)))
@@ -33,7 +33,7 @@ class FlacSpec extends AnyFunSuite {
   test("vorbis comments parse little-endian inside the BE container") {
     val vc = Flac.buildVorbisComment("graft 1.0",
       Seq("TITLE" -> "doc one", "LANGUAGE" -> "en", "NOTE" -> "a=b=c"))
-    val m = Flac.metadata(Flac.build(Seq(0 -> si(), 4 -> vc))).get
+    val m = Flac.decode(Flac.build(Seq(0 -> si(), 4 -> vc))).get
     assert(m.vendor == "graft 1.0")
     assert(m.comments == Seq("TITLE" -> "doc one", "LANGUAGE" -> "en",
       "NOTE" -> "a=b=c"), "value keeps its own '=' — split at the FIRST")
@@ -44,38 +44,38 @@ class FlacSpec extends AnyFunSuite {
     val stream = Flac.build(Seq(0 -> si(), 1 -> new Array[Byte](64),
       4 -> Flac.buildVorbisComment("v", Seq("K" -> "v")))) ++
       Array.fill[Byte](37)(0x55) // fake audio frames after metadata
-    val m = Flac.metadata(stream).get
+    val m = Flac.decode(stream).get
     assert(m.nBlocks == 3 && m.comments.size == 1)
   }
 
   test("quarantine: every malformed stream returns None") {
     val good = Flac.build(Seq(0 -> si()))
-    assert(Flac.metadata(good).isDefined)
-    assert(Flac.metadata(good.updated(0, 'x'.toByte)).isEmpty, "bad magic")
-    assert(Flac.metadata(Flac.build(Seq(1 -> new Array[Byte](4)))).isEmpty,
+    assert(Flac.decode(good).isDefined)
+    assert(Flac.decode(good.updated(0, 'x'.toByte)).isEmpty, "bad magic")
+    assert(Flac.decode(Flac.build(Seq(1 -> new Array[Byte](4)))).isEmpty,
       "first block must be STREAMINFO")
-    assert(Flac.metadata(Flac.build(Seq(0 -> si().dropRight(1)))).isEmpty,
+    assert(Flac.decode(Flac.build(Seq(0 -> si().dropRight(1)))).isEmpty,
       "STREAMINFO must be exactly 34 bytes")
-    assert(Flac.metadata(Flac.build(Seq(0 -> si(rate = 0)))).isEmpty,
+    assert(Flac.decode(Flac.build(Seq(0 -> si(rate = 0)))).isEmpty,
       "zero sample rate is invalid for audio")
-    assert(Flac.metadata(Flac.build(Seq(0 -> si(), 0 -> si()))).isEmpty,
+    assert(Flac.decode(Flac.build(Seq(0 -> si(), 0 -> si()))).isEmpty,
       "a second STREAMINFO is malformed")
     val vc1 = Flac.buildVorbisComment("v1", Seq("K" -> "a"))
     val vc2 = Flac.buildVorbisComment("v2", Seq("K" -> "b"))
-    assert(Flac.metadata(Flac.build(Seq(0 -> si(), 4 -> vc1, 4 -> vc2)))
+    assert(Flac.decode(Flac.build(Seq(0 -> si(), 4 -> vc1, 4 -> vc2)))
       .isEmpty, "a second VORBIS_COMMENT must quarantine, not last-win")
-    assert(Flac.metadata(good.dropRight(1)).isEmpty, "truncated block")
+    assert(Flac.decode(good.dropRight(1)).isEmpty, "truncated block")
     // unterminated: clear the last flag on the only block
     val unterminated = good.clone
     unterminated(4) = (unterminated(4) & 0x7f).toByte
-    assert(Flac.metadata(unterminated).isEmpty, "no last-flagged block")
+    assert(Flac.decode(unterminated).isEmpty, "no last-flagged block")
     // truncated comment: declared length runs past the block
     val vcBad = Flac.buildVorbisComment("v", Seq("K" -> "vvvv")).dropRight(2)
-    assert(Flac.metadata(Flac.build(Seq(0 -> si(), 4 -> vcBad))).isEmpty)
+    assert(Flac.decode(Flac.build(Seq(0 -> si(), 4 -> vcBad))).isEmpty)
     // a comment with no '=' separator
     def le32(v: Int) = Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte,
       (v >> 24).toByte)
     val noEq = le32(1) ++ "v".getBytes ++ le32(1) ++ le32(3) ++ "abc".getBytes
-    assert(Flac.metadata(Flac.build(Seq(0 -> si(), 4 -> noEq))).isEmpty)
+    assert(Flac.decode(Flac.build(Seq(0 -> si(), 4 -> noEq))).isEmpty)
   }
 }

@@ -17,7 +17,7 @@ class GifSpec extends SparkSpec {
   test("encodeIndexed → parse round-trip applies the palette exactly") {
     for ((w, h) <- Seq((1, 1), (10, 6), (33, 9))) {
       val idx = indices(w, h)
-      val parsed = Gif.parse(Gif.encodeIndexed(w, h, palette, idx))
+      val parsed = Gif.decode(Gif.encodeIndexed(w, h, palette, idx))
         .getOrElse(fail(s"parse failed at ${w}x$h"))
       assert(parsed.width == w && parsed.height == h)
       val expect = idx.map(i => palette(i & 0xff))
@@ -28,7 +28,7 @@ class GifSpec extends SparkSpec {
   test("full 256-color palette and channel extremes survive LZW") {
     val pal = Array.tabulate(256)(k => (k << 16) | ((255 - k) << 8) | ((k * 7) % 256))
     val idx = Array.tabulate[Byte](256)(i => i.toByte)
-    val parsed = Gif.parse(Gif.encodeIndexed(16, 16, pal, idx))
+    val parsed = Gif.decode(Gif.encodeIndexed(16, 16, pal, idx))
       .getOrElse(fail("parse failed"))
     assert(parsed.pixels.sameElements(idx.map(i => pal(i & 0xff))))
   }
@@ -53,14 +53,27 @@ class GifSpec extends SparkSpec {
       "signature only" -> java.util.Arrays.copyOfRange(good, 0, 6),
       "a valid PNG" -> Png.encodeRgb(2, 2, Array(1, 2, 3, 4)))
     for ((label, bytes) <- cases)
-      assert(Gif.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Gif.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("crafted logical-screen dimensions hit the pixel cap, not an OOM") {
     val good = Gif.encodeIndexed(10, 6, palette, indices(10, 6))
-    // an honest image above the caller's cap quarantines
-    assert(Gif.parse(good, maxPixels = 10L).isEmpty)
-    assert(Gif.parse(good).nonEmpty)
+    assert(Gif.decode(good).nonEmpty)
+    // patch the logical screen (bytes 6-9) and the image descriptor's
+    // width/height to w×h: the JDK reader pads the missing LZW data, so
+    // only the pixel cap tells the two apart
+    val desc = good.indices.find(i => (good(i) & 0xff) == 0x2c && good(i + 5) == 10).get
+    def crafted(w: Int, h: Int): Array[Byte] = {
+      val c = good.clone()
+      for (at <- Seq(6, desc + 5)) {
+        c(at) = w.toByte; c(at + 1) = (w >> 8).toByte
+        c(at + 2) = h.toByte; c(at + 3) = (h >> 8).toByte
+      }
+      c
+    }
+    assert(Gif.decode(crafted(4096, 4096)).map(_.pixels.length) == Some(4096 * 4096),
+      "exactly Codec.MaxPixels still decodes")
+    assert(Gif.decode(crafted(4097, 4096)).isEmpty, "one row past the cap quarantines")
   }
 
   test("decodeGif quarantines junk rows while decoding real ones") {

@@ -6,19 +6,19 @@ class Id3Spec extends SparkSpec {
 
   test("v2.3 and v2.4 round-trip (plain vs syncsafe frame sizes)") {
     for (v <- Seq(3, 4)) {
-      val t = Id3.parse(Id3.encode("My Title", "An Artist", "The Album", v))
+      val t = Id3.decode(Id3.encode("My Title", "An Artist", "The Album", v))
         .getOrElse(fail(s"v2.$v parse failed"))
       assert(t == Id3.Tags(v, "My Title", "An Artist", "The Album"))
     }
     // v2.4 carries UTF-8 text
-    val uni = Id3.parse(Id3.encode("Tïtle ✓", "Ärtist", "Albüm", 4)).get
+    val uni = Id3.decode(Id3.encode("Tïtle ✓", "Ärtist", "Albüm", 4)).get
     assert(uni.title == "Tïtle ✓" && uni.artist == "Ärtist")
   }
 
   test("frames longer than 127 bytes: the v2.3/v2.4 size split matters") {
     val long = "x" * 300 // crosses the 7-bit boundary syncsafe encodes differently
     for (v <- Seq(3, 4))
-      assert(Id3.parse(Id3.encode(long, "a", "b", v)).get.title == long)
+      assert(Id3.decode(Id3.encode(long, "a", "b", v)).get.title == long)
   }
 
   test("unknown frames skip; padding ends the walk; MP3 audio may follow") {
@@ -31,12 +31,12 @@ class Id3Spec extends SparkSpec {
       ((n >> 21) & 0x7f).toByte, ((n >> 14) & 0x7f).toByte,
       ((n >> 7) & 0x7f).toByte, (n & 0x7f).toByte) ++
       txxx ++ tag.drop(10) ++ Array[Byte](0, 0, 0, 0)
-    assert(Id3.parse(spliced).contains(Id3.Tags(3, "T", "A", "B")))
+    assert(Id3.decode(spliced).contains(Id3.Tags(3, "T", "A", "B")))
     // audio bytes after the tag are outside the walk
     val withAudio = Id3.encode("T", "A", "B", 3) ++
       Mp3.encodeFrames(0, _ => 1, _ => 0, 2)
-    assert(Id3.parse(withAudio).contains(Id3.Tags(3, "T", "A", "B")))
-    assert(Mp3.parse(withAudio).nonEmpty, "Mp3 walk must skip the real tag")
+    assert(Id3.decode(withAudio).contains(Id3.Tags(3, "T", "A", "B")))
+    assert(Mp3.decode(withAudio).nonEmpty, "Mp3 walk must skip the real tag")
   }
 
   test("malformed tags quarantine, never throw") {
@@ -59,7 +59,7 @@ class Id3Spec extends SparkSpec {
         val c = good.clone(); c(14) = 0; c(15) = 0; c(16) = 0; c(17) = 0; c
       })
     cases.foreach { case (label, b) =>
-      assert(Id3.parse(b).isEmpty, s"accepted: $label")
+      assert(Id3.decode(b).isEmpty, s"accepted: $label")
     }
   }
 

@@ -33,7 +33,7 @@ class JpegSpec extends SparkSpec {
     // loose-but-real channel bounds, with headroom for decoder drift.
     val (w, h) = (32, 16)
     val px = gradient(w, h)
-    val parsed = Jpeg.parse(Jpeg.encodeRgb(w, h, px, quality = 0.95f))
+    val parsed = Jpeg.decode(Jpeg.encodeRgb(w, h, px, quality = 0.95f))
       .getOrElse(fail("parse failed"))
     assert(parsed.width == w && parsed.height == h)
     val chanErr = maxChannelError(px, parsed.pixels)
@@ -54,7 +54,7 @@ class JpegSpec extends SparkSpec {
   test("a solid 8x8-aligned gray image round-trips near-exactly") {
     // a constant block is pure DC — quantization barely touches it
     val px = Array.fill(16 * 16)(0x808080)
-    val parsed = Jpeg.parse(Jpeg.encodeRgb(16, 16, px, quality = 0.9f))
+    val parsed = Jpeg.decode(Jpeg.encodeRgb(16, 16, px, quality = 0.9f))
       .getOrElse(fail("parse failed"))
     val err = maxChannelError(px, parsed.pixels)
     assert(err <= 1, s"solid-gray error $err > 1")
@@ -63,7 +63,7 @@ class JpegSpec extends SparkSpec {
   test("lower quality admits more error but never changes geometry") {
     val (w, h) = (24, 24)
     val px = gradient(w, h)
-    val parsed = Jpeg.parse(Jpeg.encodeRgb(w, h, px, quality = 0.3f))
+    val parsed = Jpeg.decode(Jpeg.encodeRgb(w, h, px, quality = 0.3f))
       .getOrElse(fail("parse failed"))
     assert(parsed.width == w && parsed.height == h &&
       parsed.pixels.length == w * h)
@@ -81,7 +81,7 @@ class JpegSpec extends SparkSpec {
       "a valid GIF" -> Gif.encodeIndexed(2, 1, Array(0xff0000, 0x00ff00),
         Array[Byte](0, 1)))
     for ((label, bytes) <- cases)
-      assert(Jpeg.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Jpeg.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("decodeJpeg quarantines junk rows while decoding real ones") {

@@ -8,7 +8,7 @@ class Mp3Spec extends SparkSpec {
     Mp3.encodeFrames(rateIdx, _ => bi, _ => 0, n)
 
   test("encode → parse round-trip: frame count, rate, exact byte/duration math") {
-    val m = Mp3.parse(cbr(25)).getOrElse(fail("parse failed"))
+    val m = Mp3.decode(cbr(25)).getOrElse(fail("parse failed"))
     assert(m.nFrames == 25 && m.sampleRate == 44100)
     // 128 kbps @ 44100, no padding: 144*128000/44100 = 417 bytes/frame
     assert(m.audioBytes == 25L * 417)
@@ -17,7 +17,7 @@ class Mp3Spec extends SparkSpec {
 
   test("VBR chain with per-frame padding walks every frame length") {
     val bytes = Mp3.encodeFrames(1, j => 1 + j % 14, j => j % 2, 30)
-    val m = Mp3.parse(bytes).getOrElse(fail("parse failed"))
+    val m = Mp3.decode(bytes).getOrElse(fail("parse failed"))
     assert(m.nFrames == 30 && m.sampleRate == 48000)
     val expect = (0 until 30).map { j =>
       val kbps = Array(-1, 32, 40, 48, 56, 64, 80, 96, 112, 128,
@@ -29,7 +29,7 @@ class Mp3Spec extends SparkSpec {
 
   test("ID3v2 prefix is skipped via the syncsafe size, including size 0") {
     for (id3 <- Seq(0, 1, 127, 128, 300)) {
-      val m = Mp3.parse(Mp3.encodeFrames(2, _ => 5, _ => 0, 10, id3Bytes = id3))
+      val m = Mp3.decode(Mp3.encodeFrames(2, _ => 5, _ => 0, 10, id3Bytes = id3))
         .getOrElse(fail(s"parse failed at id3=$id3"))
       assert(m.nFrames == 10 && m.sampleRate == 32000)
     }
@@ -75,7 +75,7 @@ class Mp3Spec extends SparkSpec {
       "ID3 tag with no frames after it" ->
         Mp3.encodeFrames(0, _ => 5, _ => 0, 1, id3Bytes = 8).take(18))
     for ((label, bytes) <- cases)
-      assert(Mp3.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Mp3.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("decodeMp3Meta quarantines junk rows while decoding real ones") {

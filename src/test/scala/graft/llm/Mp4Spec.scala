@@ -8,7 +8,7 @@ class Mp4Spec extends SparkSpec {
 
   test("encode → parse round-trip for both mvhd versions") {
     for (v <- Seq(0, 1); tracks <- Seq(1, 3)) {
-      val m = Mp4.parse(Mp4.encode(90000, 123456L, tracks, mvhdVersion = v))
+      val m = Mp4.decode(Mp4.encode(90000, 123456L, tracks, mvhdVersion = v))
         .getOrElse(fail(s"parse failed at v=$v tracks=$tracks"))
       assert(m.timescale == 90000L && m.duration == 123456L && m.nTracks == tracks)
       assert(m.durationUs == 123456L * 1000000L / 90000L)
@@ -17,7 +17,7 @@ class Mp4Spec extends SparkSpec {
 
   test("free-box padding between ftyp and moov is skipped") {
     for (pad <- Seq(1, 17, 100)) {
-      val m = Mp4.parse(Mp4.encode(600, 500L, 2, freeBytes = pad))
+      val m = Mp4.decode(Mp4.encode(600, 500L, 2, freeBytes = pad))
         .getOrElse(fail(s"parse failed at pad=$pad"))
       assert(m.nTracks == 2 && m.timescale == 600L)
     }
@@ -25,17 +25,17 @@ class Mp4Spec extends SparkSpec {
 
   test("mvhd v1 carries a 64-bit duration past the uint32 range") {
     val big = 5000000000L // > 2^32
-    val m = Mp4.parse(Mp4.encode(1000, big, 1, mvhdVersion = 1))
+    val m = Mp4.decode(Mp4.encode(1000, big, 1, mvhdVersion = 1))
       .getOrElse(fail("parse failed"))
     assert(m.duration == big && m.durationUs == big * 1000000L / 1000L)
   }
 
   test("a v1 duration that would overflow duration_us quarantines, not wraps") {
     val wayTooLong = Long.MaxValue / 1000L // duration*1e6 would wrap Long
-    assert(Mp4.parse(Mp4.encode(90000, wayTooLong, 1, mvhdVersion = 1)).isEmpty)
+    assert(Mp4.decode(Mp4.encode(90000, wayTooLong, 1, mvhdVersion = 1)).isEmpty)
     // the largest representable duration still parses
     val edge = Long.MaxValue / 1000000L
-    assert(Mp4.parse(Mp4.encode(90000, edge, 1, mvhdVersion = 1)).nonEmpty)
+    assert(Mp4.decode(Mp4.encode(90000, edge, 1, mvhdVersion = 1)).nonEmpty)
   }
 
   test("malformed payloads are rejected, never thrown on") {
@@ -71,7 +71,7 @@ class Mp4Spec extends SparkSpec {
         patchI32(good, 16 + 8 + 8 + 12, 0)
       })
     for ((label, bytes) <- cases)
-      assert(Mp4.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Mp4.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("decodeMp4Meta quarantines junk rows while decoding real ones") {

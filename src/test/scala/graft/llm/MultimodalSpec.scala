@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -90,5 +91,52 @@ class MultimodalSpec extends SparkSpec {
     assert(left.n_px == 4L)
     assert(left.mean_r == leftPx.map(p => (p >> 16) & 0xff).sum.toDouble / 4)
     assert(left.mean_b == leftPx.map(p => p & 0xff).sum.toDouble / 4)
+  }
+
+  test("every Codec wrapper keeps its quarantine convention: one invalid row, or no rows") {
+    val tone = Array.tabulate[Short](400)(i => ((i % 40 - 20) * 500).toShort)
+    val wav = Wav.encodePcm16(8000, tone)
+    val bmp = Bmp.encode24(12, 10, Array.tabulate(120)(i => i * 0x010203))
+    val avi = Avi.encode(2, 2, 40000L, Seq(Array.fill(4)(0), Array.fill(4)(0xffffff)))
+    val fixture = CodecFuzzSpec.codecs.toMap[Codec, Array[Byte]]
+    // (wrapper, a payload it decodes, valid-flag convention?, run)
+    val wrappers: Seq[(String, Array[Byte], Boolean, Dataset[Multimodal.Blob] => DataFrame)] = Seq(
+      ("decodeWav", wav, true, b => Multimodal.decodeWav(b).toDF()),
+      ("decodeBmp", bmp, true, b => Multimodal.decodeBmp(b).toDF()),
+      ("decodePng", fixture(Png), true, b => Multimodal.decodePng(b).toDF()),
+      ("decodeGif", fixture(Gif), true, b => Multimodal.decodeGif(b).toDF()),
+      ("decodeJpeg", fixture(Jpeg), true, b => Multimodal.decodeJpeg(b).toDF()),
+      ("decodeMp3Meta", fixture(Mp3), true, b => Multimodal.decodeMp3Meta(b).toDF()),
+      ("decodeMp4Meta", fixture(Mp4), true, b => Multimodal.decodeMp4Meta(b).toDF()),
+      ("decodeAviMeta", avi, true, b => Multimodal.decodeAviMeta(b).toDF()),
+      ("Gzip.decodeAll", fixture(Gzip), true, b => Gzip.decodeAll(b).toDF()),
+      ("Id3.tagRows", fixture(Id3), true, b => Id3.tagRows(b).toDF()),
+      ("AudioHash.aHash", wav, true, b => AudioHash.aHash(b).toDF()),
+      ("ImageHash.dHash", bmp, true, b => ImageHash.dHash(b).toDF()),
+      ("audioFrames", wav, false, b => Multimodal.audioFrames(b, 64, 32).toDF()),
+      ("resizeImage", bmp, false, b => Multimodal.resizeImage(b, 2, 2).toDF()),
+      ("videoFrames", avi, false, b => Multimodal.videoFrames(b, 1).toDF()),
+      ("Adpcm.decodeAll", fixture(Adpcm), false, b => Adpcm.decodeAll(b).toDF()),
+      ("G711.decodeAll", fixture(G711), false, b => G711.decodeAll(b).toDF()),
+      ("AvroIngest.parseAll", fixture(AvroIngest), false, b => AvroIngest.parseAll(b).toDF()),
+      ("Warc.ingest", fixture(Warc), false, b => Warc.ingest(b).toDF()),
+      ("SceneCut.cutsAll", avi, false, b => SceneCut.cutsAll(b, 0L).toDF()),
+      ("Vad.segmentsAll", wav, false, b => Vad.segmentsAll(b, 50, 0L).toDF()))
+    wrappers.foreach { case (name, good, flagged, run) =>
+      // G.711 and IMA ADPCM are headerless sample streams: junk bytes decode
+      val headerless = name.startsWith("G711") || name.startsWith("Adpcm")
+      val bad = Seq(1L -> null, 2L -> Array.emptyByteArray) ++
+        (if (headerless) Nil else Seq(3L -> "not a media payload".getBytes("UTF-8")))
+      val blobs = (bad :+ (9L -> good)).map { case (id, p) => Multimodal.Blob(id, p) }.toDS()
+      val rows = run(blobs).collect()
+      val byDoc = rows.groupBy(_.getAs[Long]("doc_id"))
+      bad.foreach { case (id, _) =>
+        if (flagged) assert(byDoc.get(id).map(_.map(_.getAs[Boolean]("valid")).toSeq).contains(Seq(false)),
+          s"$name: doc $id must give exactly one invalid row")
+        else assert(!byDoc.contains(id), s"$name: doc $id must give no rows")
+      }
+      assert(byDoc.get(9L).exists(_.nonEmpty), s"$name: the valid blob gave no rows")
+      if (flagged) assert(byDoc(9L).map(_.getAs[Boolean]("valid")).toSeq == Seq(true), s"$name: valid row")
+    }
   }
 }

@@ -14,7 +14,7 @@ class OggSpec extends AnyFunSuite {
     val data = page(5L, 0L, granule = 100L, flags = 2,
         lacing = Seq(255, 10, 3)) ++
       page(5L, 1L, granule = 200L, flags = 4, lacing = Seq(0))
-    val got = Ogg.pages(data)
+    val got = Ogg.decode(data).get
     assert(got.size == 2)
     val p0 = got.head
     // 255-lace continues into the next segment: 2 completed packets
@@ -28,23 +28,24 @@ class OggSpec extends AnyFunSuite {
     // flip one payload byte: stored CRC no longer matches
     val bad = good.clone()
     bad(bad.length - 1) = 99.toByte
-    assert(Ogg.pages(good).size == 1)
-    assert(Ogg.pages(bad).isEmpty, "bad-CRC page must quarantine")
+    assert(Ogg.decode(good).get.size == 1)
+    assert(Ogg.decode(bad).contains(Nil), "bad-CRC page must quarantine")
     // ... but the walk resumes at the NEXT page
-    assert(Ogg.pages(bad ++ page(1L, 1L)).map(_.seq) == Seq(1L))
+    assert(Ogg.decode(bad ++ page(1L, 1L)).get.map(_.seq) == Seq(1L))
   }
 
   test("a 64-bit granule position round-trips") {
     val g = 0x1234567890abcdefL
-    assert(Ogg.pages(page(1L, 0L, granule = g)).head.granule == g)
+    assert(Ogg.decode(page(1L, 0L, granule = g)).get.head.granule == g)
   }
 
   test("lost capture pattern stops the walk; truncations quarantine") {
     val good = page(1L, 0L)
-    assert(Ogg.pages("junk".getBytes ++ good).isEmpty, "no resync scan")
-    assert(Ogg.pages(good.dropRight(1)).isEmpty, "truncated payload")
-    assert(Ogg.pages(good.take(27)).isEmpty, "truncated lacing")
+    assert(Ogg.decode("junk".getBytes ++ good).isEmpty, "no resync scan")
+    assert(Ogg.decode(good.dropRight(1)).isEmpty, "truncated payload")
+    assert(Ogg.decode(good.take(27)).isEmpty, "truncated lacing")
+    assert(Ogg.decode(good ++ good.dropRight(1)).isEmpty, "a good page, then a truncated one")
     val badVer = good.clone(); badVer(4) = 1
-    assert(Ogg.pages(badVer).isEmpty, "unknown version quarantines")
+    assert(Ogg.decode(badVer).contains(Nil), "unknown version quarantines")
   }
 }

@@ -16,7 +16,7 @@ class PngSpec extends SparkSpec {
   test("encode → parse round-trip is lossless for every pixel") {
     for ((w, h) <- Seq((1, 1), (9, 5), (16, 16), (31, 7))) {
       val px = img(w, h)
-      val parsed = Png.parse(Png.encodeRgb(w, h, px))
+      val parsed = Png.decode(Png.encodeRgb(w, h, px))
         .getOrElse(fail(s"parse failed at ${w}x$h"))
       assert(parsed.width == w && parsed.height == h)
       assert(parsed.pixels.sameElements(px), s"pixels diverged at ${w}x$h")
@@ -25,7 +25,7 @@ class PngSpec extends SparkSpec {
 
   test("channel extremes (0x000000 / 0xffffff / pure channels) survive deflate") {
     val px = Array(0x000000, 0xffffff, 0xff0000, 0x00ff00, 0x0000ff, 0x808080)
-    val parsed = Png.parse(Png.encodeRgb(3, 2, px)).getOrElse(fail("parse failed"))
+    val parsed = Png.decode(Png.encodeRgb(3, 2, px)).getOrElse(fail("parse failed"))
     assert(parsed.pixels.sameElements(px))
   }
 
@@ -45,7 +45,7 @@ class PngSpec extends SparkSpec {
         val b = good.clone(); b(b.length / 2) = (b(b.length / 2) ^ 0x5a).toByte; b
       })
     for ((label, bytes) <- cases)
-      assert(Png.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Png.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("crafted IHDR dimensions are bounds-checked before the raster allocates") {
@@ -57,11 +57,12 @@ class PngSpec extends SparkSpec {
       .putInt(16, 0x40000000).putInt(20, 0x40000000)
     // the patched header breaks the IHDR CRC too, but the dimension guard
     // must fire without ever attempting the 2^60-pixel allocation
-    assert(Png.parse(crafted).isEmpty)
-    // an honest image above the caller's cap quarantines the same way
-    val big = Png.encodeRgb(64, 64, Array.fill(64 * 64)(0xabcdef))
-    assert(Png.parse(big, maxPixels = 1000L).isEmpty)
-    assert(Png.parse(big).nonEmpty)
+    assert(Png.decode(crafted).isEmpty)
+    // an honest image one row past Codec.MaxPixels (4096²) quarantines
+    // the same way, while an in-bound one decodes
+    val big = Png.encodeRgb(4097, 4096, Array.fill(4097 * 4096)(0xabcdef))
+    assert(Png.decode(big).isEmpty)
+    assert(Png.decode(Png.encodeRgb(64, 64, Array.fill(64 * 64)(0xabcdef))).nonEmpty)
   }
 
   test("decodePng quarantines junk rows while decoding real ones") {

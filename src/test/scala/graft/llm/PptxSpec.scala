@@ -10,7 +10,7 @@ class PptxSpec extends SparkSpec {
     val bytes = Pptx.build(Seq(
       Seq(Seq("Title ", "run"), Seq("Subtitle & more")),
       Seq(Seq("Body slide"))))
-    val ss = Pptx.slides(bytes).get
+    val ss = Pptx.decode(bytes).get
     assert(ss == Seq(
       Pptx.Slide(1, 2, "Title run\nSubtitle & more"),
       Pptx.Slide(2, 1, "Body slide")))
@@ -26,21 +26,21 @@ class PptxSpec extends SparkSpec {
         s"<p:sld><p:txBody><a:p><a:r><a:t>$t</a:t></a:r></a:p></p:txBody></p:sld>"
           .getBytes(UTF_8), false)
     val bytes = Zip.build(Seq(mk(10, "ten"), mk(2, "two"), mk(9, "nine")))
-    assert(Pptx.slides(bytes).get.map(s => (s.no, s.text)) ==
+    assert(Pptx.decode(bytes).get.map(s => (s.no, s.text)) ==
       Seq((2, "two"), (9, "nine"), (10, "ten")))
   }
 
   test("quarantine: junk, zip without slides, empty-member slide") {
-    assert(Pptx.slides("not a zip".getBytes(UTF_8)).isEmpty)
-    assert(Pptx.slides(null).isEmpty)
+    assert(Pptx.decode("not a zip".getBytes(UTF_8)).isEmpty)
+    assert(Pptx.decode(null).isEmpty)
     val noSlides = Zip.build(Seq(
       ("ppt/presentation.xml", "<p/>".getBytes(UTF_8), false)))
-    assert(Pptx.slides(noSlides).isEmpty)
+    assert(Pptx.decode(noSlides).isEmpty)
     // decoy names that are NOT slide parts don't match
     val decoys = Zip.build(Seq(
       ("ppt/slides/slideLayouts/slideLayout1.xml", "<x/>".getBytes(UTF_8), false),
       ("ppt/slides/slide1.xml.rels", "<x/>".getBytes(UTF_8), false),
       ("ppt/slides/slide1.xml", "<a:p><a:r><a:t>real</a:t></a:r></a:p>".getBytes(UTF_8), false)))
-    assert(Pptx.slides(decoys).get.map(_.text) == Seq("real"))
+    assert(Pptx.decode(decoys).get.map(_.text) == Seq("real"))
   }
 }

@@ -54,7 +54,7 @@ class Rle8Spec extends SparkSpec {
   test("untrusted dims: w*h Int overflow / pixel-cap breach quarantines") {
     // 70000*70000 overflows Int — must return None, never throw
     assert(Rle8.decode(b(0, 1), 70000, 70000).isEmpty)
-    // positive product but over the 64 Mpx cap
+    // positive product but over the pixel cap (Codec.MaxPixels)
     assert(Rle8.decode(b(0, 1), 1 << 14, 1 << 13).isEmpty)
     // just under the cap still decodes (trivial EOD stream, all zeros)
     assert(Rle8.decode(b(0, 1), 1024, 1024).nonEmpty)

@@ -13,7 +13,7 @@ class TarSpec extends SparkSpec {
       ("dir/", Array.emptyByteArray, '5'),
       ("dir/a.txt", a, '0'),
       ("b.bin", b, '0')))
-    val ms = Tar.members(tar).get
+    val ms = Tar.decode(tar).get
     assert(ms.map(_.name) == Seq("dir/", "dir/a.txt", "b.bin"))
     assert(ms.map(_.typeflag) == Seq('5', '0', '0'))
     assert(ms(0).size == 0 && ms(0).content.isEmpty)
@@ -37,15 +37,15 @@ class TarSpec extends SparkSpec {
   }
 
   test("quarantine: bad magic, bad checksum, truncated member") {
-    assert(Tar.members(null).isEmpty)
-    assert(Tar.members(new Array[Byte](511)).isEmpty)
-    assert(Tar.members(new Array[Byte](1024)).isEmpty) // all zero: no members
+    assert(Tar.decode(null).isEmpty)
+    assert(Tar.decode(new Array[Byte](511)).isEmpty)
+    assert(Tar.decode(new Array[Byte](1024)).isEmpty) // all zero: no members
     val good = Tar.build(Seq(("x.txt", "content".getBytes(UTF_8), '0')))
     val badMagic = good.clone(); badMagic(257) = 'X'.toByte
-    assert(Tar.members(badMagic).isEmpty)
+    assert(Tar.decode(badMagic).isEmpty)
     val badSum = good.clone(); badSum(0) = 'y'.toByte // name change breaks chksum
-    assert(Tar.members(badSum).isEmpty)
-    assert(Tar.members(good.take(512 + 3)).isEmpty) // truncated data
+    assert(Tar.decode(badSum).isEmpty)
+    assert(Tar.decode(good.take(512 + 3)).isEmpty) // truncated data
     // GNU "ustar  " magic spelling also accepted (re-checksum after edit)
     val gnu = good.clone()
     gnu(262) = ' '.toByte; gnu(263) = ' '.toByte; gnu(264) = 0
@@ -54,7 +54,7 @@ class TarSpec extends SparkSpec {
     (0 until 512).foreach(k => sum += (gnu(k) & 0xff))
     System.arraycopy(f"$sum%06o".getBytes, 0, gnu, 148, 6)
     gnu(154) = 0; gnu(155) = ' '.toByte
-    assert(Tar.members(gnu).get.head.name == "x.txt")
+    assert(Tar.decode(gnu).get.head.name == "x.txt")
   }
 
   test("prefix field is POSIX-only: old-GNU atime digits never join the name") {
@@ -70,7 +70,7 @@ class TarSpec extends SparkSpec {
     (0 until 512).foreach(k => sum += (gnu(k) & 0xff))
     System.arraycopy(f"$sum%06o".getBytes, 0, gnu, 148, 6)
     gnu(154) = 0; gnu(155) = ' '.toByte
-    assert(Tar.members(gnu).get.head.name == "x.txt")
+    assert(Tar.decode(gnu).get.head.name == "x.txt")
   }
 
   test("prefix field joins long paths; EOF without zero blocks is lenient") {
@@ -84,10 +84,10 @@ class TarSpec extends SparkSpec {
     (0 until 512).foreach(k => sum += (withPrefix(k) & 0xff))
     System.arraycopy(f"$sum%06o".getBytes, 0, withPrefix, 148, 6)
     withPrefix(154) = 0; withPrefix(155) = ' '.toByte
-    assert(Tar.members(withPrefix).get.head.name == "very/long/prefix/deep.txt")
+    assert(Tar.decode(withPrefix).get.head.name == "very/long/prefix/deep.txt")
     // strip the end-of-archive marker: members already read survive
     val noEnd = good.dropRight(1024)
-    assert(Tar.members(noEnd).get.head.name == "deep.txt")
+    assert(Tar.decode(noEnd).get.head.name == "deep.txt")
   }
 
   test("tar.gz composition: gzip peel then tar walk") {
@@ -98,8 +98,8 @@ class TarSpec extends SparkSpec {
       z.write(inner); z.close()
       bos.toByteArray
     }
-    val peeled = Gzip.decodeBytes(gz).getOrElse(Array.emptyByteArray)
-    assert(Tar.members(peeled).get.head.content.toSeq ==
+    val peeled = Gzip.decode(gz).getOrElse(Array.emptyByteArray)
+    assert(Tar.decode(peeled).get.head.content.toSeq ==
       "tarred text".getBytes(UTF_8).toSeq)
   }
 }

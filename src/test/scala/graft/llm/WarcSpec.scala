@@ -8,7 +8,7 @@ class WarcSpec extends SparkSpec {
     "https://h.com/p", "2026-01-01T00:00:00Z", 200, "text/html", "the body text")
 
   test("response record round-trips: uri, status, content-type, body") {
-    val recs = Warc.parse(resp).getOrElse(fail("parse failed"))
+    val recs = Warc.decode(resp).getOrElse(fail("parse failed"))
     assert(recs == Seq(Warc.Record(0, "response", "https://h.com/p", 200,
       "text/html", "the body text")))
   }
@@ -16,7 +16,7 @@ class WarcSpec extends SparkSpec {
   test("multiple records walk in order; non-response types carry no HTTP") {
     val bytes = Warc.encodeInfo("warcinfo", "crawler=graft") ++
       resp ++ Warc.encodeInfo("metadata", "note")
-    val recs = Warc.parse(bytes).getOrElse(fail("parse failed"))
+    val recs = Warc.decode(bytes).getOrElse(fail("parse failed"))
     assert(recs.map(r => (r.idx, r.warcType)) ==
       Seq((0, "warcinfo"), (1, "response"), (2, "metadata")))
     assert(recs(0).httpStatus == -1 && recs(0).body == "crawler=graft")
@@ -26,10 +26,10 @@ class WarcSpec extends SparkSpec {
   test("Content-Length is bytes, not chars; WARC/1.1 accepted") {
     val uni = Warc.encodeResponse("https://h.com/u", "2026-01-01T00:00:00Z",
       200, "text/plain", "héllo ✓") // multi-byte UTF-8 body
-    val recs = Warc.parse(uni).getOrElse(fail("unicode body failed"))
+    val recs = Warc.decode(uni).getOrElse(fail("unicode body failed"))
     assert(recs.head.body == "héllo ✓")
     val v11 = new String(resp, "UTF-8").replaceFirst("WARC/1\\.0", "WARC/1.1")
-    assert(Warc.parse(v11.getBytes("UTF-8")).nonEmpty)
+    assert(Warc.decode(v11.getBytes("UTF-8")).nonEmpty)
   }
 
   test("malformed archives quarantine, never throw") {
@@ -51,7 +51,7 @@ class WarcSpec extends SparkSpec {
       "4-digit status" -> b(s.replaceFirst("HTTP/1.1 200 OK", "HTTP/1.1 2000 OK")),
       "trailing garbage" -> (resp ++ b("junk")))
     cases.foreach { case (label, x) =>
-      assert(Warc.parse(x).isEmpty, s"accepted: $label")
+      assert(Warc.decode(x).isEmpty, s"accepted: $label")
     }
   }
 
@@ -65,7 +65,7 @@ class WarcSpec extends SparkSpec {
       Multimodal.Blob(2L, "garbage".getBytes("UTF-8")))
       .map { b => // the .warc.gz chain: decode members first, as q146 does
         Multimodal.Blob(b.doc_id,
-          Gzip.decode(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))
+          Gzip.text(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))
       }.toDS())
       .collect().sortBy(r => (r.doc_id, r.rec_idx))
     assert(rows.map(_.doc_id).forall(_ == 1L), "garbage leaked rows")

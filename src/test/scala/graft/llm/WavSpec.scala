@@ -14,7 +14,7 @@ class WavSpec extends SparkSpec {
   test("encode → parse round-trip preserves rate, channels, every sample") {
     for (channels <- Seq(1, 2)) {
       val bytes = Wav.encodePcm16(44100, tone, channels)
-      val pcm = Wav.parse(bytes).getOrElse(fail(s"parse failed, channels=$channels"))
+      val pcm = Wav.decode(bytes).getOrElse(fail(s"parse failed, channels=$channels"))
       assert(pcm.sampleRate == 44100)
       assert(pcm.channels == channels)
       assert(pcm.samples.sameElements(tone))
@@ -31,7 +31,7 @@ class WavSpec extends SparkSpec {
       .putInt(0x5453494c /* "LIST" */).putInt(3)
       .put(Array[Byte]('a', 'b', 'c', 0 /* pad */)).array()
     val spliced = head ++ list ++ tail
-    val pcm = Wav.parse(spliced).getOrElse(fail("parse failed on spliced LIST chunk"))
+    val pcm = Wav.decode(spliced).getOrElse(fail("parse failed on spliced LIST chunk"))
     assert(pcm.samples.sameElements(tone))
   }
 
@@ -66,7 +66,7 @@ class WavSpec extends SparkSpec {
         java.util.Arrays.copyOfRange(buf.array(), 0, mono.length - 1)
       })
     for ((label, bytes) <- cases)
-      assert(Wav.parse(bytes).isEmpty, s"parser accepted: $label")
+      assert(Wav.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
   test("decodeWav quarantines junk rows (valid=false) while decoding real ones") {

@@ -15,7 +15,7 @@ class XlsxSpec extends SparkSpec {
         ("E1", "b", "<v>1</v>"),
         ("F1", "str", "<v>cached</v>"),
         ("G1", "s", "<v>0</v>")))
-    val cs = Xlsx.cells(bytes).get
+    val cs = Xlsx.decode(bytes).get
     assert(cs == Seq(
       Xlsx.Cell("A1", "shared", "Header"),
       Xlsx.Cell("B1", "shared", "Pooled & value"), // entity round-trip
@@ -30,18 +30,18 @@ class XlsxSpec extends SparkSpec {
     // out-of-range shared index: that CELL is empty, sheet survives
     val bad = Xlsx.build(Seq("only"), Seq(("A1", "s", "<v>7</v>"),
       ("B1", "", "<v>3</v>")))
-    assert(Xlsx.cells(bad).get == Seq(
+    assert(Xlsx.decode(bad).get == Seq(
       Xlsx.Cell("A1", "shared", ""), Xlsx.Cell("B1", "num", "3")))
     // no sheet part: not an xlsx
     val noSheet = Zip.build(Seq(("other.xml", "<x/>".getBytes("UTF-8"), false)))
-    assert(Xlsx.cells(noSheet).isEmpty)
-    assert(Xlsx.cells("junk".getBytes("UTF-8")).isEmpty)
+    assert(Xlsx.decode(noSheet).isEmpty)
+    assert(Xlsx.decode("junk".getBytes("UTF-8")).isEmpty)
     // self-closing empty cells skip; no sharedStrings part with no s-cells is fine
     val empties = Zip.build(Seq(
       ("xl/worksheets/sheet1.xml",
         """<worksheet><sheetData><row><c r="A1"/><c r="B1"><v>5</v></c></row></sheetData></worksheet>"""
           .getBytes("UTF-8"), false)))
-    assert(Xlsx.cells(empties).get == Seq(Xlsx.Cell("B1", "num", "5")))
+    assert(Xlsx.decode(empties).get == Seq(Xlsx.Cell("B1", "num", "5")))
   }
 
   test("rich runs concatenate; namespace prefixes tolerated") {

@@ -97,7 +97,7 @@ class StreamingDecodeSpec extends SparkSpec {
       Multimodal.Blob(2L, "garbage".getBytes("UTF-8")))
     def chain(ds: org.apache.spark.sql.Dataset[Multimodal.Blob]) =
       Warc.ingest(ds.map(b => Multimodal.Blob(b.doc_id,
-        Gzip.decode(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))))
+        Gzip.text(b.payload).map(_.getBytes("UTF-8")).getOrElse(Array.emptyByteArray))))
     val q = chain(streamOf(stage(blobs)))
       .writeStream.format("memory").queryName("warc_rows")
       .trigger(Trigger.AvailableNow())

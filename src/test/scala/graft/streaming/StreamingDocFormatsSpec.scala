@@ -69,10 +69,10 @@ class StreamingDocFormatsSpec extends SparkSpec {
       ds.mapPartitions(_.map { case (id, kind, bytes) =>
         kind match {
           case "exif" =>
-            val d = Exif.parseJpeg(bytes).getOrElse(Exif.Absent)
+            val d = Exif.decode(bytes).getOrElse(Exif.Absent)
             (id, kind, d.make, d.width)
           case "pdf" =>
-            val e = Pdf.parse(bytes).getOrElse(Pdf.Extracted(-1, -1, ""))
+            val e = Pdf.decode(bytes).getOrElse(Pdf.Extracted(-1, -1, ""))
             (id, kind, e.text, e.nPages.toLong)
           case _ =>
             val d = Zip.docxText(bytes).getOrElse(Zip.Doc(-1, ""))
@@ -133,7 +133,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
     val decks = Seq((1L, deck), (2L, "junk".getBytes("UTF-8")))
     def slides(ds: Dataset[(Long, Array[Byte])]): Dataset[(Long, Int, String)] =
       ds.mapPartitions(_.flatMap { case (id, bytes) =>
-        Pptx.slides(bytes) match {
+        Pptx.decode(bytes) match {
           case Some(ss) => ss.map(sl => (id, sl.no, sl.text))
           case None => Seq((id, -1, ""))
         }
@@ -203,7 +203,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
     val books = Seq((1L, book), (2L, "junk".getBytes("UTF-8")))
     def chapters(ds: Dataset[(Long, Array[Byte])]): Dataset[(Long, Int, String, String)] =
       ds.mapPartitions(_.flatMap { case (id, bytes) =>
-        Epub.chapters(bytes) match {
+        Epub.decode(bytes) match {
           case Some(cs) => cs.map(c => (id, c.pos, c.title, c.text))
           case None => Seq((id, -1, "", ""))
         }
@@ -377,7 +377,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
     val docs = Seq((1L, targz(1)), (2L, "not a tarball".getBytes("UTF-8")))
     def decode(ds: Dataset[(Long, Array[Byte])]): Dataset[(Long, String, String)] =
       ds.mapPartitions(_.flatMap { case (id, bytes) =>
-        val ms = Gzip.decodeBytes(bytes).flatMap(Tar.members)
+        val ms = Gzip.decode(bytes).flatMap(Tar.decode)
         ms match {
           case Some(list) => list.map(m => (id, m.name, new String(m.content, "UTF-8")))
           case None => Seq((id, "<quarantine>", ""))
@@ -452,7 +452,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
     assert(fwStreamed == parse(lines.toDF("_1", "_2"))
       .as[(String, String, String)].collect().toSeq.sorted)
     assert(fwStreamed == Seq(("0001", "ab ", "0100")))
-    // Ico.decode / Ogg.pages are pure functions — pin serialization
+    // Ico.decode / Ogg.decode are pure functions — pin serialization
     // into a streaming map (the Qoi/Pnm treatment)
     val icoBytes = Ico.build(Seq((1, 1, Array(0xff010203), (_, _) => true)))
     val oggBytes = Ogg.buildPage(9L, 0L, 42L, 2, Seq(3), Array[Byte](1, 2, 3))
@@ -463,7 +463,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
       .as[Multimodal.Blob]
       .map { b =>
         val ic = Ico.decode(b.payload).map(_.map(_.maskSet).sum).getOrElse(-1)
-        val og = Ogg.pages(b.payload).map(_.granule).sum
+        val og = Ogg.decode(b.payload).fold(0L)(_.map(_.granule).sum)
         (b.doc_id, ic, og)
       }
     run(decStream, "ico_ogg_stream")
@@ -502,14 +502,14 @@ class StreamingDocFormatsSpec extends SparkSpec {
 
   test("streaming webp census ≡ batch (r15 image-container tier)") {
     import graft.llm.Webp
-    // Webp.features is a pure function — pin serialization into a
+    // Webp.decode is a pure function — pin serialization into a
     // streaming map (the Ico/Ogg treatment)
     val blobs = Seq(
       Multimodal.Blob(1L, Webp.buildVp8(64, 32)),
       Multimodal.Blob(2L, Webp.buildVp8l(10, 20)),
       Multimodal.Blob(3L, Webp.buildVp8(64, 32).dropRight(1)))
     val bdir = stage(blobs)
-    def decode(b: Multimodal.Blob) = Webp.features(b.payload)
+    def decode(b: Multimodal.Blob) = Webp.decode(b.payload)
       .map(f => (b.doc_id, f.format, f.width.toLong * 100000 + f.height))
       .getOrElse((b.doc_id, "quarantine", -1L))
     val decStream = spark.readStream.schema(blobs.toDS().schema)
@@ -524,7 +524,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
 
   test("streaming flac metadata ≡ batch (r15 audio-container tier)") {
     import graft.llm.Flac
-    // Flac.metadata is a pure function — pin serialization into a
+    // Flac.decode is a pure function — pin serialization into a
     // streaming map (the Ico/Ogg treatment)
     val good = Flac.build(Seq(
       0 -> Flac.buildStreamInfo(4096, 4096, 14, 14, 22050, 2, 16, 99L,
@@ -533,7 +533,7 @@ class StreamingDocFormatsSpec extends SparkSpec {
     val blobs = Seq(Multimodal.Blob(1L, good),
       Multimodal.Blob(2L, good.updated(0, 'x'.toByte)))
     val bdir = stage(blobs)
-    def decode(b: Multimodal.Blob) = Flac.metadata(b.payload)
+    def decode(b: Multimodal.Blob) = Flac.decode(b.payload)
       .map(m => (b.doc_id, m.info.sampleRate, m.comments.size))
       .getOrElse((b.doc_id, -1, -1))
     val decStream = spark.readStream.schema(blobs.toDS().schema)
