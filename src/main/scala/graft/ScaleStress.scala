@@ -1902,10 +1902,10 @@ object ScaleStress {
   /** Index-maintenance WRITE-amplification curve (r18, the r17 verdict's
     * top item): the maintainers compute only a batch's delta, and with
     * the bucket-partitioned node layout
-    * ([[graft.sources.Bucketing.writeBucketedPartitioned]] +
+    * ([[graft.llm.KnnGraph.saveIndex]] +
     * [[graft.llm.KnnGraph.saveIndexDelta]]) the WRITE is bounded the
     * same way — per batch, only the bkt partitions the touched/new/
-    * deleted ids hash to are dynamic-partition-overwritten. This curve
+    * deleted ids hash to are staged and swapped in. This curve
     * measures it directly from the write receipts: with the batch
     * FIXED (~60 vectors) while the corpus grows, bytes written per
     * batch track the touched-bucket footprint, so the REWRITTEN
@@ -2079,9 +2079,7 @@ object ScaleStress {
       assert(d2 < d1 / 2, s"refresh did not cut relative distortion: $d1 -> $d2")
       assert(r2 > r1, s"refresh did not recover recall: $r1 -> $r2")
     } finally {
-      for (t <- Seq("stress_pqdrift_nodes", "stress_pqdrift_entries",
-          "stress_pqdrift_cb"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
+      graft.llm.IndexCommit.dropIndex(spark, "stress_pqdrift")
       emb0.unpersist()
     }
   }

@@ -467,25 +467,22 @@ object KnnGraph {
     * every later search.
     *
     * The table is ADDITIONALLY partitioned on the bucket id itself
-    * ([[graft.sources.Bucketing.writeBucketedPartitioned]] — partition
-    * `bkt=k` holds exactly bucket k's rows, probe plans unchanged), so
-    * the streaming maintainer can rewrite only the buckets a batch
-    * touched ([[saveIndexDelta]]) instead of the whole table. */
+    * (partition `bkt=k` holds exactly bucket k's rows, probe plans
+    * unchanged), so the streaming maintainer can rewrite only the
+    * buckets a batch touched ([[saveIndexDelta]]) instead of the whole
+    * table.
+    *
+    * Failure semantics, shared by every op that writes an index
+    * ([[saveIndexPq]], [[saveIndexDelta]], [[refreshCodebook]],
+    * [[rebucket]]): the write goes through [[IndexCommit]], which stages
+    * all new tables before it touches a live one. An op that fails leaves
+    * the previous index serving byte-identical results, and rerunning it
+    * succeeds. */
   def saveIndex(edges: DataFrame, emb: DataFrame, cs: Array[Array[Float]],
-      name: String, buckets: Int = 16,
-      entries0: Option[DataFrame] = None): Unit = {
-    val spark = emb.sparkSession
-    dropStale(spark, Seq(s"${name}_nodes", s"${name}_entries"))
-    graft.sources.Bucketing.writeBucketedPartitioned(
-      nodesFrame(edges, emb), s"${name}_nodes", "vec_id", buckets)
-    // `entries0`: re-layout ops ([[rebucket]]) pass the EXISTING medoid
-    // table through instead of re-deriving it — entries are a pure
-    // function of (emb, cs), both unchanged there, and the recompute was
-    // a full probeAssign + window pass over the corpus (r18)
-    entries0.getOrElse(entryMedoids(emb, cs))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_entries")
-  }
+      name: String, buckets: Int = 16): Unit =
+    IndexCommit.write(
+      IndexCommit.Table(s"${name}_entries", entryMedoids(emb, cs)),
+      IndexCommit.Table(s"${name}_nodes", nodesFrame(edges, emb), buckets))
 
   /** The per-node serving record: (vec_id, embedding, nbrs). */
   private def nodesFrame(edges: DataFrame, emb: DataFrame): DataFrame =
@@ -499,20 +496,6 @@ object KnnGraph {
     edges.groupBy(col("src").as("vec_id"))
       .agg(sort_array(collect_list(struct(col("rk"), col("dst"), col("sim"))))
         .as("nbrs"))
-
-  /** A fresh JVM's catalog doesn't know a prior run's table, but its
-    * warehouse LOCATION persists and fails the create — drop both (the
-    * registry calls saveIndex every Verify/Bench run, so overwrite must
-    * be crash-proof, not just catalog-aware). */
-  private def dropStale(spark: org.apache.spark.sql.SparkSession,
-      tables: Seq[String]): Unit =
-    for (t <- tables) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
 
   /** Search a [[saveIndex]]-persisted graph — [[search]]'s exact
     * algorithm (same arithmetic, same tie rules; q273 hash-certifies the
@@ -608,23 +591,19 @@ object KnnGraph {
     * change them if the pinned rows themselves were deleted). */
   private[graft] def saveIndexPqWith(edges: DataFrame, emb: DataFrame,
       cs: Array[Array[Float]], cb: Array[Array[Array[Long]]], m: Int,
-      dimsPer: Int, name: String, buckets: Int,
-      entries0: Option[DataFrame] = None): Unit = {
-    val spark = emb.sparkSession
+      dimsPer: Int, name: String, buckets: Int): Unit =
+    IndexCommit.write(cbTable(emb.sparkSession, name, cb),
+      IndexCommit.Table(s"${name}_entries", entryMedoids(emb, cs)),
+      IndexCommit.Table(s"${name}_nodes",
+        pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
+
+  /** The `<name>_cb` table: one (m, j, sub) row per sub-codebook entry. */
+  private def cbTable(spark: org.apache.spark.sql.SparkSession, name: String,
+      cb: Array[Array[Array[Long]]]): IndexCommit.Table = {
     import spark.implicits._
-    val nCodebook = cb(0).length
-    dropStale(spark, Seq(s"${name}_nodes", s"${name}_entries", s"${name}_cb"))
-    graft.sources.Bucketing.writeBucketedPartitioned(
-      pqNodesFrame(edges, emb, cb, m, dimsPer), s"${name}_nodes", "vec_id",
-      buckets)
-    // see [[saveIndex]]: re-layout/refresh ops pass the existing medoid
-    // table through — emb and cs are unchanged there (r18)
-    entries0.getOrElse(entryMedoids(emb, cs))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_entries")
-    (for (mm <- 0 until m; j <- 0 until nCodebook)
-      yield (mm, j, cb(mm)(j).toSeq)).toDF("m", "j", "sub")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${name}_cb")
+    IndexCommit.Table(s"${name}_cb",
+      (for (mm <- cb.indices; j <- cb(mm).indices)
+        yield (mm, j, cb(mm)(j).toSeq)).toDF("m", "j", "sub"))
   }
 
   /** The PQ-augmented serving record: (vec_id, embedding, codes, nbrs) —
@@ -656,18 +635,21 @@ object KnnGraph {
     * keeps the IO proportional to the same delta: `touchedIds` (the
     * batch's new ∪ touched ∪ deleted ids) map to their bucket ids by
     * the bucketing arithmetic itself, the fresh node records for
-    * exactly those `bkt` partitions are cut from the maintained state,
-    * and a dynamic partition overwrite replaces those partitions only
+    * exactly those `bkt` partitions are cut from the maintained state
+    * and staged, and the commit swaps those partition directories only
     * — every other node record stays on disk untouched (spec-pinned
     * byte-identical). At a 100 TB index a micro-batch then rewrites
     * O(|batch|·cell-footprint) bytes, not O(index).
     *
     * Deletes need no tombstones: a deleted id's bucket is in the
     * touched set, and the rewritten partition simply no longer
-    * contains its row. Returns (touched bkt ids, bytes written). The
-    * overwrite commits per partition — NOT atomically across them — so
-    * the index-name single-writer contract applies (the caller's
-    * foreachBatch loop serializes batches by construction). */
+    * contains its row. Returns (touched bkt ids, bytes written). Both
+    * `edges` and `emb` may read the live index lazily: nothing live
+    * changes until every byte is staged ([[IndexCommit]]), so a failed
+    * batch leaves the previous index serving. The commit itself is not
+    * atomic across partitions, so the index-name single-writer contract
+    * applies (the caller's foreachBatch loop serializes batches by
+    * construction). */
   private[graft] def saveIndexDelta(spark: org.apache.spark.sql.SparkSession,
       name: String, edges: DataFrame, emb: DataFrame,
       cs: Array[Array[Float]], buckets: Int,
@@ -700,17 +682,6 @@ object KnnGraph {
         // so codes stay comparable across batches — the q280 contract)
         pqNodesFrame(edgesAff, embAff, cb, m, dimsPer)
       } else nodesFrame(edgesAff, embAff)
-    val nodes = full
-      .withColumn("bkt", Bucketing.bucketId(col("vec_id"), buckets))
-    Bucketing.overwriteBuckets(nodes, s"${name}_nodes")
-    // dynamic overwrite skips partitions ABSENT from the frame, so a
-    // bucket whose every row was deleted must be dropped explicitly or
-    // its stale records would survive the batch (spec-pinned)
-    val liveBkts = embAff
-      .select(Bucketing.bucketId(col("vec_id"), buckets).as("bkt"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    for (k <- bkts if !liveBkts(k))
-      spark.sql(s"ALTER TABLE ${name}_nodes DROP IF EXISTS PARTITION (bkt=$k)")
     // the medoid entry table: a pure per-cell minimum by (d, node). r19
     // (guide §2.4/§6 — maintenance compute ∝ delta): the old path re-ran
     // probeAssign + a window over the WHOLE corpus every micro-batch to
@@ -744,11 +715,11 @@ object KnnGraph {
           .withColumn("er", row_number().over(w))
           .filter(col("er") === 1).drop("er")
       }
-    // materialize BEFORE the overwrite: the merge reads the very table
-    // it replaces (the refreshCodebook discipline); O(cells) rows
-    val entOut = newEntries.localCheckpoint(true)
-    entOut.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_entries")
+    // a bucket every row left is absent from `full`, so the commit drops
+    // its partition (spec-pinned); entries commit before nodes (see
+    // [[IndexCommit]] for why a replayed batch then converges)
+    IndexCommit.write(IndexCommit.Table(s"${name}_entries", newEntries),
+      IndexCommit.Table(s"${name}_nodes", full, buckets, Some(bkts)))
     (bkts, Bucketing.partitionBytes(spark, s"${name}_nodes", Some(bkts)))
   }
 
@@ -788,8 +759,11 @@ object KnnGraph {
     * the CURRENT corpus (pinned grid rows [cbStart, cbStart+nCodebook),
     * which must all be present — raising, not silently reusing stale
     * parameters, if a changelog deleted them), re-encodes EVERY node's
-    * codes, and swaps `<name>_cb` + codes + entries in one overwrite
-    * pass. By design this is the rare O(index) heavyweight op — every
+    * codes, and swaps `<name>_cb` and the node records through
+    * [[IndexCommit]] (codebook first, nodes last: a rerun after a commit
+    * cut between them derives the same codebook from the same nodes).
+    * Entries are a function of (emb, cs), both unchanged, so the stored
+    * table stays. By design this is the rare O(index) heavyweight op — every
     * code changes, so no delta write exists; fire it on the
     * [[pqDistortion]] drift signal (--pqdrift curve), not per batch.
     * The law (q282's oracle): refresh(maintained index) ≡ saveIndexPq
@@ -799,17 +773,11 @@ object KnnGraph {
   def refreshCodebook(spark: org.apache.spark.sql.SparkSession, name: String,
       cs: Array[Array[Float]], m: Int, dimsPer: Int, nCodebook: Int,
       cbStart: Int, buckets: Int): Unit = {
-    val (embT, edgesT) = loadIndex(spark, name)
-    // materialize BEFORE the overwrite: saveIndexPqWith drops the very
-    // tables these frames read (the StreamingDedup persist discipline)
-    val emb = embT.localCheckpoint(true)
-    val edges = edgesT.localCheckpoint(true)
-    // medoid entries are a function of (emb, cs) — both unchanged by a
-    // codebook refresh — so the existing table passes through (r18)
-    val entries = spark.table(s"${name}_entries").localCheckpoint(true)
-    saveIndexPqWith(edges, emb, cs,
-      pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart), m, dimsPer,
-      name, buckets, Some(entries))
+    val (emb, edges) = loadIndex(spark, name)
+    val cb = pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart)
+    IndexCommit.write(cbTable(spark, name, cb),
+      IndexCommit.Table(s"${name}_nodes",
+        pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
   }
 
   /** Re-bucket a persisted index — the capacity half of the index
@@ -837,29 +805,17 @@ object KnnGraph {
     // unchanged codebook (per-row M·K·dimsPer kernel over the corpus) —
     // all to reproduce the exact rows already on disk. Now the records
     // are read once and rewritten under the new bucket count: one scan,
-    // one bkt exchange, one write. Entries and codebook pass through the
-    // same way (both invariant under re-layout). No "rewrite only moved
-    // partitions" tier exists under modulo bucketing: new bucket k draws
-    // from old bucket (k mod oldB) but is a strict subset of it whenever
-    // the count actually changes, so EVERY partition's membership moves
-    // — O(index) read+write is the floor, and this now pays exactly it.
+    // one bkt exchange, one write. Entries and codebook are invariant
+    // under re-layout, so they are not rewritten at all. No "rewrite
+    // only moved partitions" tier exists under modulo bucketing: new
+    // bucket k draws from old bucket (k mod oldB) but is a strict subset
+    // of it whenever the count actually changes, so EVERY partition's
+    // membership moves — O(index) read+write is the floor, and this now
+    // pays exactly it.
     val nodesT = spark.table(s"${name}_nodes")
-    val dataCols = nodesT.columns.filter(_ != "bkt").toSeq
-    // materialize BEFORE the overwrite: these frames read the very
-    // tables the re-save drops (the refreshCodebook discipline)
-    val nodes = nodesT.select(dataCols.map(col): _*).localCheckpoint(true)
-    val entries = spark.table(s"${name}_entries").localCheckpoint(true)
-    val hasCb = nodesT.columns.contains("codes")
-    val cbT = if (hasCb) Some(spark.table(s"${name}_cb").localCheckpoint(true))
-      else None
-    dropStale(spark, Seq(s"${name}_nodes", s"${name}_entries") ++
-      (if (hasCb) Seq(s"${name}_cb") else Nil))
-    graft.sources.Bucketing.writeBucketedPartitioned(
-      nodes, s"${name}_nodes", "vec_id", buckets)
-    entries.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_entries")
-    cbT.foreach(_.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_cb"))
+    IndexCommit.write(IndexCommit.Table(s"${name}_nodes",
+      nodesT.select(nodesT.columns.filter(_ != "bkt").map(col).toIndexedSeq: _*),
+      buckets))
   }
 
   /** Per-vector quantization distortion under a persisted index's

@@ -52,6 +52,9 @@ object Qoi extends Codec {
     if (w <= 0 || h <= 0 || w > Codec.MaxPixels || h > Codec.MaxPixels ||
       w * h > Codec.MaxPixels) return None
     if ((channels != 3 && channels != 4) || colorspace > 1) return None
+    // the best a chunk byte does is a 62-pixel RUN: a header claiming more
+    // pixels than its chunk bytes can encode quarantines before the buffer
+    if (w * h > (data.length - 22).toLong * 62) return None
     val n = (w * h).toInt
     val px = new Array[Int](n)
     val index = new Array[Int](64) // packed ARGB; zeroed = (0,0,0,0)

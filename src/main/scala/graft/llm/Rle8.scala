@@ -27,18 +27,30 @@ object Rle8 extends Serializable {
     * from an untrusted header, so w*h is overflow- and allocation-guarded
     * against [[Codec.MaxPixels]] BEFORE the buffer exists — a crafted
     * 70000×70000 header otherwise overflows Int
-    * (NegativeArraySizeException) or allocates gigabytes. Not a [[Codec]]:
-    * the dimensions live in the BMP/AVI header, outside the stream. */
+    * (NegativeArraySizeException) or allocates gigabytes. EOD and delta
+    * let two bytes stand for any w×h, so no length bound rejects a lying
+    * header: the stream is walked once without a buffer, and w×h is
+    * allocated only for a stream that ends in EOD inside the image. Not a
+    * [[Codec]]: the dimensions live in the BMP/AVI header, outside the
+    * stream. */
   def decode(data: Array[Byte], w: Int, h: Int): Option[Array[Int]] = {
     if (data == null || w <= 0 || h <= 0) return None
     if (w.toLong * h > Codec.MaxPixels) return None
+    if (!walk(data, w, h, null)) return None
     val px = new Array[Int](w * h)
+    walk(data, w, h, px)
+    Some(px)
+  }
+
+  /** Run the stream into `px` (or nowhere, when null): true iff it ends
+    * in EOD with every run, literal, delta and EOL inside the image. */
+  private def walk(data: Array[Byte], w: Int, h: Int, px: Array[Int]): Boolean = {
     var x = 0
     var row = 0 // counts from the BOTTOM row
     var p = 0
     def put(v: Int): Boolean = {
       if (x >= w || row >= h) return false
-      px((h - 1 - row) * w + x) = v
+      if (px != null) px((h - 1 - row) * w + x) = v
       x += 1
       true
     }
@@ -48,29 +60,29 @@ object Rle8 extends Serializable {
       p += 2
       if (b1 > 0) {
         var i = 0
-        while (i < b1) { if (!put(b2)) return None; i += 1 }
+        while (i < b1) { if (!put(b2)) return false; i += 1 }
       } else b2 match {
         case 0 => // end of line
           x = 0
           row += 1
-          if (row > h) return None
+          if (row > h) return false
         case 1 => // end of data
-          return Some(px)
+          return true
         case 2 => // delta
-          if (p + 1 >= data.length) return None
+          if (p + 1 >= data.length) return false
           val dx = data(p) & 0xff
           val dy = data(p + 1) & 0xff
           p += 2
-          if (x + dx > w || row + dy >= h) return None
+          if (x + dx > w || row + dy >= h) return false
           x += dx
           row += dy
         case k => // absolute mode: k literal bytes + word padding
-          if (p + k > data.length) return None
+          if (p + k > data.length) return false
           var i = 0
-          while (i < k) { if (!put(data(p + i) & 0xff)) return None; i += 1 }
+          while (i < k) { if (!put(data(p + i) & 0xff)) return false; i += 1 }
           p += k + (k & 1)
       }
     }
-    None // ran off the stream without EOD
+    false // ran off the stream without EOD
   }
 }

@@ -44,16 +44,19 @@ object Tga extends Codec {
     if (w <= 0 || h <= 0 || depth != 24) return None
     if (w.toLong * h > Codec.MaxPixels) return None
     val topDown = (descriptor & 0x20) != 0
-    val px = new Array[Int](w * h)
     var p = 18 + idLen
-    if (p > data.length) return None
+    // the fewest bytes w×h pixels take: 3 each raw; in RLE one 4-byte
+    // packet per 128 pixels, and a packet never crosses a scanline. A
+    // header claiming more quarantines before the buffer is allocated.
+    val least = if (imageType == 2) 3L * w * h else 4L * h * ((w + 127) / 128)
+    if (p + least > data.length) return None
+    val px = new Array[Int](w * h)
 
     // fill pixel (streamRow, x); stream rows map straight for top-down,
     // mirrored for bottom-up
     def imageRow(streamRow: Int): Int = if (topDown) streamRow else h - 1 - streamRow
 
     if (imageType == 2) {
-      if (p + 3L * w * h > data.length) return None
       var sr = 0
       while (sr < h) {
         val row = imageRow(sr)

@@ -36,29 +36,29 @@ object SelfTest {
     // every concept encodes the same raw line in the reference roundtrip
     // (minimal_network.py:20-23 uses one xml line for origin and target)
     val raw = Seq.fill(NumExamples)(inputs.head).toDF("value")
-    val dir = Files.createTempDirectory("graft-selftest-").toString
+    inTempDir("graft-selftest-") { dir =>
+      val out = Preprocess.run(net, raw, dir)
+      val back = Preprocess.readEncoded(spark, net, out)
+      assert(back.count() == NumExamples, s"roundtrip lost rows for ${net.repr}")
+      // names+types are the contract; parquet read-back relaxes nullability
+      assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        net.featdef.fields.map(f => (f.name, f.dataType)).toSeq,
+        s"schema drift for ${net.repr}")
 
-    val out = Preprocess.run(net, raw, dir)
-    val back = Preprocess.readEncoded(spark, net, out)
-    assert(back.count() == NumExamples, s"roundtrip lost rows for ${net.repr}")
-    // names+types are the contract; parquet read-back relaxes nullability
-    assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      net.featdef.fields.map(f => (f.name, f.dataType)).toSeq,
-      s"schema drift for ${net.repr}")
+      val (features, targets) = net.split(back)
+      assert(features.columns.sameElements(net.featureNames))
+      targets.foreach(t => assert(t.columns.sameElements(net.targetNames)))
 
-    val (features, targets) = net.split(back)
-    assert(features.columns.sameElements(net.featureNames))
-    targets.foreach(t => assert(t.columns.sameElements(net.targetNames)))
+      val vecs = net.inferenceVectors(back)
+      val vecCols = net.concepts.filterNot(_._2.target).map { case (n, _) => s"${n}_vec" }
+      assert(vecs.select(vecCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+        .na.drop().count() == NumExamples, s"null inference vectors for ${net.repr}")
 
-    val vecs = net.inferenceVectors(back)
-    val vecCols = net.concepts.filterNot(_._2.target).map { case (n, _) => s"${n}_vec" }
-    assert(vecs.select(vecCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      .na.drop().count() == NumExamples, s"null inference vectors for ${net.repr}")
-
-    if (net.targetNames.nonEmpty) {
-      val model = Train.fit(net, back)
-      val mse = Train.evaluateMse(model, net, back)
-      assert(!mse.isNaN, s"loss not computable for ${net.repr}")
+      if (net.targetNames.nonEmpty) {
+        val model = Train.fit(net, back)
+        val mse = Train.evaluateMse(model, net, back)
+        assert(!mse.isNaN, s"loss not computable for ${net.repr}")
+      }
     }
   }
 
@@ -73,14 +73,15 @@ object SelfTest {
     val one = net.concepts.head._2.testInput
     require(!one.contains(sep), "test input collides with the parse delimiter")
     val raw = (Seq.fill(NumExamples / 2)(s"$one$sep$one") :+ "").toDF("value")
-    val dir = Files.createTempDirectory("graft-selftest-parse-").toString
     val parse = (df: org.apache.spark.sql.DataFrame) =>
       Preprocess.flatMapParse(df,
         c => filter(split(c, sep), r => length(r) > 0))
-    val out = Preprocess.run(net, raw, dir, parse = parse)
-    val back = Preprocess.readEncoded(spark, net, out)
-    assert(back.count() == NumExamples,
-      s"FlatMap parse fan-out wrong for ${net.repr}: expected $NumExamples")
+    inTempDir("graft-selftest-parse-") { dir =>
+      val out = Preprocess.run(net, raw, dir, parse = parse)
+      val back = Preprocess.readEncoded(spark, net, out)
+      assert(back.count() == NumExamples,
+        s"FlatMap parse fan-out wrong for ${net.repr}: expected $NumExamples")
+    }
   }
 
   /** Single-record parse roundtrip — the reference Label's
@@ -91,13 +92,20 @@ object SelfTest {
   def testSingleRecord(spark: SparkSession, net: Network): Unit = {
     import spark.implicits._
     val raw = Seq(net.concepts.head._2.testInput).toDF("value")
-    val dir = Files.createTempDirectory("graft-selftest-single-").toString
     val expected = net.preprocess(raw).collect()
-    val out = Preprocess.run(net, raw, dir)
-    val got = Preprocess.readEncoded(spark, net, out).collect()
+    val got = inTempDir("graft-selftest-single-") { dir =>
+      Preprocess.readEncoded(spark, net, Preprocess.run(net, raw, dir)).collect()
+    }
     assert(got.length == 1, s"single-record roundtrip lost the record for ${net.repr}")
     assert(got.head == expected.head,
       s"single-record roundtrip drift for ${net.repr}: ${got.head} vs ${expected.head}")
+  }
+
+  /** `body` over a fresh temp directory, deleted when it returns or throws
+    * (`runAll` runs once per pass of a long-running application). */
+  private def inTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString) finally graft.Timing.rmTree(dir)
   }
 
   /** Gate stage (runner.py:41-47): all registered concepts + the network. */

@@ -41,45 +41,10 @@ object Bucketing {
   /** The bucket id Spark's own bucketing assigns `c` in a `buckets`-bucket
     * table: pmod(murmur3(c, seed 42), buckets) — `functions.hash` IS that
     * murmur3, so this column is exactly `HashPartitioning
-    * .partitionIdExpression`. Used both as the [[writeBucketedPartitioned]]
-    * partition column and by counters that account bucket-pruned IO. */
+    * .partitionIdExpression`. Used both as the partition column of the
+    * k-NN index's node records ([[graft.llm.IndexCommit]]) and by counters
+    * that account bucket-pruned IO. */
   def bucketId(c: Column, buckets: Int): Column = pmod(hash(c), lit(buckets))
-
-  /** [[writeBucketed]] with the table ADDITIONALLY partitioned by
-    * [[bucketId]] — the maintainable serving layout: because the partition
-    * column equals the bucket id, partition `bkt=k` holds exactly bucket
-    * k's rows (one file per bucket after the repartition below), reads
-    * keep file-level bucket pruning (`SelectedBucketsCount` — the probe
-    * plans are unchanged), and a maintainer can rewrite ONLY the buckets
-    * whose rows changed through [[overwriteBuckets]]' dynamic partition
-    * overwrite instead of rewriting the whole table per batch. */
-  def writeBucketedPartitioned(
-      df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.withColumn("bkt", bucketId(col(key), buckets))
-      .repartition(col("bkt"))
-      .write.mode("overwrite")
-      .partitionBy("bkt")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Overwrite ONLY the `bkt` partitions present in `df` (which must carry
-    * the [[bucketId]] column) — write IO proportional to the touched
-    * buckets, never the table. Dynamic partition overwrite is per-partition
-    * commit, NOT atomic across partitions: the single-writer contract of
-    * every ingest loop applies to the table for the duration. */
-  def overwriteBuckets(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    val cols = spark.table(table).columns // data columns, partition col last
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(modeKey, "STATIC")
-    spark.conf.set(modeKey, "dynamic")
-    try df.select(cols.map(col).toIndexedSeq: _*)
-      .repartition(col("bkt"))
-      .write.mode("overwrite").insertInto(table)
-    finally spark.conf.set(modeKey, prev)
-  }
 
   /** On-disk bytes of the given `bkt` partitions (all partitions when
     * `bkts` is None) — the write-amplification counter the maintenance

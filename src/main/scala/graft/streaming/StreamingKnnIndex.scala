@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.storage.StorageLevel
 
 import graft.llm.KnnGraph
 
@@ -28,24 +29,30 @@ import graft.llm.KnnGraph
   * enter twice (once through the upsert's new-edge tier, once through
   * the rows already in the table) and the embedding union would
   * duplicate its node record. An already-fully-replayed batch skips
-  * the table write entirely. The table overwrite is still not atomic
-  * under concurrent readers, so the single-writer contract of the
-  * other ingest loops applies to the index name.
+  * the table write entirely.
+  *
+  * Failure semantics: a batch reads the live index lazily and stages
+  * every byte it writes before any live table changes
+  * ([[graft.llm.IndexCommit]]), so a batch that fails leaves the
+  * previous index serving byte-identical results, and its replay
+  * succeeds. The commit swaps the entry table before the node
+  * partitions, so a replay after a commit cut between the two reruns
+  * the whole batch and converges. The commit is not atomic under
+  * concurrent readers, so the single-writer contract of the other
+  * ingest loops applies to the index name.
   *
   * Scale note: the upsert COMPUTES only touched + new rows (|batch|'s
   * cell footprint, never |base|) and the WRITE is bounded the same way
   * — the node table is partitioned on its own bucket id
   * ([[graft.llm.KnnGraph.saveIndex]]'s layout), the touched/new/deleted
   * ids name the buckets they hash to, and
-  * [[graft.llm.KnnGraph.saveIndexDelta]] dynamic-partition-overwrites
-  * exactly those `bkt` partitions; every other node record stays on
+  * [[graft.llm.KnnGraph.saveIndexDelta]] stages and swaps exactly
+  * those `bkt` partitions; every other node record stays on
   * disk byte-identical (spec-pinned). Per micro-batch the index IO is
   * O(touched buckets), never O(index); the `--knnwrite` ScaleStress
   * curve measures the written fraction falling as the corpus grows.
   * The q273 serving path is unchanged (same probe plans, same bucket
-  * pruning). Each batch's write commits per partition — not atomically
-  * across partitions — which the single-writer contract (above)
-  * already covers. */
+  * pruning). */
 object StreamingKnnIndex {
 
   /** Reload a persisted index into [[graft.llm.KnnGraph.upsert]]'s
@@ -62,37 +69,32 @@ object StreamingKnnIndex {
     * `--knnwrite` ScaleStress curve turns into the write-amplification
     * measurement; (empty, 0) for a fully-replayed batch. */
   def ingestBatch(batch: DataFrame, name: String, cs: Array[Array[Float]],
-      degree: Int, nProbe: Int, buckets: Int): (Seq[Int], Long) = {
-    val spark = batch.sparkSession
-    val (embBase, edges0) = load(spark, name)
-    // replay gate: foreachBatch is at-least-once, and upsert's contract
-    // is ids-new-to-the-index — a replayed source would otherwise enter
-    // twice (its table rows AND the upsert's new-edge tier). The
-    // anti-join makes a replayed batch a true no-op; a fully-replayed
-    // batch also skips the table write below.
-    val fresh = batch.select("vec_id", "embedding")
-      .join(embBase.select("vec_id"), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    if (fresh.isEmpty) return (Seq.empty, 0L)
-    // materialize BEFORE the overwrite: the upsert result, the touched
-    // set, and the new embedding set must be cut from the table they're
-    // about to partially replace (the StreamingDedup survivors-persist
-    // discipline)
-    val (g1raw, touched) = KnnGraph.upsertTouched(
-      edges0, embBase, fresh, cs, degree, nProbe)
-    val g1 = g1raw.localCheckpoint(true)
-    val affected = touched.unionByName(fresh.select("vec_id"))
-      .localCheckpoint(true)
-    val emb1 = embBase.unionByName(fresh).localCheckpoint(true)
-    // write ONLY the buckets the batch touched (new node records +
-    // spliced base lists); the maintained index keeps its own layout —
-    // saveIndexDelta re-encodes PQ codes for the rewritten rows through
-    // the PERSISTED codebook (never re-derived from pinned rows, which
-    // a changelog may have deleted), so codes stay comparable across
-    // batches; dropping the column would break every later
-    // searchIndexedPq.
-    KnnGraph.saveIndexDelta(spark, name, g1, emb1, cs, buckets, affected)
-  }
+      degree: Int, nProbe: Int, buckets: Int): (Seq[Int], Long) =
+    cached(batch, name) {
+      val (embBase, edges0) = load(batch.sparkSession, name)
+      // replay gate: foreachBatch is at-least-once, and upsert's contract
+      // is ids-new-to-the-index — a replayed source would otherwise enter
+      // twice (its table rows AND the upsert's new-edge tier). The
+      // anti-join makes a replayed batch a true no-op; a fully-replayed
+      // batch also skips the table write below.
+      val fresh = batch.select("vec_id", "embedding")
+        .join(embBase.select("vec_id"), Seq("vec_id"), "left_anti")
+      if (fresh.isEmpty) (Seq.empty, 0L)
+      else {
+        val (g1, touched) = KnnGraph.upsertTouched(
+          edges0, embBase, fresh, cs, degree, nProbe)
+        // write ONLY the buckets the batch touched (new node records +
+        // spliced base lists); the maintained index keeps its own layout —
+        // saveIndexDelta re-encodes PQ codes for the rewritten rows through
+        // the PERSISTED codebook (never re-derived from pinned rows, which
+        // a changelog may have deleted), so codes stay comparable across
+        // batches; dropping the column would break every later
+        // searchIndexedPq.
+        KnnGraph.saveIndexDelta(batch.sparkSession, name, g1,
+          embBase.unionByName(fresh), cs, buckets,
+          touched.unionByName(fresh.select("vec_id")))
+      }
+    }
 
   /** Apply one CDC micro-batch to the persisted index — the full
     * changelog shape the warehouse plane's maintainers take
@@ -108,33 +110,47 @@ object StreamingKnnIndex {
     * re-enters through the insert path with the new embedding. */
   def applyChangelog(changelog: DataFrame, name: String,
       cs: Array[Array[Float]], degree: Int, nProbe: Int,
-      buckets: Int): (Seq[Int], Long) = {
-    val spark = changelog.sparkSession
-    val (emb0, edges0) = load(spark, name)
+      buckets: Int): (Seq[Int], Long) = cached(changelog, name) {
+    val (emb0, edges0) = load(changelog.sparkSession, name)
     val dels = changelog.filter(col("op") === "D").select("vec_id")
-      .localCheckpoint(true)
-    val ins = changelog.filter(col("op") === "I")
-      .select("vec_id", "embedding").localCheckpoint(true)
-    val (g1raw, touchedD) = KnnGraph.deleteTouched(
+    val ins = changelog.filter(col("op") === "I").select("vec_id", "embedding")
+    val (g1, touchedD) = KnnGraph.deleteTouched(
       edges0, emb0, dels, cs, degree, nProbe)
-    val g1 = g1raw.localCheckpoint(true)
     val emb1 = emb0.join(dels, Seq("vec_id"), "left_anti")
-    val (g2raw, touchedI) = KnnGraph.upsertTouched(
+    val (g2, touchedI) = KnnGraph.upsertTouched(
       g1, emb1, ins, cs, degree, nProbe)
-    val g2 = g2raw.localCheckpoint(true)
-    val emb2 = emb1.unionByName(ins).localCheckpoint(true)
     // the buckets to rewrite: deleted rows leave them, re-filled and
     // spliced survivor lists change in them, inserted rows enter them
     val affected = dels
       .unionByName(touchedD).unionByName(touchedI)
       .unionByName(ins.select("vec_id"))
-      .localCheckpoint(true)
     // dels rides along so the entry-medoid merge knows whether a stored
     // medoid left (or was replaced) — only then does the O(corpus) entry
     // recompute fire; insert-only batches (and delete batches missing
     // every medoid) merge against the stored medoids instead
-    KnnGraph.saveIndexDelta(spark, name, g2, emb2, cs, buckets, affected,
-      Some(dels))
+    KnnGraph.saveIndexDelta(changelog.sparkSession, name, g2,
+      emb1.unionByName(ins), cs, buckets, affected, Some(dels))
+  }
+
+  /** Runs one maintenance op with its input and the index's node table
+    * cached, then drops those caches and unpersists every RDD persisted
+    * while it ran (the upsert's scored-pair checkpoint). The op reads both
+    * about ten times, and each node-table read is a bucketed scan of one
+    * task per bucket; the caches keep lineage and the write never depends
+    * on them. An input the caller had cached stays cached. An RDD another
+    * thread persists on the same SparkContext meanwhile is released too,
+    * so run maintenance beside searches, not beside other persisting
+    * jobs. */
+  private def cached[T](input: DataFrame, name: String)(op: => T): T = {
+    val spark = input.sparkSession
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val mine = Seq(input, spark.table(s"${name}_nodes"))
+      .filter(_.storageLevel == StorageLevel.NONE)
+    mine.foreach(_.persist())
+    try op finally {
+      mine.foreach(_.unpersist())
+      (spark.sparkContext.getPersistentRDDs -- before).values.foreach(_.unpersist())
+    }
   }
 
   /** The streaming maintenance sink: call `.start()` to run. */

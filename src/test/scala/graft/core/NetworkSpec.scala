@@ -81,6 +81,21 @@ class NetworkSpec extends SparkSpec {
     SelfTest.runAll(spark, net)
   }
 
+  test("SelfTest.runAll leaves java.io.tmpdir's graft-selftest-* set unchanged") {
+    def selftestDirs(): Set[String] = {
+      val walk = java.nio.file.Files.list(
+        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft-selftest-")).toSet
+      } finally walk.close()
+    }
+    val before = selftestDirs()
+    SelfTest.runAll(spark, net)
+    assert(selftestDirs() == before)
+  }
+
   test("train lifecycle: fit, eval, save, load, infer") {
     val raw = Seq.tabulate(64)(i => s"$i,${if (i % 2 == 0) "m" else "f"}").toDF("value")
     val dir = java.nio.file.Files.createTempDirectory("graft-train-").toString

@@ -56,12 +56,18 @@ class GifSpec extends SparkSpec {
       assert(Gif.decode(bytes).isEmpty, s"parser accepted: $label")
   }
 
-  test("crafted logical-screen dimensions hit the pixel cap, not an OOM") {
+  test("a real GIF at exactly the pixel cap decodes; one row past it quarantines") {
+    def flat(w: Int, h: Int) = Gif.encodeIndexed(w, h, palette, new Array[Byte](w * h))
+    assert(Gif.decode(flat(4096, 4096)).map(_.pixels.length) == Some(4096 * 4096),
+      "exactly Codec.MaxPixels still decodes")
+    assert(Gif.decode(flat(4097, 4096)).isEmpty, "one row past the cap quarantines")
+  }
+
+  test("a frame whose LZW data ends before its declared pixels quarantines") {
     val good = Gif.encodeIndexed(10, 6, palette, indices(10, 6))
     assert(Gif.decode(good).nonEmpty)
     // patch the logical screen (bytes 6-9) and the image descriptor's
-    // width/height to w×h: the JDK reader pads the missing LZW data, so
-    // only the pixel cap tells the two apart
+    // width/height to w×h: the JDK reader would pad the missing LZW data
     val desc = good.indices.find(i => (good(i) & 0xff) == 0x2c && good(i + 5) == 10).get
     def crafted(w: Int, h: Int): Array[Byte] = {
       val c = good.clone()
@@ -71,9 +77,15 @@ class GifSpec extends SparkSpec {
       }
       c
     }
-    assert(Gif.decode(crafted(4096, 4096)).map(_.pixels.length) == Some(4096 * 4096),
-      "exactly Codec.MaxPixels still decodes")
-    assert(Gif.decode(crafted(4097, 4096)).isEmpty, "one row past the cap quarantines")
+    assert(Gif.decode(crafted(10, 7)).isEmpty, "one row past the data")
+    assert(Gif.decode(crafted(2000, 2000)).isEmpty)
+    assert(Gif.decode(crafted(4096, 4096)).isEmpty)
+    assert(Gif.decode(crafted(5, 6)).nonEmpty, "a frame its data covers decodes")
+    // the sub-block chain must terminate: cut the terminator (and the
+    // trailer after it) and the frame quarantines; the trailer alone may go
+    assert(good.takeRight(2).toSeq == Seq[Byte](0, 0x3b))
+    assert(Gif.decode(good.dropRight(2)).isEmpty)
+    assert(Gif.decode(good.dropRight(1)).nonEmpty)
   }
 
   test("decodeGif quarantines junk rows while decoding real ones") {

@@ -66,4 +66,16 @@ class QoiSpec extends AnyFunSuite {
     assert(Qoi.decode(stream(2, 1, Seq(0xfe, 1, 2, 3, 0xfe, 9))).isEmpty,
       "truncated RGB chunk")
   }
+
+  test("a header claiming more pixels than its chunks can encode quarantines before allocating") {
+    // the best a chunk byte does is a 62-pixel RUN (tag 0xfd)
+    val runs = Seq.fill(3)(0xfd)
+    assert(Qoi.decode(stream(62 * 3, 1, runs)).map(_.px.length) == Some(62 * 3))
+    assert(Qoi.decode(stream(62 * 3 + 1, 1, runs)).isEmpty)
+    // a bare 22-byte header claiming 4096×4096 allocated the 67 MB buffer
+    val lying = stream(4096, 4096, Nil)
+    assert(lying.length == 22)
+    val bytes = AllocatedBytes.of(assert(Qoi.decode(lying).isEmpty))
+    assert(bytes < (1 << 20), s"allocated $bytes bytes before quarantining")
+  }
 }

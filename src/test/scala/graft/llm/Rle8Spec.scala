@@ -59,4 +59,11 @@ class Rle8Spec extends SparkSpec {
     // just under the cap still decodes (trivial EOD stream, all zeros)
     assert(Rle8.decode(b(0, 1), 1024, 1024).nonEmpty)
   }
+
+  test("a stream that cannot end in EOD quarantines before the w×h buffer exists") {
+    // 22 bytes of runs with no EOD, against 4096×4096 dims from the header
+    val junk = b(Seq.fill(11)(Seq(200, 7)).flatten: _*)
+    val bytes = AllocatedBytes.of(assert(Rle8.decode(junk, 4096, 4096).isEmpty))
+    assert(bytes < (1 << 20), s"allocated $bytes bytes before quarantining")
+  }
 }

@@ -75,4 +75,18 @@ class TgaSpec extends SparkSpec {
     assert(Tga.decode(Array[Byte](1, 2, 3)).isEmpty)
     assert(Tga.decode(null).isEmpty)
   }
+
+  test("a header claiming more pixels than its bytes can encode quarantines before allocating") {
+    // RLE: one 4-byte packet carries ≤ 128 pixels and never crosses a row
+    val run = Seq(0xff.toByte) ++ bgr(1, 2, 3)
+    val two = header(10, 128, 2, topDown = true) ++ run ++ run
+    assert(Tga.decode(two.toArray).map(_.px.length) == Some(256))
+    assert(Tga.decode((header(10, 129, 1, topDown = true) ++ run).toArray).isEmpty)
+    // 20- and 18-byte headers claiming 4096×4096 allocated the 67 MB buffer
+    for (lying <- Seq(header(10, 4096, 4096, topDown = true) ++ Array[Byte](0, 0),
+        header(2, 4096, 4096, topDown = true))) {
+      val bytes = AllocatedBytes.of(assert(Tga.decode(lying).isEmpty))
+      assert(bytes < (1 << 20), s"allocated $bytes bytes before quarantining")
+    }
+  }
 }
