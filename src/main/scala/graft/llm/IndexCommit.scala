@@ -1,5 +1,7 @@
 package graft.llm
 
+import java.io.IOException
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -27,6 +29,8 @@ import graft.sources.Bucketing
   *  - a bucket-targeted node write (`parts`): swap exactly those `bkt=k`
   *    directories; a listed bucket the stage lacks, because every row left
   *    it, is dropped in the same step.
+  * A directory rename that fails raises, in both cases: it is never taken
+  * for an emptied bucket.
   *
   * Tables commit in the order given, and every caller gives `<name>_nodes`
   * last. The replay gate of [[graft.streaming.StreamingKnnIndex.ingestBatch]]
@@ -81,20 +85,26 @@ private[graft] object IndexCommit {
       case None =>
         drop(spark, live)
         spark.sql(s"ALTER TABLE $staged RENAME TO $live")
+        // the catalog ignores a directory rename that returns false
+        if (!fsOf(spark).exists(dir(spark, live)))
+          throw new IOException(s"IndexCommit: ${dir(spark, live)} missing after rename")
         if (t.buckets > 0) spark.sql(s"ALTER TABLE $live RECOVER PARTITIONS")
       case Some(ks) =>
-        def spec(k: Seq[Int]) = k.map(b => s"PARTITION (bkt=$b)")
         val fs = fsOf(spark)
-        if (ks.nonEmpty)
-          spark.sql(s"ALTER TABLE $live DROP IF EXISTS ${spec(ks).mkString(", ")}")
-        val moved = ks.filter { k =>
-          val (from, to) = (new Path(dir(spark, staged), s"bkt=$k"),
-            new Path(dir(spark, live), s"bkt=$k"))
-          fs.delete(to, true)
-          fs.exists(from) && fs.rename(from, to)
+        def at(table: String, k: Int) = new Path(dir(spark, table), s"bkt=$k")
+        def spec(k: Seq[Int]) = k.map(b => s"PARTITION (bkt=$b)")
+        // a listed bucket the stage lacks is one every row left
+        val (moved, emptied) = ks.partition(k => fs.exists(at(staged, k)))
+        moved.foreach { k =>
+          fs.delete(at(live, k), true)
+          // Hadoop reports most rename failures as false, not by raising
+          if (!fs.rename(at(staged, k), at(live, k)))
+            throw new IOException(s"IndexCommit: cannot rename ${at(staged, k)}")
         }
+        if (emptied.nonEmpty)
+          spark.sql(s"ALTER TABLE $live DROP IF EXISTS ${spec(emptied).mkString(", ")}")
         if (moved.nonEmpty)
-          spark.sql(s"ALTER TABLE $live ADD ${spec(moved).mkString(" ")}")
+          spark.sql(s"ALTER TABLE $live ADD IF NOT EXISTS ${spec(moved).mkString(" ")}")
         drop(spark, staged)
     }
   }

@@ -243,10 +243,11 @@ object KnnGraph {
     * maintainer ([[graft.streaming.StreamingKnnIndex]]) needs exactly
     * this set (∪ the new ids) to know which node-record buckets its
     * write must rewrite; everything else passes through untouched and
-    * stays on disk as-is. */
+    * stays on disk as-is. The third frame is the checkpointed pair pass
+    * both others read: [[release]] it once they are written. */
   private[graft] def upsertTouched(edges0: DataFrame, embBase: DataFrame,
       embNew: DataFrame, cs: Array[Array[Float]], degree: Int,
-      nProbe: Int): (DataFrame, DataFrame) = {
+      nProbe: Int): (DataFrame, DataFrame, DataFrame) = {
     GraftFunctions.register(embBase.sparkSession)
     val all = embBase.unionByName(embNew)
     val newSrc = sided(graft.operators.Parallelism.spread(embNew),
@@ -280,8 +281,16 @@ object KnnGraph {
     val untouched = edges0.join(affected, Seq("src"), "left_anti")
       .select("src", "rk", "dst", "sim")
     (untouched.unionByName(spliced).unionByName(newEdges),
-      affected.select(col("src").as("vec_id")))
+      affected.select(col("src").as("vec_id")), pairsNew)
   }
+
+  /** Unpersists the RDD that `localCheckpoint` materialized for `df`
+    * ([[upsertTouched]]'s scored pairs): a maintenance op releases it once
+    * its write no longer reads it. */
+  private[graft] def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Delete vectors from an EXISTING k-NN graph without rebuilding —
     * the other half of the FreshDiskANN maintenance story [[upsert]]
@@ -688,12 +697,13 @@ object KnnGraph {
     // rewrite this O(cells) table. A batch that deleted or replaced no
     // stored medoid cannot move any cell's minimum except by ADDING
     // candidates, so the new table is exactly
-    //   min(stored medoid, touched rows' primary assignments) per cell
+    //   min(stored medoid, rewritten buckets' primary assignments) per cell
     // — min-of-mins over the same (d ASC, node ASC) key, bit-exact
     // because d is a deterministic function of the pinned centroids and
-    // the row's embedding and parquet round-trips doubles exactly.
-    // (Touched BASE rows re-entering the merge are harmless: they were
-    // already inside the stored minimum.) Batches that deleted a stored
+    // the row's embedding and parquet round-trips doubles exactly. The
+    // rewritten buckets hold every new row; their BASE rows re-entering
+    // the merge are harmless: they were already inside the stored
+    // minimum. Batches that deleted a stored
     // medoid (including D+I replacements, whose re-inserted embedding
     // invalidates the stored d), and legacy node-only entry tables, fall
     // back to the full recompute — correctness first, the fallback is
@@ -706,9 +716,7 @@ object KnnGraph {
       if (!entT.columns.contains("cell") || medoidInvalid)
         entryMedoids(emb, cs)
       else {
-        val cand = probeAssign(
-            emb.join(touchedIds.select("vec_id"), Seq("vec_id"), "left_semi"),
-            cs, nProbe = 1)
+        val cand = probeAssign(embAff, cs, nProbe = 1)
           .select(col("vec_id").as("node"), col("cell"), col("d"))
         val w = Window.partitionBy("cell").orderBy(col("d"), col("node"))
         entT.select("node", "cell", "d").unionByName(cand)

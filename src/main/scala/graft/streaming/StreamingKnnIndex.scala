@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.storage.StorageLevel
 
 import graft.llm.KnnGraph
 
@@ -39,7 +38,10 @@ import graft.llm.KnnGraph
   * partitions, so a replay after a commit cut between the two reruns
   * the whole batch and converges. The commit is not atomic under
   * concurrent readers, so the single-writer contract of the other
-  * ingest loops applies to the index name.
+  * ingest loops applies to the index name. What a batch caches keeps
+  * its lineage and is released before it returns: a lost block
+  * recomputes from the live tables, which no commit changes while a
+  * job runs.
   *
   * Scale note: the upsert COMPUTES only touched + new rows (|batch|'s
   * cell footprint, never |base|) and the WRITE is bounded the same way
@@ -69,32 +71,36 @@ object StreamingKnnIndex {
     * `--knnwrite` ScaleStress curve turns into the write-amplification
     * measurement; (empty, 0) for a fully-replayed batch. */
   def ingestBatch(batch: DataFrame, name: String, cs: Array[Array[Float]],
-      degree: Int, nProbe: Int, buckets: Int): (Seq[Int], Long) =
-    cached(batch, name) {
-      val (embBase, edges0) = load(batch.sparkSession, name)
-      // replay gate: foreachBatch is at-least-once, and upsert's contract
-      // is ids-new-to-the-index — a replayed source would otherwise enter
-      // twice (its table rows AND the upsert's new-edge tier). The
-      // anti-join makes a replayed batch a true no-op; a fully-replayed
-      // batch also skips the table write below.
-      val fresh = batch.select("vec_id", "embedding")
-        .join(embBase.select("vec_id"), Seq("vec_id"), "left_anti")
+      degree: Int, nProbe: Int, buckets: Int): (Seq[Int], Long) = {
+    val (embBase, edges0) = load(batch.sparkSession, name)
+    // replay gate: foreachBatch is at-least-once, and upsert's contract
+    // is ids-new-to-the-index — a replayed source would otherwise enter
+    // twice (its table rows AND the upsert's new-edge tier). The
+    // anti-join makes a replayed batch a true no-op; a fully-replayed
+    // batch also skips the table write below. Every later step reads the
+    // survivors, so they stay cached (with lineage) for the op instead of
+    // re-running the anti-join against the whole node table each time.
+    val fresh = batch.select("vec_id", "embedding")
+      .join(embBase.select("vec_id"), Seq("vec_id"), "left_anti").persist()
+    try {
       if (fresh.isEmpty) (Seq.empty, 0L)
       else {
-        val (g1, touched) = KnnGraph.upsertTouched(
+        val (g1, touched, pairs) = KnnGraph.upsertTouched(
           edges0, embBase, fresh, cs, degree, nProbe)
         // write ONLY the buckets the batch touched (new node records +
-        // spliced base lists); the maintained index keeps its own layout —
-        // saveIndexDelta re-encodes PQ codes for the rewritten rows through
-        // the PERSISTED codebook (never re-derived from pinned rows, which
-        // a changelog may have deleted), so codes stay comparable across
-        // batches; dropping the column would break every later
-        // searchIndexedPq.
-        KnnGraph.saveIndexDelta(batch.sparkSession, name, g1,
+        // spliced base lists); the maintained index keeps its own layout
+        // — saveIndexDelta re-encodes PQ codes for the rewritten rows
+        // through the PERSISTED codebook (never re-derived from pinned
+        // rows, which a changelog may have deleted), so codes stay
+        // comparable across batches; dropping the column would break
+        // every later searchIndexedPq.
+        try KnnGraph.saveIndexDelta(batch.sparkSession, name, g1,
           embBase.unionByName(fresh), cs, buckets,
           touched.unionByName(fresh.select("vec_id")))
+        finally KnnGraph.release(pairs)
       }
-    }
+    } finally fresh.unpersist()
+  }
 
   /** Apply one CDC micro-batch to the persisted index — the full
     * changelog shape the warehouse plane's maintainers take
@@ -110,14 +116,14 @@ object StreamingKnnIndex {
     * re-enters through the insert path with the new embedding. */
   def applyChangelog(changelog: DataFrame, name: String,
       cs: Array[Array[Float]], degree: Int, nProbe: Int,
-      buckets: Int): (Seq[Int], Long) = cached(changelog, name) {
+      buckets: Int): (Seq[Int], Long) = {
     val (emb0, edges0) = load(changelog.sparkSession, name)
     val dels = changelog.filter(col("op") === "D").select("vec_id")
     val ins = changelog.filter(col("op") === "I").select("vec_id", "embedding")
     val (g1, touchedD) = KnnGraph.deleteTouched(
       edges0, emb0, dels, cs, degree, nProbe)
     val emb1 = emb0.join(dels, Seq("vec_id"), "left_anti")
-    val (g2, touchedI) = KnnGraph.upsertTouched(
+    val (g2, touchedI, pairs) = KnnGraph.upsertTouched(
       g1, emb1, ins, cs, degree, nProbe)
     // the buckets to rewrite: deleted rows leave them, re-filled and
     // spliced survivor lists change in them, inserted rows enter them
@@ -128,29 +134,9 @@ object StreamingKnnIndex {
     // medoid left (or was replaced) — only then does the O(corpus) entry
     // recompute fire; insert-only batches (and delete batches missing
     // every medoid) merge against the stored medoids instead
-    KnnGraph.saveIndexDelta(changelog.sparkSession, name, g2,
+    try KnnGraph.saveIndexDelta(changelog.sparkSession, name, g2,
       emb1.unionByName(ins), cs, buckets, affected, Some(dels))
-  }
-
-  /** Runs one maintenance op with its input and the index's node table
-    * cached, then drops those caches and unpersists every RDD persisted
-    * while it ran (the upsert's scored-pair checkpoint). The op reads both
-    * about ten times, and each node-table read is a bucketed scan of one
-    * task per bucket; the caches keep lineage and the write never depends
-    * on them. An input the caller had cached stays cached. An RDD another
-    * thread persists on the same SparkContext meanwhile is released too,
-    * so run maintenance beside searches, not beside other persisting
-    * jobs. */
-  private def cached[T](input: DataFrame, name: String)(op: => T): T = {
-    val spark = input.sparkSession
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val mine = Seq(input, spark.table(s"${name}_nodes"))
-      .filter(_.storageLevel == StorageLevel.NONE)
-    mine.foreach(_.persist())
-    try op finally {
-      mine.foreach(_.unpersist())
-      (spark.sparkContext.getPersistentRDDs -- before).values.foreach(_.unpersist())
-    }
+    finally KnnGraph.release(pairs)
   }
 
   /** The streaming maintenance sink: call `.start()` to run. */

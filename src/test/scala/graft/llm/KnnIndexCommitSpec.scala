@@ -11,10 +11,16 @@ import graft.{SparkSpec, Tables}
 import graft.streaming.StreamingKnnIndex
 
 /** The local filesystem, except that creating a file under a path that
-  * contains [[FailingLocalFs.failUnder]] throws: a disk that refuses one
-  * table's writes. Installed as `fs.file.impl` for the duration of one
-  * op. */
+  * contains [[FailingLocalFs.failUnder]] throws, a disk that refuses one
+  * table's writes, and that renaming a path that contains
+  * [[FailingLocalFs.renameFailsUnder]] returns false, as Hadoop reports
+  * most rename failures. Installed as `fs.file.impl` for the duration of
+  * one op. */
 class FailingLocalFs extends LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean =
+    !FailingLocalFs.renameFailsUnder.exists(src.toString.contains) &&
+      super.rename(src, dst)
+
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
@@ -27,6 +33,7 @@ class FailingLocalFs extends LocalFileSystem {
 
 object FailingLocalFs {
   @volatile var failUnder: Option[String] = None
+  @volatile var renameFailsUnder: Option[String] = None
 }
 
 /** Failure semantics of the k-NN index write path ([[IndexCommit]]): each
@@ -67,14 +74,16 @@ class KnnIndexCommitSpec extends SparkSpec {
       .select("q_id", "rk", "node", "sim").collect()
       .map(_.toSeq).toSeq.sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]))
 
-  private def withFault[T](under: String)(op: => T): T = {
+  private def withFault[T](under: String, rename: Boolean = false)(op: => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.file.impl", classOf[FailingLocalFs].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
-    FailingLocalFs.failUnder = Some(under)
+    if (rename) FailingLocalFs.renameFailsUnder = Some(under)
+    else FailingLocalFs.failUnder = Some(under)
     try op
     finally {
       FailingLocalFs.failUnder = None
+      FailingLocalFs.renameFailsUnder = None
       conf.unset("fs.file.impl")
       conf.unset("fs.file.impl.disable.cache")
     }
@@ -148,6 +157,17 @@ class KnnIndexCommitSpec extends SparkSpec {
         f.after(name)
       } finally dropIndex(name)
     }
+
+  test("a bucket rename that returns false raises, not drops the bucket") {
+    val name = "knn_commit_rename_false"
+    try {
+      KnnGraph.saveIndex(build(base), base, cs, name, buckets = 8)
+      val ex = intercept[java.io.IOException](
+        withFault(s"/${name}_nodes__stage/bkt=", rename = true)(
+          StreamingKnnIndex.ingestBatch(batch, name, cs, 12, 3, 8)))
+      assert(ex.getMessage.contains("cannot rename"), ex.toString)
+    } finally dropIndex(name)
+  }
 
   test("a node table renamed into place counts all its rows, per bucket") {
     val name = "knn_commit_rename"
