@@ -259,8 +259,7 @@ object ScaleStress {
         println(f"R=$r%2d n=$n%6d full-index=$fullS%5.1f s " +
           f"bucket-pruned=$idxS%5.1f s [$sel]")
       } finally {
-        spark.sql("DROP TABLE IF EXISTS stress_ivf_cells")
-        spark.sql("DROP TABLE IF EXISTS stress_ivf_centroids")
+        graft.llm.IndexCommit.dropIndex(spark, "stress_ivf")
         rep.unpersist()
       }
     }
@@ -330,9 +329,7 @@ object ScaleStress {
           f"ivfpq($nProbe/$nCells cells) cand=$ivfCand%8d ($pct%4.1f%%) $ivfS%5.1f s | " +
           f"persisted $idxS%5.1f s [$sel]")
       } finally {
-        spark.sql("DROP TABLE IF EXISTS stress_pq_codes")
-        spark.sql("DROP TABLE IF EXISTS stress_pq_coarse")
-        spark.sql("DROP TABLE IF EXISTS stress_pq_cb")
+        graft.llm.IndexCommit.dropIndex(spark, "stress_pq")
         rep.unpersist()
       }
     }
@@ -2062,7 +2059,7 @@ object ScaleStress {
       // (2) FROZEN codebook, drifted corpus (what per-batch maintenance
       // correctly preserves — shown here at full-drift steady state)
       val cs1 = csOf(drifted)
-      val (cbOld, m, dimsPer) = KnnGraph.loadCodebook(spark, "stress_pqdrift")
+      val (cbOld, m, dimsPer) = graft.llm.Pq.loadCodebook(spark, "stress_pqdrift")
       KnnGraph.saveIndexPqWith(
         KnnGraph.build(drifted, cs1, degree = 24, nProbe = 3),
         drifted, cs1, cbOld, m, dimsPer, "stress_pqdrift", buckets = 8)

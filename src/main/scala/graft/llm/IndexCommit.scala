@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions.col
 
 import graft.sources.Bucketing
 
-/** The one write path of a persisted k-NN index: the `<name>_nodes`,
-  * `<name>_entries` and `<name>_cb` tables of [[KnnGraph.saveIndex]]. Every
-  * maintenance op — [[KnnGraph.saveIndex]], [[KnnGraph.saveIndexPqWith]],
-  * [[KnnGraph.saveIndexDelta]] (behind
+/** The one write path of every persisted vector index: the k-NN graph
+  * ([[KnnGraph.saveIndex]]: `<name>_nodes`, `<name>_entries`, `<name>_cb`),
+  * the IVF index ([[Ivf.saveIndex]]: `<name>_cells`, `<name>_centroids`)
+  * and the IVFPQ index ([[Pq.saveIndex]]: `<name>_codes`, `<name>_coarse`,
+  * `<name>_cb`). Every op that writes one — those saves,
+  * [[KnnGraph.saveIndexPqWith]], [[KnnGraph.saveIndexDelta]] (behind
   * [[graft.streaming.StreamingKnnIndex]]), [[KnnGraph.refreshCodebook]] and
   * [[KnnGraph.rebucket]] — hands its new tables to [[write]] as lazy
   * frames, which may read the live tables they replace.
@@ -23,7 +25,7 @@ import graft.sources.Bucketing
   * first. Only then does the commit run, and it runs no Spark job — just
   * catalog calls and directory renames:
   *  - a whole table: drop the live table, rename the stage table into its
-  *    place, and for the node layout re-register the partitions (a rename
+  *    place, and for a bucketed layout re-register the partitions (a rename
   *    leaves every partition location at the stage path, where the renamed
   *    table would silently read 0 rows);
   *  - a bucket-targeted node write (`parts`): swap exactly those `bkt=k`
@@ -32,15 +34,20 @@ import graft.sources.Bucketing
   * A directory rename that fails raises, in both cases: it is never taken
   * for an emptied bucket.
   *
-  * Tables commit in the order given, and every caller gives `<name>_nodes`
-  * last. The replay gate of [[graft.streaming.StreamingKnnIndex.ingestBatch]]
-  * anti-joins a batch on the node ids, so a batch whose commit was cut
-  * before the node swap reruns in full against the unchanged node table,
-  * and its entry merge, a per-cell minimum, gives the same medoids over its
-  * own committed result. Cut the other way round, the gate would find the
-  * new ids and skip the entry write for good. The commit is short but not
-  * atomic across tables or partitions, so the index name keeps its
-  * single-writer contract.
+  * Tables commit in the order given, and every caller gives its bucketed
+  * table — `<name>_nodes`, `<name>_cells` or `<name>_codes` — last, after
+  * the small tables a search reads beside it. The replay gate of
+  * [[graft.streaming.StreamingKnnIndex.ingestBatch]] anti-joins a batch on
+  * the node ids, so a batch whose commit was cut before the node swap
+  * reruns in full against the unchanged node table, and its entry merge, a
+  * per-cell minimum, gives the same medoids over its own committed result.
+  * Cut the other way round, the gate would find the new ids and skip the
+  * entry write for good. An IVF or IVFPQ save cut mid-commit leaves a
+  * centroid or codebook table that no longer matches the cell table; its
+  * rerun rewrites all of them. The commit is short but not atomic across
+  * tables or partitions, so every index name keeps a single-writer
+  * contract: one op at a time writes it, and no search reads it during a
+  * commit.
   *
   * A fresh JVM's in-memory catalog forgets a prior run's tables while the
   * warehouse keeps their directories, which would fail the next create:
@@ -48,13 +55,17 @@ import graft.sources.Bucketing
   * name. */
 private[graft] object IndexCommit {
 
-  /** A table's new contents. `buckets` > 0 writes the node-record layout:
-    * partitioned on the bucket id `bkt` (so `bkt=k` holds exactly bucket
-    * k's rows, one file each), bucketed and sorted on `vec_id`. `parts` =
-    * Some(ks) replaces only the partitions `bkt=k`; `df` then holds the
-    * rows of those buckets. */
-  final case class Table(name: String, df: DataFrame, buckets: Int = 0,
-      parts: Option[Seq[Int]] = None)
+  /** The bucketed layout of an index's serving table: `n` buckets on
+    * `key` — `vec_id` for graph nodes, `cell` for IVF and IVFPQ cells. */
+  final case class Buckets(key: String, n: Int)
+
+  /** A table's new contents. A `layout` writes it partitioned on the bucket
+    * id `bkt` of its key (so `bkt=k` holds exactly bucket k's rows, one
+    * file each), bucketed and sorted on the key. `parts` = Some(ks)
+    * replaces only the partitions `bkt=k`; `df` then holds the rows of
+    * those buckets. */
+  final case class Table(name: String, df: DataFrame,
+      layout: Option[Buckets] = None, parts: Option[Seq[Int]] = None)
 
   /** Stage every table, then commit them in order. */
   def write(tables: Table*): Unit = {
@@ -62,19 +73,22 @@ private[graft] object IndexCommit {
     tables.foreach(commit)
   }
 
-  /** Drop an index's tables with their directories. */
+  /** Drop an index's tables, and the stage tables a failed op left, with
+    * their directories. */
   def dropIndex(spark: SparkSession, name: String): Unit =
-    Seq("nodes", "entries", "cb").foreach(t => drop(spark, s"${name}_$t"))
+    for (t <- Seq("nodes", "entries", "cb", "cells", "centroids", "codes", "coarse");
+         table <- Seq(s"${name}_$t", stageOf(s"${name}_$t")))
+      drop(spark, table)
 
   private def stageOf(table: String): String = s"${table}__stage"
 
   private def stage(t: Table): Unit = {
     drop(t.df.sparkSession, stageOf(t.name))
-    val w =
-      if (t.buckets == 0) t.df.write
-      else t.df.withColumn("bkt", Bucketing.bucketId(col("vec_id"), t.buckets))
+    val w = t.layout.fold(t.df.write) { case Buckets(key, n) =>
+      t.df.withColumn("bkt", Bucketing.bucketId(col(key), n))
         .repartition(col("bkt"))
-        .write.partitionBy("bkt").bucketBy(t.buckets, "vec_id").sortBy("vec_id")
+        .write.partitionBy("bkt").bucketBy(n, key).sortBy(key)
+    }
     w.format("parquet").saveAsTable(stageOf(t.name))
   }
 
@@ -88,7 +102,7 @@ private[graft] object IndexCommit {
         // the catalog ignores a directory rename that returns false
         if (!fsOf(spark).exists(dir(spark, live)))
           throw new IOException(s"IndexCommit: ${dir(spark, live)} missing after rename")
-        if (t.buckets > 0) spark.sql(s"ALTER TABLE $live RECOVER PARTITIONS")
+        if (t.layout.nonEmpty) spark.sql(s"ALTER TABLE $live RECOVER PARTITIONS")
       case Some(ks) =>
         val fs = fsOf(spark)
         def at(table: String, k: Int) = new Path(dir(spark, table), s"bkt=$k")

@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
@@ -17,6 +19,11 @@ import graft.functions.GraftFunctions
   * index build, amortized over all queries); each query's candidate scan
   * touches nProbe/k of the corpus. The probe fan-out and the rerank both run
   * through the codegen [[graft.functions.VectorDot]].
+  *
+  * The persisted index shares its machinery with the other vector indexes:
+  * it is written through [[IndexCommit]], their one write path, and its
+  * search collects through [[Pq.bounded]], their one bounded driver
+  * collect.
   */
 object Ivf {
 
@@ -172,16 +179,18 @@ object Ivf {
   }
 
   /** Persist the index in the bucketed-by-cell layout the fit scaladoc
-    * promises: `<name>_cells` is a catalog table bucketed (and sorted) on
-    * `cell`, `<name>_centroids` a plain k-row table. One shuffle at index
+    * promises: `<name>_cells` in the cell layout of [[IndexCommit]]
+    * (partitioned on the bucket id of `cell`, bucketed and sorted on
+    * `cell`), `<name>_centroids` a plain k-row table. One shuffle at index
     * build time, amortized over every later probe — the bucket metadata
     * both co-locates each cell's vectors AND lets a probe's `cell IN (…)`
-    * filter prune unprobed buckets at the file level. */
-  def saveIndex(model: Model, name: String, buckets: Int = 16): Unit = {
-    graft.sources.Bucketing.writeBucketed(model.indexed, s"${name}_cells", "cell", buckets)
-    model.centroids.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${name}_centroids")
-  }
+    * filter prune unprobed buckets at the file level. Both tables are
+    * staged, then committed with `<name>_cells` last, so a failed save
+    * leaves the previous index serving. */
+  def saveIndex(model: Model, name: String, buckets: Int = 16): Unit =
+    IndexCommit.write(IndexCommit.Table(s"${name}_centroids", model.centroids),
+      IndexCommit.Table(s"${name}_cells", model.indexed,
+        Some(IndexCommit.Buckets("cell", buckets))))
 
   /** Reload a [[saveIndex]]-persisted index. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, name: String): Model =
@@ -192,18 +201,22 @@ object Ivf {
     * a literal IN filter on the bucketed table, so the scan reads only
     * nProbe-worth of buckets (`SelectedBucketsCount` in the plan) instead of
     * the whole corpus. THIS is IVF's scale win — candidate IO proportional
-    * to nProbe/k of the index, from layout alone. The collect is bounded by
-    * k rows regardless of query-batch size. */
+    * to nProbe/k of the index, from layout alone. The probe frame
+    * (queries × nProbe rows) is read twice, for the cell set and by the
+    * rerank, so it is evaluated once, through the [[Pq.bounded]] collect
+    * (a larger query batch raises), and the rerank reads that local
+    * relation. */
   def searchIndexed(
       spark: org.apache.spark.sql.SparkSession, name: String,
       queries: DataFrame, topK: Int, nProbe: Int): DataFrame = {
     GraftFunctions.register(spark)
     val model = loadIndex(spark, name)
-    // eager tiny materialization: read twice (cell collect + rerank join)
-    val probes = probeCells(model, queries, nProbe).localCheckpoint(true)
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).sorted
-    rerank(probes,
-      model.indexed.filter(col("cell").isin(cells.toIndexedSeq.map(x => x: Any): _*)),
+    val probeDf = probeCells(model, queries, nProbe)
+    val rows = Pq.bounded(probeDf, "Ivf.searchIndexed probe set",
+      "chunk the query set and issue multiple searches")
+    val cells = rows.map(_.getAs[Int]("cell")).distinct.sorted
+    rerank(spark.createDataFrame(rows.asJava, probeDf.schema),
+      model.indexed.filter(col("cell").isin(cells.map(x => x: Any): _*)),
       topK)
   }
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,11 @@ import graft.operators.VertexRounds
   * only NEW frontier nodes (visited beam rows carry their sims), keep
   * the best `beam` per query. Per round per query the work is ≤
   * beam·degree candidate lookups — independent of corpus size, the
-  * property the graph family exists for. */
+  * property the graph family exists for.
+  *
+  * The PQ paths (codebook, encode, lookup tables, `<name>_cb`) and every
+  * bounded driver collect run through the shared core in [[Pq]]; every
+  * index write goes through [[IndexCommit]]. */
 object KnnGraph {
 
   /** (cell, centroid, cn) from a pinned matrix — bounded driver-side
@@ -491,7 +495,13 @@ object KnnGraph {
       name: String, buckets: Int = 16): Unit =
     IndexCommit.write(
       IndexCommit.Table(s"${name}_entries", entryMedoids(emb, cs)),
-      IndexCommit.Table(s"${name}_nodes", nodesFrame(edges, emb), buckets))
+      nodesTable(name, nodesFrame(edges, emb), buckets))
+
+  /** `<name>_nodes` in the node-record layout: bucketed on `vec_id`. */
+  private def nodesTable(name: String, df: DataFrame, buckets: Int,
+      parts: Option[Seq[Int]] = None): IndexCommit.Table =
+    IndexCommit.Table(s"${name}_nodes", df,
+      Some(IndexCommit.Buckets("vec_id", buckets)), parts)
 
   /** The per-node serving record: (vec_id, embedding, nbrs). */
   private def nodesFrame(edges: DataFrame, emb: DataFrame): DataFrame =
@@ -514,8 +524,8 @@ object KnnGraph {
     * lists) — per round the index IO is proportional to the buckets the
     * ≤ queries·beam frontier touches, never the corpus.
     *
-    * Declared limits (the [[Pq.searchIndexed]] bounded-collect contract,
-    * shared by all six searches): entry cells ≤ 65,536 and queries·beam
+    * Declared limits (the [[Pq.bounded]] collect contract of every
+    * vector-index search): entry cells ≤ 65,536 and queries·beam
     * ≤ 65,536. Each collect runs through a limit ONE ROW past the cap or
     * is checked against it, and raises IllegalArgumentException — it
     * never degrades.
@@ -558,39 +568,18 @@ object KnnGraph {
     * encoded through PINNED grid-row sub-codebooks (rows
     * [cbStart, cbStart+nCodebook) of [[Pq.grid]] — the q183/q189
     * fixed-parameter discipline, kept DISJOINT from the graph's
-    * centroid rows), and the codebook persists as `<name>_cb` in
-    * [[Pq.saveIndex]]'s shape. Because the record is columnar parquet,
-    * a beam hop reads ONLY (vec_id, codes, nbrs) — the ReadSchema
+    * centroid rows), and the codebook persists as `<name>_cb`
+    * ([[Pq.cbTable]], the IVFPQ index's codebook table). Because the
+    * record is columnar parquet, a beam hop reads ONLY (vec_id, codes,
+    * nbrs) — the ReadSchema
     * never includes the embedding until the rerank probe, which is the
     * PQ memory story realized at the storage layer. */
   def saveIndexPq(edges: DataFrame, emb: DataFrame, cs: Array[Array[Float]],
       m: Int, dimsPer: Int, nCodebook: Int, cbStart: Int, name: String,
       buckets: Int = 16): Unit =
     saveIndexPqWith(edges, emb, cs,
-      pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart), m, dimsPer,
+      Pq.pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart), m, dimsPer,
       name, buckets)
-
-  /** Sub-codebooks from PINNED grid rows [cbStart, cbStart+nCodebook) —
-    * the q183/q189 fixed-parameter discipline (determinism over
-    * training); raises if the corpus is missing any pinned row. */
-  private[graft] def pinnedCodebook(emb: DataFrame, m: Int, dimsPer: Int,
-      nCodebook: Int, cbStart: Int): Array[Array[Array[Long]]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cbRows: Map[Long, Array[Long]] = Pq.grid(emb)
-      .filter(col("vec_id") >= cbStart &&
-        col("vec_id") < cbStart + nCodebook)
-      .as[(Long, Seq[Long])].collect()
-      .map { case (id, v) => id -> v.toArray }.toMap
-    require(cbRows.size == nCodebook,
-      s"PQ pinned-parameter contract: corpus must contain vec_ids " +
-        s"$cbStart..${cbStart + nCodebook - 1} to seed the sub-codebooks; " +
-        s"found ${cbRows.size}")
-    Array.tabulate(m, nCodebook) { (mm, j) =>
-      java.util.Arrays.copyOfRange(
-        cbRows((cbStart + j).toLong), mm * dimsPer, (mm + 1) * dimsPer)
-    }
-  }
 
   /** [[saveIndexPq]] with an explicit codebook — the maintenance path
     * ([[graft.streaming.StreamingKnnIndex]]) reloads the PERSISTED
@@ -599,21 +588,11 @@ object KnnGraph {
     * across batches — re-deriving from pinned rows would silently
     * change them if the pinned rows themselves were deleted). */
   private[graft] def saveIndexPqWith(edges: DataFrame, emb: DataFrame,
-      cs: Array[Array[Float]], cb: Array[Array[Array[Long]]], m: Int,
+      cs: Array[Array[Float]], cb: Pq.Codebook, m: Int,
       dimsPer: Int, name: String, buckets: Int): Unit =
-    IndexCommit.write(cbTable(emb.sparkSession, name, cb),
+    IndexCommit.write(Pq.cbTable(emb.sparkSession, name, cb),
       IndexCommit.Table(s"${name}_entries", entryMedoids(emb, cs)),
-      IndexCommit.Table(s"${name}_nodes",
-        pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
-
-  /** The `<name>_cb` table: one (m, j, sub) row per sub-codebook entry. */
-  private def cbTable(spark: org.apache.spark.sql.SparkSession, name: String,
-      cb: Array[Array[Array[Long]]]): IndexCommit.Table = {
-    import spark.implicits._
-    IndexCommit.Table(s"${name}_cb",
-      (for (mm <- cb.indices; j <- cb(mm).indices)
-        yield (mm, j, cb(mm)(j).toSeq)).toDF("m", "j", "sub"))
-  }
+      nodesTable(name, pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
 
   /** The PQ-augmented serving record: (vec_id, embedding, codes, nbrs) —
     * codes through the explicit codebook ([[Pq.encode]]'s kernel). The
@@ -625,7 +604,7 @@ object KnnGraph {
     * precedent (static-object kernel behind a codegen Expression) is
     * the upgrade; until then the simpler kernel wins on clarity. */
   private def pqNodesFrame(edges: DataFrame, emb: DataFrame,
-      cb: Array[Array[Array[Long]]], m: Int, dimsPer: Int): DataFrame = {
+      cb: Pq.Codebook, m: Int, dimsPer: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val codes = Pq.grid(emb).as[(Long, Seq[Long])]
@@ -686,7 +665,7 @@ object KnnGraph {
     val edgesAff = edges.filter(inBkts(col("src")))
     val full =
       if (spark.table(s"${name}_nodes").columns.contains("codes")) {
-        val (cb, m, dimsPer) = loadCodebook(spark, name)
+        val (cb, m, dimsPer) = Pq.loadCodebook(spark, name)
         // re-encode only the rows being rewritten (same pinned codebook,
         // so codes stay comparable across batches — the q280 contract)
         pqNodesFrame(edgesAff, embAff, cb, m, dimsPer)
@@ -727,22 +706,8 @@ object KnnGraph {
     // its partition (spec-pinned); entries commit before nodes (see
     // [[IndexCommit]] for why a replayed batch then converges)
     IndexCommit.write(IndexCommit.Table(s"${name}_entries", newEntries),
-      IndexCommit.Table(s"${name}_nodes", full, buckets, Some(bkts)))
+      nodesTable(name, full, buckets, Some(bkts)))
     (bkts, Bucketing.partitionBytes(spark, s"${name}_nodes", Some(bkts)))
-  }
-
-  /** Reload a [[saveIndexPq]] codebook from its persisted table:
-    * (cb, m, dimsPer). */
-  private[graft] def loadCodebook(spark: org.apache.spark.sql.SparkSession,
-      name: String): (Array[Array[Array[Long]]], Int, Int) = {
-    import spark.implicits._
-    val cbRows = spark.table(s"${name}_cb")
-      .as[(Int, Int, Seq[Long])].collect()
-    val m = cbRows.map(_._1).max + 1
-    val nCodebook = cbRows.map(_._2).max + 1
-    val cb: Array[Array[Array[Long]]] = Array.ofDim(m, nCodebook)
-    cbRows.foreach { case (mm, j, sub) => cb(mm)(j) = sub.toArray }
-    (cb, m, cb(0)(0).length)
   }
 
   /** Reload a persisted index into the maintenance shape: (embeddings,
@@ -782,10 +747,9 @@ object KnnGraph {
       cs: Array[Array[Float]], m: Int, dimsPer: Int, nCodebook: Int,
       cbStart: Int, buckets: Int): Unit = {
     val (emb, edges) = loadIndex(spark, name)
-    val cb = pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart)
-    IndexCommit.write(cbTable(spark, name, cb),
-      IndexCommit.Table(s"${name}_nodes",
-        pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
+    val cb = Pq.pinnedCodebook(emb, m, dimsPer, nCodebook, cbStart)
+    IndexCommit.write(Pq.cbTable(spark, name, cb),
+      nodesTable(name, pqNodesFrame(edges, emb, cb, m, dimsPer), buckets))
   }
 
   /** Re-bucket a persisted index — the capacity half of the index
@@ -821,7 +785,7 @@ object KnnGraph {
     // membership moves — O(index) read+write is the floor, and this now
     // pays exactly it.
     val nodesT = spark.table(s"${name}_nodes")
-    IndexCommit.write(IndexCommit.Table(s"${name}_nodes",
+    IndexCommit.write(nodesTable(name,
       nodesT.select(nodesT.columns.filter(_ != "bkt").map(col).toIndexedSeq: _*),
       buckets))
   }
@@ -839,14 +803,14 @@ object KnnGraph {
     * Distributed one-pass kernel, no index reads beyond `<name>_cb`. */
   def pqDistortion(spark: org.apache.spark.sql.SparkSession, name: String,
       emb: DataFrame): DataFrame = {
-    val (cb, m, dimsPer) = loadCodebook(spark, name)
+    val (cb, m, dimsPer) = Pq.loadCodebook(spark, name)
     pqDistortionWith(emb, cb, m, dimsPer)
   }
 
   /** [[pqDistortion]] under an explicit codebook (no index needed) —
     * the q283 oracle-certified kernel. */
   def pqDistortionWith(emb: DataFrame,
-      cb: Array[Array[Array[Long]]], m: Int, dimsPer: Int): DataFrame = {
+      cb: Pq.Codebook, m: Int, dimsPer: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     Pq.grid(emb).as[(Long, Seq[Long])]
@@ -1038,8 +1002,8 @@ object KnnGraph {
       import spark.implicits._
       def records(ids: Seq[Long]): DataFrame =
         probeRecords(nodes, ids, onProbe, buckets)
-      lazy val qs = bounded(Pq.grid(queries).as[(Long, Seq[Long])],
-        s"$op query batch", "chunk the query set")
+      lazy val qs = Pq.bounded(Pq.grid(queries).as[(Long, Seq[Long])],
+        s"KnnGraph.$op query batch", "chunk the query set")
       lazy val luts = lutFrame(spark, name, qs)
       val bm = beamSearch(op, broadcast(qs.map(_._1).toDF("q_id")),
         spark.table(s"${name}_entries"), ids => admit(records(ids), pred),
@@ -1062,11 +1026,6 @@ object KnnGraph {
         spark.createDataFrame(top.collect().toSeq.asJava, top.schema)
       }
   }
-
-  /** Bounded driver-side id collect — the [[Pq.searchIndexed]] serving
-    * contract: collect through a limit ONE ROW past the cap; raise,
-    * never degrade. */
-  private val IdCap = 65536
 
   /** One driver-held beam row: (q_id, node, key, nbr_ids), the key being
     * the float paths' `sim` or the PQ paths' `dist`. */
@@ -1136,16 +1095,16 @@ object KnnGraph {
       df.select("q_id", "node", rank.key, "nbr_ids").as(enc).collect().toSeq
     def keep(rows: Seq[Beam[K]]): Seq[Beam[K]] = {
       val out = rank.best(rows, beam).flatten
-      require(out.length <= IdCap,
-        s"KnnGraph.$op beam state exceeds the $IdCap bounded-collect " +
+      require(out.length <= Pq.CollectCap,
+        s"KnnGraph.$op beam state exceeds the ${Pq.CollectCap} bounded-collect " +
           "contract - lower beam x queries or chunk the query batch")
       out
     }
     def inRound[T](r: Int)(body: => T): T =
       VertexRounds.labelled(spark.sparkContext, s"KnnGraph.$op round $r")(body)
     var bm = inRound(0) {
-      val entryIds = bounded(entries.select("node").distinct().as[Long],
-        s"$op entry id set", "use fewer cells")
+      val entryIds = Pq.bounded(entries.select("node").distinct().as[Long],
+        s"KnnGraph.$op entry id set", "use fewer cells")
       keep(collect(score(queryIds.crossJoin(entryIds.toDF("node")),
           records(entryIds))
         .withColumn("rk", row_number().over(rank.window))
@@ -1194,17 +1153,14 @@ object KnnGraph {
   /** Per-query SDC lookup tables over `name`'s persisted codebook, as a
     * broadcast frame of one (q_id, lut) row per query — lut is m × K
     * longs, the distance from the query's own code to every sub-codebook
-    * entry (the [[Pq.searchIndexed]] shape; the oracle replays the same
-    * integer distances through its own join). */
+    * entry ([[Pq.lut]], the table every PQ search builds; the oracle
+    * replays the same integer distances through its own join). */
   private def lutFrame(spark: org.apache.spark.sql.SparkSession, name: String,
       qs: Seq[(Long, Seq[Long])]): DataFrame = {
     import spark.implicits._
-    val (cb, m, dimsPer) = loadCodebook(spark, name)
-    val nCodebook = cb(0).length
+    val (cb, m, dimsPer) = Pq.loadCodebook(spark, name)
     broadcast(qs.map { case (qid, qg) =>
-      val qCodes = Pq.encode(qg.toIndexedSeq, m, dimsPer, cb)
-      qid -> (0 until m).map(mm => (0 until nCodebook).map(j =>
-        Pq.d2(cb(mm)(qCodes(mm)).toIndexedSeq, 0, cb(mm)(j))))
+      qid -> Pq.lut(qg.toIndexedSeq, m, dimsPer, cb).map(_.toSeq).toSeq
     }.toDF("q_id", "lut"))
   }
 
@@ -1231,7 +1187,7 @@ object KnnGraph {
     * exactly the hop-explode → distinct → anti-join set the distributed
     * rounds computed, built from state the bounded-collect contract
     * already holds driver-side. Returns (sorted (q_id, node) pairs,
-    * distinct ids), ids re-checked against the IdCap. */
+    * distinct ids), ids re-checked against [[Pq.CollectCap]]. */
   private def frontierOf(op: String,
       bm: Seq[(Long, Long, Seq[Long])]): (Seq[(Long, Long)], Seq[Long]) = {
     val inBeam: Map[Long, Set[Long]] =
@@ -1240,17 +1196,10 @@ object KnnGraph {
       if (ns == null) Nil else ns.filterNot(inBeam(q)).map(d => (q, d))
     }.distinct.sorted
     val ids = pairs.map(_._2).distinct
-    require(ids.length <= IdCap,
-      s"KnnGraph.$op frontier id set exceeds the $IdCap bounded-collect " +
+    require(ids.length <= Pq.CollectCap,
+      s"KnnGraph.$op frontier id set exceeds the ${Pq.CollectCap} bounded-collect " +
         "contract - lower beam x queries or chunk the query batch")
     (pairs, ids)
-  }
-
-  private def bounded[T](ds: Dataset[T], what: String, fix: String): Seq[T] = {
-    val rows = ds.limit(IdCap + 1).collect().toSeq
-    require(rows.length <= IdCap,
-      s"KnnGraph.$what exceeds the $IdCap bounded-collect contract - $fix")
-    rows
   }
 
   /** The pruned node-record probe: IN over the bucket column reaches

@@ -9769,7 +9769,7 @@ object LlmQueries {
       |         AS energy
       |FROM d JOIN e ON e.vec_id = d.vec_id ORDER BY d.vec_id""".stripMargin) { (s, dir) =>
     val emb = Tables(s, dir, "embeddings")
-    val cb = KnnGraph.pinnedCodebook(emb, m = 8, dimsPer = 8,
+    val cb = Pq.pinnedCodebook(emb, m = 8, dimsPer = 8,
       nCodebook = 8, cbStart = 12)
     KnnGraph.pqDistortionWith(emb, cb, m = 8, dimsPer = 8)
       .orderBy("vec_id")

@@ -118,6 +118,56 @@ class IvfSpec extends SparkSpec {
     }
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]))
+
+  test("saveIndex: a write fault on the cells leaves the previous index serving; a rerun succeeds") {
+    val emb = Tables(spark, sf0001, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+    val name = "ivf_fault_spec"
+    def serve() = rows(Ivf.searchIndexed(spark, name, queries, topK = 3, nProbe = 4))
+    val next = Ivf.fitColumnar(emb, k = 6, seed = 7L)
+    try {
+      Ivf.saveIndex(Ivf.fitColumnar(emb, k = 8, seed = 42L), name, buckets = 8)
+      val before = serve()
+      val ex = intercept[Exception](FailingLocalFs.during(spark, s"/${name}_cells")(
+        Ivf.saveIndex(next, name, buckets = 8)))
+      assert(FailingLocalFs.injected(ex), ex.toString)
+      assert(serve() == before, "the failed save changed what the index serves")
+      Ivf.saveIndex(next, name, buckets = 8)
+      assert(serve() == rows(Ivf.search(next, queries, topK = 3, nProbe = 4)))
+    } finally IndexCommit.dropIndex(spark, name)
+  }
+
+  test("saveIndex over stray warehouse directories the catalog does not know succeeds") {
+    val emb = Tables(spark, sf0001, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+    val name = "ivf_stray_spec"
+    val model = Ivf.fitColumnar(emb, k = 8, seed = 42L)
+    try {
+      FailingLocalFs.strayDirs(spark, s"${name}_cells", s"${name}_centroids",
+        s"${name}_cells__stage")
+      Ivf.saveIndex(model, name, buckets = 8)
+      assert(rows(Ivf.searchIndexed(spark, name, queries, topK = 3, nProbe = 4)) ==
+        rows(Ivf.search(model, queries, topK = 3, nProbe = 4)))
+    } finally IndexCommit.dropIndex(spark, name)
+  }
+
+  test("searchIndexed leaves getPersistentRDDs as it found it") {
+    val emb = Tables(spark, sf0001, "embeddings")
+    val name = "ivf_rdd_spec"
+    val sc = spark.sparkContext
+    try {
+      Ivf.saveIndex(Ivf.fitColumnar(emb, k = 8, seed = 42L), name, buckets = 8)
+      val before = sc.getPersistentRDDs.keySet
+      Ivf.searchIndexed(spark, name, emb.filter(col("vec_id") < 5), topK = 3,
+        nProbe = 4).collect()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"searchIndexed left ${left.size} RDDs persisted")
+    } finally IndexCommit.dropIndex(spark, name)
+  }
+
   test("tfidf pipeline yields a vector per doc; stopwords carry no weight") {
     import spark.implicits._
     val docs = Seq(

@@ -581,7 +581,7 @@ class KnnGraphSpec extends SparkSpec {
       // the explicit-codebook kernel (what q283's oracle certifies)
       val viaIndex = KnnGraph.pqDistortion(spark, "knn_drift_spec", emb)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val cb = KnnGraph.pinnedCodebook(emb, 8, 8, 8, 12)
+      val cb = Pq.pinnedCodebook(emb, 8, 8, 8, 12)
       val viaCb = KnnGraph.pqDistortionWith(emb, cb, 8, 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(viaIndex == viaCb)

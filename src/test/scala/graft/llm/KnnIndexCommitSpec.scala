@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
@@ -34,6 +34,44 @@ class FailingLocalFs extends LocalFileSystem {
 object FailingLocalFs {
   @volatile var failUnder: Option[String] = None
   @volatile var renameFailsUnder: Option[String] = None
+
+  /** Runs `op` with this filesystem installed: file creation under a path
+    * containing `under` throws or, with `rename`, renames of such a path
+    * return false. */
+  def during[T](spark: SparkSession, under: String, rename: Boolean = false)(op: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[FailingLocalFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    if (rename) renameFailsUnder = Some(under)
+    else failUnder = Some(under)
+    try op
+    finally {
+      failUnder = None
+      renameFailsUnder = None
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** True if `ex` or one of its causes is an injected write fault. */
+  def injected(ex: Throwable): Boolean =
+    Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected write fault"))
+
+  /** Leaves a directory with a stray file in the warehouse for each of
+    * `tables`, which the catalog does not know: what a crashed JVM leaves. */
+  def strayDirs(spark: SparkSession, tables: String*): Unit = {
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
+    tables.foreach(t => fs.create(new Path(new Path(wh, t), "stray")).close())
+  }
+
+  /** The warehouse directories whose names start with `prefix`. */
+  def warehouseDirs(spark: SparkSession, prefix: String): Seq[String] = {
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    wh.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(wh).toSeq
+      .map(_.getPath.getName).filter(_.startsWith(prefix))
+  }
 }
 
 /** Failure semantics of the k-NN index write path ([[IndexCommit]]): each
@@ -54,7 +92,7 @@ class KnnIndexCommitSpec extends SparkSpec {
   private def base = emb.filter(col("vec_id") >= 40)
   private def batch = emb.filter(col("vec_id") < 40)
   private def cbOf(e: DataFrame, cbStart: Int) =
-    KnnGraph.pinnedCodebook(e, m = 8, dimsPer = 8, nCodebook = 8, cbStart)
+    Pq.pinnedCodebook(e, m = 8, dimsPer = 8, nCodebook = 8, cbStart)
   private lazy val queries = emb.filter(col("vec_id") < 6)
 
   private def savePq(name: String, e: DataFrame, degree: Int = 12): Unit =
@@ -74,20 +112,8 @@ class KnnIndexCommitSpec extends SparkSpec {
       .select("q_id", "rk", "node", "sim").collect()
       .map(_.toSeq).toSeq.sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]))
 
-  private def withFault[T](under: String, rename: Boolean = false)(op: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.file.impl", classOf[FailingLocalFs].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    if (rename) FailingLocalFs.renameFailsUnder = Some(under)
-    else FailingLocalFs.failUnder = Some(under)
-    try op
-    finally {
-      FailingLocalFs.failUnder = None
-      FailingLocalFs.renameFailsUnder = None
-      conf.unset("fs.file.impl")
-      conf.unset("fs.file.impl.disable.cache")
-    }
-  }
+  private def withFault[T](under: String, rename: Boolean = false)(op: => T): T =
+    FailingLocalFs.during(spark, under, rename)(op)
 
   private def dropIndex(name: String): Unit = IndexCommit.dropIndex(spark, name)
 
@@ -129,7 +155,7 @@ class KnnIndexCommitSpec extends SparkSpec {
         nCodebook = 8, cbStart = 40, buckets = 8),
       n => {
         assert(loaded(n) == edgeSet(build(emb)))
-        assert(KnnGraph.loadCodebook(spark, n)._1.map(_.map(_.toSeq).toSeq).toSeq ==
+        assert(Pq.loadCodebook(spark, n)._1.map(_.map(_.toSeq).toSeq).toSeq ==
           cbOf(emb, 40).map(_.map(_.toSeq).toSeq).toSeq)
       }),
     Fault("rebucket", false, "nodes",
@@ -149,9 +175,7 @@ class KnnIndexCommitSpec extends SparkSpec {
         val before = serve(name, f.pq)
         assert(before.nonEmpty)
         val ex = intercept[Exception](withFault(s"/${name}_${f.table}")(f.run(name)))
-        assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
-          .exists(t => String.valueOf(t.getMessage).contains("injected write fault")),
-          ex.toString)
+        assert(FailingLocalFs.injected(ex), ex.toString)
         assert(serve(name, f.pq) == before, "the failed op changed what the index serves")
         f.run(name)
         f.after(name)
@@ -167,6 +191,9 @@ class KnnIndexCommitSpec extends SparkSpec {
           StreamingKnnIndex.ingestBatch(batch, name, cs, 12, 3, 8)))
       assert(ex.getMessage.contains("cannot rename"), ex.toString)
     } finally dropIndex(name)
+    // the failed commit's stage tables go with the index
+    val left = FailingLocalFs.warehouseDirs(spark, name).filter(_.contains("__stage"))
+    assert(left.isEmpty, s"stage directories left: $left")
   }
 
   test("a node table renamed into place counts all its rows, per bucket") {

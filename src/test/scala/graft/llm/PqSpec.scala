@@ -170,4 +170,61 @@ class PqSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS spec_pq_cb")
     }
   }
+
+  test("sdcTopK over a corpus missing a pinned row raises the pinned-parameter contract") {
+    import spark.implicits._
+    // nCodebook=2 needs vec_ids 0..1; row 1 is missing
+    val gap = Seq((0L, Seq(0f, 0f)), (2L, Seq(1f, 1f)), (3L, Seq(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val ex = intercept[IllegalArgumentException] {
+      Pq.sdcTopK(gap, m = 1, dimsPer = 2, nCodebook = 2, nQueries = 1, k = 2).collect()
+    }
+    assert(ex.getMessage.contains("pinned-parameter contract"))
+  }
+
+  /** 40 vectors of dim 4 in two clusters: even ids near 0, odd near 1. */
+  private def twoClusters = {
+    import spark.implicits._
+    (0L until 40L).map { id =>
+      val base = if (id % 2 == 0) 0f else 1f
+      (id, Seq(base + (id % 5) * 0.01f, base, base - (id % 3) * 0.01f, base))
+    }.toDF("vec_id", "embedding")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq
+      .sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]))
+
+  test("saveIndex: a write fault on the codes leaves the previous index serving; a rerun succeeds") {
+    val df = twoClusters
+    val queries = df.filter(col("vec_id") < 3)
+    val name = "pq_fault_spec"
+    def serve() = rows(Pq.searchIndexed(spark, name, queries, nProbe = 1, k = 5))
+    def save(nCells: Int) = Pq.saveIndex(df, nCells, m = 2, dimsPer = 2,
+      nCodebook = 2, name, buckets = 4)
+    try {
+      save(nCells = 2)
+      val before = serve()
+      val ex = intercept[Exception](
+        FailingLocalFs.during(spark, s"/${name}_codes")(save(nCells = 3)))
+      assert(FailingLocalFs.injected(ex), ex.toString)
+      assert(serve() == before, "the failed save changed what the index serves")
+      save(nCells = 3)
+      assert(serve() == rows(Pq.ivfpqTopK(df, nCells = 3, nProbe = 1, m = 2,
+        dimsPer = 2, nCodebook = 2, nQueries = 3, k = 5)))
+    } finally IndexCommit.dropIndex(spark, name)
+  }
+
+  test("saveIndex over stray warehouse directories the catalog does not know succeeds") {
+    val df = twoClusters
+    val name = "pq_stray_spec"
+    try {
+      FailingLocalFs.strayDirs(spark, s"${name}_codes", s"${name}_coarse",
+        s"${name}_cb", s"${name}_codes__stage")
+      Pq.saveIndex(df, nCells = 2, m = 2, dimsPer = 2, nCodebook = 2, name, buckets = 4)
+      assert(rows(Pq.searchIndexed(spark, name, df.filter(col("vec_id") < 3),
+        nProbe = 1, k = 5)) == rows(Pq.ivfpqTopK(df, nCells = 2, nProbe = 1, m = 2,
+        dimsPer = 2, nCodebook = 2, nQueries = 3, k = 5)))
+    } finally IndexCommit.dropIndex(spark, name)
+  }
 }
