@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.file.Files
 
-import graft.Timing.{consume, isolate, rmTree, time, vsPrev, withWindow}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
+
+import graft.Timing.{Point, consume, isolate, point, rmTree, time, vsPrev, withWindow}
 import graft.llm.{MinHash, Rp}
 
 /** Scale-stress harness for the LSH dedup/similarity family — the evidence
@@ -78,20 +82,107 @@ object ScaleStress {
       .drop("__rep")
   }
 
+  /** One planted-vector point, kept in `p`: `emb` replicated `r`×
+    * (eps 0.12), its size n, the cell count that scales with it (n/64,
+    * at least 16), and those cells' centroids ([[centroids]]). */
+  def planted(p: Point, emb: DataFrame,
+      r: Int): (DataFrame, Long, Int, Array[Array[Float]]) = {
+    val rep = p.keep(replicateEmbeddings(emb, r, eps = 0.12)
+      .select("vec_id", "embedding"))
+    val n = rep.count()
+    val nCells = math.max(16, (n / 64).toInt)
+    (rep, n, nCells, centroids(rep, r, nCells))
+  }
+
+  /** The first `k` rep-0 rows of a replicated corpus as centroids: the
+    * unperturbed originals stay well-spread, where the first k replicated
+    * ids would be near-duplicates of ~k/r directions. */
+  def centroids(rep: DataFrame, r: Int, k: Int): Array[Array[Float]] =
+    rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
+      .orderBy("vec_id").limit(k)
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+
+  /** Planted-pair recall of the pair columns `a`, `b` over `n` replicated
+    * ids: every base has `r` replicas numbered base·r + replica, so the
+    * planted pairs are C(r, 2) per base, n·(r − 1)/2 in all, and a found
+    * pair is planted iff its ids share id / r. */
+  def recall(pairs: DataFrame, a: String, b: String, n: Long, r: Int): String = {
+    val expected = n * (r - 1) / 2
+    val hit = pairs.filter((col(a) / r).cast("long") === (col(b) / r).cast("long"))
+      .count()
+    f"found=${pairs.count()}%8d planted=$hit%8d/$expected%d " +
+      f"(recall=${hit.toDouble / expected}%.3f)"
+  }
+
+  /** Per R: `replicate(r)` and its `pairs` kept in one point, the pairs'
+    * wall, and their [[recall]]. */
+  def recallSweep(replicate: Int => DataFrame, pairs: DataFrame => DataFrame,
+      a: String, b: String): Unit =
+    for (r <- Seq(4, 8, 16)) point { p =>
+      val rep = p.keep(replicate(r))
+      val n = rep.count()
+      val (found, secs) = time(p.keep(pairs(rep)))
+      println(f"R=$r%2d n=$n%6d wall=$secs%6.1f s ${recall(found, a, b, n, r)}")
+    }
+
+  /** The exact law between two results: the same rows, duplicates
+    * counted, checked in both directions. */
+  def sameRows(got: DataFrame, want: DataFrame): Boolean =
+    got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0
+
+  /** One throughput curve. Per size n, `gen(n)` is written to a temporary
+    * parquet (untimed), and `chain` over it is timed through the shared
+    * window: one warm run, then the fastest of two. Each point prints the
+    * input bytes, the wall, MB/s and executor cpu per row, and the wall
+    * against the previous point's: a row-local chain must stay flat per
+    * row across doublings. Input bytes are the lengths of the string and
+    * binary columns, the bytes the chain walks (task input metrics
+    * undercount columnar scans). */
+  def throughput(spark: SparkSession, label: String, sizes: Seq[Int])(
+      gen: Int => DataFrame)(chain: DataFrame => DataFrame): Unit =
+    withWindow(spark) { window =>
+      var prev = -1.0
+      for (n <- sizes) {
+        val dir = Files.createTempDirectory("graft_tp")
+        try {
+          gen(n).write.parquet(dir.resolve("in").toString)
+          val in = spark.read.parquet(dir.resolve("in").toString)
+          val bytes = in.agg(sum(in.schema.collect {
+            case f if f.dataType == StringType || f.dataType == BinaryType =>
+              length(col(f.name))
+          }.reduce(_ + _))).head().getLong(0)
+          val t = window.best(2)(consume(chain(in)))
+          println(f"$label%-8s n=$n%7d in=$bytes%11d B wall=${t.wall}%5.2f s " +
+            f"(${bytes / t.wall / 1e6}%7.1f MB/s, " +
+            f"${t.metrics.cpuSec * 1e6 / n}%5.1f cpu-us/row, vs prev ${vsPrev(t.wall, prev)})")
+          prev = t.wall
+        } finally rmTree(dir)
+      }
+    }
+
+  /** The `SelectedBucketsCount` of a bucketed scan's plan; a plan that
+    * pruned no bucket is an error. */
+  def selectedBuckets(plan: String): String =
+    "SelectedBucketsCount: [0-9]+ out of [0-9]+".r.findFirstIn(plan)
+      .getOrElse(sys.error("no bucket pruning in the plan:\n" + plan))
+
+  /** (q_id, rank, vec_id) of top-k rows, the key two searches must share. */
+  def ranked(rows: Array[Row]): Set[(Long, Int, Long)] =
+    rows.map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
+
   /** Relational stress: hash aggregation and the fact⋈fact join strategies
     * at `r`× sf0.1 — reproduces BASELINE's broadcast-estimate-trap and
     * bucketed-join numbers. */
-  def relational(spark: SparkSession, sfDir: String, r: Int): Unit = {
-    val li = replicateFacts(
+  def relational(spark: SparkSession, sfDir: String, r: Int): Unit = point { p =>
+    val li = p.keep(replicateFacts(
       Tables(spark, sfDir, "lineitem")
         .select("l_orderkey", "l_quantity", "l_extendedprice"),
-      "l_orderkey", r).cache()
-    val os = replicateFacts(
+      "l_orderkey", r))
+    val os = p.keep(replicateFacts(
       Tables(spark, sfDir, "orders").select("o_orderkey", "o_totalprice"),
       "o_orderkey", r)
-      .withColumnRenamed("o_orderkey", "l_orderkey").cache()
-    val (nl, _) = time(li.count()); val (no, _) = time(os.count())
-    println(s"relational stress R=$r: lineitem=$nl orders=$no")
+      .withColumnRenamed("o_orderkey", "l_orderkey"))
+    println(s"relational stress R=$r: lineitem=${li.count()} orders=${os.count()}")
 
     val (_, aggS) = time {
       li.groupBy(col("l_orderkey") % 97)
@@ -100,9 +191,9 @@ object ScaleStress {
     println(f"  hash agg: $aggS%.2f s")
 
     // fact⋈fact under the three strategies BASELINE documents; conf
-    // restore, table drops, and cache release are exception-safe so an
-    // OOM mid-stress can't leak -1 broadcast threshold or 16× warehouse
-    // tables into a shared session
+    // restore and table drops are exception-safe so an OOM mid-stress
+    // can't leak -1 broadcast threshold or 16× warehouse tables into a
+    // shared session
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val (_, autoS) = time(li.join(os, "l_orderkey").count())
@@ -120,7 +211,6 @@ object ScaleStress {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS stress_li")
       spark.sql("DROP TABLE IF EXISTS stress_os")
-      li.unpersist(); os.unpersist()
     }
   }
 
@@ -133,27 +223,25 @@ object ScaleStress {
     * intervals) — the measured justification for routing large interval
     * tables through binning instead of relying on the planner. Both shapes
     * asserted row-identical. */
-  def rangeJoinAB(spark: SparkSession, sfDir: String): Unit = {
+  def rangeJoinAB(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.operators.RangeJoin
-    val points = Tables(spark, sfDir, "events")
-      .select("event_id", "value").cache()
+    val points = p.keep(Tables(spark, sfDir, "events").select("event_id", "value"))
     val nPoints = points.count()
     val base = Tables(spark, sfDir, "part").select(
       col("p_partkey"),
       (col("p_partkey") * 2.0).as("lo"),
       (col("p_partkey") * 2.0 + 1 + pmod(col("p_partkey"), lit(7L))).as("hi"))
     println(s"== range join: naive BNL vs binned equi-join, $nPoints points ==")
-    for (r <- Seq(1, 4, 16)) {
+    for (r <- Seq(1, 4, 16)) point { q =>
       // replicas shift lo/hi by a sub-integer offset: interval COUNT grows
       // R× while the covered value range stays fixed (denser bands, the
       // hard direction for a nested loop)
-      val intervals = base
+      val intervals = q.keep(base
         .withColumn("rep", explode(sequence(lit(0), lit(r - 1))))
         .select(
           (col("p_partkey") + col("rep") * lit(100000L)).as("band_id"),
           (col("lo") + col("rep") * 0.37).as("lo"),
-          (col("hi") + col("rep") * 0.37).as("hi"))
-        .cache()
+          (col("hi") + col("rep") * 0.37).as("hi")))
       val nI = intervals.count()
       val (nNaive, naiveS) = time {
         points.join(intervals, col("value") >= col("lo") && col("value") < col("hi"))
@@ -167,17 +255,15 @@ object ScaleStress {
       assert(nNaive == nBinned, s"range-join shapes diverge: $nNaive vs $nBinned")
       println(f"R=$r%2d intervals=$nI%6d rows=$nNaive%9d " +
         f"naive=$naiveS%6.1f s  binned=$binnedS%6.1f s")
-      intervals.unpersist()
     }
-    points.unpersist()
   }
 
   /** Quantized-index A/B for [[Similarity.quantize]] (q73's 100 TB claim,
     * measured): float32 vs int8 index bytes ON DISK (the artifact an ANN
     * service actually loads), top-k wall over each, and the quantized
     * path's recall vs the float path at equal k. */
-  def quantization(spark: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
+  def quantization(spark: SparkSession, sfDir: String): Unit = point { p =>
+    import java.nio.file.Paths
     import graft.llm.Similarity
     def dirBytes(p: String): Long = {
       val d = Paths.get(p)
@@ -188,11 +274,11 @@ object ScaleStress {
         finally walk.close()
       }
     }
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== int8 quantization: index size, top-k wall, recall vs float ==")
-    for (r <- Seq(8, 16)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
+    for (r <- Seq(8, 16)) point { q =>
+      val rep = q.keep(replicateEmbeddings(emb, r, eps = 0.12)
+        .select("vec_id", "embedding"))
       val n = rep.count()
       val base = Files.createTempDirectory("graft-quant-")
       rep.write.mode("overwrite").parquet(s"$base/f32")
@@ -211,10 +297,8 @@ object ScaleStress {
       println(f"R=$r%2d n=$n%6d f32=${f32B / 1024}%6d KiB i8=${i8B / 1024}%6d KiB " +
         f"(${f32B.toDouble / i8B}%.1f x) float=$floatS%5.1f s quant=$quantS%5.1f s " +
         f"recall=$recall%.3f")
-      rep.unpersist()
       rmTree(base) // repeated --quant runs must not accumulate /tmp parquet
     }
-    emb.unpersist()
   }
 
   /** IVF persisted-index A/B (the r3 ask: bucketed persistence landed with a
@@ -226,19 +310,17 @@ object ScaleStress {
     * paths probe the same cells, so the result sets must be identical —
     * asserted — and the delta is pure scan-side IO, which is the entire
     * point of the layout. */
-  def ivf(spark: SparkSession, sfDir: String): Unit = {
+  def ivf(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.Ivf
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== IVF: in-memory full index vs bucketed persisted index (pruned) ==")
     val k = 16
-    for (r <- Seq(8, 16, 64)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
+    for (r <- Seq(8, 16, 64)) point { q =>
+      val rep = q.keep(replicateEmbeddings(emb, r, eps = 0.12)
+        .select("vec_id", "embedding"))
       val n = rep.count()
       val model = Ivf.fitColumnar(rep, k = k, seed = 42L)
-      // derived from the cached rep — recompute is a cheap filter; a
-      // localCheckpoint here would pin blocks across iterations (checkpoint
-      // blocks release only via the async ContextCleaner)
+      // derived from the kept rep — recompute is a cheap filter
       val queries = rep.filter(col("vec_id") < 20)
       try {
         val (full, fullS) = time {
@@ -249,21 +331,13 @@ object ScaleStress {
           val df = Ivf.searchIndexed(spark, "stress_ivf", queries, topK = 10, nProbe = 4)
           (df.collect(), df.queryExecution.executedPlan.toString)
         }
-        val sel = "SelectedBucketsCount: [0-9]+ out of [0-9]+".r
-          .findFirstIn(planStr)
-          .getOrElse(sys.error("no bucket pruning in the searchIndexed plan:\n" + planStr))
-        val key = (rows: Array[org.apache.spark.sql.Row]) =>
-          rows.map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-        assert(key(full) == key(got),
+        val sel = selectedBuckets(planStr)
+        assert(ranked(full) == ranked(got),
           s"pruned search diverged from the full index at R=$r")
         println(f"R=$r%2d n=$n%6d full-index=$fullS%5.1f s " +
           f"bucket-pruned=$idxS%5.1f s [$sel]")
-      } finally {
-        graft.llm.IndexCommit.dropIndex(spark, "stress_ivf")
-        rep.unpersist()
-      }
+      } finally graft.llm.IndexCommit.dropIndex(spark, "stress_ivf")
     }
-    emb.unpersist()
   }
 
   /** PQ / IVFPQ curve (q183/q189's engines): full-corpus SDC table scan
@@ -273,13 +347,13 @@ object ScaleStress {
     * the wall gap tracks it. Pins (coarse cells, codebooks, queries)
     * stay fixed-size across R, so per-candidate work is constant and
     * the curve isolates the candidate count. */
-  def pqCurve(spark: SparkSession, sfDir: String): Unit = {
+  def pqCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.Pq
-    val emb = Tables(spark, sfDir, "embeddings").cache()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== PQ: full SDC table scan vs IVFPQ probed-cell scoring ==")
     val (nCells, nProbe, m, dimsPer, nCodebook, nQ, k) = (16, 2, 8, 8, 8, 8, 10)
-    val nBase = emb.count() // also warms the cache
-    for (r <- Seq(8, 16, 64)) {
+    val nBase = emb.count()
+    for (r <- Seq(8, 16, 64)) point { q =>
       // replicateEmbeddings numbers replicas vec_id = base·r + rep, which
       // would put eps-perturbed REPLICAS of base vectors 0-2 into the
       // pinned id range [0, nCells+nCodebook) — and a different set at
@@ -288,11 +362,11 @@ object ScaleStress {
       // rep·nBase + base: ids [0, nBase) are the rep-0 originals at
       // EVERY R, so centroids, codebooks, and queries are the identical
       // vectors across the whole curve and only the corpus size varies.
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
+      val rep = q.keep(replicateEmbeddings(emb, r, eps = 0.12)
         .select(
           (pmod(col("vec_id"), lit(r.toLong)) * nBase +
             expr(s"vec_id div $r")).cast("long").as("vec_id"),
-          col("embedding")).cache()
+          col("embedding")))
       val n = rep.count()
       try {
         val fullCand = nQ.toLong * (n - 1)
@@ -317,23 +391,15 @@ object ScaleStress {
           val df = Pq.searchIndexed(spark, "stress_pq", queries, nProbe, k)
           (df.collect(), df.queryExecution.executedPlan.toString)
         }
-        val sel = "SelectedBucketsCount: [0-9]+ out of [0-9]+".r
-          .findFirstIn(planStr)
-          .getOrElse(sys.error("no bucket pruning in the searchIndexed plan"))
-        val key = (rows: Array[org.apache.spark.sql.Row]) =>
-          rows.map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-        assert(key(hits) == key(got),
+        val sel = selectedBuckets(planStr)
+        assert(ranked(hits) == ranked(got),
           s"persisted IVFPQ diverged from in-memory at R=$r")
         val pct = 100.0 * ivfCand / fullCand
         println(f"R=$r%2d n=$n%7d full-pq cand=$fullCand%9d $fullS%5.1f s | " +
           f"ivfpq($nProbe/$nCells cells) cand=$ivfCand%8d ($pct%4.1f%%) $ivfS%5.1f s | " +
           f"persisted $idxS%5.1f s [$sel]")
-      } finally {
-        graft.llm.IndexCommit.dropIndex(spark, "stress_pq")
-        rep.unpersist()
-      }
+      } finally graft.llm.IndexCommit.dropIndex(spark, "stress_pq")
     }
-    emb.unpersist()
   }
 
   /** Incremental-dedup A/B (q78's engine): Bloom screen + streamed confirm
@@ -346,21 +412,17 @@ object ScaleStress {
   def bloomDedup(spark: SparkSession): Unit = {
     import graft.llm.{Dedup, DedupIndex}
     println("== incremental dedup: Bloom screen + streamed confirm vs naive anti-join ==")
-    for (n <- Seq(2000000L, 8000000L)) {
-      val history = spark.range(n).select(col("id").as("doc_id"),
-        concat(lit("history document body number "), col("id")).as("text"))
-        .cache()
-      history.count()
+    for (n <- Seq(2000000L, 8000000L)) point { p =>
+      val history = p.keep(spark.range(n).select(col("id").as("doc_id"),
+        concat(lit("history document body number "), col("id")).as("text")))
       // 100k-doc batch: every 10th is a re-ingest of some history doc
-      val batch = spark.range(100000L).select(
+      val batch = p.keep(spark.range(100000L).select(
         (col("id") + 1000000000L).as("doc_id"),
         when(pmod(col("id"), lit(10L)) === 0,
           concat(lit("history document body number "),
             pmod(col("id") * 97L, lit(n))))
           .otherwise(concat(lit("brand new batch doc "), col("id")))
-          .as("text"))
-        .cache()
-      batch.count()
+          .as("text")))
       val (nBloom, bloomS) = time {
         Dedup.incrementalNewDocs(batch, history, expectedHistoryRows = n)
           .count()
@@ -380,18 +442,18 @@ object ScaleStress {
       // UNDERSTATES the win: bodies here are ~30 B so index bytes ≈ corpus
       // bytes — at real KB-to-MB documents the history pass shrinks by the
       // body/32 ratio on top of skipping the sha256 recompute.
-      val idxPath = java.nio.file.Files
-        .createTempDirectory("graft_stress_idx").resolve("idx").toString
+      val idxDir = Files.createTempDirectory("graft_stress_idx")
+      val idxPath = idxDir.resolve("idx").toString
       val (_, buildS) = time { DedupIndex.build(history, idxPath) }
       val (nIdx, idxS) = time {
         DedupIndex.incrementalNewDocs(batch, idxPath, expectedHistoryRows = n)
           .count()
       }
+      rmTree(idxDir)
       assert(nIdx == nNaive, s"index path diverges: $nIdx vs $nNaive")
       println(f"history=$n%8d batch=100000 new=$nBloom%6d " +
         f"bloom+stream=$bloomS%6.1f s naive-shuffle=$naiveS%6.1f s " +
         f"indexed=$idxS%6.1f s (one-time build=$buildS%6.1f s)")
-      history.unpersist(); batch.unpersist()
     }
   }
 
@@ -401,28 +463,11 @@ object ScaleStress {
     * stream (~2/(w+1) of the grams), not the O(n²) pair space — the
     * substring-level sibling of the minhash sweep above. Reports wall,
     * found pairs, and planted recall at growing replication. */
-  def winnowStress(spark: SparkSession, sfDir: String): Unit = {
-    import graft.llm.Dedup
-    val docs = Tables(spark, sfDir, "documents")
-      .filter(col("doc_id") < 2500).cache()
-    docs.count()
+  def winnowStress(spark: SparkSession, sfDir: String): Unit = point { p =>
+    val docs = p.keep(Tables(spark, sfDir, "documents").filter(col("doc_id") < 2500))
     println("== winnow pairs (q86 engine): planted replica clusters ==")
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateDocs(docs, r).cache()
-      val n = rep.count()
-      val expected = rep.groupBy("base_id").count()
-        .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
-        .head().getLong(0)
-      val pairs = Dedup.winnowPairs(rep.select("doc_id", "text"), minShared = 1).cache()
-      val (found, secs) = time(pairs.count())
-      val planted = pairs
-        .filter((col("doc_a") / r).cast("long") === (col("doc_b") / r).cast("long"))
-        .count()
-      println(f"R=$r%2d n=$n%6d wall=$secs%6.1f s found=$found%8d " +
-        f"planted=$planted%8d/$expected%d (recall=${planted.toDouble / expected}%.3f)")
-      pairs.unpersist(); rep.unpersist()
-    }
-    docs.unpersist()
+    recallSweep(r => replicateDocs(docs, r).select("doc_id", "text"),
+      graft.llm.Dedup.winnowPairs(_, minShared = 1), "doc_a", "doc_b")
   }
 
   /** BPE-learning scaling (q79's claim, measured): the corpus is touched
@@ -446,12 +491,11 @@ object ScaleStress {
         .groupBy("k").agg(concat_ws(" ", collect_list("word")).as("text"))
         .withColumnRenamed("k", "doc_id")
     println("== BPE learning: per-iteration wall vs vocabulary size ==")
-    for (vocab <- Seq(2000, 16000, 128000)) {
-      val docs = corpus(vocab).cache(); docs.count()
+    for (vocab <- Seq(2000, 16000, 128000)) point { p =>
+      val docs = p.keep(corpus(vocab))
       val (merges, wall) = time(Bpe.learnMerges(docs, numMerges = 10))
       println(f"vocab=$vocab%7d merges=${merges.size}%2d total=$wall%6.1f s " +
         f"(${wall / math.max(merges.size, 1)}%5.2f s/iteration)")
-      docs.unpersist()
     }
   }
 
@@ -471,54 +515,39 @@ object ScaleStress {
     * ≈ 0.99, safely above the threshold, so misses are the OPERATOR's —
     * salting or band luck — not the threshold cut); IVF recall is overlap
     * with the exact brute-force top-k on the same queries. */
-  def annFrontier(spark: SparkSession, sfDir: String): Unit = {
+  def annFrontier(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.{Ivf, Rp, Similarity}
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
 
     val r = 8
-    val rep = replicateEmbeddings(emb, r, eps = 0.12)
-      .select("vec_id", "embedding").cache()
-    val n = rep.count()
-    // base_id ≡ vec_id / r by replicateEmbeddings's id layout — derive the
-    // planted-pair count from the CACHED rep instead of replaying the
-    // whole jitter transform a second time
-    val expected = rep
-      .groupBy((col("vec_id") / r).cast("long").as("base_id")).count()
-      .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
-      .head().getLong(0)
-    println(s"== ANN frontier: Rp bands x bits at n=$n, cos>=0.9, planted=$expected ==")
-    for ((bands, bits) <- Seq((2, 16), (4, 16), (10, 8), (20, 12), (32, 12))) {
-      val (pairs, secs) = time {
-        Rp.cosineNearPairs(rep, minCosine = 0.9,
-          bands = bands, bitsPerBand = bits).cache()
+    point { q =>
+      val rep = q.keep(replicateEmbeddings(emb, r, eps = 0.12)
+        .select("vec_id", "embedding"))
+      val n = rep.count()
+      println(s"== ANN frontier: Rp bands x bits at n=$n, cos>=0.9, " +
+        s"planted=${n * (r - 1) / 2} ==")
+      for ((bands, bits) <- Seq((2, 16), (4, 16), (10, 8), (20, 12), (32, 12))) point { b =>
+        val (pairs, secs) = time {
+          b.keep(Rp.cosineNearPairs(rep, minCosine = 0.9, bands = bands, bitsPerBand = bits))
+        }
+        println(f"  bands=$bands%3d bits=$bits%2d wall=$secs%6.1f s " +
+          recall(pairs, "id_a", "id_b", n, r))
       }
-      val found = pairs.count()
-      val planted = pairs
-        .filter((col("id_a") / r).cast("long") === (col("id_b") / r).cast("long"))
-        .count()
-      println(f"  bands=$bands%3d bits=$bits%2d wall=$secs%6.1f s found=$found%8d " +
-        f"recall=${planted.toDouble / expected}%.3f")
-      pairs.unpersist()
     }
-    rep.unpersist()
 
     val k = 16
     val topK = 10
-    val queries = emb.filter(col("vec_id") < 50).cache(); queries.count()
-    val truth = Similarity.cosineTopK(emb, queries, topK).cache()
+    val queries = p.keep(emb.filter(col("vec_id") < 50))
+    val truth = p.keep(Similarity.cosineTopK(emb, queries, topK))
     val truthN = truth.count()
     val model = Ivf.fit(emb, k = k)
     println(s"== ANN frontier: IVF nProbe at k=$k cells, top-$topK, ${queries.count()} queries ==")
-    for (nProbe <- Seq(1, 2, 4, 8, 16)) {
-      val (got, secs) = time {
-        val d = Ivf.search(model, queries, topK, nProbe).localCheckpoint(true)
-        d.count()
-        d
-      }
+    for (nProbe <- Seq(1, 2, 4, 8, 16)) point { q =>
+      val (got, secs) = time(q.keep(Ivf.search(model, queries, topK, nProbe)))
       val hit = got.join(truth, Seq("q_id", "vec_id"), "left_semi").count()
       println(f"  nProbe=$nProbe%2d wall=$secs%6.2f s recall@$topK=${hit.toDouble / truthN}%.3f")
     }
-    model.unpersist(); truth.unpersist(); queries.unpersist(); emb.unpersist()
+    model.unpersist()
   }
 
   /** Storage-layout pruning A/B: the same table written (a) as-is and
@@ -694,7 +723,7 @@ object ScaleStress {
   def trianglesCurve(spark: SparkSession): Unit = {
     import spark.implicits._
     println("== triangle counting: naive vs degree-oriented wedge rows ==")
-    for (hub <- Seq(500, 1000, 2000, 4000)) {
+    for (hub <- Seq(500, 1000, 2000, 4000)) point { p =>
       // background: pseudo-random sparse graph over 2000 nodes. The
       // endpoints come from HIGH BITS of multiplicative hashes — two
       // plain congruences share modular structure (fixed difference
@@ -707,9 +736,8 @@ object ScaleStress {
       }
       // hub node 0 connected to `hub` distinct leaves
       val star = (1L to hub.toLong).map(l => (0L, l + 5000L))
-      val edges = graft.operators.Triangles.canonical(
-        (bg ++ star).toDF("s", "d"), "s", "d").cache()
-      edges.count()
+      val edges = p.keep(graft.operators.Triangles.canonical(
+        (bg ++ star).toDF("s", "d"), "s", "d"))
       // naive wedge volume: every node joins its undirected adjacency
       // with itself — Σ deg·(deg−1)/2 candidate pairs
       val adj = edges.select(col("a").as("n"), col("b").as("m"))
@@ -739,7 +767,6 @@ object ScaleStress {
         .agg(coalesce(sum("triangles"), lit(0L))).head().getLong(0) / 3
       println(f"hub=$hub%5d: naive_wedges=$naiveWedges%9d (${tNaive}%5.2f s)  " +
         f"oriented_wedges=$orientedWedges%7d (${tOr}%5.2f s)  triangles=$tri%6d")
-      edges.unpersist()
     }
   }
 
@@ -754,15 +781,14 @@ object ScaleStress {
   def gridCurve(spark: SparkSession): Unit = {
     println("== grid radius join (q225 engine): brute vs 9-cell candidates, r=500 ==")
     val r = 500L
-    for (n <- Seq(20000L, 40000L, 80000L, 160000L)) {
+    for (n <- Seq(20000L, 40000L, 80000L, 160000L)) point { p =>
       val side = math.round(10000.0 * math.sqrt(n.toDouble / 20000.0))
       def pts(m: Long, a1: Long, b1: Long, a2: Long, b2: Long) =
         spark.range(m).select(col("id"),
           pmod(col("id") * a1 + b1, lit(side)).as("x"),
           pmod(col("id") * a2 + b2, lit(side)).as("y"))
-      val build = pts(n, 7919L, 13L, 104729L, 37L).cache()
-      val probe = pts(2000L, 4793L, 7L, 9973L, 91L).cache()
-      build.count(); probe.count()
+      val build = p.keep(pts(n, 7919L, 13L, 104729L, 37L))
+      val probe = p.keep(pts(2000L, 4793L, 7L, 9973L, 91L))
       val dx = col("b.x") - col("p.x")
       val dy = col("b.y") - col("p.y")
       val (bruteMatches, tBrute) = time {
@@ -789,7 +815,6 @@ object ScaleStress {
       println(f"n=$n%7d side=$side%6d: brute_cand=${n * 2000L}%12d " +
         f"(${tBrute}%5.2f s)  grid_cand=$cand%10d  matches=$gridMatches%6d " +
         f"(${tGrid}%5.2f s)")
-      build.unpersist(); probe.unpersist()
     }
   }
 
@@ -804,12 +829,10 @@ object ScaleStress {
     println("== exact-Jaccard join (q230 engine): candidates vs corpus size, t=4/5 ==")
     val all = Tables(spark, sfDir, "documents")
     var checkedBrute = false
-    for (n <- Seq(1250L, 2500L, 5000L)) {
-      val docs = all.filter(col("doc_id") < n).cache()
+    for (n <- Seq(1250L, 2500L, 5000L)) point { p =>
+      val docs = p.keep(all.filter(col("doc_id") < n))
       val m = docs.count()
-      val sets = graft.llm.SetSimJoin.shingles(docs, "doc_id", "text", 12)
-        .cache()
-      sets.count()
+      val sets = p.keep(graft.llm.SetSimJoin.shingles(docs, "doc_id", "text", 12))
       val (pairs, secs) = time {
         graft.llm.SetSimJoin.jaccardJoin(sets, 4, 5).count()
       }
@@ -842,7 +865,6 @@ object ScaleStress {
             lit(5L) * col("b.n") >= lit(4L) * col("a.n"))
         .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
       println(f"docs=$m%5d: candidates=$cand%8d  pairs=$pairs%5d  (${secs}%5.2f s)")
-      sets.unpersist(); docs.unpersist()
     }
   }
 
@@ -940,22 +962,20 @@ object ScaleStress {
     * e.g. the LSH candidate joins). Row counts asserted identical. At
     * 100 TB the disabled shape is a job that never finishes: one task
     * sorts half the table while 999 executors idle. */
-  def skew(spark: SparkSession): Unit = {
+  def skew(spark: SparkSession): Unit = point { p =>
     import graft.operators.SkewJoin
     println("== skewed join: AQE skew-split vs salting vs naive ==")
     val n = 16000000L
     // half the rows share key 0; the rest spread over 100k keys. The
     // payload makes the hot partition heavy in BYTES, which is what AQE's
     // size-based skew detection (and a real cluster's straggler) sees.
-    val fact = spark.range(n).select(
+    val fact = p.keep(spark.range(n).select(
       when(col("id") % 2 === 0, lit(0L))
         .otherwise(pmod(col("id") * 2654435761L, lit(100000L))).as("k"),
       concat(lit("payload-padding-for-realistic-row-width-"), col("id"))
-        .as("v"))
-      .cache()
-    val dim = spark.range(100000L).select(col("id").as("k"),
-      concat(lit("dim"), col("id")).as("label")).cache()
-    fact.count(); dim.count()
+        .as("v")))
+    val dim = p.keep(spark.range(100000L).select(col("id").as("k"),
+      concat(lit("dim"), col("id")).as("label")))
     val prevSkew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
     val prevThresh = spark.conf
       .get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
@@ -987,16 +1007,9 @@ object ScaleStress {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", prevThresh)
       spark.conf.set(
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor", prevFactor)
-      fact.unpersist(); dim.unpersist()
     }
   }
 
-  /** Co-occurrence pair-space measurement — q98's design claim made
-    * visible: the WINDOWED pairing emits ≤ T·window pair instances per
-    * document, linear in corpus size and window, where per-document
-    * ALL-PAIRS is T² — a 25× volume blowup already at T=200, and the gap
-    * widens with document length. Synthetic fixed-length docs; the brute
-    * twin runs once, contained, as the denominator. */
   /** q130's scale evidence: wall + shuffle bytes of the cross-document
     * repeated-n-gram pass across corpus doublings, for BOTH key choices.
     * What the numbers must show for 100 TB: wall ~linear in corpus size
@@ -1022,8 +1035,8 @@ object ScaleStress {
         .as("text"))
     val prevWall = scala.collection.mutable.Map[Boolean, Double]()
     withWindow(spark) { window =>
-      for (n <- Seq(20000, 40000, 80000)) {
-        val docs = mkDocs(n).localCheckpoint(true) // pay synthesis once per point
+      for (n <- Seq(20000, 40000, 80000)) point { p =>
+        val docs = p.keep(mkDocs(n)) // pay synthesis once per point
         for ((label, hk) <- Seq("hash128" -> true, "string " -> false)) {
           val q = llm.SubstringDedup.repeatedSpans(docs, n = 8, minDocs = 2,
             hashKeys = hk)
@@ -1034,7 +1047,6 @@ object ScaleStress {
             f"shuffle_w=${m.shuffleWrite / 1e6}%7.1f MB  cpu=${m.cpuSec}%6.1f s")
           prevWall(hk) = t.wall
         }
-        docs.unpersist(blocking = true)
       }
     }
   }
@@ -1061,8 +1073,8 @@ object ScaleStress {
     }
     var prevWall = -1.0
     withWindow(spark) { window =>
-      for (n <- Seq(8000, 16000, 32000, 64000)) {
-        val corpus = mkCorpus(n).localCheckpoint(true)
+      for (n <- Seq(8000, 16000, 32000, 64000)) point { p =>
+        val corpus = p.keep(mkCorpus(n))
         val q = llm.EditDistance.passJoin(corpus, k = 2)
         val t = window.best(1)(q.count())
         val (pairs, wall, m) = (t.value, t.wall, t.metrics)
@@ -1087,11 +1099,16 @@ object ScaleStress {
             "the curve brute cannot follow)")
           assert(bPairs == pairs, s"brute $bPairs != passJoin $pairs")
         }
-        corpus.unpersist(blocking = true)
       }
     }
   }
 
+  /** Co-occurrence pair-space measurement — q98's design claim made
+    * visible: the WINDOWED pairing emits ≤ T·window pair instances per
+    * document, linear in corpus size and window, where per-document
+    * ALL-PAIRS is T² — a 25× volume blowup already at T=200, and the gap
+    * widens with document length. Synthetic fixed-length docs; the brute
+    * twin runs once, contained, as the denominator. */
   def cooc(spark: SparkSession): Unit = {
     println("== co-occurrence: windowed pair volume vs per-doc all-pairs ==")
     def mkDocs(nDocs: Int) = spark.range(nDocs.toLong).select(
@@ -1149,10 +1166,9 @@ object ScaleStress {
         col("id"))
     var prevFf, prevLi = -1.0
     withWindow(spark) { window =>
-      for (perKey <- Seq(250000, 500000, 1000000)) {
-        val ev = mkEvents(8, perKey).cache()
-        ev.count()
-        // GC only between trials: isolate would drop the cached ev
+      for (perKey <- Seq(250000, 500000, 1000000)) point { p =>
+        val ev = p.keep(mkEvents(8, perKey))
+        // GC only between trials: isolate would drop the kept ev
         val ff = window.best(2)(
           consume(Resample.forwardFill(ev, "k", "ts", "v", "id", 60L))).wall
         val li = window.best(2)(
@@ -1160,8 +1176,6 @@ object ScaleStress {
         println(f"rows/key=$perKey%8d  ffill=$ff%6.2f s (vs prev ${vsPrev(ff, prevFf)})  " +
           f"interp=$li%6.2f s (vs prev ${vsPrev(li, prevLi)})")
         prevFf = ff; prevLi = li
-        ev.unpersist(blocking = true)
-        spark.catalog.clearCache()
       }
     }
   }
@@ -1214,128 +1228,70 @@ object ScaleStress {
     }
   }
 
-  /** Decode-throughput curve for the real media codecs (B35): WAV PCM-16
-    * and 24-bit BMP blobs synthesized once to parquet at growing corpus
-    * sizes, then decoded through [[llm.Multimodal.decodeWav]]/`decodeBmp`
-    * with walls + executor CPU from the metrics listener. What the curve
-    * must show for the 100 TB story: per-doubling wall ratios ≤ ~2×
-    * (linear work — decode is row-local, zero shuffle) and stable MB/s.
-    * Payloads ~4 KB (WAV) / ~3 KB (BMP) per row. */
+  /** Decode-throughput curves for the real media codecs (B35), one
+    * [[throughput]] curve per codec: WAV PCM-16, 24-bit BMP and PNG blobs
+    * decoded through [[llm.Multimodal.decodeWav]]/`decodeBmp`/`decodePng`,
+    * then the ADPCM and RLE8 sample codecs. What the curves must show for
+    * the 100 TB story: per-doubling wall ratios ≤ ~2× (linear work —
+    * decode is row-local, zero shuffle) and stable MB/s. Payloads ~4 KB
+    * (WAV) / ~3 KB (BMP) per row. */
   def codecThroughput(spark: SparkSession): Unit = {
     import spark.implicits._
+    import llm.Multimodal.Blob
     println("== codec throughput: WAV / BMP / PNG decode across corpus size ==")
-    // true decoded-payload volume (task inputMetrics undercount columnar
-    // scans; MB/s must divide by the bytes the codec actually walks)
-    def payloadBytes(path: String): Long =
-      spark.read.parquet(path)
-        .agg(sum(length(col("payload")))).head().getLong(0)
-    withWindow(spark) { window =>
-      def measure(path: String,
-          f: org.apache.spark.sql.Dataset[llm.Multimodal.Blob] => DataFrame): Timing.Timed[Unit] = {
-        val blobs = spark.read.parquet(path).as[llm.Multimodal.Blob]
-        window.best(2)(consume(f(blobs)))
-      }
-      var prevWav, prevBmp, prevPng = -1.0
-      for (nBlobs <- Seq(100000, 200000, 400000)) {
-        val dir = java.nio.file.Files.createTempDirectory("codec_tp")
-        val wavPath = dir.resolve("wav").toString
-        val bmpPath = dir.resolve("bmp").toString
-        val pngPath = dir.resolve("png").toString
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          val n = (2000 + id % 128).toInt // ~4 KB payloads
-          val samples = Array.tabulate[Short](n)(i =>
-            (((i.toLong * (3 + id % 5)) % 4096 - 2048) * 8).toShort)
-          llm.Multimodal.Blob(id, llm.Wav.encodePcm16(8000, samples))
-        }.write.parquet(wavPath)
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          val w = (32 + id % 8).toInt // ~3 KB payloads
-          val h = (28 + id % 4).toInt
-          val px = Array.tabulate(w * h) { i =>
-            val x = i % w; val y = i / w
-            ((((x * 7 + y * 3 + id) % 256).toInt) << 16) |
-              ((((x * 5 + y * 11 + 2 * id) % 256).toInt) << 8) |
-              (((x * 13 + y + 3 * id) % 256).toInt)
-          }
-          llm.Multimodal.Blob(id, llm.Bmp.encode24(w, h, px))
-        }.write.parquet(bmpPath)
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          // same pixel plane as the BMP fixture, deflate-compressed — the
-          // ImageIO path's per-row cost (stream setup + inflate + raster
-          // copy) is what this column isolates vs the hand-rolled codecs
-          val w = (32 + id % 8).toInt
-          val h = (28 + id % 4).toInt
-          val px = Array.tabulate(w * h) { i =>
-            val x = i % w; val y = i / w
-            ((((x * 7 + y * 3 + id) % 256).toInt) << 16) |
-              ((((x * 5 + y * 11 + 2 * id) % 256).toInt) << 8) |
-              (((x * 13 + y + 3 * id) % 256).toInt)
-          }
-          llm.Multimodal.Blob(id, llm.Png.encodeRgb(w, h, px))
-        }.write.parquet(pngPath)
-        val wavBytes = payloadBytes(wavPath)
-        val bmpBytes = payloadBytes(bmpPath)
-        val pngBytes = payloadBytes(pngPath)
-        val wav = measure(wavPath, b => llm.Multimodal.decodeWav(b).toDF())
-        val bmp = measure(bmpPath, b => llm.Multimodal.decodeBmp(b).toDF())
-        val png = measure(pngPath, b => llm.Multimodal.decodePng(b).toDF())
-        val (ww, wc) = (wav.wall, wav.metrics.cpuSec)
-        val (bw, bc) = (bmp.wall, bmp.metrics.cpuSec)
-        val (pw, pc) = (png.wall, png.metrics.cpuSec)
-        println(f"n=$nBlobs%7d  wav=$ww%5.2f s (${wavBytes / ww / 1e6}%7.1f MB/s, ${wc * 1e6 / nBlobs}%5.1f cpu-us/row, vs prev ${vsPrev(ww, prevWav)})  " +
-          f"bmp=$bw%5.2f s (${bmpBytes / bw / 1e6}%7.1f MB/s, ${bc * 1e6 / nBlobs}%5.1f cpu-us/row, vs prev ${vsPrev(bw, prevBmp)})  " +
-          f"png=$pw%5.2f s (${pngBytes / pw / 1e6}%7.1f MB/s compressed, ${pc * 1e6 / nBlobs}%5.1f cpu-us/row, vs prev ${vsPrev(pw, prevPng)})")
-        prevWav = ww; prevBmp = bw; prevPng = pw
-        spark.catalog.clearCache()
-        rmTree(dir)
-      }
-      // r13 compressed-sample codecs: IMA ADPCM (4 bits/sample) and BI_RLE8
-      // (runs expand ~10×) — decode summed per blob (row-local, no
-      // per-sample explode) so the number is codec throughput, not row fanout
-      println("== compressed-sample codecs: ADPCM / RLE8 decode throughput ==")
-      for (nBlobs <- Seq(100000, 400000)) {
-        val dir = java.nio.file.Files.createTempDirectory("codec2_tp")
-        val adPath = dir.resolve("adpcm").toString
-        val rlePath = dir.resolve("rle8").toString
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          val nn = 4000 // → 4001 samples from 2004 bytes
-          val bytes = new Array[Byte](4 + nn / 2)
-          bytes(0) = (id % 251).toByte; bytes(2) = (id % 89).toByte
-          var i = 0
-          while (i < nn / 2) {
-            bytes(4 + i) = (((id + i) % 16) | ((((id + i) * 7) % 16) << 4)).toByte
-            i += 1
-          }
-          llm.Multimodal.Blob(id, bytes)
-        }.write.parquet(adPath)
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          val w = 64; val h = 32
-          val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-          for (yb <- 0 until h) {
-            out += (w / 2).toByte += ((id + yb) % 256).toByte
-            out += (w / 2).toByte += ((id * 3 + yb) % 256).toByte
-            if (yb < h - 1) { out += 0.toByte += 0.toByte }
-          }
-          out += 0.toByte += 1.toByte
-          llm.Multimodal.Blob(id, out.toArray)
-        }.write.parquet(rlePath)
-        val aw = measure(adPath, b => b.map { x =>
-          llm.Adpcm.decode(x.payload)
-            .map(s => s.foldLeft(0L)((a, v) => a + v)).getOrElse(-1L)
-        }.toDF("s")).wall
-        val rw = measure(rlePath, b => b.map { x =>
-          llm.Rle8.decode(x.payload, 64, 32)
-            .map(p => p.foldLeft(0L)(_ + _)).getOrElse(-1L)
-        }.toDF("s")).wall
-        val adB = payloadBytes(adPath)
-        val rlB = payloadBytes(rlePath)
-        println(f"n=$nBlobs%7d  adpcm=$aw%5.2f s (${adB / aw / 1e6}%6.1f MB/s compressed, " +
-          f"${nBlobs * 4001L / aw / 1e6}%6.1f Msamples/s)  " +
-          f"rle8=$rw%5.2f s (${rlB / rw / 1e6}%6.1f MB/s compressed, " +
-          f"${nBlobs * 2048L / rw / 1e6}%6.1f Mpx/s)")
-        spark.catalog.clearCache()
-        rmTree(dir)
-      }
+    def blobs(f: Long => Array[Byte])(n: Int): DataFrame =
+      spark.range(n.toLong).as[Long].map(id => Blob(id, f(id))).toDF()
+    // one w×h RGB plane per id (~3 KB as BMP): the BMP and PNG columns
+    // decode the same pixels, so PNG's extra cost is the ImageIO path's
+    // per-row stream setup + inflate + raster copy
+    def plane(id: Long): (Int, Int, Array[Int]) = {
+      val w = (32 + id % 8).toInt
+      val h = (28 + id % 4).toInt
+      (w, h, Array.tabulate(w * h) { i =>
+        val x = i % w; val y = i / w
+        ((((x * 7 + y * 3 + id) % 256).toInt) << 16) |
+          ((((x * 5 + y * 11 + 2 * id) % 256).toInt) << 8) |
+          (((x * 13 + y + 3 * id) % 256).toInt)
+      })
     }
+    def curve(label: String, sizes: Seq[Int], gen: Long => Array[Byte],
+        decode: org.apache.spark.sql.Dataset[Blob] => DataFrame): Unit =
+      throughput(spark, label, sizes)(blobs(gen))(in => decode(in.as[Blob]))
+    val sizes = Seq(100000, 200000, 400000)
+    curve("wav", sizes, { id =>
+      val n = (2000 + id % 128).toInt // ~4 KB payloads
+      llm.Wav.encodePcm16(8000, Array.tabulate[Short](n)(i =>
+        (((i.toLong * (3 + id % 5)) % 4096 - 2048) * 8).toShort))
+    }, llm.Multimodal.decodeWav(_).toDF())
+    curve("bmp", sizes, id => { val (w, h, px) = plane(id); llm.Bmp.encode24(w, h, px) },
+      llm.Multimodal.decodeBmp(_).toDF())
+    curve("png", sizes, id => { val (w, h, px) = plane(id); llm.Png.encodeRgb(w, h, px) },
+      llm.Multimodal.decodePng(_).toDF())
+    // r13 compressed-sample codecs: IMA ADPCM (4 bits/sample) and BI_RLE8
+    // (runs expand ~10×) — decode summed per blob (row-local, no
+    // per-sample explode) so the number is codec throughput, not row fanout
+    println("== compressed-sample codecs: ADPCM / RLE8 decode throughput ==")
+    curve("adpcm", Seq(100000, 400000), { id =>
+      val nn = 4000 // → 4001 samples from 2004 bytes
+      val bytes = new Array[Byte](4 + nn / 2)
+      bytes(0) = (id % 251).toByte; bytes(2) = (id % 89).toByte
+      for (i <- 0 until nn / 2)
+        bytes(4 + i) = (((id + i) % 16) | ((((id + i) * 7) % 16) << 4)).toByte
+      bytes
+    }, _.map(x => llm.Adpcm.decode(x.payload)
+      .map(s => s.foldLeft(0L)((a, v) => a + v)).getOrElse(-1L)).toDF("s"))
+    curve("rle8", Seq(100000, 400000), { id =>
+      val (w, h) = (64, 32)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
+      for (yb <- 0 until h) {
+        out += (w / 2).toByte += ((id + yb) % 256).toByte
+        out += (w / 2).toByte += ((id * 3 + yb) % 256).toByte
+        if (yb < h - 1) { out += 0.toByte += 0.toByte }
+      }
+      out += 0.toByte += 1.toByte
+      out.toArray
+    }, _.map(x => llm.Rle8.decode(x.payload, 64, 32)
+      .map(p => p.foldLeft(0L)(_ + _)).getOrElse(-1L)).toDF("s"))
   }
 
   /** PageRank scaling (q155's engine): wall vs edge count at fixed
@@ -1389,43 +1345,26 @@ object ScaleStress {
   def crawlThroughput(spark: SparkSession): Unit = {
     import spark.implicits._
     println("== crawl-ingest throughput: .warc.gz -> text across corpus size ==")
-    withWindow(spark) { window =>
-      var prev = -1.0
-      for (nBlobs <- Seq(50000, 100000, 200000)) {
-        val dir = java.nio.file.Files.createTempDirectory("crawl_tp")
-        val path = dir.resolve("warc").toString
-        spark.range(nBlobs.toLong).as[Long].map { id =>
-          // ~2 KB html body; one gzip member per WARC record, 2 records
-          val body = (0 until 40).map(i =>
-            s"<p>tok${(id * 37 + i * 11) % 50000} and filler text $i</p>")
-            .mkString("<html><head><title>Doc " + id + "</title></head><body>",
-              " ", "</body></html>")
-          val rec = new String(llm.Warc.encodeResponse(
-            s"https://host${id % 997}.com/p$id", "2026-01-01T00:00:00Z",
-            200, "text/html", body), "UTF-8")
-          val info = new String(llm.Warc.encodeInfo("warcinfo", s"crawl $id"), "UTF-8")
-          llm.Multimodal.Blob(id, llm.Gzip.encodeMembers(Seq(info, rec)))
-        }.write.parquet(path)
-        val gzBytes = spark.read.parquet(path)
-          .agg(sum(length(col("payload")))).head().getLong(0)
-        def chain(blobs: org.apache.spark.sql.Dataset[llm.Multimodal.Blob]): DataFrame = {
-          val recs = llm.Warc.ingest(blobs.map(b => llm.Multimodal.Blob(b.doc_id,
-            llm.Gzip.text(b.payload).map(_.getBytes("UTF-8"))
-              .getOrElse(Array.emptyByteArray))))
-            .filter(col("warc_type") === "response")
-          llm.Html.extractAll(recs.select(col("doc_id"), col("body"))
-            .as[(Long, String)]).toDF()
-        }
-        val blobs = spark.read.parquet(path).as[llm.Multimodal.Blob]
-        val t = window.best(2)(consume(chain(blobs)))
-        val (wall, cpu) = (t.wall, t.metrics.cpuSec)
-        val ratio = vsPrev(wall, prev)
-        println(f"n=$nBlobs%7d  wall=$wall%5.2f s (${gzBytes / wall / 1e6}%7.1f MB/s of .warc.gz, " +
-          f"${cpu * 1e6 / nBlobs}%5.1f cpu-us/doc, vs prev $ratio)")
-        prev = wall
-        spark.catalog.clearCache()
-        rmTree(dir)
-      }
+    throughput(spark, "warc.gz", Seq(50000, 100000, 200000)) { n =>
+      spark.range(n.toLong).as[Long].map { id =>
+        // ~2 KB html body; one gzip member per WARC record, 2 records
+        val body = (0 until 40).map(i =>
+          s"<p>tok${(id * 37 + i * 11) % 50000} and filler text $i</p>")
+          .mkString("<html><head><title>Doc " + id + "</title></head><body>",
+            " ", "</body></html>")
+        val rec = new String(llm.Warc.encodeResponse(
+          s"https://host${id % 997}.com/p$id", "2026-01-01T00:00:00Z",
+          200, "text/html", body), "UTF-8")
+        val info = new String(llm.Warc.encodeInfo("warcinfo", s"crawl $id"), "UTF-8")
+        llm.Multimodal.Blob(id, llm.Gzip.encodeMembers(Seq(info, rec)))
+      }.toDF()
+    } { in =>
+      val recs = llm.Warc.ingest(in.as[llm.Multimodal.Blob].map(b =>
+        llm.Multimodal.Blob(b.doc_id, llm.Gzip.text(b.payload).map(_.getBytes("UTF-8"))
+          .getOrElse(Array.emptyByteArray))))
+        .filter(col("warc_type") === "response")
+      llm.Html.extractAll(recs.select(col("doc_id"), col("body"))
+        .as[(Long, String)]).toDF()
     }
   }
 
@@ -1438,51 +1377,35 @@ object ScaleStress {
   def docFormatsThroughput(spark: SparkSession): Unit = {
     import spark.implicits._
     println("== doc-format decode throughput: PDF + DOCX -> text across corpus size ==")
-    withWindow(spark) { window =>
-      var prev = -1.0
-      for (nDocs <- Seq(100000, 200000, 400000)) {
-        val dir = java.nio.file.Files.createTempDirectory("docfmt_tp")
-        val path = dir.resolve("docs").toString
-        spark.range(nDocs.toLong).as[Long].map { id =>
-          if (id % 2 == 0) {
-            // ~2 KB PDF: 20 text-showing paragraphs in one flate stream
-            val ops = (0 until 20).map(i =>
-              s"BT 72 ${700 - i * 14} Td (Paragraph $i of doc $id with tok" +
-                s"${(id * 31 + i * 7) % 50000} filler words) Tj ET").mkString(" ")
-            llm.Multimodal.Blob(id, llm.Pdf.build(Seq(ops), flate = true))
-          } else {
-            val paras = (0 until 20).map(i =>
-              s"<w:p><w:r><w:t>Paragraph $i of doc $id with tok" +
-                s"${(id * 31 + i * 7) % 50000} filler words</w:t></w:r></w:p>").mkString
-            llm.Multimodal.Blob(id, llm.Zip.build(Seq(
-              ("[Content_Types].xml", "<Types/>".getBytes("UTF-8"), false),
-              ("word/document.xml",
-                s"<w:document><w:body>$paras</w:body></w:document>".getBytes("UTF-8"),
-                false))))
-          }
-        }.write.parquet(path)
-        val inBytes = spark.read.parquet(path)
-          .agg(sum(length(col("payload")))).head().getLong(0)
-        def chain(blobs: org.apache.spark.sql.Dataset[llm.Multimodal.Blob]): DataFrame =
-          blobs.mapPartitions(_.map { b =>
-            if (b.doc_id % 2 == 0) {
-              val e = llm.Pdf.decode(b.payload).getOrElse(llm.Pdf.Extracted(-1, -1, ""))
-              (b.doc_id, "pdf", e.nPages, e.text.length)
-            } else {
-              val d = llm.Zip.docxText(b.payload).getOrElse(llm.Zip.Doc(-1, ""))
-              (b.doc_id, "docx", d.nParas, d.text.length)
-            }
-          }).toDF("doc_id", "kind", "n_units", "n_chars")
-        val blobs = spark.read.parquet(path).as[llm.Multimodal.Blob]
-        val t = window.best(2)(consume(chain(blobs)))
-        val (wall, cpu) = (t.wall, t.metrics.cpuSec)
-        val ratio = vsPrev(wall, prev)
-        println(f"n=$nDocs%7d  wall=$wall%5.2f s (${inBytes / wall / 1e6}%7.1f MB/s in, " +
-          f"${cpu * 1e6 / nDocs}%5.1f cpu-us/doc, vs prev $ratio)")
-        prev = wall
-        spark.catalog.clearCache()
-        rmTree(dir)
-      }
+    throughput(spark, "pdf+docx", Seq(100000, 200000, 400000)) { n =>
+      spark.range(n.toLong).as[Long].map { id =>
+        if (id % 2 == 0) {
+          // ~2 KB PDF: 20 text-showing paragraphs in one flate stream
+          val ops = (0 until 20).map(i =>
+            s"BT 72 ${700 - i * 14} Td (Paragraph $i of doc $id with tok" +
+              s"${(id * 31 + i * 7) % 50000} filler words) Tj ET").mkString(" ")
+          llm.Multimodal.Blob(id, llm.Pdf.build(Seq(ops), flate = true))
+        } else {
+          val paras = (0 until 20).map(i =>
+            s"<w:p><w:r><w:t>Paragraph $i of doc $id with tok" +
+              s"${(id * 31 + i * 7) % 50000} filler words</w:t></w:r></w:p>").mkString
+          llm.Multimodal.Blob(id, llm.Zip.build(Seq(
+            ("[Content_Types].xml", "<Types/>".getBytes("UTF-8"), false),
+            ("word/document.xml",
+              s"<w:document><w:body>$paras</w:body></w:document>".getBytes("UTF-8"),
+              false))))
+        }
+      }.toDF()
+    } { in =>
+      in.as[llm.Multimodal.Blob].mapPartitions(_.map { b =>
+        if (b.doc_id % 2 == 0) {
+          val e = llm.Pdf.decode(b.payload).getOrElse(llm.Pdf.Extracted(-1, -1, ""))
+          (b.doc_id, "pdf", e.nPages, e.text.length)
+        } else {
+          val d = llm.Zip.docxText(b.payload).getOrElse(llm.Zip.Doc(-1, ""))
+          (b.doc_id, "docx", d.nParas, d.text.length)
+        }
+      }).toDF("doc_id", "kind", "n_units", "n_chars")
     }
   }
 
@@ -1500,126 +1423,71 @@ object ScaleStress {
       "de" -> Seq("der" -> 5, "sch" -> 4, "und" -> 3, "ein" -> 2),
       "en" -> Seq("the" -> 5, "he " -> 3, "ick" -> 2, "ing" -> 2),
       "fr" -> Seq("le " -> 4, "eux" -> 4, "ard" -> 3, "ais" -> 2))
-    withWindow(spark) { window =>
-      var prev = -1.0
-      for (nDocs <- Seq(200000, 400000, 800000)) {
-        val dir = java.nio.file.Files.createTempDirectory("filters_tp")
-        val path = dir.resolve("docs").toString
-        spark.range(nDocs.toLong).as[Long].map { id =>
-          val base = id - (id % 16) // 1/16 of docs duplicate their block head
-          val eff = if (id % 16 == 15) base else id
-          val line = (i: Int) =>
-            s"The solid value of doc $eff line $i carries tok${(eff * 31 + i * 7) % 50000} here."
-          val body = (0 until 20).map(line).mkString("\n")
-          val text = (id % 8) match {
-            case 2 => body + "\nThe lorem ipsum generator made this sentence too."
-            case 5 => (0 until 20).map(i =>
-              s"Der schnelle Hund und der scheue Fuchs tragen tok${(eff * 31 + i * 7) % 50000} hier.")
-              .mkString("\n")
-            case _ => body
-          }
-          (id, text)
-        }.toDF("doc_id", "text").write.parquet(path)
-        val inBytes = spark.read.parquet(path)
-          .agg(sum(length(col("text")))).head().getLong(0)
-        def chain(docs: org.apache.spark.sql.Dataset[(Long, String)]): DataFrame = {
-          val kept = llm.C4Clean.cleanAll(docs).filter(_.keep)
-          val scored = kept.mapPartitions(_.flatMap { c =>
-            val (lang, _) = llm.LangId.classify(llm.LangId.normalize(c.text), profiles)
-            val rep = llm.Gopher.report(c.doc_id, c.text)
-            if (lang != "en" || rep.pass) Some((c.doc_id, lang, rep.n_words, c.text))
-            else None
-          })
-          scored.toDF("doc_id", "lang", "n_words", "text")
-            .groupBy(sha2(col("text"), 256).as("digest"))
-            .agg(min(struct(col("doc_id"), col("lang"), col("n_words"))).as("r"))
-            .select(col("r.doc_id"), col("r.lang"), col("r.n_words"))
+    throughput(spark, "docs", Seq(200000, 400000, 800000)) { n =>
+      spark.range(n.toLong).as[Long].map { id =>
+        val base = id - (id % 16) // 1/16 of docs duplicate their block head
+        val eff = if (id % 16 == 15) base else id
+        val line = (i: Int) =>
+          s"The solid value of doc $eff line $i carries tok${(eff * 31 + i * 7) % 50000} here."
+        val body = (0 until 20).map(line).mkString("\n")
+        val text = (id % 8) match {
+          case 2 => body + "\nThe lorem ipsum generator made this sentence too."
+          case 5 => (0 until 20).map(i =>
+            s"Der schnelle Hund und der scheue Fuchs tragen tok${(eff * 31 + i * 7) % 50000} hier.")
+            .mkString("\n")
+          case _ => body
         }
-        val docs = spark.read.parquet(path).as[(Long, String)]
-        val t = window.best(2)(consume(chain(docs)))
-        val (wall, cpu) = (t.wall, t.metrics.cpuSec)
-        val ratio = vsPrev(wall, prev)
-        println(f"n=$nDocs%7d  wall=$wall%5.2f s (${inBytes / wall / 1e6}%7.1f MB/s in, " +
-          f"${cpu * 1e6 / nDocs}%5.1f cpu-us/doc, vs prev $ratio)")
-        prev = wall
-        spark.catalog.clearCache()
-        rmTree(dir)
-      }
+        (id, text)
+      }.toDF("doc_id", "text")
+    } { in =>
+      val kept = llm.C4Clean.cleanAll(in.as[(Long, String)]).filter(_.keep)
+      val scored = kept.mapPartitions(_.flatMap { c =>
+        val (lang, _) = llm.LangId.classify(llm.LangId.normalize(c.text), profiles)
+        val rep = llm.Gopher.report(c.doc_id, c.text)
+        if (lang != "en" || rep.pass) Some((c.doc_id, lang, rep.n_words, c.text))
+        else None
+      })
+      scored.toDF("doc_id", "lang", "n_words", "text")
+        .groupBy(sha2(col("text"), 256).as("digest"))
+        .agg(min(struct(col("doc_id"), col("lang"), col("n_words"))).as("r"))
+        .select(col("r.doc_id"), col("r.lang"), col("r.n_words"))
     }
   }
-  /** Multimodal sample-assembly throughput (q191's engine): AVI decode →
-    * SRT parse → as-of alignment → chat render → packChunks across
-    * corpus size. The chain is row-local until the as-of's doc_id
-    * exchange plus the packing's shard window, so cpu-µs/doc should
-    * stay FLAT as n grows (the q177 `--filters` story for the
-    * multimodal plane) — superlinear drift here means a stage stopped
-    * being row-local. */
+
+  /** Multimodal sample-assembly throughput (q191's engine, through
+    * [[llm.LlmQueries.multimodalSamples]]): AVI decode → SRT parse →
+    * as-of alignment → chat render → packChunks across corpus size; the
+    * AVI and SRT payloads are synthesized untimed. The chain is row-local
+    * until the as-of's doc_id exchange plus the packing's shard window,
+    * so cpu-µs/doc should stay FLAT as n grows (the q177 `--filters`
+    * story for the multimodal plane) — superlinear drift here means a
+    * stage stopped being row-local. */
   def samplesThroughput(spark: SparkSession): Unit = {
     import spark.implicits._
     println("== multimodal sample assembly: decode + align + render + pack across corpus size ==")
-    withWindow(spark) { window =>
-      var prev = -1.0
-      for (n <- Seq(20000, 40000, 80000)) {
-        def ids = spark.range(n.toLong).as[Long]
-        def chain(): DataFrame = {
-          val blobs = ids.map { id =>
-            val w = (8 + id % 8).toInt
-            val h = (4 + id % 4).toInt
-            val nFrames = (2 + id % 3).toInt
-            val frames = Seq.tabulate(nFrames) { f =>
-              Array.tabulate(w * h) { i =>
-                val x = i % w; val y = i / w
-                val r = ((x * 7 + y * 3 + id + 11 * f) % 256).toInt
-                val g = ((x * 5 + y * 11 + 2 * id + 7 * f) % 256).toInt
-                val b = ((x * 13 + y + 3 * id + 5 * f) % 256).toInt
-                (r << 16) | (g << 8) | b
-              }
-            }
-            llm.Multimodal.Blob(id, llm.Avi.encode(
-              width = w, height = h, usPerFrame = 33000 + (id % 5) * 1000,
-              frames = frames, junkBytes = ((id % 4) * 5).toInt))
+    throughput(spark, "samples", Seq(20000, 40000, 80000)) { n =>
+      spark.range(n.toLong).as[Long].map { id =>
+        val w = (8 + id % 8).toInt
+        val h = (4 + id % 4).toInt
+        val frames = Seq.tabulate((2 + id % 3).toInt) { f =>
+          Array.tabulate(w * h) { i =>
+            val x = i % w; val y = i / w
+            val r = ((x * 7 + y * 3 + id + 11 * f) % 256).toInt
+            val g = ((x * 5 + y * 11 + 2 * id + 7 * f) % 256).toInt
+            val b = ((x * 13 + y + 3 * id + 5 * f) % 256).toInt
+            (r << 16) | (g << 8) | b
           }
-          val frames = llm.Multimodal.videoFrames(blobs, stride = 2)
-            .toDF().select(col("doc_id"), col("frame_idx"), col("ts_us"),
-              (col("sum_r") + col("sum_g") + col("sum_b")).as("rgb"))
-          val srts = ids.map { id =>
-            val stepMs = 45 + 5 * (id % 5)
-            (id, llm.Srt.encode(Seq.tabulate(4) { i =>
-              (i * stepMs, i * stepMs + 30, s"sub${id}_$i")
-            }))
-          }
-          val subs = llm.Srt.parseAll(srts).toDF()
-            .select(col("doc_id"), col("start_us"), col("text").as("sub_text"))
-          val aligned = operators.AsOf.join(frames, subs,
-              key = "doc_id", leftTs = "ts_us", rightTs = "start_us",
-              payload = Seq("sub_text"))
-            .withColumn("item", concat(lit("<|frame|>"), col("asof_sub_text")))
-          // EXACTLY q191's tail: localCheckpoint before the fan-out, then
-          // the certified CorpusPrep.packChunks joined back — the harness
-          // must measure the operator the query runs, not a hand-inlined
-          // copy of its shard/window/budget arithmetic that could drift.
-          val samples = aligned.groupBy("doc_id").agg(
-              count(lit(1)).cast("int").as("n_frames"),
-              sum(col("rgb")).as("rgb_sum"),
-              array_join(transform(
-                sort_array(collect_list(struct(col("frame_idx"), col("item")))),
-                x => x.getField("item")), " ").as("u"))
-            .withColumn("render", concat(
-              lit("<|im_start|>user\n"), col("u"),
-              lit("<|im_end|>\n<|im_start|>assistant\nCaption for doc "),
-              col("doc_id"), lit("<|im_end|>\n")))
-            .localCheckpoint(true)
-          val packed = llm.CorpusPrep.packChunks(
-            samples.select(col("doc_id"), col("render").as("text")),
-            budgetTokens = 32, shards = 8)
-          samples.join(packed, "doc_id")
         }
-        val t = window.best(2)(consume(chain()))
-        val (wall, cpu) = (t.wall, t.metrics.cpuSec)
-        val ratio = vsPrev(wall, prev)
-        println(f"n=$n%6d  wall=$wall%5.2f s (${cpu * 1e6 / n}%5.1f cpu-us/doc, vs prev $ratio)")
-        prev = wall
-      }
+        val stepMs = 45 + 5 * (id % 5)
+        (id, llm.Avi.encode(width = w, height = h, usPerFrame = 33000 + (id % 5) * 1000,
+            frames = frames, junkBytes = ((id % 4) * 5).toInt),
+          llm.Srt.encode(Seq.tabulate(4) { i =>
+            (i * stepMs, i * stepMs + 30, s"sub${id}_$i")
+          }))
+      }.toDF("doc_id", "payload", "srt")
+    } { in =>
+      llm.LlmQueries.multimodalSamples(in.select("doc_id", "payload").as[llm.Multimodal.Blob],
+        in.select("doc_id", "srt").as[(Long, String)])
     }
   }
 
@@ -1641,30 +1509,21 @@ object ScaleStress {
       when(pmod(col("id"), lit(7L)) === g % 7, lit(s"s$g"))
         .otherwise(lit("base")).as("st"),
       (col("id") % 1000 + 10 * (g / 4)).as("v"))
-    for (gens <- Seq(4, 8, 16, 32)) {
+    for (gens <- Seq(4, 8, 16, 32)) point { p =>
       val stack = (0 until gens).map(snap).reduce(_ unionByName _)
-      val ((rebuilt, nRebuilt), tRebuild) = time {
-        val r = Scd.type2History(stack, "k", "g", Seq("st", "v")).cache()
-        (r, r.count())
-      }
-      val history = Scd.type2History(
+      val (rebuilt, tRebuild) =
+        time(p.keep(Scd.type2History(stack, "k", "g", Seq("st", "v"))))
+      // materialized OUTSIDE the timed merge window
+      val history = p.keep(Scd.type2History(
         (0 until gens - 1).map(snap).reduce(_ unionByName _),
-        "k", "g", Seq("st", "v")).cache()
-      history.count() // materialize OUTSIDE the timed merge window
-      val ((merged, nMerged), tMerge) = time {
-        val m = ScdMerge.merge(history, snap(gens - 1).drop("g"), "k",
-          Seq("st", "v"), (gens - 1).toLong).cache()
-        (m, m.count())
-      }
-      // the law, asserted at every point (both directions)
-      val diff = merged.exceptAll(rebuilt).count() +
-        rebuilt.exceptAll(merged).count()
-      require(diff == 0 && nMerged == nRebuilt,
-        s"merge != rebuild at gens=$gens: diff=$diff")
+        "k", "g", Seq("st", "v")))
+      val (merged, tMerge) = time(p.keep(ScdMerge.merge(history,
+        snap(gens - 1).drop("g"), "k", Seq("st", "v"), (gens - 1).toLong)))
+      // the law, asserted at every point
+      require(sameRows(merged, rebuilt), s"merge != rebuild at gens=$gens")
       println(f"gens=$gens%3d: stack=${gens * n}%9d rows  " +
-        f"rebuild=${tRebuild}%6.2f s ($nRebuilt%8d versions)  " +
+        f"rebuild=${tRebuild}%6.2f s (${rebuilt.count()}%8d versions)  " +
         f"merge=${tMerge}%6.2f s  ratio=${tRebuild / tMerge}%5.2f x")
-      rebuilt.unpersist(); history.unpersist(); merged.unpersist()
     }
   }
 
@@ -1688,7 +1547,7 @@ object ScaleStress {
     val noun = Vector("widget", "gizmo", "bolt", "gear", "ring", "valve",
       "lever", "panel", "probe", "crank", "shaft", "brace", "clamp", "dial",
       "fuse", "hinge")
-    for (n <- Seq(50000L, 100000L, 200000L, 400000L)) {
+    for (n <- Seq(50000L, 100000L, 200000L, 400000L)) point { p =>
       // the numeric tail is the UNIQUE zero-padded id: a truncated twin
       // then shares its 6-digit prefix with (almost) only its source —
       // a modular suffix made every 1-digit twin collapse to the same
@@ -1702,18 +1561,14 @@ object ScaleStress {
       val dirty = base.filter(col("id") % 4 === 0).select(
         (col("id") + 1000000000L).as("id"),
         expr("substr(key, 1, length(key) - 1)").as("key"))
-      val recs = base.unionByName(dirty).cache()
-      recs.count()
-      val ((candidates, matched), t) = time {
-        val p = SortedNeighborhood.pairs(recs, "id", "key",
-          substring(col("key"), 1, 1), w = 4).cache()
-        val c = p.count()
+      val recs = p.keep(base.unionByName(dirty))
+      val ((candidates, matched), t) = time(point { q =>
+        val pairs = q.keep(SortedNeighborhood.pairs(recs, "id", "key",
+          substring(col("key"), 1, 1), w = 4))
         // planted recall: twin pair (id, id+1e9) recovered by the window
-        val m = p.filter(col("id2") === col("id1") + 1000000000L ||
-          col("id1") === col("id2") + 1000000000L).count()
-        p.unpersist()
-        (c, m)
-      }
+        (pairs.count(), pairs.filter(col("id2") === col("id1") + 1000000000L ||
+          col("id1") === col("id2") + 1000000000L).count())
+      })
       val planted = n / 4
       // in-block pair space (what a block-local all-pairs join would scan)
       val pairSpace = recs.groupBy(substring(col("key"), 1, 1))
@@ -1722,7 +1577,6 @@ object ScaleStress {
       println(f"n=$n%7d: candidates=$candidates%9d  " +
         f"block_pair_space=$pairSpace%12d (${pairSpace / math.max(candidates, 1)}%5d x)  " +
         f"planted_recall=${100.0 * matched / planted}%5.1f %%  wall=${t}%5.2f s")
-      recs.unpersist()
     }
   }
 
@@ -1743,57 +1597,43 @@ object ScaleStress {
     * HNSW/Vamana literature's neighbor-diversification rules exist for
     * exactly this, and the degree>cluster guidance is the documented
     * operating contract here. */
-  def knnGraphCurve(spark: SparkSession, sfDir: String): Unit = {
+  def knnGraphCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.{KnnGraph, Similarity}
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== knn graph: bucketed build + beam search vs brute top-k ==")
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
-      val n = rep.count()
-      val nCells = math.max(16, (n / 64).toInt)
-      val cs = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
-        .orderBy("vec_id").limit(nCells)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val queries = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0 &&
-        col("vec_id") < 20L * r).cache()
-      try {
-        val pr = KnnGraph.probeAssign(rep, cs, nProbe = 3)
-          .select("vec_id", "cell").cache()
-        val candidates = pr.select(col("cell"), col("vec_id").as("src"))
+    for (r <- Seq(4, 8, 16)) point { q =>
+      val (rep, n, nCells, cs) = planted(q, emb, r)
+      val queries = q.keep(rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0 &&
+        col("vec_id") < 20L * r))
+      val candidates = point { c =>
+        val pr = c.keep(KnnGraph.probeAssign(rep, cs, nProbe = 3).select("vec_id", "cell"))
+        pr.select(col("cell"), col("vec_id").as("src"))
           .join(pr.select(col("cell"), col("vec_id").as("dst")), Seq("cell"))
           .filter(col("src") =!= col("dst"))
           .select("src", "dst").distinct().count()
-        pr.unpersist()
-        // candidates counts ORDERED (src, dst) pairs, so compare
-        // against the ordered-pair total n(n-1) — same convention on
-        // both sides of the compression ratio
-        val allPairs = n * (n - 1)
-        val (edges, buildS) = time {
-          val e = KnnGraph.build(rep, cs, degree = 24, nProbe = 3)
-            .localCheckpoint(true)
-          e.count()
-          e
-        }
-        val entries = KnnGraph.entryPoints(rep, cs)
-        val (approx, searchS) = time {
-          KnnGraph.search(edges, rep, queries, entries,
-            topK = 3, beam = 16, rounds = 4).select("q_id", "node").collect()
-        }
-        val (brute, bruteS) = time {
-          Similarity.cosineTopK(rep, queries, k = 3)
-            .select("q_id", "vec_id").collect()
-        }
-        val gotSet = approx.map(x => (x.getLong(0), x.getLong(1))).toSet
-        val recall = brute.map(x => (x.getLong(0), x.getLong(1)))
-          .count(gotSet.contains).toDouble / brute.length
-        println(f"R=$r%2d n=$n%6d cells=$nCells%4d " +
-          f"candidates=$candidates%10d all_pairs=$allPairs%12d " +
-          f"(${allPairs / math.max(candidates, 1)}%4d x) build=$buildS%5.1f s " +
-          f"beam=$searchS%5.1f s brute=$bruteS%5.1f s recall=${recall * 100}%5.1f %%")
-      } finally rep.unpersist()
+      }
+      // candidates counts ORDERED (src, dst) pairs, so compare
+      // against the ordered-pair total n(n-1) — same convention on
+      // both sides of the compression ratio
+      val allPairs = n * (n - 1)
+      val (edges, buildS) = time(q.keep(KnnGraph.build(rep, cs, degree = 24, nProbe = 3)))
+      val entries = KnnGraph.entryPoints(rep, cs)
+      val (approx, searchS) = time {
+        KnnGraph.search(edges, rep, queries, entries,
+          topK = 3, beam = 16, rounds = 4).select("q_id", "node").collect()
+      }
+      val (brute, bruteS) = time {
+        Similarity.cosineTopK(rep, queries, k = 3)
+          .select("q_id", "vec_id").collect()
+      }
+      val gotSet = approx.map(x => (x.getLong(0), x.getLong(1))).toSet
+      val recall = brute.map(x => (x.getLong(0), x.getLong(1)))
+        .count(gotSet.contains).toDouble / brute.length
+      println(f"R=$r%2d n=$n%6d cells=$nCells%4d " +
+        f"candidates=$candidates%10d all_pairs=$allPairs%12d " +
+        f"(${allPairs / math.max(candidates, 1)}%4d x) build=$buildS%5.1f s " +
+        f"beam=$searchS%5.1f s brute=$bruteS%5.1f s recall=${recall * 100}%5.1f %%")
     }
-    emb.unpersist()
   }
 
   /** Persisted-index serving curve (q273's path, r17): beam search over
@@ -1816,15 +1656,12 @@ object ScaleStress {
     * the in-memory search here — the at-scale separation is the
     * records/buckets counters (measured flat in n while n×probes
     * grows), not this machine's wall. */
-  def knnIdxCurve(spark: SparkSession, sfDir: String): Unit = {
+  def knnIdxCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.KnnGraph
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== knn persisted index: bucket-pruned serving vs in-memory search ==")
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
-      val n = rep.count()
-      val nCells = math.max(16, (n / 64).toInt)
+    for (r <- Seq(4, 8, 16)) point { q =>
+      val (rep, n, nCells, cs) = planted(q, emb, r)
       // deployment shape: bucket count scales with the corpus so rows
       // per bucket stay bounded (~31 node records each) — the quantity
       // that then falls with n is the beam's TOUCHED-bucket fraction,
@@ -1835,65 +1672,49 @@ object ScaleStress {
         val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42)
         ((h % buckets) + buckets) % buckets
       }
-      val cs = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
-        .orderBy("vec_id").limit(nCells)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val queries = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0 &&
-        col("vec_id") < 4L * r).cache()
+      val queries = q.keep(rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0 &&
+        col("vec_id") < 4L * r))
+      val edges = q.keep(KnnGraph.build(rep, cs, degree = 24, nProbe = 3))
+      val (_, saveS) = time {
+        KnnGraph.saveIndex(edges, rep, cs, "stress_knnidx", buckets)
+      }
+      val entries = KnnGraph.entryPoints(rep, cs)
+      val (mem, memS) = time(ranked(KnnGraph.search(edges, rep, queries, entries,
+        topK = 3, beam = 16, rounds = 4).select("q_id", "rk", "node").collect()))
+      var probes = 0
+      var read = 0L
+      var idsRead = 0L
+      var firstProbe: Seq[Long] = null
+      val (idx, idxS) = time(ranked(KnnGraph.searchIndexed(spark, "stress_knnidx",
+          queries, topK = 3, beam = 16, rounds = 4,
+          onProbe = ids => {
+            probes += 1
+            read += ids.map(bucketOf).distinct.size
+            idsRead += ids.size
+            if (firstProbe == null) firstProbe = ids
+          })
+        .select("q_id", "rk", "node").collect()))
+      assert(idx == mem, s"persisted serve diverged from in-memory at R=$r")
+      // cross-check the counter's arithmetic against the planner's
+      // own pruning metric for a representative probe
+      val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      val prevAuto = spark.conf.get(autoKey)
+      spark.conf.set(autoKey, "false")
       try {
-        val edges = KnnGraph.build(rep, cs, degree = 24, nProbe = 3)
-          .localCheckpoint(true)
-        val (_, saveS) = time {
-          KnnGraph.saveIndex(edges, rep, cs, "stress_knnidx", buckets)
-        }
-        val entries = KnnGraph.entryPoints(rep, cs)
-        val (mem, memS) = time {
-          KnnGraph.search(edges, rep, queries, entries,
-              topK = 3, beam = 16, rounds = 4)
-            .select("q_id", "rk", "node").collect()
-            .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-        }
-        var probes = 0
-        var read = 0L
-        var idsRead = 0L
-        var firstProbe: Seq[Long] = null
-        val (idx, idxS) = time {
-          KnnGraph.searchIndexed(spark, "stress_knnidx", queries,
-              topK = 3, beam = 16, rounds = 4,
-              onProbe = ids => {
-                probes += 1
-                read += ids.map(bucketOf).distinct.size
-                idsRead += ids.size
-                if (firstProbe == null) firstProbe = ids
-              })
-            .select("q_id", "rk", "node").collect()
-            .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-        }
-        assert(idx == mem, s"persisted serve diverged from in-memory at R=$r")
-        // cross-check the counter's arithmetic against the planner's
-        // own pruning metric for a representative probe
-        val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        val prevAuto = spark.conf.get(autoKey)
-        spark.conf.set(autoKey, "false")
-        try {
-          val p = spark.table("stress_knnidx_nodes")
-            .filter(col("vec_id").isin(firstProbe.map(x => x: Any): _*))
-          p.count()
-          val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-          val m = sel.findFirstMatchIn(p.queryExecution.executedPlan.toString)
-            .getOrElse(sys.error("no bucket pruning in the node-record probe"))
-          val want = firstProbe.map(bucketOf).distinct.size
-          assert(m.group(1).toInt == want && m.group(2).toInt == buckets,
-            s"counter arithmetic vs planner: ${m.group(1)}/${m.group(2)} vs $want/$buckets")
-        } finally spark.conf.set(autoKey, prevAuto)
-        val total = probes.toLong * buckets
-        println(f"R=$r%2d n=$n%6d cells=$nCells%4d buckets=$buckets%4d " +
-          f"save=$saveS%5.1f s mem_search=$memS%5.1f s idx_search=$idxS%5.1f s " +
-          f"probes=$probes%2d records_read=$idsRead%5d (n x probes = ${n * probes}%7d) " +
-          f"buckets_read=$read%5d/$total%5d (${100.0 * read / total}%5.1f %% of files)")
-      } finally { rep.unpersist(); queries.unpersist() }
+        val probe = spark.table("stress_knnidx_nodes")
+          .filter(col("vec_id").isin(firstProbe.map(x => x: Any): _*))
+        probe.count()
+        val sel = selectedBuckets(probe.queryExecution.executedPlan.toString)
+        val want = s"SelectedBucketsCount: ${firstProbe.map(bucketOf).distinct.size} " +
+          s"out of $buckets"
+        assert(sel == want, s"counter arithmetic vs planner: $sel vs $want")
+      } finally spark.conf.set(autoKey, prevAuto)
+      val total = probes.toLong * buckets
+      println(f"R=$r%2d n=$n%6d cells=$nCells%4d buckets=$buckets%4d " +
+        f"save=$saveS%5.1f s mem_search=$memS%5.1f s idx_search=$idxS%5.1f s " +
+        f"probes=$probes%2d records_read=$idsRead%5d (n x probes = ${n * probes}%7d) " +
+        f"buckets_read=$read%5d/$total%5d (${100.0 * read / total}%5.1f %% of files)")
     }
-    emb.unpersist()
   }
 
   /** Index-maintenance WRITE-amplification curve (r18, the r17 verdict's
@@ -1918,65 +1739,47 @@ object ScaleStress {
     * Every point asserts the maintained index still equals the full
     * rebuild, so the cheap write is never traded against the exact
     * law. */
-  def knnWriteCurve(spark: SparkSession, sfDir: String): Unit = {
+  def knnWriteCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.KnnGraph
     import graft.streaming.StreamingKnnIndex
     import graft.sources.Bucketing
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== knn index maintenance: bytes written per batch vs index size (fixed 8-vector batch) ==")
-    for (r <- Seq(4, 8, 16, 32)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
-      val n = rep.count()
-      val nCells = math.max(16, (n / 64).toInt)
+    for (r <- Seq(4, 8, 16, 32)) point { q =>
+      val (rep, n, nCells, cs) = planted(q, emb, r)
       val buckets = math.max(64, (n / 31).toInt)
-      val cs = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
-        .orderBy("vec_id").limit(nCells)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
       val stride = math.max(1L, n / 8L)
-      val batch = rep.filter(pmod(col("vec_id"), lit(stride)) === 1)
-        .cache()
+      val batch = q.keep(rep.filter(pmod(col("vec_id"), lit(stride)) === 1))
       val nB = batch.count()
-      try {
-        // ---- insert side: base = rep ∖ batch, then ingest the batch
-        val base = rep.join(batch.select("vec_id"), Seq("vec_id"), "left_anti")
-          .localCheckpoint(true)
-        KnnGraph.saveIndex(KnnGraph.build(base, cs, degree = 12, nProbe = 3),
-          base, cs, "stress_knnwrite", buckets)
-        val totalI = Bucketing.partitionBytes(spark, "stress_knnwrite_nodes")
-        val ((bkI, byI), insS) = time {
-          StreamingKnnIndex.ingestBatch(batch, "stress_knnwrite", cs,
-            degree = 12, nProbe = 3, buckets = buckets)
-        }
-        val gotI = StreamingKnnIndex.load(spark, "stress_knnwrite")._2
-          .select("src", "rk", "dst")
-        val wantI = KnnGraph.build(rep, cs, degree = 12, nProbe = 3)
-          .localCheckpoint(true)
-        assert(gotI.exceptAll(wantI.select("src", "rk", "dst")).count() == 0 &&
-          wantI.select("src", "rk", "dst").exceptAll(gotI).count() == 0,
-          s"ingest law broken at R=$r")
-        // ---- delete side: full index, then a delete-only changelog
-        KnnGraph.saveIndex(wantI, rep, cs, "stress_knnwrite", buckets)
-        val totalD = Bucketing.partitionBytes(spark, "stress_knnwrite_nodes")
-        val ((bkD, byD), delS) = time {
-          StreamingKnnIndex.applyChangelog(
-            batch.withColumn("op", lit("D")), "stress_knnwrite", cs,
-            degree = 12, nProbe = 3, buckets = buckets)
-        }
-        val gotD = StreamingKnnIndex.load(spark, "stress_knnwrite")._2
-          .select("src", "rk", "dst")
-        val wantD = KnnGraph.build(base, cs, degree = 12, nProbe = 3)
-          .select("src", "rk", "dst").localCheckpoint(true)
-        assert(gotD.exceptAll(wantD).count() == 0 &&
-          wantD.exceptAll(gotD).count() == 0, s"delete law broken at R=$r")
-        println(f"R=$r%2d n=$n%6d cells=$nCells%4d buckets=$buckets%4d |batch|=$nB%3d " +
-          f"ins: wrote ${bkI.size}%4d bkts ${byI / 1024}%7d KiB of ${totalI / 1024}%7d " +
-          f"(${100.0 * byI / totalI}%5.1f %%) in $insS%5.1f s | " +
-          f"del: wrote ${bkD.size}%4d bkts ${byD / 1024}%7d KiB of ${totalD / 1024}%7d " +
-          f"(${100.0 * byD / totalD}%5.1f %%) in $delS%5.1f s (laws: ≡ rebuild)")
-      } finally { rep.unpersist(); batch.unpersist() }
+      def edges(d: DataFrame) = KnnGraph.build(d, cs, degree = 12, nProbe = 3)
+      def graph() = StreamingKnnIndex.load(spark, "stress_knnwrite")._2
+        .select("src", "rk", "dst")
+      // ---- insert side: base = rep ∖ batch, then ingest the batch
+      val base = q.keep(rep.join(batch.select("vec_id"), Seq("vec_id"), "left_anti"))
+      KnnGraph.saveIndex(edges(base), base, cs, "stress_knnwrite", buckets)
+      val totalI = Bucketing.partitionBytes(spark, "stress_knnwrite_nodes")
+      val ((bkI, byI), insS) = time {
+        StreamingKnnIndex.ingestBatch(batch, "stress_knnwrite", cs,
+          degree = 12, nProbe = 3, buckets = buckets)
+      }
+      val wantI = q.keep(edges(rep))
+      assert(sameRows(graph(), wantI.select("src", "rk", "dst")), s"ingest law broken at R=$r")
+      // ---- delete side: full index, then a delete-only changelog
+      KnnGraph.saveIndex(wantI, rep, cs, "stress_knnwrite", buckets)
+      val totalD = Bucketing.partitionBytes(spark, "stress_knnwrite_nodes")
+      val ((bkD, byD), delS) = time {
+        StreamingKnnIndex.applyChangelog(
+          batch.withColumn("op", lit("D")), "stress_knnwrite", cs,
+          degree = 12, nProbe = 3, buckets = buckets)
+      }
+      assert(sameRows(graph(), q.keep(edges(base).select("src", "rk", "dst"))),
+        s"delete law broken at R=$r")
+      println(f"R=$r%2d n=$n%6d cells=$nCells%4d buckets=$buckets%4d |batch|=$nB%3d " +
+        f"ins: wrote ${bkI.size}%4d bkts ${byI / 1024}%7d KiB of ${totalI / 1024}%7d " +
+        f"(${100.0 * byI / totalI}%5.1f %%) in $insS%5.1f s | " +
+        f"del: wrote ${bkD.size}%4d bkts ${byD / 1024}%7d KiB of ${totalD / 1024}%7d " +
+        f"(${100.0 * byD / totalD}%5.1f %%) in $delS%5.1f s (laws: ≡ rebuild)")
     }
-    emb.unpersist()
   }
 
   /** Codebook-drift A/B (q282/q283's operators, r18): WHEN to fire the
@@ -1996,22 +1799,14 @@ object ScaleStress {
     * refresh when fresh-vector mean distortion pulls several× away
     * from the build-time mean (here the jump is unambiguous; the
     * directional asserts pin it). */
-  def pqDriftCurve(spark: SparkSession, sfDir: String): Unit = {
+  def pqDriftCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.KnnGraph
     val r = 8
-    val emb0 = Tables(spark, sfDir, "embeddings").cache(); emb0.count()
+    val emb0 = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== pq codebook drift: frozen codebook on drifted corpus vs refresh ==")
-    val corpus0 = replicateEmbeddings(emb0, r, eps = 0.12)
-      .select("vec_id", "embedding").localCheckpoint(true)
-    val drifted = corpus0.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x / 4 AS FLOAT))").as("embedding"))
-      .localCheckpoint(true)
-    val n = corpus0.count()
-    val nCells = (n / 64).toInt
-    def csOf(c: DataFrame): Array[Array[Float]] =
-      c.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
-        .orderBy("vec_id").limit(nCells)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    val (corpus0, _, nCells, cs0) = planted(p, emb0, r)
+    val drifted = p.keep(corpus0.select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x / 4 AS FLOAT))").as("embedding")))
     def stats(corpus: DataFrame): (Double, Double) = {
       // the RELATIVE error — absolute distortion is scale-confounded
       // (the ×0.25 drift LOWERS it while the codes turn to noise);
@@ -2050,7 +1845,6 @@ object ScaleStress {
     }
     try {
       // (1) BASE
-      val cs0 = csOf(corpus0)
       KnnGraph.saveIndexPq(
         KnnGraph.build(corpus0, cs0, degree = 24, nProbe = 3),
         corpus0, cs0, m = 8, dimsPer = 8, nCodebook = 64, cbStart = 0,
@@ -2058,7 +1852,7 @@ object ScaleStress {
       val (d0, r0) = stats(corpus0)
       // (2) FROZEN codebook, drifted corpus (what per-batch maintenance
       // correctly preserves — shown here at full-drift steady state)
-      val cs1 = csOf(drifted)
+      val cs1 = centroids(drifted, r, nCells)
       val (cbOld, m, dimsPer) = graft.llm.Pq.loadCodebook(spark, "stress_pqdrift")
       KnnGraph.saveIndexPqWith(
         KnnGraph.build(drifted, cs1, degree = 24, nProbe = 3),
@@ -2075,10 +1869,7 @@ object ScaleStress {
       assert(d1 > 3 * d0, s"drift did not raise relative distortion: $d0 -> $d1")
       assert(d2 < d1 / 2, s"refresh did not cut relative distortion: $d1 -> $d2")
       assert(r2 > r1, s"refresh did not recover recall: $r1 -> $r2")
-    } finally {
-      graft.llm.IndexCommit.dropIndex(spark, "stress_pqdrift")
-      emb0.unpersist()
-    }
+    } finally graft.llm.IndexCommit.dropIndex(spark, "stress_pqdrift")
   }
 
   /** Graph-ANN maintenance curve (q274/q277's operators, r17): as the
@@ -2093,56 +1884,37 @@ object ScaleStress {
     * every point (row-count + per-source parity would re-pay the
     * rebuild; the exceptAll check IS the rebuild comparison, done once
     * per point and untimed). */
-  def knnCdcCurve(spark: SparkSession, sfDir: String): Unit = {
+  def knnCdcCurve(spark: SparkSession, sfDir: String): Unit = point { p =>
     import graft.llm.KnnGraph
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     println("== knn delete: touched-source fraction vs corpus (fixed ~60-node delete batch) ==")
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12)
-        .select("vec_id", "embedding").cache()
-      val n = rep.count()
-      val nCells = math.max(16, (n / 64).toInt)
-      val cs = rep.filter(pmod(col("vec_id"), lit(r.toLong)) === 0)
-        .orderBy("vec_id").limit(nCells)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      try {
-        val edges = KnnGraph.build(rep, cs, degree = 24, nProbe = 3)
-          .localCheckpoint(true)
-        // fixed-size delete batch: ~60 nodes whatever n is (takedowns
-        // don't grow with history), spread across the id space
-        val stride = math.max(1L, n / 60L)
-        val dels = rep.filter(pmod(col("vec_id"), lit(stride)) === 1)
-          .select("vec_id", "embedding").cache()
-        val nD = dels.count()
-        val touched = edges
-          .join(dels.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-          .join(dels.select(col("vec_id").as("dst")), Seq("dst"), "left_semi")
-          .select("src").distinct().count()
-        val (del, delS) = time {
-          val d = KnnGraph.delete(edges, rep, dels, cs,
-            degree = 24, nProbe = 3).localCheckpoint(true)
-          d.count(); d
-        }
-        val (_, rebuildS) = time {
-          val survivors = rep.join(dels.select("vec_id"), Seq("vec_id"), "left_anti")
-          val b = KnnGraph.build(survivors, cs, degree = 24, nProbe = 3)
-            .localCheckpoint(true)
-          // law check rides the rebuild point (untimed separation is
-          // the fraction, not this local wall)
-          assert(del.select("src", "rk", "dst")
-            .exceptAll(b.select("src", "rk", "dst")).count() == 0 &&
-            b.select("src", "rk", "dst")
-              .exceptAll(del.select("src", "rk", "dst")).count() == 0,
-            s"delete law broken at R=$r")
-          b.count()
-        }
-        println(f"R=$r%2d n=$n%6d cells=$nCells%4d |D|=$nD%3d " +
-          f"touched=$touched%5d (${100.0 * touched / n}%5.2f %% of corpus) " +
-          f"delete=$delS%5.1f s rebuild=$rebuildS%5.1f s")
-        dels.unpersist()
-      } finally rep.unpersist()
+    for (r <- Seq(4, 8, 16)) point { q =>
+      val (rep, n, nCells, cs) = planted(q, emb, r)
+      val edges = q.keep(KnnGraph.build(rep, cs, degree = 24, nProbe = 3))
+      // fixed-size delete batch: ~60 nodes whatever n is (takedowns
+      // don't grow with history), spread across the id space
+      val stride = math.max(1L, n / 60L)
+      val dels = q.keep(rep.filter(pmod(col("vec_id"), lit(stride)) === 1))
+      val nD = dels.count()
+      val touched = edges
+        .join(dels.select(col("vec_id").as("src")), Seq("src"), "left_anti")
+        .join(dels.select(col("vec_id").as("dst")), Seq("dst"), "left_semi")
+        .select("src").distinct().count()
+      val (del, delS) = time {
+        q.keep(KnnGraph.delete(edges, rep, dels, cs, degree = 24, nProbe = 3))
+      }
+      val (rebuilt, rebuildS) = time {
+        val survivors = rep.join(dels.select("vec_id"), Seq("vec_id"), "left_anti")
+        q.keep(KnnGraph.build(survivors, cs, degree = 24, nProbe = 3))
+      }
+      // the law, untimed: the at-scale separation is the touched
+      // fraction, not this local wall
+      assert(sameRows(del.select("src", "rk", "dst"), rebuilt.select("src", "rk", "dst")),
+        s"delete law broken at R=$r")
+      println(f"R=$r%2d n=$n%6d cells=$nCells%4d |D|=$nD%3d " +
+        f"touched=$touched%5d (${100.0 * touched / n}%5.2f %% of corpus) " +
+        f"delete=$delS%5.1f s rebuild=$rebuildS%5.1f s")
     }
-    emb.unpersist()
   }
 
   /** Incremental-aggregate-maintenance curve (q263's operator, r16):
@@ -2163,36 +1935,32 @@ object ScaleStress {
   def aggMaintainCurve(spark: SparkSession): Unit = {
     import graft.operators.AggMaintain
     println("== agg maintain: delta refresh vs full rebuild (fixed ~60k-row churn) ==")
-    for (n <- Seq(2000000L, 8000000L, 32000000L)) {
+    for (n <- Seq(2000000L, 8000000L, 32000000L)) point { p =>
       val groups = math.max(1000L, n / 1000L)
       val stride = n / 30000L // ~30k deletes + ~30k inserts at every n
       def derive(ids: DataFrame): DataFrame = ids.select(
         pmod(xxhash64(col("id")), lit(groups)).as("k"),
         pmod(xxhash64(col("id"), lit(1)), lit(1000000L)).as("v"),
         col("id"))
-      val base0 = derive(spark.range(n).toDF("id")).cache(); base0.count()
+      val base0 = p.keep(derive(spark.range(n).toDF("id")))
       // the PERSISTED aggregate a nightly refresh starts from
-      val agg0 = base0.groupBy("k").agg(count(lit(1)).as("cnt"),
-        sum("v").as("sum_v"), min("v").as("mn"), max("v").as("mx"))
-        .cache()
-      agg0.count()
+      val agg0 = p.keep(base0.groupBy("k").agg(count(lit(1)).as("cnt"),
+        sum("v").as("sum_v"), min("v").as("mn"), max("v").as("mx")))
       val ins = derive(spark.range(n, n + 30000L).toDF("id"))
         .select(col("k"), col("v"), lit("I").as("op"))
-      val changelog = base0.filter(col("id") % stride === 0)
+      val changelog = p.keep(base0.filter(col("id") % stride === 0)
         .select(col("k"), col("v"), lit("D").as("op"))
-        .unionByName(ins).cache()
-      changelog.count()
-      val base1 = base0.filter(col("id") % stride =!= 0).select("k", "v")
-        .unionByName(ins.select("k", "v")).cache()
-      base1.count()
+        .unionByName(ins))
+      val base1 = p.keep(base0.filter(col("id") % stride =!= 0).select("k", "v")
+        .unionByName(ins.select("k", "v")))
       def summary(df: DataFrame): org.apache.spark.sql.Row =
         df.agg(count(lit(1)), sum("cnt"), sum("sum_v"), sum("mn"), sum("mx"))
           .head()
-      val ((refreshed, nDirty), refreshS) = time {
-        val r = AggMaintain.refresh(agg0, changelog, base1, "k")
-          .localCheckpoint(true)
-        (summary(r), r.filter(col("dirty") === 1).count())
+      val ((dirty, refreshed), refreshS) = time {
+        val r = p.keep(AggMaintain.refresh(agg0, changelog, base1, "k"))
+        (r.filter(col("dirty") === 1).select("k"), summary(r))
       }
+      val nDirty = dirty.count()
       val (rebuilt, rebuildS) = time {
         summary(base1.groupBy("k").agg(count(lit(1)).as("cnt"),
           sum("v").as("sum_v"), min("v").as("mn"), max("v").as("mx")))
@@ -2201,15 +1969,10 @@ object ScaleStress {
         s"refresh diverged from rebuild at n=$n: $refreshed vs $rebuilt")
       // the at-scale metric: base rows a pruned rescan must actually
       // read (the dirty groups' slice) vs the rebuild's full n
-      val dirtyRows = base1.join(
-          broadcast(AggMaintain.refresh(agg0, changelog, base1, "k")
-            .filter(col("dirty") === 1).select("k")), Seq("k"), "left_semi")
-        .count()
+      val dirtyRows = base1.join(broadcast(dirty), Seq("k"), "left_semi").count()
       println(f"n=$n%9d groups=$groups%7d dirty_groups=$nDirty%6d " +
         f"dirty_rows=$dirtyRows%9d (${100.0 * dirtyRows / n}%5.2f %% of base) " +
         f"refresh=$refreshS%6.2f s rebuild=$rebuildS%6.2f s (law: checksums equal)")
-      base0.unpersist(); agg0.unpersist(); base1.unpersist()
-      changelog.unpersist()
     }
   }
 
@@ -2224,58 +1987,42 @@ object ScaleStress {
     import graft.functions.GraftFunctions
     GraftFunctions.register(spark)
     println("== quantile sketch: bounded size, linear pass, stable error ==")
-    for (n <- Seq(1000000L, 8000000L, 64000000L)) {
-      val df = spark.range(n).select(
+    // the p50 per group g of value column v weighted by count c: the
+    // least v whose cumulative count reaches half the group's (the
+    // ceil-rank rule, shared by the sketch and the exact check)
+    def p50(df: DataFrame, v: String): Map[Long, Long] =
+      df.withColumn("cum", sum("c").over(Window.partitionBy("g").orderBy(v)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("nn", sum("c").over(Window.partitionBy("g")))
+        .groupBy("g")
+        .agg(min(when(col("cum") * 100 >= col("nn") * 50, col(v))))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (n <- Seq(1000000L, 8000000L, 64000000L)) point { p =>
+      val df = p.keep(spark.range(n).select(
         pmod(col("id"), lit(8L)).as("g"),
-        pmod(xxhash64(col("id")), lit(10000000L)).as("v")).cache()
-      df.count()
+        pmod(xxhash64(col("id")), lit(10000000L)).as("v")))
       val ((rows, p50s), t) = time {
-        val sk = df.groupBy("g").agg(expr("qsketch_buckets(v)").as("sk"))
+        val sk = p.keep(df.groupBy("g").agg(expr("qsketch_buckets(v)").as("sk"))
           .select(col("g"), explode(col("sk")).as("bk"))
           .select(col("g"), col("bk.k").as("k"), col("bk.m").as("m"),
-            col("bk.c").as("c")).localCheckpoint(true)
-        val nb = sk.count()
+            col("bk.c").as("c")))
         // p50 per group from the buckets (the all-integer rule)
-        import org.apache.spark.sql.expressions.Window
         val pows = graft.functions.QuantileSketch.Pows
-          .map(p => s"${p}L").mkString("array(", ", ", ")")
-        val wC = Window.partitionBy("g").orderBy("lo")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val p50 = sk.withColumn("lo", expr(s"m * element_at($pows, k + 1)"))
-          .withColumn("cum", sum("c").over(wC))
-          .withColumn("nn", sum("c").over(Window.partitionBy("g")))
-          .groupBy("g")
-          .agg(min(when(col("cum") * 100 >= col("nn") * 50, col("lo")))
-            .as("p50"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        (nb, p50)
+          .map(x => s"${x}L").mkString("array(", ", ", ")")
+        (sk.count(), p50(sk.withColumn("lo", expr(s"m * element_at($pows, k + 1)")), "lo"))
       }
       // exact p50 per group for the error check — the COUNTING form
       // (per-value counts + cumulative), not percentile(): Spark's
       // exact percentile buffers every group's values in one agg
       // buffer and OOMs at 64M rows, while value counts shuffle-scale
-      // (the value domain, 10⁷, bounds the counted rows); the same
-      // ceil-rank rule as the sketch so the comparison is lower-bound
-      // vs lower-bound
-      val exact = {
-        import org.apache.spark.sql.expressions.Window
-        val wC = Window.partitionBy("g").orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        df.groupBy("g", "v").agg(count(lit(1)).as("c"))
-          .withColumn("cum", sum("c").over(wC))
-          .withColumn("nn", sum("c").over(Window.partitionBy("g")))
-          .groupBy("g")
-          .agg(min(when(col("cum") * 100 >= col("nn") * 50, col("v")))
-            .as("p"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
+      // (the value domain, 10⁷, bounds the counted rows)
+      val exact = p50(df.groupBy("g", "v").agg(count(lit(1)).as("c")), "v")
       val worst = exact.keys.map { g =>
         math.abs(p50s(g) - exact(g)).toDouble / exact(g)
       }.max
       assert(worst <= 0.011, s"sketch p50 off by $worst at n=$n")
       println(f"n=$n%9d bucket_rows=$rows%6d (8 groups) " +
         f"agg+extract=$t%6.2f s worst_p50_rel_err=${worst * 100}%5.2f %%")
-      df.unpersist()
     }
   }
 
@@ -2357,56 +2104,22 @@ object ScaleStress {
   /** The default mode: Rp cosine and MinHash near-dup pairs over planted
     * clusters at growing replication R — wall, pairs found, planted
     * recall. */
-  def rSweep(spark: SparkSession, sfDir: String): Unit = {
-    val emb = Tables(spark, sfDir, "embeddings").cache(); emb.count()
+  def rSweep(spark: SparkSession, sfDir: String): Unit = point { p =>
+    val emb = p.keep(Tables(spark, sfDir, "embeddings"))
     // 2500 bases keep the R=16 minhash point under a minute while the
     // R-sweep still spans a 16× corpus growth
-    val docs = Tables(spark, sfDir, "documents")
-      .filter(col("doc_id") < 2500).cache()
-    docs.count()
+    val docs = p.keep(Tables(spark, sfDir, "documents").filter(col("doc_id") < 2500))
 
     println("== cosine near-dup (Rp, q47 engine): planted clusters, threshold 0.9 ==")
     // selective bands for a REAL near-dup threshold: p(bit|c=0.9)=0.856,
     // band of 12 bits ⇒ 0.155, 20 bands ⇒ recall ≈ 0.966 at the boundary
     // (intra-cluster pairs sit at ≈0.99 where recall ≈ 1); random pairs
     // collide at 0.5^12 per band ⇒ ~0.5% of the pair space
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateEmbeddings(emb, r, eps = 0.12).cache()
-      val n = rep.count()
-      val expected = rep.groupBy("base_id").count()
-        .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
-        .head().getLong(0)
-      val (pairs, secs) = time {
-        Rp.cosineNearPairs(rep.select("vec_id", "embedding"), minCosine = 0.9,
-          bands = 20, bitsPerBand = 12).cache()
-      }
-      val found = pairs.count()
-      // planted recall: pairs whose ids map to the same base
-      val planted = pairs
-        .filter((col("id_a") / r).cast("long") === (col("id_b") / r).cast("long"))
-        .count()
-      println(f"R=$r%2d n=$n%6d wall=$secs%6.1f s found=$found%8d " +
-        f"planted=$planted%8d/$expected%d (recall=${planted.toDouble / expected}%.3f)")
-      pairs.unpersist(); rep.unpersist()
-    }
+    recallSweep(replicateEmbeddings(emb, _, eps = 0.12).select("vec_id", "embedding"),
+      Rp.cosineNearPairs(_, minCosine = 0.9, bands = 20, bitsPerBand = 12), "id_a", "id_b")
 
     println("== minhash near-dup (q31 engine): planted clusters, maxDist 0.6 ==")
-    for (r <- Seq(4, 8, 16)) {
-      val rep = replicateDocs(docs, r).cache()
-      val n = rep.count()
-      val expected = rep.groupBy("base_id").count()
-        .agg(sum((col("count") * (col("count") - 1) / 2).cast("long")))
-        .head().getLong(0)
-      val (pairs, secs) = time {
-        MinHash.pairs(rep.select("doc_id", "text"), maxJaccardDist = 0.6).cache()
-      }
-      val found = pairs.count()
-      val planted = pairs
-        .filter((col("id_a") / r).cast("long") === (col("id_b") / r).cast("long"))
-        .count()
-      println(f"R=$r%2d n=$n%6d wall=$secs%6.1f s found=$found%8d " +
-        f"planted=$planted%8d/$expected%d (recall=${planted.toDouble / expected}%.3f)")
-      pairs.unpersist(); rep.unpersist()
-    }
+    recallSweep(replicateDocs(docs, _).select("doc_id", "text"),
+      MinHash.pairs(_, maxJaccardDist = 0.6), "id_a", "id_b")
   }
 }

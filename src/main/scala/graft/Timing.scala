@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The timing core shared by [[Bench]] and [[ScaleStress]]: the timed
-  * action, per-run isolation, the timed window of the
+  * action, per-run isolation, the point scope that owns a curve point's
+  * persisted frames, the timed window of the
   * [[QueryMetricsListener]] protocol, and the small helpers every curve
   * prints with. One implementation, so a fix to the protocol (a flush, a
   * reset edge) reaches every measurement at once. */
@@ -37,6 +41,34 @@ private[graft] object Timing {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     System.gc()
+  }
+
+  /** The frames one curve point works on. [[keep]] persists a frame WITH
+    * its lineage, so a lost block is recomputed rather than failing the
+    * job (the hazard of `localCheckpoint`), and [[point]] releases exactly
+    * what its scope kept. */
+  final class Point private[Timing] {
+    private[Timing] val kept = ArrayBuffer.empty[Dataset[_]]
+
+    /** `ds` persisted (`MEMORY_AND_DISK`), materialized by one count, and
+      * returned. A frame already persisted outside the scope is only
+      * counted: the scope did not persist it, so it does not release it. */
+    def keep[T](ds: Dataset[T]): Dataset[T] = {
+      if (ds.storageLevel == StorageLevel.NONE) {
+        ds.persist(StorageLevel.MEMORY_AND_DISK)
+        kept += ds
+      }
+      ds.count()
+      ds
+    }
+  }
+
+  /** `body` with a [[Point]]; when the scope exits, by return or by throw,
+    * every frame it kept is unpersisted (blocking) and nothing else is:
+    * RDDs other code persisted, another thread's included, stay. */
+  def point[T](body: Point => T): T = {
+    val p = new Point
+    try body(p) finally p.kept.foreach(_.unpersist(blocking = true))
   }
 
   /** `f`'s value and its wall in seconds. */

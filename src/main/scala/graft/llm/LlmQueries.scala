@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -5015,6 +5016,54 @@ object LlmQueries {
     QualityClassifier.scoreAll(docs).toDF().orderBy("doc_id")
   }
 
+  /** q191's sample assembly, shared with `ScaleStress --samples` so the
+    * harness times the operator the query runs: real decoded frames
+    * (q138's sampler: container walk + frame seek) and parsed subtitles,
+    * aligned, rendered and packed; one row per doc joined with its chunk. */
+  private[graft] def multimodalSamples(blobs: Dataset[Multimodal.Blob],
+      srts: Dataset[(Long, String)]): DataFrame = {
+    val frames = Multimodal.videoFrames(blobs, stride = 2)
+      .toDF().select(col("doc_id"), col("frame_idx"),
+        col("ts_us"), (col("sum_r") + col("sum_g") + col("sum_b")).as("rgb"))
+    val subs = Srt.parseAll(srts).toDF()
+      .select(col("doc_id"), col("start_us"), col("text").as("sub_text"))
+    // transcripts-to-frames alignment (q143's engine)
+    val aligned = graft.operators.AsOf.join(frames, subs,
+        key = "doc_id", leftTs = "ts_us", rightTs = "start_us",
+        payload = Seq("sub_text"))
+      .withColumn("item", concat(lit("<|frame|>"), col("asof_sub_text")))
+    // per-doc interleaved chat render + assistant span (q182's template)
+    val samples = aligned.groupBy("doc_id").agg(
+        count(lit(1)).cast("int").as("n_frames"),
+        sum(col("rgb")).as("rgb_sum"),
+        array_join(transform(
+          sort_array(collect_list(struct(col("frame_idx"), col("item")))),
+          x => x.getField("item")), " ").as("u"))
+      .withColumn("render", concat(
+        lit("<|im_start|>user\n"), col("u"),
+        lit("<|im_end|>\n<|im_start|>assistant\nCaption for doc "),
+        col("doc_id"),
+        lit("<|im_end|>\n")))
+      .withColumn("a_start", (length(col("u")) + lit(51)).cast("long"))
+      .withColumn("a_len",
+        (lit(16) + length(col("doc_id").cast("string"))).cast("long"))
+      // the span, extracted from the engine's OWN render — the oracle's
+      // independent content column certifies the offsets (q182's move)
+      .withColumn("content", expr("substring(render, a_start, a_len)"))
+      // eager materialization before the fan-out: packChunks and the
+      // join-back both read the assembled samples, and without this the
+      // whole decode → as-of → render pipeline executes TWICE (one row
+      // per doc here — tiny next to the decode it saves; blocks self-
+      // release via ContextCleaner, the Ivf.fit convention)
+      .localCheckpoint(true)
+    // token-budget packing through the certified operator (q66); its
+    // 4-column output broadcast-joins back onto the samples
+    val packed = CorpusPrep.packChunks(
+      samples.select(col("doc_id"), col("render").as("text")),
+      budgetTokens = 32, shards = 8)
+    samples.join(packed, "doc_id")
+  }
+
   // ---------------------------------------------------------------- q191
   // Multimodal training-sample assembly (the q177/q149 composed-pipeline
   // treatment for the MULTIMODAL plane): real AVI frame decode with
@@ -5082,10 +5131,6 @@ object LlmQueries {
       |FROM t JOIN rgb USING (doc_id)
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     import s.implicits._
-    // real decoded frames (q138's sampler: container walk + frame seek)
-    val frames = Multimodal.videoFrames(aviFixture(s, dir), stride = 2)
-      .toDF().select(col("doc_id"), col("frame_idx"),
-        col("ts_us"), (col("sum_r") + col("sum_g") + col("sum_b")).as("rgb"))
     // real subtitle track over the q144 wire format (cue step in ms so
     // SRT's HH:MM:SS,mmm resolution is exact)
     val srts = Tables(s, dir, "documents").select(col("doc_id")).as[Long].map { id =>
@@ -5094,43 +5139,7 @@ object LlmQueries {
         (i * stepMs, i * stepMs + 30, s"sub${id}_$i")
       }))
     }
-    val subs = Srt.parseAll(srts).toDF()
-      .select(col("doc_id"), col("start_us"), col("text").as("sub_text"))
-    // transcripts-to-frames alignment (q143's engine)
-    val aligned = graft.operators.AsOf.join(frames, subs,
-        key = "doc_id", leftTs = "ts_us", rightTs = "start_us",
-        payload = Seq("sub_text"))
-      .withColumn("item", concat(lit("<|frame|>"), col("asof_sub_text")))
-    // per-doc interleaved chat render + assistant span (q182's template)
-    val samples = aligned.groupBy("doc_id").agg(
-        count(lit(1)).cast("int").as("n_frames"),
-        sum(col("rgb")).as("rgb_sum"),
-        array_join(transform(
-          sort_array(collect_list(struct(col("frame_idx"), col("item")))),
-          x => x.getField("item")), " ").as("u"))
-      .withColumn("render", concat(
-        lit("<|im_start|>user\n"), col("u"),
-        lit("<|im_end|>\n<|im_start|>assistant\nCaption for doc "),
-        col("doc_id"),
-        lit("<|im_end|>\n")))
-      .withColumn("a_start", (length(col("u")) + lit(51)).cast("long"))
-      .withColumn("a_len",
-        (lit(16) + length(col("doc_id").cast("string"))).cast("long"))
-      // the span, extracted from the engine's OWN render — the oracle's
-      // independent content column certifies the offsets (q182's move)
-      .withColumn("content", expr("substring(render, a_start, a_len)"))
-      // eager materialization before the fan-out: packChunks and the
-      // join-back both read the assembled samples, and without this the
-      // whole decode → as-of → render pipeline executes TWICE (one row
-      // per doc here — tiny next to the decode it saves; blocks self-
-      // release via ContextCleaner, the Ivf.fit convention)
-      .localCheckpoint(true)
-    // token-budget packing through the certified operator (q66); its
-    // 4-column output broadcast-joins back onto the samples
-    val packed = CorpusPrep.packChunks(
-      samples.select(col("doc_id"), col("render").as("text")),
-      budgetTokens = 32, shards = 8)
-    samples.join(packed, "doc_id")
+    multimodalSamples(aviFixture(s, dir), srts)
       .select("doc_id", "n_frames", "rgb_sum", "render", "a_start",
         "a_len", "content", "n_tokens", "shard", "chunk")
       .orderBy("doc_id")

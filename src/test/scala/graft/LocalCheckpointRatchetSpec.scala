@@ -10,10 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * the cut cannot be recomputed. The count of calls in the main sources
   * is pinned, so a new call, or a removed one, updates it on purpose.
   * Bounded state belongs in a persisted frame with lineage or a
-  * driver-held local relation instead. Spark is not started. */
+  * driver-held local relation instead; the scale harness keeps a curve
+  * point's frames through [[Timing.point]], which persists with lineage,
+  * and holds no call. Spark is not started. */
 class LocalCheckpointRatchetSpec extends AnyFunSuite {
 
-  private val Pinned = 32
+  private val Pinned = 16
 
   test(s"src/main/scala holds exactly $Pinned .localCheckpoint( calls") {
     val walk = Files.walk(Paths.get("src/main/scala"))

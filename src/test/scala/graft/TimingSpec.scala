@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Pins the shared timing core ([[Timing]]) that [[Bench]] and
   * [[ScaleStress]] both measure through. */
@@ -40,6 +41,40 @@ class TimingSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
     Timing.isolate(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("point: a throw releases exactly what it kept, and a kept frame outlives its blocks") {
+    val sc = spark.sparkContext
+    val outside = spark.range(500L).toDF("o").cache()
+    outside.count()
+    val before = sc.getPersistentRDDs.keySet
+    def grouped = spark.range(0L, 4000L, 1L, 4)
+      .groupBy((col("id") % 97).as("k")).agg(sum("id").as("s"))
+    val expected = grouped.collect().toSet
+    var kept: Seq[org.apache.spark.sql.DataFrame] = Nil
+    val thrown = intercept[IllegalStateException] {
+      Timing.point { p =>
+        val lost = p.keep(grouped)
+        val underLost = sc.getPersistentRDDs -- before
+        val held = p.keep(spark.range(300L).toDF("h"))
+        assert(p.keep(outside) eq outside)
+        kept = Seq(lost, held)
+        assert(underLost.size == 1 && (sc.getPersistentRDDs -- before).size == 2)
+        // drop the blocks under `lost`: with its lineage kept, the frame
+        // recomputes the same rows (a localCheckpoint would fail here)
+        underLost.values.foreach(_.unpersist(blocking = true))
+        assert(lost.collect().toSet == expected)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage == "body failed")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "the scope left a kept RDD persisted")
+    assert(kept.forall(_.storageLevel == StorageLevel.NONE))
+    assert(before.subsetOf(sc.getPersistentRDDs.keySet),
+      "the scope released an RDD persisted outside it")
+    assert(outside.storageLevel != StorageLevel.NONE)
+    outside.unpersist(blocking = true)
   }
 
   test("rmTree removes a nested tree, and a missing root is a no-op") {
